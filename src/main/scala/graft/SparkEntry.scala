@@ -3524,7 +3524,7 @@ object SparkEntry {
       // the batch carries exact copies of vec_id<20 (must die against
       // the store) and NEGATED copies (cosine −1 to their source, ≤0.51
       // to everything else on this corpus — must survive)
-      // note: a query-side .persist() of this 4×-scanned projection was
+      // note: a query-side persist of this 4×-scanned projection was
       // measured and REJECTED (ProfEmbedDedup): the cached variant is
       // 2-3× slower here — the InMemoryTableScan loses whole-stage fusion
       // with the per-branch filters, and the cache boundary multiplies

@@ -79,26 +79,6 @@ object Graft {
     else df
   }
 
-  /** Adaptive input fan-out — the optimization guide's §2.5 input-skew
-    * case ("one huge unsplittable file ... repartition immediately after
-    * the read"): when a scan plans FEWER partitions than half the
-    * session's default parallelism, expensive per-row map work above it
-    * (shingling, tokenizing, media decode) runs on a handful of tasks
-    * while the rest of the cluster idles — so spread it with one
-    * round-robin exchange. A real multi-file corpus scan (the 100 TB
-    * layout: thousands of ≥128 MB splits) always plans at least
-    * cluster parallelism, so this is a NO-OP there; it fires only on
-    * degenerate inputs (single small file, single gzip member). Call it
-    * on scan-level frames only — `.rdd.getNumPartitions` is pure
-    * planning for exchange-free plans, but would execute query stages
-    * through an AQE exchange.
-    */
-  def fanOut(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < math.max(1, target / 2)) df.repartition(target)
-    else df
-  }
-
   /** Persist a DataFrame as a bucketed (+ bucket-sorted) managed parquet
     * table. The 100 TB co-location lever: two tables bucketed on their join
     * key with the same bucket count join with ZERO exchanges — the scan

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, GraftShims}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached
 import graft.functions.{BpeEncodeWords, BpeSymbolPairs, BpeSymbols, TextFunctions}
 
 /** Byte-pair-encoding tokenizer over a text corpus — the real merge-table
@@ -301,7 +302,6 @@ object Bpe {
   def train(df: DataFrame, textCol: Column, steps: Int, batchSize: Int = 1,
       byteLevel: Boolean = false)
       : (Seq[(String, String)], Seq[(Int, String, Long)]) = {
-    import org.apache.spark.storage.StorageLevel
     require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
     // byteLevel trains in the mapped alphabet over GPT-2 pieces (how the
     // published byte-level vocabularies are built); the merge loop,
@@ -309,8 +309,7 @@ object Bpe {
     val initial =
       if (byteLevel) encodeWordsNative(byteLevelMapped(textCol), Nil)
       else encodeWords(textCol, Nil)
-    var enc = df.select(initial.as("__ws"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    var enc = Cached.pin(df.select(initial.as("__ws")))
     var parent: Option[DataFrame] = None
     var merges = Vector.empty[(String, String)]
     var hist = Vector.empty[(Int, String, Long)]
@@ -325,7 +324,7 @@ object Bpe {
         // round from one job.
         val top = pairCountsOfWords(enc)
           .orderBy(col("cnt").desc, col("pair")).limit(want * 4 + 4).collect()
-        parent.foreach(_.unpersist(false))
+        parent.foreach(Cached.release)
         parent = None
         if (top.isEmpty) done = true
         else {
@@ -346,17 +345,16 @@ object Bpe {
           }
           merges ++= newRules
           if (merges.size < steps) {
-            val next = enc.select(transform(col("__ws"),
-                e => applyMerges(e, newRules)).as("__ws"))
-              .persist(StorageLevel.MEMORY_AND_DISK)
+            val next = Cached.pin(enc.select(transform(col("__ws"),
+                e => applyMerges(e, newRules)).as("__ws")))
             parent = Some(enc)
             enc = next
           }
         }
       }
     } finally {
-      enc.unpersist(false)
-      parent.foreach(_.unpersist(false))
+      Cached.release(enc)
+      parent.foreach(Cached.release)
     }
     (merges, hist)
   }
@@ -411,9 +409,7 @@ object Bpe {
     */
   def trainWordpiece(df: DataFrame, textCol: Column, steps: Int)
       : (Seq[(String, String)], Seq[(Int, String, Long)]) = {
-    import org.apache.spark.storage.StorageLevel
-    var enc = df.select(encodeWords(textCol, Nil).as("__ws"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    var enc = Cached.pin(df.select(encodeWords(textCol, Nil).as("__ws")))
     var parent: Option[DataFrame] = None
     var merges = Vector.empty[(String, String)]
     var hist = Vector.empty[(Int, String, Long)]
@@ -421,7 +417,7 @@ object Bpe {
     try {
       while (merges.size < steps && !done) {
         val pairRows = pairCountsOfWords(enc).collect()
-        parent.foreach(_.unpersist(false))
+        parent.foreach(Cached.release)
         parent = None
         if (pairRows.isEmpty) done = true
         else {
@@ -449,17 +445,16 @@ object Bpe {
           hist :+= ((merges.size + 1, bp, bc))
           merges :+= ((a, b))
           if (merges.size < steps) {
-            val next = enc.select(transform(col("__ws"),
-                e => applyMerges(e, Seq((a, b)))).as("__ws"))
-              .persist(StorageLevel.MEMORY_AND_DISK)
+            val next = Cached.pin(enc.select(transform(col("__ws"),
+                e => applyMerges(e, Seq((a, b)))).as("__ws")))
             parent = Some(enc)
             enc = next
           }
         }
       }
     } finally {
-      enc.unpersist(false)
-      parent.foreach(_.unpersist(false))
+      Cached.release(enc)
+      parent.foreach(Cached.release)
     }
     (merges, hist)
   }

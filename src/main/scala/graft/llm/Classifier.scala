@@ -139,10 +139,8 @@ object Classifier {
     require(iters >= 1 && lr > 0 && nBuckets >= 1 && wordNgrams >= 1 && l2 >= 0,
       s"trainLogisticHashed: bad hyperparameters (iters=$iters lr=$lr " +
         s"nBuckets=$nBuckets wordNgrams=$wordNgrams l2=$l2)")
-    import org.apache.spark.storage.StorageLevel
-    val prep = preparedHashed(df, textCol, labelCol, nBuckets, wordNgrams, hasher)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.core.Cached.scoped(
+        preparedHashed(df, textCol, labelCol, nBuckets, wordNgrams, hasher)) { prep =>
       val w = new Array[Double](nBuckets)
       var bias = 0.0
       val m = prep.count().toDouble
@@ -171,7 +169,7 @@ object Classifier {
         bias -= lr * biasGrad
       }
       (w, bias, losses)
-    } finally prep.unpersist(false)
+    }
   }
 
   private def preparedHashed(df: DataFrame, textCol: String, labelCol: String,
@@ -269,12 +267,9 @@ object Classifier {
     require(iters >= 1 && lr > 0 && vocabSize >= 1 && wordNgrams >= 1 && l2 >= 0,
       s"trainLogistic: bad hyperparameters (iters=$iters lr=$lr " +
         s"vocabSize=$vocabSize wordNgrams=$wordNgrams l2=$l2)")
-    import org.apache.spark.storage.StorageLevel
     val spark = df.sparkSession
     import spark.implicits._
-    val prep = prepared(df, textCol, labelCol, wordNgrams)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.core.Cached.scoped(prepared(df, textCol, labelCol, wordNgrams)) { prep =>
       // fixed vocabulary: top-K features by occurrence, ties by feature
       // string — deterministic, one bounded-top-k job
       val vocab = Mix.capPerKey(
@@ -313,7 +308,7 @@ object Classifier {
         bias -= lr * biasGrad
       }
       (w, bias, losses)
-    } finally prep.unpersist(false)
+    }
   }
 
   /** `(__y, __f, __n)` projection shared by training and [[logisticGradient]]. */

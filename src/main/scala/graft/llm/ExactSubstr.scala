@@ -38,58 +38,19 @@ import graft.functions.TextFunctions
   */
 object ExactSubstr {
 
-  /** ONE-SLOT registry of the persisted occurrence frame
+  /** ONE-SLOT holder of the persisted occurrence frame
     * ([[suffixOccurrences]]'s hot-anchor path): each new suffix call
     * reclaims the previous call's cache, bounding the whole JVM to at
-    * most ONE disk-backed occurrence frame instead of one per call. A
-    * deliberate global (not per-session): a per-session map would pin
-    * every dead session's frame-plus-session object graph for the JVM
-    * lifetime, and unpersisting a frame another live session still uses
-    * is SAFE in Spark (lineage recomputes — slower, never wrong), so
-    * cross-session eviction is the designed trade, not a hazard.
+    * most ONE disk-backed occurrence frame instead of one per call
+    * (JVM-wide by design — see [[graft.core.Cached.Slot]]).
     */
-  private val occCache = new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-
-  /** Unpersist a reclaimed frame, tolerating a DEAD owner: a frame whose
-    * SparkSession has stopped has nothing left to unpersist (its blocks
-    * died with the executors) and its RpcEnv throws — the reclaim must
-    * not fail the NEXT session's first suffix call.
-    */
-  private def dropCache(prev: DataFrame): Unit =
-    if (prev != null) {
-      try {
-        if (!prev.sparkSession.sparkContext.isStopped)
-          prev.unpersist(blocking = false)
-      } catch { case _: Exception => () } // stopped mid-check: same outcome
-    }
-
-  private def registerCache(cached: DataFrame): Unit = {
-    val prev = occCache.getAndSet(cached)
-    if (prev ne cached) {
-      // make slot thrash VISIBLE: reclaiming a still-persisted frame of a
-      // live session is safe (lineage recomputes) but silently turns each
-      // downstream consumer of the evicted frame into a full O(corpus)
-      // re-scan — two concurrent suffix-dedup pipelines in one JVM would
-      // otherwise be a hard-to-diagnose performance cliff, not an error
-      try {
-        if (prev != null && !prev.sparkSession.sparkContext.isStopped &&
-            prev.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-          System.err.println(
-            "[graft] ExactSubstr: reclaiming the previous suffix-occurrence " +
-              "cache while it is still persisted - its remaining consumers " +
-              "will recompute the O(corpus) occurrence scan from lineage " +
-              "(one-slot cache; concurrent suffix-dedup pipelines in one " +
-              "JVM thrash this slot)")
-      } catch { case _: Exception => () } // stopped mid-check: nothing to warn
-      dropCache(prev)
-    }
-  }
+  private val occCache = new graft.core.Cached.Slot
 
   /** Free the last suffix-occurrence cache (safe any time: unpersist of
     * an in-use frame recomputes from lineage). Long-lived pipelines call
     * this after their suffix-dedup actions complete.
     */
-  def releaseCache(): Unit = dropCache(occCache.getAndSet(null))
+  def releaseCache(): Unit = occCache.release()
 
   /** Every k-token window of every document: (idCol, pos, __h) with `pos`
     * 0-based and `__h` the window hash. Map-only; documents shorter than k
@@ -325,21 +286,20 @@ object ExactSubstr {
       // cold probe, hot-rows join) and Catalyst has no DAG sharing, so
       // unpersisted each would re-run the tokenize + posexplode + hash
       // scan — at 100 TB that is two extra tokenize passes over the
-      // corpus. Spill-backed persist (the ExactSubstrStream snapshot
+      // corpus. A spill-backed cache (the ExactSubstrStream snapshot
       // idiom) materializes it ONCE; cached blocks spill to local disk,
       // never pinning O(corpus) executor memory.
       //
       // Lifetime: the returned frame is LAZY over this cache, so the
       // function cannot unpersist before returning (the three consumers
       // would each re-run the tokenize + posexplode scan). Instead the
-      // cache registers in the JVM-wide ONE-SLOT registry: the NEXT
+      // cache sits in the JVM-wide ONE-SLOT holder: the NEXT
       // suffix call reclaims it (unpersist mid-use is safe in Spark —
       // lineage recomputes), so a long-lived process or a repeated
       // pipeline holds at most ONE occurrence frame of disk-backed
       // blocks instead of leaking one per call; [[releaseCache]] frees
       // that last one explicitly.
-      val occC = occ.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      registerCache(occC)
+      val occC = occCache.hold(occ)
       val hot = occC.groupBy("__a").agg(
           count(lit(1)).as("__cnt"),
           min(struct(col(idCol), col("pos"))).as("__first"))

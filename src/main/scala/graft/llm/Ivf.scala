@@ -34,13 +34,12 @@ object Ivf {
     */
   def train(corpus: DataFrame, vecCol: String, dim: Int, nlist: Int = 16, iters: Int = 2)
       : Array[Array[Double]] = {
-    val v = corpus.select(col(vecCol).cast("array<double>").as("__v"))
-      .filter(size(col("__v")) === dim)
-      // init + every Lloyd iteration rescans the vectors: cache them for
-      // the duration of training (the standard iterative-training shape —
-      // MLlib k-means does the same), release before returning
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    // init + every Lloyd iteration rescans the vectors: cache them for
+    // the duration of training (the standard iterative-training shape —
+    // MLlib k-means does the same)
+    graft.core.Cached.scoped(corpus
+        .select(col(vecCol).cast("array<double>").as("__v"))
+        .filter(size(col("__v")) === dim)) { v =>
       val init = v.orderBy(xxhash64(col("__v")))
         .limit(nlist)
         .collect()
@@ -62,7 +61,7 @@ object Ivf {
         cents = next
       }
       cents
-    } finally v.unpersist(blocking = false)
+    }
   }
 
   private def normalize(x: Array[Double]): Array[Double] = {

@@ -54,10 +54,9 @@ object IvfPq {
     */
   def train(corpus: DataFrame, vecCol: String, dim: Int, nlist: Int = 16, m: Int = 8,
       ksub: Int = 16, iters: Int = 2): (Array[Array[Double]], Pq.PqModel) = {
-    val v = corpus.select(col(vecCol).cast("array<double>").as("__v"))
-      .filter(size(col("__v")) === dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.core.Cached.scoped(corpus
+        .select(col(vecCol).cast("array<double>").as("__v"))
+        .filter(size(col("__v")) === dim)) { v =>
       val init = v.orderBy(xxhash64(col("__v"))).limit(nlist).collect()
         .map(_.getSeq[Double](0).toArray)
       require(init.nonEmpty, "IVF-PQ train: empty corpus")
@@ -77,7 +76,7 @@ object IvfPq {
       val residuals = v.select(CellResidual(col("__v"),
         element_at(NearestCells.l2(col("__v"), cents, 1), 1), cents).as("__r"))
       (cents, Pq.train(residuals, "__r", dim, m, ksub, iters))
-    } finally v.unpersist(blocking = false)
+    }
   }
 
   /** The corpus at rest: (idCol, cell, pq_codes) in one map-only scan.

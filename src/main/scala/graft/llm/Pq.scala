@@ -76,10 +76,9 @@ object Pq {
       iters: Int = 2): PqModel = {
     require(dim % m == 0, s"PQ train: dim=$dim not divisible by m=$m subspaces")
     val dsub = dim / m
-    val v = corpus.select(col(vecCol).cast("array<double>").as("__v"))
-      .filter(size(col("__v")) === dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.core.Cached.scoped(corpus
+        .select(col(vecCol).cast("array<double>").as("__v"))
+        .filter(size(col("__v")) === dim)) { v =>
       val init = v.orderBy(xxhash64(col("__v"))).limit(ksub).collect()
         .map(_.getSeq[Double](0).toArray)
       require(init.nonEmpty, "PQ train: empty corpus")
@@ -111,7 +110,7 @@ object Pq {
         cb = next
       }
       PqModel(m, ksub, dsub, cb)
-    } finally v.unpersist(blocking = false)
+    }
   }
 
   /** The compressed corpus: (idCol, pq_codes array<int>). Map-only. */

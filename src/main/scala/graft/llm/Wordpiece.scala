@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, GraftShims}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached
 import graft.functions.{TextFunctions, WordpieceEncodeWords}
 
 /** WordPiece (BERT-style) subword segmentation — the greedy
@@ -134,30 +135,26 @@ object UnigramTrain {
         s"maxPieceLen=$maxPieceLen seedTopN=$seedTopN pruneTopK=$pruneTopK " +
         s"maxWordLen=$maxWordLen costScale=$costScale)")
     val spark = df.sparkSession
-    import org.apache.spark.storage.StorageLevel
-    val words = df
-      .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
-      .filter(length(col("w")).between(1, maxWordLen))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Cached.scoped(df
+        .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
+        .filter(length(col("w")).between(1, maxWordLen))
+        .groupBy("w").agg(count(lit(1)).as("freq"))) { words =>
       // seed candidates: every substring up to maxPieceLen chars, weighted
       // by word frequency — all single characters (never pruned, so every
       // word stays segmentable) + the top seedTopN multi-char substrings
-      val subs = words.select(col("freq"), explode(flatten(
-          transform(sequence(lit(0), length(col("w")) - 1), i =>
-            transform(
-              sequence(lit(1), least(lit(maxPieceLen), length(col("w")) - i)),
-              l => col("w").substr(i + lit(1), l))))).as("p"))
-        .groupBy("p").agg(sum("freq").as("cnt"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val (singles, multi) = try {
+      val (singles, multi) = Cached.scoped(words.select(col("freq"),
+          explode(flatten(
+            transform(sequence(lit(0), length(col("w")) - 1), i =>
+              transform(
+                sequence(lit(1), least(lit(maxPieceLen), length(col("w")) - i)),
+                l => col("w").substr(i + lit(1), l))))).as("p"))
+        .groupBy("p").agg(sum("freq").as("cnt"))) { subs =>
         (subs.filter(length(col("p")) === 1)
            .orderBy("p").collect().map(r => r.getString(0) -> r.getLong(1)),
          subs.filter(length(col("p")) >= 2)
            .orderBy(col("cnt").desc, col("p")).limit(seedTopN)
            .collect().map(r => r.getString(0) -> r.getLong(1)))
-      } finally subs.unpersist(false)
+      }
       // vocab order is UTF-8 binary (Spark/DuckDB string order), not
       // UTF-16 sortBy: downstream id assignment (q_pack_ids_unigram's
       // sorted-rank vocabulary) replays this order in SQL
@@ -198,6 +195,6 @@ object UnigramTrain {
       import spark.implicits._
       vocab.map { case (p, c) => (p, c, costMap(p).toLong) }
         .toDF("piece", "cnt", "cost")
-    } finally words.unpersist(false)
+    }
   }
 }

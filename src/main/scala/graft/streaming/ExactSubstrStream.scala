@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Cached
 import graft.functions.TextFunctions
 import graft.llm.ExactSubstr
 
@@ -59,51 +60,43 @@ object ExactSubstrStream {
     // store rows are distinct by construction (each partition is written
     // anti-joined against everything at rest before it) — no re-distinct.
     // The store has TWO consumers per turn (flag join + append anti-join);
-    // the committed snapshot is materialized ONCE (spill-backed persist of
-    // the single 8-byte __h column) so the parquet store is scanned once
-    // per turn instead of twice — cached blocks spill to local disk, never
-    // pinning O(store) executor memory.
-    val atRest =
-      (if (hParts.nonEmpty) spark.read.parquet(hParts: _*).select("__h")
-       else ExactSubstr.windows(batchDf.limit(0), idCol, textCol, k, hash)
-         .select("__h"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val perDoc = ExactSubstr
-      .flaggedWindowsVs(batchDf, idCol, textCol, k, hash, Some(atRest))
-      .groupBy(idCol)
-      .agg(sort_array(collect_list(col("pos"))).as("__ps"))
-    val cleaned = batchDf.join(perDoc, Seq(idCol), "left")
-      .withColumn(textCol, ExactSubstr.cutWindows(col(textCol), col("__ps"), k))
-      .drop("__ps")
-      .persist()
-    // materialize the cache in ONE job before the two write queries plan
-    // against it: lazily-persisted frames are otherwise first evaluated by
-    // concurrent AQE broadcast sub-jobs that race to populate the cache and
-    // re-run the tokenize+shingle+hash lineage once per sub-job (measured
-    // ~2× the window-scan CPU on q_dedup_incremental_substr). This is also
-    // the landed-row count the function returns (every input row lands).
-    val landed = cleaned.count()
-    try {
-      StoreLayout.writing(spark, storeDir, runTag) {
-        // the CLEANED text's distinct window hashes, minus those at rest
-        // (append-only store volume: each distinct window stored once);
-        // null-id rows excluded — an un-addressable row must never become
-        // the canonical keeper
-        ExactSubstr.windows(cleaned.filter(col(idCol).isNotNull),
-            idCol, textCol, k, hash)
-          .select("__h").distinct()
-          .join(atRest, Seq("__h"), "left_anti")
-          .write.mode("overwrite").parquet(s"$storeDir/$self")
+    // the committed snapshot is cached for the turn (the single 8-byte
+    // __h column) so the parquet store is scanned once per turn instead
+    // of twice.
+    val snapshot =
+      if (hParts.nonEmpty) spark.read.parquet(hParts: _*).select("__h")
+      else ExactSubstr.windows(batchDf.limit(0), idCol, textCol, k, hash)
+        .select("__h")
+    Cached.scoped(snapshot) { atRest =>
+      val perDoc = ExactSubstr
+        .flaggedWindowsVs(batchDf, idCol, textCol, k, hash, Some(atRest))
+        .groupBy(idCol)
+        .agg(sort_array(collect_list(col("pos"))).as("__ps"))
+      val cleanedDf = batchDf.join(perDoc, Seq(idCol), "left")
+        .withColumn(textCol, ExactSubstr.cutWindows(col(textCol), col("__ps"), k))
+        .drop("__ps")
+      Cached.scoped(cleanedDf) { cleaned =>
+        // materialize the cache in ONE job before the two write queries
+        // plan against it (the AQE broadcast race, see Cached) — this is
+        // also the landed-row count the function returns: every input row
+        // lands, cleaned or not, so callers never re-read the partition
+        val landed = cleaned.count()
+        StoreLayout.writing(spark, storeDir, runTag) {
+          // the CLEANED text's distinct window hashes, minus those at rest
+          // (append-only store volume: each distinct window stored once);
+          // null-id rows excluded — an un-addressable row must never become
+          // the canonical keeper
+          ExactSubstr.windows(cleaned.filter(col(idCol).isNotNull),
+              idCol, textCol, k, hash)
+            .select("__h").distinct()
+            .join(atRest, Seq("__h"), "left_anti")
+            .write.mode("overwrite").parquet(s"$storeDir/$self")
+        }
+        StoreLayout.writing(spark, corpusDir, runTag) {
+          cleaned.write.mode("overwrite").parquet(s"$corpusDir/$self")
+        }
+        landed
       }
-      StoreLayout.writing(spark, corpusDir, runTag) {
-        cleaned.write.mode("overwrite").parquet(s"$corpusDir/$self")
-      }
-      // landed-row count off the persisted frame (every input row lands,
-      // cleaned or not) — callers must not re-read the partition for it
-      landed
-    } finally {
-      cleaned.unpersist()
-      atRest.unpersist()
     }
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
+import graft.core.Cached
 import graft.llm.Dedup
 
 /** Streaming near-dup dedup — [[Dedup.incrementalDedupVerified]] lifted to
@@ -80,11 +81,10 @@ object IncrementalDedupStream {
     val old =
       if (oldParts.nonEmpty) spark.read.parquet(oldParts: _*).select(idCol, textCol)
       else batch.limit(0)
-    val kept = Dedup.incrementalDedupVerified(batch, idCol, textCol,
-      atRestSigs = sigs, atRestDocs = old, threshold = threshold,
-      numPerm = numPerm, bands = bands, shingleK = shingleK, seed = seed,
-      maxBucketSize = maxBucketSize).persist()
-    try {
+    Cached.scoped(Dedup.incrementalDedupVerified(batch, idCol, textCol,
+        atRestSigs = sigs, atRestDocs = old, threshold = threshold,
+        numPerm = numPerm, bands = bands, shingleK = shingleK, seed = seed,
+        maxBucketSize = maxBucketSize)) { kept =>
       // lease protocol: each write fails loudly while maintenance holds
       // its store, and is invisible to maintenance the moment it finishes
       StoreLayout.writing(spark, storeDir, runTag) {
@@ -94,7 +94,7 @@ object IncrementalDedupStream {
       StoreLayout.writing(spark, corpusDir, runTag) {
         kept.write.mode("overwrite").parquet(s"$corpusDir/$self")
       }
-    } finally kept.unpersist()
+    }
   }
 
   /** Offline compaction of a store/corpus directory — delegates to the

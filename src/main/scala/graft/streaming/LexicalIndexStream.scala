@@ -40,20 +40,22 @@ object LexicalIndexStream {
     val spark = batchDf.sparkSession
     val postings = Lexical.postings(batchDf, idCol, textCol)
     // lease protocol: each half's write fails loudly while maintenance
-    // holds it, and is invisible to maintenance the moment it finishes
+    // holds it, and is invisible to maintenance the moment it finishes.
+    // The stats aggregate over the postings JUST WRITTEN (explicit schema:
+    // an empty batch's partition holds only _SUCCESS), not over the
+    // postings frame — whose lineage would re-tokenize the whole batch for
+    // a 2-column aggregate. That read runs INSIDE the postings bracket —
+    // once it goes idle, a maintenance pass may compact or rewrite the
+    // partition first — and the same job writes the stats row under the
+    // stats lease. Same statsOf over the same rows, and parquet
+    // round-trips them exactly, so the stored stats are bit-identical.
     StoreLayout.writing(spark, s"$indexDir/postings", runTag) {
       postings.write.mode("overwrite").parquet(s"$indexDir/postings/$self")
-    }
-    // stats aggregate over the postings JUST WRITTEN (explicit schema: an
-    // empty batch's partition holds only _SUCCESS), not over the postings
-    // frame — whose lineage would re-tokenize the whole batch for a
-    // 2-column aggregate (buildIndex's in-plan sharing doesn't span two
-    // separate write jobs). Same statsOf over the same rows, and parquet
-    // round-trips them exactly, so the stored stats are bit-identical.
-    StoreLayout.writing(spark, s"$indexDir/stats", runTag) {
-      Lexical.statsOf(
-          spark.read.schema(postings.schema).parquet(s"$indexDir/postings/$self"))
-        .write.mode("overwrite").parquet(s"$indexDir/stats/$self")
+      StoreLayout.writing(spark, s"$indexDir/stats", runTag) {
+        Lexical.statsOf(
+            spark.read.schema(postings.schema).parquet(s"$indexDir/postings/$self"))
+          .write.mode("overwrite").parquet(s"$indexDir/stats/$self")
+      }
     }
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.core.Cached
 import graft.llm.Dedup
 
 /** Streaming perceptual near-dup dedup — [[Dedup.incrementalHammingDedup]]
@@ -71,17 +72,13 @@ object PerceptualDedupStream {
         batchDf.schema(idCol).copy(name = "__id"), sigField)))
     // signatures computed ONCE per batch: the dedup reuses this frame for
     // both joins, and the store append below writes the kept subset of it.
-    // persist() alone is not enough — the first consumers are AQE
-    // broadcast-exchange sub-jobs that run CONCURRENTLY and race to
-    // populate the cache, so the expensive decode lineage (media demux +
-    // perceptual hash) ran up to once per sub-job ("block already exists"
-    // warnings). The count() materializes the cache in ONE job before any
-    // consumer plans against it.
-    val sigs = normalize(sigOf(batchDf)).persist()
-    sigs.count()
-    try {
-      val kept = dedup(batchDf, sigs, atRest).persist()
-      try {
+    // The count() materializes the cache in one job before any consumer
+    // plans against it (the AQE broadcast race, see Cached) — otherwise
+    // the expensive decode lineage (media demux + perceptual hash) ran up
+    // to once per sub-job.
+    Cached.scoped(normalize(sigOf(batchDf))) { sigs =>
+      sigs.count()
+      Cached.scoped(dedup(batchDf, sigs, atRest)) { kept =>
         StoreLayout.writing(spark, storeDir, runTag) {
           sigs.join(kept.select(col(idCol).as("__kid")),
               col("__id") === col("__kid"), "left_semi")
@@ -100,8 +97,8 @@ object PerceptualDedupStream {
             .write.mode("overwrite").parquet(s"$corpusDir/$self")
         }
         obs.get("rows").asInstanceOf[Long]
-      } finally kept.unpersist()
-    } finally sigs.unpersist()
+      }
+    }
   }
 
   /** The MULTI-signature sibling of [[batchFunction]] — for media whose

@@ -1075,6 +1075,8 @@ object BuiltinComponents {
     * [[graft.llm.Dedup.minhashSignatures]]); store ids are compared as
     * strings to match the topology's schema-lite string fields.
     */
+  private val nearDupInput = new graft.core.Cached.Slot
+
   val nearDupDedup: FilterDesc = mkPureFilter("NearDupDedup",
     "Drops near-duplicate records: banded MinHash-LSH candidates verified " +
       "by exact shingle-Jaccard; a record dies when a record with a " +
@@ -1109,16 +1111,17 @@ object BuiltinComponents {
       // final anti-join) — unmaterialized, AQE broadcast sub-jobs re-ran
       // the whole upstream lineage once per consumer (measured 5× on the
       // pretrain funnel: WARC decompress + HTML extraction + quality gates
-      // per evaluation). Materialize the frame ONCE (spill-backed, released
-      // after the run); at scale this caches the post-gate corpus — by
-      // construction a fraction of the raw crawl the upstream stages would
-      // otherwise re-read and re-process per consumer.
+      // per evaluation). Materialize the frame ONCE; at scale this caches
+      // the post-gate corpus — by construction a fraction of the raw crawl
+      // the upstream stages would otherwise re-read per consumer. The
+      // frame outlives compile(), so it sits in a one-occupant slot: run()
+      // releases it, and a consumer that only reads `projected` leaves it
+      // for the next compile to reclaim.
       val docs =
         if (df.isStreaming) df
         else {
-          val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          cached.count()
-          ctx.onCleanup(DedupInputCache.register(ctx.spark, cached))
+          val cached = nearDupInput.hold(df, _.count())
+          ctx.onCleanup(() => nearDupInput.release(cached))
           cached
         }
       (cfg.strOpt("KeepBest"), cfg.strOpt("StoreSigs"), cfg.strOpt("StoreCorpus")) match {
@@ -1500,7 +1503,7 @@ object BuiltinComponents {
       }
       codec.foreach(c => dfw = dfw.option("compression", c))
       if (hasField0) dfw = dfw.partitionBy("__part")
-      Profiling("filewriter.writeJob")(dfw.text(staging.toString))
+      dfw.text(staging.toString)
 
       // move task part files into template-expanded final paths
       val now = Instant.ofEpochMilli(System.currentTimeMillis()).atZone(ZoneOffset.UTC)
@@ -1524,10 +1527,8 @@ object BuiltinComponents {
           case _ => Nil
         }
       val written = Seq.newBuilder[String]
-      val byDir = Profiling("filewriter.list")(
-        partFiles(staging).groupBy(_.getPath.getParent.getName))
-      val rows = Profiling("filewriter.rowsObs")(obs.get("rows").asInstanceOf[Long])
-      Profiling("filewriter.movePass") {
+      val byDir = partFiles(staging).groupBy(_.getPath.getParent.getName)
+      val rows = obs.get("rows").asInstanceOf[Long]
       for ((dirName, files) <- byDir) {
         val field0 = if (dirName.startsWith("__part=")) dirName.stripPrefix("__part=") else ""
         files.sortBy(_.getPath.getName).zipWithIndex.foreach { case (st, ix) =>
@@ -1549,7 +1550,6 @@ object BuiltinComponents {
         }
       }
       fs.delete(staging, true)
-      }
       OutputResult(written.result().distinct, rows)
     },
   )
@@ -1758,13 +1758,12 @@ object BuiltinComponents {
             val withCarry = graft.llm.Pack.Carry
               .read(ctx.spark, carryDir, rotation)
               .map(prev => rec.unionByName(prev)).getOrElse(rec)
-            val packedAll = graft.llm.Pack.packTokensGreedyCarry(withCarry,
+            val packed = graft.llm.Pack.packTokensGreedyCarry(withCarry,
               col("__ord"), col("__tok"), col("__msk"), budget,
               shardOf(col("__ord")), cfg.int("PadId", -2L).toInt,
               sepId = idOpt("SepId"), eosId = idOpt("EosId"),
               bosId = idOpt("BosId"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
+            graft.core.Cached.scoped(packed) { packedAll =>
               val seqs = packedAll.filter(col("kind") === "seq")
                 .select("shard", "seq_id", "input_ids", "segment_ids",
                   "loss_mask", "n_real", "doc_start")
@@ -1781,7 +1780,7 @@ object BuiltinComponents {
                     col("input_ids").as("__tok"),
                     col("loss_mask").as("__msk")),
                 carryDir, rotation)
-            } finally packedAll.unpersist(false)
+            }
         }
       } else {
         val ordFields = cfg.strList("OrderFields", Seq("shard", "seq_id"))

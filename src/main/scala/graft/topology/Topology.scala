@@ -1,5 +1,10 @@
 package graft.topology
 
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -204,7 +209,7 @@ object Topology {
       val t0 = System.nanoTime()
       val outDesc = components.output(cfg.outputName)
       cfg.outputConfig.validate(outDesc.keys)
-      val result = Profiling("output.build")(outDesc.build(ctx, cfg.outputConfig, projected))
+      val result = outDesc.build(ctx, cfg.outputConfig, projected)
       for ((name, upCfg) <- cfg.upload) {
         val upDesc = components.upload(name)
         upCfg.validate(upDesc.keys)
@@ -213,29 +218,21 @@ object Topology {
       // checkpoint-after-process: only now that output+upload succeeded may
       // inputs advance durable offsets / delete consumed queue messages
       ctx.runCommitHooks()
-      // getOrEmpty is non-blocking and the QueryExecutionListener that
-      // fills it fires ASYNC after the action — poll briefly under ONE
-      // shared deadline for all observations (a per-observation deadline
-      // would stall 2s × N when the action never materializes the observed
-      // frames, e.g. OpLog's limited collect)
-      def readObs(o: Observation): Map[String, Any] =
-        try {
-          val f = o.getClass.getDeclaredMethod("getOrEmpty")
-          f.setAccessible(true)
-          f.invoke(o).asInstanceOf[Map[String, Any]]
-        } catch { case _: Exception => Map.empty[String, Any] }
+      // the QueryExecutionListener that completes an observation fires
+      // ASYNC after the action — wait on each one's future under ONE
+      // shared deadline (a per-observation deadline would stall 2s × N
+      // when the action never materializes the observed frames, e.g.
+      // OpLog's limited collect); one that never fires reads as empty
       val deadline = System.nanoTime() + 2000000000L
-      var snaps = observations.values.map(readObs)
-      // 2 ms granularity: the listener usually lands within single-digit
-      // ms of the action, and a coarser sleep adds its whole quantum to
-      // every batch run's wall-clock
-      Profiling("obs.wait") {
-        while (snaps.exists(_.isEmpty) && System.nanoTime() < deadline) {
-          Thread.sleep(2)
-          snaps = observations.values.map(readObs)
-        }
+      def readObs(o: Observation): Map[String, Any] = {
+        try Await.ready(o.future, Duration.fromNanos(
+          math.max(0L, deadline - System.nanoTime())))
+        catch { case _: TimeoutException => () }
+        o.future.value.flatMap(_.toOption)
+          .fold(Map.empty[String, Any])(r => r.getValuesMap[Any](r.schema.fieldNames))
       }
-      val metrics = snaps.fold(Map.empty[String, Any])(_ ++ _)
+      val metrics = observations.values.map(readObs)
+        .fold(Map.empty[String, Any])(_ ++ _)
       // topology-level counters, published once per run (stats.go:131-139
       // breakdown; per-record emission would never survive 1000 executors)
       try {
@@ -435,8 +432,7 @@ object Topology {
   def compileToml(spark: SparkSession, toml: String,
       components: Components = BuiltinComponents.all,
       env: Map[String, String] = sys.env): Compiled =
-    Profiling("topology.compile")(
-      compile(spark, configFromToml(Toml.parse(toml, env)), components))
+    compile(spark, configFromToml(Toml.parse(toml, env)), components)
 
   def compileFile(spark: SparkSession, path: String,
       components: Components = BuiltinComponents.all): Compiled =
