@@ -132,7 +132,11 @@ object Bench {
     try {
       val w = new java.io.PrintWriter("bench_perquery.json", "UTF-8")
       try w.println(fileJson) finally w.close()
-    } catch { case _: Throwable => } // best-effort: a read-only cwd must not fail the bench
+    } catch {
+      // best-effort: a read-only cwd must not fail the bench; any other
+      // failure is a real fault and stays loud
+      case _: java.io.IOException =>
+    }
     val chunks = names.grouped(12).toSeq
     for ((chunk, i) <- chunks.zipWithIndex)
       println(s"""{"metric":"perquery","part":${i + 1},"parts":${chunks.size},""" +

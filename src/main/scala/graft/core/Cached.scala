@@ -41,6 +41,15 @@ import org.apache.spark.storage.StorageLevel
   * warnings). Calling
   * `count()` on the persisted frame inside the body materialises it in
   * ONE job before any such consumer plans against it.
+  *
+  * When NOT to persist: a frame that feeds several exchange-reuse points
+  * of one plan. Under Spark 4.1 AQE the exchanges above a cached scan
+  * lose their reuse. Measured on the benchmark's `corpus_turns`
+  * workload: a prototype that persisted the curation-funnel output
+  * inside `IncrementalDedupStream.batchFunction` made each turn about 2×
+  * slower, because the batch-signature exchange then ran 18 times per
+  * turn instead of being reused. A `scoped` persist is the wrong tool for
+  * that dedup batch.
   */
 object Cached {
 
@@ -75,15 +84,18 @@ object Cached {
 
     /** Persist `df`, run `first` over it (the materialising `count()`,
       * where one is due), then make it the occupant and release the
-      * previous one. Spark caches by plan: when `df`'s plan equals the
-      * previous occupant's, `first` still reads that occupant's blocks,
-      * and the release then drops the entry both frames share.
+      * previous one. Spark caches by plan, so an occupant whose plan
+      * equals `df`'s shares `df`'s cache entry: releasing it after the
+      * persist would uncache `df` too. Such an occupant is released
+      * BEFORE the persist instead, and `first` fills a fresh entry.
       */
     def hold(df: DataFrame, first: DataFrame => Unit = _ => ()): DataFrame = {
+      val prev = occupant.get()
+      if (prev != null && samePlan(prev, df)) release(prev)
       val cached = pin(df)
       first(cached)
-      val prev = occupant.getAndSet(cached)
-      if (prev ne cached) Cached.release(prev)
+      val old = occupant.getAndSet(cached)
+      if (old != null && (old ne cached) && !samePlan(old, cached)) Cached.release(old)
       cached
     }
 
@@ -95,5 +107,12 @@ object Cached {
 
     /** Release whatever frame the slot holds. */
     def release(): Unit = Cached.release(occupant.getAndSet(null))
+
+    /** The two frames resolve to one cache entry: same SparkContext (a
+      * stopped owner's entry died with it) and the same result plan.
+      */
+    private def samePlan(a: DataFrame, b: DataFrame): Boolean =
+      (a.sparkSession.sparkContext eq b.sparkSession.sparkContext) &&
+        a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)
   }
 }

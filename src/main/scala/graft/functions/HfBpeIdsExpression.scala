@@ -39,6 +39,11 @@ import org.apache.spark.unsafe.types.UTF8String
 case class HfBpeIds(child: Expression, vocab: Seq[(String, Int)], unk: Int,
     byteFallback: Boolean, fuseUnk: Boolean, open: String, close: String)
     extends UnaryExpression {
+  // the symbol walk in `idsOf` steps over exactly one char per delimiter
+  // (an empty word is `enc.length == 2`, the next symbol starts 2 chars
+  // past a `close + open` cut)
+  require(open.length == 1 && close.length == 1,
+    s"HfBpeIds needs 1-char delimiters, got open=${open.length} close=${close.length} chars")
 
   override def prettyName: String = "hf_bpe_ids"
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)

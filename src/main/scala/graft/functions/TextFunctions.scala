@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis building blocks for large-scale training-data pipelines.
@@ -352,15 +352,15 @@ object TextFunctions {
 
   /** Gopher-style document gate over the repetition/shape signals:
     * word count within [minWords, maxWords], mean word length within
-    * [2, 12] characters, duplicate-bigram fraction ≤ maxDupBigram.
-    * Thresholds are parameters — corpora differ; defaults follow the
-    * published heuristic shapes.
+    * [2, 12] characters, duplicate-bigram fraction ≤ maxDupBigram; null
+    * text fails. Thresholds are parameters — corpora differ; defaults
+    * follow the published heuristic shapes. One native walk per row
+    * ([[GopherPasses]]), equal to [[Composed.gopherPasses]].
     */
   def gopherPasses(text: Column, minWords: Long = 10, maxWords: Long = 100000,
       maxDupBigram: Double = 0.9): Column =
-    tokenCount(text).between(minWords, maxWords) &&
-      meanTokenLen(text).between(2.0, 12.0) &&
-      (duplicateNgramFraction(text, 2) <= maxDupBigram)
+    GraftShims.toColumn(GopherPasses(GraftShims.toExpression(text),
+      minWords, maxWords, maxDupBigram))
 
   /** Rewrite `text` by replacing each character span in `spans` (an
     * `array<struct<s, e>>` of 0-based [s, e) CHAR offsets — the public
@@ -535,16 +535,38 @@ object TextFunctions {
       (size(split(trim(line), "\\s+")) >= minWords) &&
       !lower(line).contains("javascript") && !line.contains("{")
 
-  /** Lines of `page` (newline-separated) surviving [[c4KeepLine]]. */
+  /** Lines of `page` (newline-separated) surviving [[c4KeepLine]]; null
+    * page → null. One native walk per row ([[C4KeptLines]]), equal to
+    * [[Composed.c4KeptLines]].
+    */
   def c4KeptLines(page: Column, minWords: Int = 5): Column =
-    filter(split(page, "\n"), l => c4KeepLine(l, minWords))
+    GraftShims.toColumn(C4KeptLines(GraftShims.toExpression(page), minWords))
 
   /** C4 page gate: no "lorem ipsum" anywhere, and at least `minKept`
-    * surviving lines. Map-only like the rest of the quality family.
+    * surviving lines; null page fails. One native walk per row
+    * ([[C4Passes]]), equal to [[Composed.c4Passes]] in a filter.
     */
   def c4Passes(page: Column, minKept: Int = 3, minWords: Int = 5): Column =
-    !lower(page).contains("lorem ipsum") &&
-      (size(c4KeptLines(page, minWords)) >= minKept)
+    GraftShims.toColumn(C4Passes(GraftShims.toExpression(page), minKept, minWords))
+
+  /** The composed Column forms the native quality gates replace, kept as
+    * the reference `QualityKernelSpec` pins the kernels equal to. They
+    * evaluate their higher-order lambdas interpreted, row by row.
+    */
+  private[graft] object Composed {
+    def c4KeptLines(page: Column, minWords: Int = 5): Column =
+      filter(split(page, "\n"), l => c4KeepLine(l, minWords))
+
+    def c4Passes(page: Column, minKept: Int = 3, minWords: Int = 5): Column =
+      !lower(page).contains("lorem ipsum") &&
+        (size(c4KeptLines(page, minWords)) >= minKept)
+
+    def gopherPasses(text: Column, minWords: Long = 10, maxWords: Long = 100000,
+        maxDupBigram: Double = 0.9): Column =
+      tokenCount(text).between(minWords, maxWords) &&
+        meanTokenLen(text).between(2.0, 12.0) &&
+        (duplicateNgramFraction(text, 2) <= maxDupBigram)
+  }
 
   /** Composite heuristic quality score in [0,1]: length saturation,
     * healthy mean word length, low punctuation noise, stopword presence —

@@ -124,6 +124,12 @@ object HfEncode {
     * document three times (join, replace, split) and maps every token
     * through an interpreted higher-order transform, which ProfHfKernel
     * measured as ~70% of the imported-BPE tokenize row.
+    *
+    * Precondition: every element of `encodedWords` is a bracketed word as
+    * [[Bpe.encodeWords]] emits it — `Bpe.Open`, symbols each closed by
+    * `Bpe.Close` and reopened by `Bpe.Open`, a final `Bpe.Close` (an empty
+    * word is `Open + Close`). Other strings are cut at the same char
+    * offsets without a check, so their ids are meaningless.
     */
   def bpeIdsOfWords(encodedWords: Column, vocab: Seq[(String, Int)], unk: Int,
       byteFallback: Boolean, fuseUnk: Boolean): Column =

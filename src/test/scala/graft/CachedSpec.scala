@@ -66,6 +66,22 @@ class CachedSpec extends SparkSpec {
     assert(first.count() == 10L)
   }
 
+  test("Slot: holding a frame whose plan equals the occupant's leaves it " +
+      "cached, in exactly one entry") {
+    cleanSlate()
+    val slot = new Cached.Slot
+    val before = spark.sparkContext.getPersistentRDDs.size
+    slot.hold(spark.range(10).toDF("x"), _.count())
+    // Spark caches by plan: the two holds share one entry, which a
+    // release of the first occupant after the second persist would drop
+    val second = slot.hold(spark.range(10).toDF("x"), _.count())
+    assert(second.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "the second occupant was left uncached")
+    assert(spark.sparkContext.getPersistentRDDs.size - before == 1)
+    slot.release()
+    assert(cacheManager.isEmpty)
+  }
+
   test("Slot: a hold after the previous owner's SparkContext stopped does " +
       "not throw") {
     // a second SparkContext needs its own JVM: run the two-session

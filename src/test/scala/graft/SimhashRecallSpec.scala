@@ -88,4 +88,21 @@ class SimhashRecallSpec extends SparkSpec {
       .filter(not(col("a") <=> col("b"))).count()
     assert(diff == 0, "native SimHashMd5 diverged from the composed formula")
   }
+
+  test("native quality gates (C4KeptLines, C4Passes, GopherPasses) equal " +
+      "their composed Column forms on real corpus text") {
+    assume(new java.io.File(sf).isDirectory, "testdata not available")
+    val docs = graft.core.Graft.table(spark, sf, "documents")
+    // the fixture's text is single-line word soup; cutting it after every
+    // period also pins the multi-line page path
+    for (t <- Seq(col("text"), regexp_replace(col("text"), "\\. ", ".\n"))) {
+      val ps = QualityKernelSpec.pairs(t)
+      val diff = docs.select(ps.flatMap { case (n, a, b) =>
+          Seq(a.as(s"a_$n"), b.as(s"b_$n")) }: _*)
+        .filter(ps.map { case (n, _, _) => not(col(s"`a_$n`") <=> col(s"`b_$n`")) }
+          .reduce(_ || _))
+        .count()
+      assert(diff == 0, s"native quality gates diverged from the composed forms on $t")
+    }
+  }
 }
