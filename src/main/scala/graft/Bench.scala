@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Driver-run benchmark: one JSON line with per-query seconds plus a
   * pipeline-throughput measurement matched to BASELINE.md's workload
@@ -20,12 +21,16 @@ object Bench {
     graft.core.Graft.tune(spark)
     spark.sparkContext.setLogLevel("WARN")
 
+    def warn(what: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $what failed: $e")
     // JVM/codegen warmup outside the timings; touch every table so no
     // query pays first-read parquet footer/filesystem init inside its slot
-    try SparkEntry.queries("q_output_nop")(spark, sfDir).count() catch { case _: Throwable => }
+    try SparkEntry.queries("q_output_nop")(spark, sfDir).count()
+    catch { case NonFatal(e) => warn("warm-up q_output_nop", e) }
     for (t <- Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings"))
-      try graft.core.Graft.table(spark, sfDir, t).limit(1).count() catch { case _: Throwable => }
+      try graft.core.Graft.table(spark, sfDir, t).limit(1).count()
+      catch { case NonFatal(e) => warn(s"warm-up read of $t", e) }
 
     // cold run then steady-state run per query. The PRIMARY metric stays
     // the cold first-run total — that's the protocol BASELINE.md's 2x gate
@@ -66,16 +71,19 @@ object Bench {
     // CORPUS rows are single-plan operator queries whose time tracks data
     // volume. The blended mean understates corpus-operator speed as the
     // fixture inventory grows; per-tier totals keep the two stories
-    // separate. Membership lives in SparkEntry.lifecycleQueries, next to
-    // the query definitions, so a new store-lifecycle query lands in the
-    // right tier without touching this file (SparkEntrySpec pins that
-    // every member names a real query).
+    // separate. Membership is each QueryDef's `lifecycle` flag, so a new
+    // store-lifecycle query lands in the right tier without touching this
+    // file.
     val lifecycleQueries = SparkEntry.lifecycleQueries
+    // a query that throws keeps its slot time in the maps (so the existing
+    // fields keep their meaning) and is listed in "failed"
+    var failed = Set.empty[String]
     def sweep(): Map[String, Double] = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
       .map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try fn(spark, sfDir).count()
+        catch { case NonFatal(e) => failed += name; warn(name, e) }
         name -> (System.nanoTime() - t0) / 1e9
       }
     // two FULL sweeps, not cold/warm interleaved per query: the first
@@ -101,8 +109,10 @@ object Bench {
     // warm the topology compile/codegen/zstd path at full shape (also
     // generates the cached input) so the measured pipeline run reflects
     // steady-state throughput, as the queries above do
-    try pipelineThroughput(spark) catch { case _: Throwable => }
-    val pipeline = try pipelineThroughput(spark) catch { case _: Throwable => Map.empty[String, Double] }
+    try pipelineThroughput(spark) catch { case NonFatal(e) => warn("pipeline warm-up", e) }
+    val pipeline = try pipelineThroughput(spark) catch {
+      case NonFatal(e) => warn("pipeline", e); Map.empty[String, Double]
+    }
     val calibPost = calibrate()
     val loadAvgPost = loadAvgNow
     val qs = (results ++ pipeline).map { case (k, v) => "\"" + k + "\":" + v }
@@ -125,10 +135,11 @@ object Bench {
       "\"" + k + "\":" + (if (round) BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP) else v)
     }.mkString("{", ",", "}")
     val names = results.keys.toSeq.sorted
+    val failedJson = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fileJson = s"""{"metric":"perquery","n_queries":${names.size},""" +
       s""""queries":${jmap(names.map(n => n -> results(n)), round = false)},""" +
       s""""queries_steady":${jmap(names.map(n => n -> steady(n)), round = false)},""" +
-      s""""calib_cpu_sec":$calib,"calib_cpu_sec_post":$calibPost,"sf":"$sfDir"}"""
+      s""""calib_cpu_sec":$calib,"calib_cpu_sec_post":$calibPost,"failed":$failedJson,"sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter("bench_perquery.json", "UTF-8")
       try w.println(fileJson) finally w.close()
@@ -147,7 +158,7 @@ object Bench {
     // (which holds the totals/calibration fields) can fall outside the
     // window — r3's BENCH capture lost calib/pipeline that way
     val pipeStr = pipeline.map { case (k, v) => "\"" + k + "\":" + v }.mkString(",")
-    println(s"""{"metric":"summary","cold_total_sec":$coldTotal,"n_queries":${results.size},"cold_mean_sec":${coldTotal / results.size},"steady_total_sec":${steady.values.sum},"steady_mean_sec":${steady.values.sum / results.size},$tiersCold,$tiersSteady,"calib_cpu_sec":$calib,"calib_cpu_sec_post":$calibPost,"load_avg":$loadAvg,"load_avg_post":$loadAvgPost${if (pipeStr.nonEmpty) "," + pipeStr else ""},"sf":"$sfDir"}""")
+    println(s"""{"metric":"summary","cold_total_sec":$coldTotal,"n_queries":${results.size},"cold_mean_sec":${coldTotal / results.size},"steady_total_sec":${steady.values.sum},"steady_mean_sec":${steady.values.sum / results.size},$tiersCold,$tiersSteady,"calib_cpu_sec":$calib,"calib_cpu_sec_post":$calibPost,"load_avg":$loadAvg,"load_avg_post":$loadAvgPost${if (pipeStr.nonEmpty) "," + pipeStr else ""},"failed":$failedJson,"sf":"$sfDir"}""")
     spark.stop()
   }
 

@@ -129,54 +129,6 @@ case class BucketScoreSum(child: Expression, weights: Array[Double])
     copy(child = newChild)
 }
 
-/** `BucketLogit(buckets, weights, bias)` = bias + Σ weights(b) / n — the
-  * hashed classifier's whole decision statistic as ONE expression (null
-  * when the bucket array is empty), for the same reason [[LinearLogit]]
-  * exists over [[LinearScoreSum]]: a filter built from parts evaluates
-  * the feature subtree per conjunct.
-  */
-case class BucketLogit(child: Expression, weights: Array[Double], bias: Double)
-    extends UnaryExpression {
-
-  override def prettyName: String = "bucket_logit"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.IntegerType, _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case dt => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs array<int>, got ${dt.catalogString}")
-    }
-
-  @transient private lazy val sumExpr = BucketScoreSum(child, weights)
-
-  /** Boxed so the generated code can see the empty-array null. */
-  def logitOrNull(input: ArrayData): java.lang.Double = {
-    val n = input.numElements()
-    if (n == 0) null
-    else java.lang.Double.valueOf(bias + sumExpr.score(input) / n)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    logitOrNull(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bucketLogit", this,
-      classOf[BucketLogit].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Double r = $ref.logitOrNull($c);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r.doubleValue(); }
-    """)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** `LinearLogit(features, weights, bias)` = bias + Σ weight(f) / n — the
   * classifier's whole decision statistic as ONE expression, null when the
   * feature array is empty (no statistic to take).

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, GraftShims}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{BucketLogit, BucketScoreSum, LinearLogit, LinearScoreSum,
+import graft.functions.{BucketScoreSum, LinearLogit, LinearScoreSum,
   TextFunctions}
 
 /** fastText-style shallow linear text classifier — the standard
@@ -104,21 +104,6 @@ object Classifier {
       .filter(col("n_features") > 0)
       .withColumn("logit", lit(bias) + col("sum_weight") / col("n_features"))
       .withColumn("keep", col("logit") > 0)
-  }
-
-  /** [[qualityFilter]] under hashed buckets: one scan, zero shuffles, the
-    * whole decision statistic one [[BucketLogit]] node so the feature
-    * array evaluates once per row (the [[LinearLogit]] rationale).
-    * Featureless documents drop, matching [[scoreLinearHashed]].
-    */
-  def qualityFilterHashed(df: DataFrame, idCol: String, textCol: String,
-      weights: Array[Double], bias: Double = 0.0, wordNgrams: Int = 1,
-      hasher: Option[Column => Column] = None): DataFrame = {
-    require(weights.nonEmpty, "Classifier: weights must be non-empty")
-    val feats = hashedBuckets(col(textCol), weights.length, wordNgrams, hasher)
-    val logit = GraftShims.toColumn(
-      BucketLogit(GraftShims.toExpression(feats), weights, bias))
-    df.filter(logit > 0)
   }
 
   /** [[trainLogistic]] under hashed-bucket features: the top-K vocabulary

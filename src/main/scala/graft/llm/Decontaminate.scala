@@ -230,14 +230,4 @@ object Decontaminate {
       .groupBy(benchIdCol)
       .agg(count(lit(1)).as("n_grams"), count(col("__hit")).as("n_hit"))
   }
-
-  /** Corpus minus every document [[flaggedFuzzy]] ties to the benchmark. */
-  def cleanFuzzy(corpus: DataFrame, idCol: String, textCol: String,
-      bench: DataFrame, benchIdCol: String, benchTextCol: String,
-      threshold: Double = 0.7): DataFrame = {
-    val bad = flaggedFuzzy(corpus, idCol, textCol, bench, benchIdCol,
-        benchTextCol, threshold)
-      .select(col(idCol).as("__contaminated")).distinct()
-    corpus.join(bad, col(idCol) === col("__contaminated"), "left_anti")
-  }
 }

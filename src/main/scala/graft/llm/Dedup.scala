@@ -657,16 +657,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("idA"), col("idB"), round(col("jaccard"), 4).as("jaccard"))
 
-  /** SimHash dedup: drop every doc within `maxHamming` bits of a doc with
-    * a smaller id (single-pass, same keep-min semantics as [[minhashDedup]]).
-    */
-  def simhashDedup(df: DataFrame, idCol: String, textCol: String, nBits: Int = 32,
-      maxHamming: Int = 3, maxBucketSize: Int = 0, pieces: Int = 1): DataFrame = {
-    val doomed = simhashPairs(df, idCol, textCol, nBits, maxHamming, maxBucketSize, pieces)
-      .select(col("idB").as("__doomed")).distinct()
-    df.join(doomed, col(idCol) === col("__doomed"), "left_anti")
-  }
-
   // --- connected components (transitive near-dup clusters) ---
 
   /** Connected components over an undirected candidate-pair graph:
@@ -787,20 +777,6 @@ object Dedup {
     labels
   }
 
-  /** Transitive MinHash-LSH dedup: cluster candidate pairs with
-    * [[connectedComponents]] and keep only each cluster's smallest id.
-    */
-  def minhashDedupCC(df: DataFrame, idCol: String, textCol: String, threshold: Double = 0.7,
-      numPerm: Int = 64, bands: Int = 16, shingleK: Int = 3,
-      maxBucketSize: Int = 0): DataFrame = {
-    val pairs = minhashPairs(df, idCol, textCol, numPerm, bands, shingleK,
-      maxBucketSize = maxBucketSize)
-      .filter(col("est_jaccard") >= threshold)
-    val doomed = connectedComponents(pairs)
-      .filter(col("id") =!= col("component")).select(col("id").as("__doomed"))
-    df.join(doomed, col(idCol) === col("__doomed"), "left_anti")
-  }
-
   /** Transitive MinHash dedup over EXACT-verified pairs: LSH candidates
     * are re-scored with exact shingle-Jaccard, the ≥-threshold survivors
     * form the edge graph, components cluster transitively, each keeps its
@@ -911,18 +887,6 @@ object Dedup {
     Mix.assignSplits(df.join(comps, col(idCol) === col("__lsid"), "left"),
         coalesce(col("__lscomp"), col(idCol)), seed, splits)
       .drop("__lsid", "__lscomp")
-  }
-
-  /** Transitive embedding near-dup dedup: cluster cosine-similar pairs
-    * with [[connectedComponents]], keep each cluster's smallest id.
-    */
-  def embeddingDedupCC(df: DataFrame, idCol: String, vecCol: String, dim: Int,
-      threshold: Double = 0.95, nBits: Int = 12, seeds: Seq[Long] = Seq(42L, 1042L),
-      maxBucketSize: Int = 0): DataFrame = {
-    val pairs = embeddingPairs(df, idCol, vecCol, dim, threshold, nBits, seeds, maxBucketSize)
-    val doomed = connectedComponents(pairs)
-      .filter(col("id") =!= col("component")).select(col("id").as("__doomed"))
-    df.join(doomed, col(idCol) === col("__doomed"), "left_anti")
   }
 
   // --- span (paragraph/line) dedup ---

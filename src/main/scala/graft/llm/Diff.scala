@@ -65,10 +65,4 @@ object Diff {
     o.join(c, Seq("__k"), "full_outer")
       .select(col("__k").as(keyCol), guarded.as("status"))
   }
-
-  /** The diff rolled up to one row per status — the dashboard number. */
-  def diffSummary(old: DataFrame, cur: DataFrame, keyCol: String,
-      contentCol: String, strict: Boolean = true): DataFrame =
-    corpusDiff(old, cur, keyCol, contentCol, strict)
-      .groupBy("status").agg(count(lit(1)).as("cnt"))
 }

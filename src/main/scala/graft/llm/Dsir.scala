@@ -62,19 +62,14 @@ object Dsir {
     * score — same contract as [[Unigram.score]]).
     */
   def importanceStats(corpus: DataFrame, target: DataFrame, idCol: String,
-      textCol: String, ngram: Int = 2, hexChars: Int = 3): DataFrame =
-    statsAndTotals(corpus, target, idCol, textCol, ngram, hexChars)._1
-
-  private def statsAndTotals(corpus: DataFrame, target: DataFrame,
-      idCol: String, textCol: String, ngram: Int, hexChars: Int)
-      : (DataFrame, Long, Long) = {
+      textCol: String, ngram: Int = 2, hexChars: Int = 3): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val (tgtRows, t) = localCounts(target, textCol, ngram, hexChars)
-    val (rawRows, r) = localCounts(corpus, textCol, ngram, hexChars)
+    val (tgtRows, _) = localCounts(target, textCol, ngram, hexChars)
+    val (rawRows, _) = localCounts(corpus, textCol, ngram, hexChars)
     val tgt = broadcast(tgtRows.toDF("__tf", "__tc"))
     val raw = broadcast(rawRows.toDF("__rf", "__rc"))
-    val stats = corpus.select(col(idCol),
+    corpus.select(col(idCol),
         explode(features(col(textCol), ngram, hexChars)).as("__feat"))
       .join(tgt, col("__feat") === col("__tf"), "left")
       .join(raw, col("__feat") === col("__rf"), "left")
@@ -82,7 +77,6 @@ object Dsir {
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("__tc"), lit(0L))).as("tgt_freq"),
         sum(coalesce(col("__rc"), lit(0L))).as("raw_freq"))
-    (stats, t, r)
   }
 
   /** A deterministic importance weight derived MAP-ONLY from the integer
@@ -129,20 +123,5 @@ object Dsir {
       .join(raw, col("__feat") === col("__rf"), "left")
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_grams"), sum(logRatio).as("weight"))
-  }
-
-  /** End-to-end: integer stats → surrogate weight → keep the `n`
-    * highest-weight documents (quantized score, ties by `idCol`, selected
-    * via [[Mix.budgetSelect]]'s two-phase walk — no global sort). Returns
-    * the selected (idCol, n_grams, tgt_freq, raw_freq, weight).
-    */
-  def resampleTop(corpus: DataFrame, target: DataFrame, idCol: String,
-      textCol: String, n: Long, ngram: Int = 2, hexChars: Int = 3,
-      alpha: Double = 1.0): DataFrame = {
-    val (stats, t, r) = statsAndTotals(corpus, target, idCol, textCol, ngram,
-      hexChars)
-    val weighted = withImportanceWeight(stats, t, r,
-      buckets = 1L << (4 * hexChars), alpha = alpha)
-    Mix.budgetSelect(weighted, round(col("weight"), 4), lit(1L), n, col(idCol))
   }
 }

@@ -1183,23 +1183,6 @@ object Multimodal {
     }.toDF("doc_id", "afp")
   }
 
-  /** Payload-level features needing no codec at all (real, not stubbed):
-    * size, content digest, and a coarse magic-byte sniff.
-    */
-  def payloadFeatures(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val p = col(payloadCol).cast("binary")
-    val head = hex(substring(p, 1, 4))
-    df.select(
-      col(idCol),
-      length(p).as("payload_bytes"),
-      sha2(p, 256).as("payload_sha256"),
-      when(head.startsWith("FFD8"), "jpeg")
-        .when(head.startsWith("89504E47"), "png")
-        .when(head.startsWith("47494638"), "gif")
-        .when(head.startsWith("52494646"), "riff")
-        .otherwise("unknown").as("sniffed_type"))
-  }
-
   /** Image dimensions from the HEADER BYTES alone — the decode-free
     * resolution filter every image-crawl pipeline runs before paying for
     * pixel decode ("drop < 256×256" over billions of payloads). Pure

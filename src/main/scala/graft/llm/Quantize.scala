@@ -185,7 +185,7 @@ object Quantize {
     * analysis and approximate scoring): `x̂_i = min_i + (code_i + 127) ·
     * (max_i − min_i) / 254`.
     */
-  def int8Reconstruct(codes: Column, mins: Array[Double], maxs: Array[Double]): Column = {
+  private[graft] def int8Reconstruct(codes: Column, mins: Array[Double], maxs: Array[Double]): Column = {
     val minsLit = array(mins.map(lit): _*)
     val stepsLit = array(mins.indices.map(i => lit((maxs(i) - mins(i)) / 254.0)): _*)
     zip_with(codes, sequence(lit(0), lit(mins.length - 1)),

@@ -67,8 +67,7 @@ object Semantic {
   /** Rows SemDeDup would drop, with the partner that evicts them:
     * (id, dup_of) where `dup_of` is the smallest-id in-cell partner with
     * cosine ≥ threshold below the dropped id. Keep-priority is ascending
-    * id — deterministic and restatable by a SQL oracle; the published
-    * keep-farthest-from-centroid policy is [[semDedupCentroid]].
+    * id — deterministic and restatable by a SQL oracle.
     */
   def semDedupDropped(df: DataFrame, idCol: String, vecCol: String, dim: Int,
       threshold: Double = 0.95, nlist: Int = 16, iters: Int = 2,
@@ -80,56 +79,4 @@ object Semantic {
       // scalar-only (two longs) — hash-aggregable, map-side combined
       .groupBy(col("idB").as("id"))
       .agg(min("idA").as("dup_of"))
-
-  /** SemDeDup'd corpus: the input minus every row with a lower-id in-cell
-    * partner at cosine ≥ threshold. One extra broadcast-able anti-join on
-    * the (small) dropped-id set; original columns pass through untouched.
-    */
-  def semDedup(df: DataFrame, idCol: String, vecCol: String, dim: Int,
-      threshold: Double = 0.95, nlist: Int = 16, iters: Int = 2,
-      codebook: Option[Array[Array[Double]]] = None, maxCellSize: Int = 0)
-      : DataFrame = {
-    val dropped = semDedupDropped(df, idCol, vecCol, dim, threshold, nlist,
-      iters, codebook, maxCellSize).select(col("id").as("__dropped"))
-    df.join(broadcast(dropped), col(idCol) === col("__dropped"), "left_anti")
-  }
-
-  /** SemDeDup with the paper's keep policy: within a duplicate pair, keep
-    * the member FARTHER from its cluster centroid (lower centroid cosine;
-    * the paper argues boundary examples carry more training signal), ties
-    * broken by ascending id. Returns the dropped ids.
-    *
-    * The priority needs each row's centroid similarity: the codebook is
-    * nlist rows, so it broadcast-joins as a tiny (cell, centroid) table and
-    * the cosine is one more codegen'd map-only column.
-    */
-  def semDedupCentroidDropped(df: DataFrame, idCol: String, vecCol: String,
-      dim: Int, threshold: Double = 0.95, nlist: Int = 16, iters: Int = 2,
-      codebook: Option[Array[Array[Double]]] = None, maxCellSize: Int = 0)
-      : DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val cents = codebook.getOrElse(Ivf.train(df, vecCol, dim, nlist, iters))
-    val cells = withCell(
-      df.select(col(idCol).as("__id"), col(vecCol).as("__v")), "__v", cents)
-    val centDf = broadcast(
-      cents.toSeq.zipWithIndex.map { case (c, i) => (i, c) }
-        .toDF("__ccell", "__centroid"))
-    val prio = cells.join(centDf, col("__cell") === col("__ccell"))
-      .withColumn("__prio",
-        VectorFunctions.cosineFast(col("__v"), col("__centroid")))
-      .select("__cell", "__id", "__v", "__prio")
-    val pruned = Dedup.pruneHotBuckets(prio, "__cell", maxCellSize)
-    val a = pruned.select(col("__cell"), col("__id").as("idA"), col("__v").as("vA"),
-      col("__prio").as("pA"))
-    val b = pruned.select(col("__cell").as("__cell2"), col("__id").as("idB"),
-      col("__v").as("vB"), col("__prio").as("pB"))
-    // keeper = lower centroid-cosine (farther out), tie → lower id; emit the
-    // LOSER of each qualifying pair, then distinct — scalar-only agg
-    a.join(b, col("__cell") === col("__cell2") && col("idA") < col("idB"))
-      .filter(VectorFunctions.cosineFast(col("vA"), col("vB")) >= threshold)
-      .select(when(struct(col("pA"), col("idA")) <= struct(col("pB"), col("idB")),
-        col("idB")).otherwise(col("idA")).as("id"))
-      .distinct()
-  }
 }

@@ -34,14 +34,6 @@ object Sketches {
   /** Cardinality estimate of a sketch column. */
   def estimate(sketch: Column): Column = hll_sketch_estimate(sketch)
 
-  /** Convenience: estimated distinct `valueCol` per group, via the sketch
-    * path (same plan shape the persisted-sketch rollup would use).
-    */
-  def approxDistinct(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      lgK: Int = 12): DataFrame =
-    distinctSketch(df, groupCols, valueCol, lgK)
-      .select(groupCols.map(col) :+ estimate(col("sketch")).as("approx_distinct"): _*)
-
   // --- frequency (count-min) sketches ---
 
   /** One count-min sketch (binary) per group: the mergeable
@@ -190,15 +182,6 @@ object Sketches {
       .groupBy(groupCols.map(col): _*)
       .agg(array(counts: _*).as("hist"))
   }
-
-  /** Re-aggregate persisted histograms to a coarser grouping: elementwise
-    * integer sums — exact, order-independent, no raw data touched.
-    */
-  def histRollup(sketches: DataFrame, groupCols: Seq[String], nBins: Int,
-      histCol: String = "hist"): DataFrame =
-    sketches.groupBy(groupCols.map(col): _*)
-      .agg(array((0 until nBins).map(k =>
-        sum(element_at(col(histCol), k + 1))): _*).as("hist"))
 
   /** Quantile estimate from a histogram sketch: locate the bin containing
     * the q-th value by cumulative count, interpolate linearly inside it.

@@ -204,23 +204,6 @@ class ClassifierSpec extends SparkSpec {
         Array.fill(64)(0.25)).queryExecution.executedPlan.toString
     assert(!p.contains("Exchange") && !p.contains("Join") &&
       !p.contains("Aggregate"), p)
-    val pf = Classifier.qualityFilterHashed(docs, "doc_id", "text",
-        Array.fill(64)(0.25)).queryExecution.executedPlan.toString
-    assert(!pf.contains("Exchange") && !pf.contains("Join") &&
-      !pf.contains("Aggregate"), pf)
-  }
-
-  test("qualityFilterHashed agrees with scoreLinearHashed's keep column") {
-    import spark.implicits._
-    val w = Array.tabulate(128)(b => ((b % 9) - 4) / 64.0)
-    val withId = labeled.withColumn("id", monotonically_increasing_id())
-    val byFilter = Classifier.qualityFilterHashed(withId, "id", "text", w,
-        bias = 0.01, wordNgrams = 2)
-      .select("id").as[Long].collect().sorted.toSeq
-    val byScore = Classifier.scoreLinearHashed(withId, "id", "text", w,
-        bias = 0.01, wordNgrams = 2)
-      .filter(col("keep")).select("id").as[Long].collect().sorted.toSeq
-    assert(byFilter == byScore && byFilter.nonEmpty)
   }
 
   test("hashed gradient: md5 and xxhash bases produce the same statistic " +

@@ -87,10 +87,6 @@ class DecontaminateSpec extends SparkSpec {
       .select("doc_id", "bench_id").as[(Long, Long)].collect().toSet
     // 8 shingles each, 7 shared → j = 7/9 ≈ 0.78 for docs 1 and 2
     assert(got == Set((1L, 101L), (2L, 101L)))
-    val kept = Decontaminate.cleanFuzzy(corp, "doc_id", "text",
-        bench, "bench_id", "text", threshold = 0.7)
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept == Set(3L, 4L))
   }
 
   test("flaggedFuzzy maxBucketSize bounds a degenerate shared-band corpus") {

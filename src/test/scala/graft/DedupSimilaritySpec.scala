@@ -304,10 +304,13 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(viaByteCap.forall(_._2 == "x" * 2000 + "000"))
   }
 
-  test("minhashDedupCC kills middleman-linked docs that single-pass keeps") {
+  test("connectedComponents over minhash pairs kills middleman-linked docs") {
     import spark.implicits._
-    val kept = Dedup.minhashDedupCC(docs, "doc_id", "text", threshold = 0.5)
-      .select("doc_id").as[Long].collect().toSet
+    val pairs = Dedup.minhashPairs(docs, "doc_id", "text")
+      .filter(col("est_jaccard") >= 0.5)
+    val doomed = Dedup.connectedComponents(pairs)
+      .filter(col("id") =!= col("component")).select("id").as[Long].collect().toSet
+    val kept = docs.select("doc_id").as[Long].collect().toSet -- doomed
     // same corpus as minhashDedup: {0,1,2} cluster transitively → keep 0
     assert(kept == Set(0L, 3L, 4L))
   }
@@ -395,20 +398,20 @@ class DedupSimilaritySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSeq == Seq((0L, 2L)))
     // transitive keep-min over the same pair graph
-    val kept = Dedup.embeddingDedupCC(vecs, "vec_id", "embedding", dim = 4, threshold = 0.99)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(kept == Set(0L, 1L, 3L))
+    val doomed = Dedup.connectedComponents(pairs.toSeq.toDF("idA", "idB"))
+      .filter(col("id") =!= col("component")).select("id").as[Long].collect().toSet
+    assert(doomed == Set(2L))
   }
 
-  test("simhashDedup keeps smallest id per near-dup pair") {
+  test("simhashPairs: the copy pairs as the larger id, unrelated/empty docs not") {
     import spark.implicits._
-    val kept = Dedup.simhashDedup(docs, "doc_id", "text", maxHamming = 3)
-      .select("doc_id").as[Long].collect().toSet
+    val doomed = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)
+      .select("idB").as[Long].collect().toSet
     // 2 is identical to 0 (hamming 0) → dropped; 1 is 1 word off — within
     // radius iff its signature is ≤3 bits away, so just assert the
     // guarantees: 0 survives, 2 dies, unrelated 3 and empty 4 survive
-    assert(kept.contains(0L) && !kept.contains(2L))
-    assert(kept.contains(3L) && kept.contains(4L))
+    assert(!doomed.contains(0L) && doomed.contains(2L))
+    assert(!doomed.contains(3L) && !doomed.contains(4L))
   }
 
   test("bruteForceTopK ranks by cosine desc with deterministic ties") {

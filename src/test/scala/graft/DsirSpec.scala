@@ -56,12 +56,4 @@ class DsirSpec extends SparkSpec {
     assert(w(3L) > w(2L) && w(3L) > w(1L))
   }
 
-  test("resampleTop keeps the n most target-like documents deterministically") {
-    val top = Dsir.resampleTop(corpus, target, "doc_id", "text", n = 2)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    // surrogate weights: doc3 ≈ -0.559 ≫ doc1 ≈ -0.846 > doc2 ≈ -0.874
-    // (doc2's repeated common gram drags its average further from the
-    // target than doc1's one rare gram lifts it)
-    assert(top == Set(3L, 1L))
-  }
 }

@@ -709,12 +709,4 @@ class MultimodalSpec extends SparkSpec {
     assert(fp(1L) != fp(4L))
   }
 
-  test("payloadFeatures: size, sha256, magic sniff — no codec involved") {
-    val rows = Multimodal.payloadFeatures(media, "doc_id", "payload")
-      .collect().map(r => r.getLong(0) -> r).toMap
-    assert(rows(2L).getAs[String]("sniffed_type") == "jpeg")
-    assert(rows(1L).getAs[String]("sniffed_type") == "unknown")
-    assert(rows(1L).getAs[Int]("payload_bytes") == 100)
-    assert(rows(1L).getAs[String]("payload_sha256").length == 64)
-  }
 }

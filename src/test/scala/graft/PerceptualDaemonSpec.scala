@@ -16,7 +16,7 @@ class PerceptualDaemonSpec extends SparkSpec {
 
   /** 8x8 BMP whose 64 pixels are the first 64 chars of `seed` in all
     * three channels (the q_dedup_incremental_image fixture recipe; the
-    * header comes from the canonical SparkEntry builder).
+    * header comes from the canonical MultimodalQueries builder).
     */
   private def bmp(seed: String, tweakLast: Boolean = false): Array[Byte] = {
     val s = (seed * 8).take(64).getBytes("ISO-8859-1")
@@ -27,7 +27,7 @@ class PerceptualDaemonSpec extends SparkSpec {
       px(i * 3) = b; px(i * 3 + 1) = b; px(i * 3 + 2) = b
       i += 1
     }
-    graft.SparkEntry.bmpHeader(8, 8) ++ px
+    graft.queries.MultimodalQueries.bmpHeader(8, 8) ++ px
   }
 
   private def shard(dir: java.io.File, name: String,

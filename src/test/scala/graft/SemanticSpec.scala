@@ -6,8 +6,7 @@ import graft.llm.Semantic
 
 /** SemDeDup (cluster-based semantic dedup) — the behaviors the planted-copy
   * oracle query can't state: near-(not exact-)duplicate recall inside a
-  * pinned codebook, the keep-farthest-from-centroid policy, and the
-  * hot-cell cap.
+  * pinned codebook, the keep-lowest-id eviction, and the hot-cell cap.
   */
 class SemanticSpec extends SparkSpec {
 
@@ -49,20 +48,6 @@ class SemanticSpec extends SparkSpec {
         threshold = 0.99, codebook = Some(codebook))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(dropped.toSet == Set((1L, 0L)))
-    val kept = Semantic.semDedup(vecs, "id", "vec", dim,
-        threshold = 0.99, codebook = Some(codebook))
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(kept == Set(0L, 2L, 10L, 11L))
-  }
-
-  test("centroid policy keeps the member farther from the cell centroid") {
-    // 1 (cos-to-centroid ≈ 0.9996) is FARTHER from the x-axis centroid than
-    // 0 (≈ 0.99995), so the paper's policy keeps 1 and evicts 0 — the
-    // opposite of keep-lowest-id, which is the point of the test
-    val dropped = Semantic.semDedupCentroidDropped(vecs, "id", "vec", dim,
-        threshold = 0.99, codebook = Some(codebook))
-      .collect().map(_.getLong(0)).toSet
-    assert(dropped == Set(0L))
   }
 
   test("hot-cell cap drops degenerate cells instead of going quadratic") {

@@ -19,7 +19,8 @@ class SketchesSpec extends SparkSpec {
     val exact = df.groupBy("event_type").agg(countDistinct("user_id").as("exact"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // direct estimate
-    val direct = Sketches.approxDistinct(df, Seq("event_type"), "user_id")
+    val direct = Sketches.distinctSketch(df, Seq("event_type"), "user_id")
+      .select(col("event_type"), Sketches.estimate(col("sketch")))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // persisted-per-day sketches, rolled up later without raw data
     val daily = Sketches.distinctSketch(df, Seq("event_type", "day"), "user_id")
@@ -79,7 +80,9 @@ class SketchesSpec extends SparkSpec {
   test("hist fine→coarse rollup equals direct aggregation bit-for-bit") {
     val bounds = Sketches.logBounds(0, 5, 20)
     val daily = Sketches.histSketch(histData, Seq("svc", "day"), "ms", bounds)
-    val rolled = Sketches.histRollup(daily, Seq("svc"), bounds.size + 1)
+    // the rollup of persisted histograms is elementwise integer addition
+    val rolled = daily.groupBy("svc")
+      .agg(array((0 to bounds.size).map(k => sum(element_at(col("hist"), k + 1))): _*))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     val direct = Sketches.histSketch(histData, Seq("svc"), "ms", bounds)
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap

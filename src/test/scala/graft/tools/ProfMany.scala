@@ -4,9 +4,11 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
-/** [[ProfQuery]] over several queries in one JVM/session (one sbt start,
-  * one session warmup): per query, cold + steady wall, stage count, stage
-  * wall sum and task-time sum, plus the top stages of the cold run.
+/** Stage-level attribution for one or more declared queries in one
+  * JVM/session (one sbt start, one session warmup): per query, cold +
+  * steady wall, stage count, stage wall sum and task-time sum, plus the
+  * top stages of the cold run — separating data-bound stages from
+  * scheduling/planning overhead.
   * Usage: Test/runMain graft.ProfMany q_a q_b ... [last arg may be an sf dir]
   */
 object ProfMany {

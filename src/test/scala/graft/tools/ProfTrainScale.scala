@@ -74,5 +74,5 @@ object ProfTrainScale {
 
 object ProfTrainScaleFixtures {
   // the canonical 8×8 24bpp BMP header — one builder for every fixture
-  val hdr: Array[Byte] = graft.SparkEntry.bmpHeader(8, 8)
+  val hdr: Array[Byte] = graft.queries.MultimodalQueries.bmpHeader(8, 8)
 }

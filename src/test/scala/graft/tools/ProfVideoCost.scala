@@ -77,8 +77,8 @@ object ProfVideoCost {
 
 object ProfVideoFixtures {
   // the canonical 8×8 24bpp BMP header — one builder for every fixture
-  val hdr: Array[Byte] = graft.SparkEntry.bmpHeader(8, 8)
+  val hdr: Array[Byte] = graft.queries.MultimodalQueries.bmpHeader(8, 8)
   // the q_dedup_incremental_video MP4 skeleton: two keyframe samples of
   // 246 bytes each (the BMP header + 192 pixel bytes)
-  val (pre, post): (Array[Byte], Array[Byte]) = graft.SparkEntry.mp4VideoFixture
+  val (pre, post): (Array[Byte], Array[Byte]) = graft.queries.MultimodalQueries.mp4VideoFixture
 }
