@@ -88,8 +88,7 @@ object Main {
       try {
         val t0 = System.nanoTime()
         val components = graft.streaming.Streaming.componentsWithStreaming
-        val compiled = Topology.compile(spark,
-          Topology.configFromToml(graft.topology.Toml.parseFile(tomlPath)), components)
+        val compiled = Topology.compileFile(spark, tomlPath, components)
         if (compiled.projected.isStreaming) {
           // daemon topology (reference: api.go:58-66): run until signalled
           val ckpt = sys.env.getOrElse("GRAFT_CHECKPOINT_DIR",

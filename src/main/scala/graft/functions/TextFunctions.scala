@@ -230,7 +230,7 @@ object TextFunctions {
     }
 
   /** Distinct character n-grams of the lowercased text. */
-  def charNgrams(text: Column, n: Int): Column =
+  private[graft] def charNgrams(text: Column, n: Int): Column =
     bindOnce(lower(coalesce(text, lit("")))) { s =>
       when(length(s) < n, array().cast("array<string>"))
         .otherwise(array_distinct(transform(sequence(lit(1), length(s) - (n - 1)),

@@ -94,9 +94,9 @@ object Classifier {
   /** [[scoreLinear]] over hashed buckets: same output columns, same
     * absence semantics, weight table = a flat array indexed by bucket.
     */
-  def scoreLinearHashed(df: DataFrame, idCol: String, textCol: String,
-      weights: Array[Double], bias: Double = 0.0, wordNgrams: Int = 1,
-      hasher: Option[Column => Column] = None): DataFrame = {
+  private[graft] def scoreLinearHashed(df: DataFrame, idCol: String,
+      textCol: String, weights: Array[Double], bias: Double = 0.0,
+      wordNgrams: Int = 1, hasher: Option[Column => Column] = None): DataFrame = {
     require(weights.nonEmpty, "Classifier: weights must be non-empty")
     val feats = hashedBuckets(col(textCol), weights.length, wordNgrams, hasher)
     df.select(col(idCol), size(feats).cast("long").as("n_features"),

@@ -90,8 +90,8 @@ object Dsir {
     * signal but is exactly reproducible from the oracle-checked integers.
     * The paper-exact weight is [[exactWeights]].
     */
-  def withImportanceWeight(stats: DataFrame, totalTarget: Long, totalRaw: Long,
-      buckets: Long, alpha: Double = 1.0): DataFrame =
+  private[graft] def withImportanceWeight(stats: DataFrame, totalTarget: Long,
+      totalRaw: Long, buckets: Long, alpha: Double = 1.0): DataFrame =
     stats.withColumn("weight",
       log((col("tgt_freq") + col("n_grams") * alpha) /
           (lit(totalTarget.toDouble) + buckets * alpha)) -

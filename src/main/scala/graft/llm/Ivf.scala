@@ -124,7 +124,9 @@ object Ivf {
       .distinct().collect().map(_.getInt(0)).sorted.toSeq
 
   /** [[ivfTopKAssigned]] over a cell-PARTITIONED serving snapshot
-    * ([[graft.streaming.DenseIndexStream.promoteServing]]): the probed
+    * ([[graft.streaming.StoreLayout.publishServing]] of an [[assign]]
+    * store with partition column `cell`; the raw vector rides along for
+    * the exact-cosine score): the probed
     * cells are computed first as literals and applied as a
     * `cell IN (...)` filter, which Catalyst turns into STATIC partition
     * pruning on the hive layout — at 100 TB a probe touches

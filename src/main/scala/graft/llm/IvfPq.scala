@@ -155,7 +155,8 @@ object IvfPq {
       .distinct().collect().map(_.getInt(0)).sorted.toSeq
 
   /** [[adcTopKEncoded]] over a cell-PARTITIONED serving snapshot
-    * ([[graft.streaming.PqIndexStream.promoteServing]]): the probed cells
+    * ([[graft.streaming.StoreLayout.publishServing]] of an [[encode]]
+    * store with partition column `cell`): the probed cells
     * are computed first as literals and applied as a `cell IN (...)`
     * filter, which Catalyst turns into STATIC partition pruning on the
     * hive layout — the scan's file listing contains only the probed

@@ -3,6 +3,7 @@ package queries
 
 import org.apache.spark.sql.functions._
 import graft.llm.Similarity
+import graft.streaming.StoreLayout
 
 import QueryFixtures._
 
@@ -657,11 +658,11 @@ object AnnQueries {
       // oracle is q_ann_pq's verbatim
       val emb = t(s, d, "embeddings")
       val dir = qTmpDir("pqstream-q")
-      val fn = graft.streaming.PqIndexStream.batchFunction(
-        graft.streaming.PqIndexStream.pq("vec_id", "embedding", pqDemoModel), dir)
+      val fn = StoreLayout.append(dir)(
+        graft.llm.Pq.encode(_, "vec_id", "embedding", pqDemoModel))
       fn(emb.filter(col("vec_id") % 2 === 0), 0L)
       fn(emb.filter(col("vec_id") % 2 =!= 0), 1L)
-      val store = graft.streaming.PqIndexStream.loadEncoded(s, dir)
+      val store = StoreLayout.load(s, dir)
         .getOrElse(sys.error("stream store must be non-empty"))
       graft.llm.Pq.adcTopKEncoded(store, emb.filter(col("vec_id") < 8),
           "vec_id", "vec_id", "embedding", pqDemoModel, k = 5)
@@ -674,7 +675,7 @@ object AnnQueries {
     QueryDef("q_ann_ivfpq_serving", ((s, d) => {
       // the full serving-layout lifecycle as one checkable row: the
       // corpus streams into the ingest store as two idempotent batches
-      // (ivfPq encoder under the pinned coarse+PQ model), promoteServing
+      // (IvfPq.encode under the pinned coarse+PQ model), publishServing
       // rewrites the snapshot partitioned by cell (versioned rename-
       // commit), and adcTopKServing searches it with the probed cells as
       // LITERALS so the parquet scan prunes cell= partitions statically
@@ -684,13 +685,12 @@ object AnnQueries {
       // q_ann_ivfpq's verbatim.
       val emb = t(s, d, "embeddings")
       val base = qTmpDir("serving-q")
-      val fn = graft.streaming.PqIndexStream.batchFunction(
-        graft.streaming.PqIndexStream.ivfPq("vec_id", "embedding",
-          ivfPqCoarse, pqDemoModel), s"$base/store")
+      val fn = StoreLayout.append(s"$base/store")(graft.llm.IvfPq.encode(_,
+        "vec_id", "embedding", ivfPqCoarse, pqDemoModel))
       fn(emb.filter(col("vec_id") % 2 === 0), 0L)
       fn(emb.filter(col("vec_id") % 2 =!= 0), 1L)
-      graft.streaming.PqIndexStream.promoteServing(s, s"$base/store", s"$base/serve")
-      val served = graft.streaming.PqIndexStream.loadServing(s, s"$base/serve")
+      StoreLayout.publishServing(s, s"$base/store", s"$base/serve", Seq("cell"))
+      val served = StoreLayout.servingSnapshot(s, s"$base/serve")
         .getOrElse(sys.error("serving snapshot must exist after promotion"))
       graft.llm.IvfPq.adcTopKServing(served, emb.filter(col("vec_id") < 8),
           "vec_id", "vec_id", "embedding", ivfPqCoarse, pqDemoModel,
@@ -713,12 +713,12 @@ object AnnQueries {
       // assignment, the probe, and the exact cosine ranking from scratch.
       val emb = t(s, d, "embeddings")
       val base = qTmpDir("ivfserving-q")
-      val fn = graft.streaming.DenseIndexStream.batchFunction(
-        "vec_id", "embedding", s"$base/store", ivfPqCoarse)
+      val fn = StoreLayout.append(s"$base/store")(
+        graft.llm.Ivf.assign(_, "vec_id", "embedding", ivfPqCoarse))
       fn(emb.filter(col("vec_id") % 2 === 0), 0L)
       fn(emb.filter(col("vec_id") % 2 =!= 0), 1L)
-      graft.streaming.DenseIndexStream.promoteServing(s, s"$base/store", s"$base/serve")
-      val served = graft.streaming.DenseIndexStream.loadServing(s, s"$base/serve")
+      StoreLayout.publishServing(s, s"$base/store", s"$base/serve", Seq("cell"))
+      val served = StoreLayout.servingSnapshot(s, s"$base/serve")
         .getOrElse(sys.error("serving snapshot must exist after promotion"))
       graft.llm.Ivf.ivfTopKServing(served, emb.filter(col("vec_id") < 8),
           "vec_id", "vec_id", "embedding", ivfPqCoarse, k = 5, nprobe = 2)

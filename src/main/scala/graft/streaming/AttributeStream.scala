@@ -1,65 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
-
-import graft.llm.Attributes
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Streaming maintenance of an attribute sidecar
   * ([[graft.llm.Attributes]]): every micro-batch of new documents is
   * tagged ONCE (map-only — the expensive signals run exactly when the
-  * text first arrives) and appended as an idempotent
-  * `batch=<runTag>-<batchId>` partition of the [[StoreLayout]] contract.
-  * Curation recipes then [[Attributes.mix]] the committed sidecar with
-  * the corpus at any time — no tagger ever re-runs over old text, which
-  * is the entire point of the sidecar model at 100 TB.
-  *
-  * Same posture as the other at-rest stores: [[compactStore]] folds the
-  * accumulated partitions (crash-safe two-phase), [[deleteDocs]] is the
-  * right-to-be-forgotten pass, and a batch job can call
-  * [[batchFunction]] directly.
+  * text first arrives) and appended as an idempotent partition of the
+  * [[StoreLayout]] contract,
+  * `StoreLayout.append(sidecarDir, runTag)(Attributes.tag(_, idCol, attrs))`.
+  * Curation recipes then [[graft.llm.Attributes.mix]] the committed
+  * sidecar with the corpus at any time — no tagger ever re-runs over old
+  * text, which is the entire point of the sidecar model at 100 TB.
+  * Compaction and right-to-be-forgotten are [[StoreLayout]]'s.
   */
 object AttributeStream {
 
-  def batchFunction(idCol: String, attrs: Seq[(String, Column)],
-      sidecarDir: String, runTag: String = "run"): (DataFrame, Long) => Unit =
-    (batchDf, batchId) =>
-      // lease protocol: fail loudly while maintenance holds the store
-      StoreLayout.writing(batchDf.sparkSession, sidecarDir, runTag) {
-        Attributes.tag(batchDf, idCol, attrs)
-          .write.mode("overwrite").parquet(s"$sidecarDir/batch=$runTag-$batchId")
-      }
-
-  /** All committed attribute rows — feed to [[Attributes.mix]]. None
-    * until a first batch commits (the schema lives in the data).
+  /** All committed attribute rows — feed to [[graft.llm.Attributes.mix]].
+    * None until a first batch commits (the schema lives in the data).
     */
-  def loadSidecar(spark: SparkSession, sidecarDir: String): Option[DataFrame] = {
-    val parts = StoreLayout.committed(spark, sidecarDir)
-    if (parts.isEmpty) None else Some(spark.read.parquet(parts: _*))
-  }
-
-  /** Crash-safe offline fold of the per-batch partitions — see
-    * [[StoreLayout.compact]]. Run while no stream is writing.
-    */
-  def compactStore(spark: SparkSession, sidecarDir: String,
-      targetFiles: Int = 1): Unit =
-    StoreLayout.compact(spark, sidecarDir, targetFiles)
-
-  /** Right-to-be-forgotten: remove `ids`' attribute rows via the
-    * partition-granular crash-safe [[StoreLayout.delete]]. Run while no
-    * stream is writing. Returns rows removed.
-    */
-  def deleteDocs(spark: SparkSession, sidecarDir: String, idCol: String,
-      ids: DataFrame): Long =
-    StoreLayout.deleteIds(spark, sidecarDir, idCol, ids)
-
-  /** Start the tagging query over a streaming document frame. */
-  def start(docs: DataFrame, idCol: String, attrs: Seq[(String, Column)],
-      sidecarDir: String, checkpointDir: String): StreamingQuery = {
-    val runTag = StoreLayout.runTagFor(docs.sparkSession, checkpointDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(batchFunction(idCol, attrs, sidecarDir, runTag))
-      .start()
-  }
+  def loadSidecar(spark: SparkSession, sidecarDir: String): Option[DataFrame] =
+    StoreLayout.load(spark, sidecarDir)
 }

@@ -25,7 +25,8 @@ import graft.llm.ExactSubstr
   * Store discipline is [[IncrementalDedupStream]]'s verbatim: idempotent
   * `batch=<runTag>-<batchId>` partitions (a replayed batch overwrites its
   * own output and never dedupes against its own previous attempt),
-  * committed-parts reads, the maintenance lease, crash-safe compaction.
+  * committed-parts reads, the maintenance lease, crash-safe compaction
+  * ([[StoreLayout.compact]]).
   *
   * 100 TB posture: the ONE corpus-keyed shuffle is on the fixed-width
   * window hash (the banded frame feeds the first-occurrence agg, the
@@ -38,7 +39,7 @@ import graft.llm.ExactSubstr
   */
 object ExactSubstrStream {
 
-  /** The idempotent `foreachBatch` function — a plain
+  /** The idempotent per-batch function — a plain
     * `(DataFrame, Long) => Long` returning the landed-row count,
     * directly callable from batch jobs.
     * ALL record fields pass through (only `textCol` is rewritten), the
@@ -54,19 +55,17 @@ object ExactSubstrStream {
       : (DataFrame, Long) => Long = (batchDf, batchId) => {
     require(!batchDf.columns.contains("__ps"),
       "ExactSubstrStream reserves helper column '__ps'")
-    val self = s"batch=$runTag-$batchId"
+    val self = StoreLayout.partition(runTag, batchId)
     val spark = batchDf.sparkSession
-    val hParts = StoreLayout.committed(spark, storeDir, Some(self))
     // store rows are distinct by construction (each partition is written
     // anti-joined against everything at rest before it) — no re-distinct.
     // The store has TWO consumers per turn (flag join + append anti-join);
     // the committed snapshot is cached for the turn (the single 8-byte
     // __h column) so the parquet store is scanned once per turn instead
     // of twice.
-    val snapshot =
-      if (hParts.nonEmpty) spark.read.parquet(hParts: _*).select("__h")
-      else ExactSubstr.windows(batchDf.limit(0), idCol, textCol, k, hash)
-        .select("__h")
+    val snapshot = StoreLayout.load(spark, storeDir, Some(self))
+      .getOrElse(ExactSubstr.windows(batchDf.limit(0), idCol, textCol, k, hash))
+      .select("__h")
     Cached.scoped(snapshot) { atRest =>
       val perDoc = ExactSubstr
         .flaggedWindowsVs(batchDf, idCol, textCol, k, hash, Some(atRest))
@@ -100,11 +99,6 @@ object ExactSubstrStream {
     }
   }
 
-  /** Offline compaction — the shared crash-safe [[StoreLayout.compact]]. */
-  def compactStore(spark: org.apache.spark.sql.SparkSession, dir: String,
-      targetFiles: Int = 1): Unit =
-    StoreLayout.compact(spark, dir, targetFiles)
-
   /** Rebuild the window-hash store from the kept corpus into
     * `newStoreDir` (one `batch=rebuild-0` partition) — the
     * right-to-be-forgotten path: store rows are content-keyed, so after
@@ -115,14 +109,13 @@ object ExactSubstrStream {
   def rebuildStore(spark: org.apache.spark.sql.SparkSession, corpusDir: String,
       newStoreDir: String, idCol: String, textCol: String, k: Int = 8,
       hash: Column => Column = xxhash64(_)): Unit = {
-    val parts = StoreLayout.committed(spark, corpusDir, None)
-    require(parts.nonEmpty, s"ExactSubstrStream.rebuildStore: no committed " +
+    val corpus = StoreLayout.load(spark, corpusDir)
+    require(corpus.nonEmpty, s"ExactSubstrStream.rebuildStore: no committed " +
       s"corpus partitions under $corpusDir")
-    val corpus = spark.read.parquet(parts: _*).select(col(idCol), col(textCol))
-    StoreLayout.writing(spark, newStoreDir, "rebuild") {
-      ExactSubstr.windows(corpus, idCol, textCol, k, hash)
+    val writeWindows = StoreLayout.append(newStoreDir, "rebuild") { df =>
+      ExactSubstr.windows(df.select(col(idCol), col(textCol)), idCol, textCol, k, hash)
         .select("__h").distinct()
-        .write.mode("overwrite").parquet(s"$newStoreDir/batch=rebuild-0")
     }
+    writeWindows(corpus.get, 0L)
   }
 }

@@ -1,9 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.StreamingQuery
-
-import graft.llm.Lexical
 
 /** The streaming ingest funnel — near-dup dedup THEN index maintenance in
   * one micro-batch: every batch is deduped against the accumulated
@@ -18,7 +15,9 @@ import graft.llm.Lexical
   * The survivors are read back from the batch's own just-committed corpus
   * partition (a point read of one small partition, not a store scan), so
   * the dedup stage stays byte-identical to [[IncrementalDedupStream]] and
-  * the index stage tokenizes each surviving document exactly once.
+  * the index stage tokenizes each surviving document exactly once. Search
+  * the index with [[LexicalIndexStream.loadIndex]]; run it as a stream
+  * with [[StoreLayout.start]].
   */
 object IngestStream {
 
@@ -32,25 +31,8 @@ object IngestStream {
     (batchDf, batchId) => {
       dedup(batchDf, batchId)
       val kept = batchDf.sparkSession.read
-        .parquet(s"$corpusDir/batch=$runTag-$batchId")
+        .parquet(s"$corpusDir/${StoreLayout.partition(runTag, batchId)}")
       index(kept, batchId)
     }
-  }
-
-  /** The combined searchable index over everything ever kept. */
-  def loadIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Lexical.LexicalIndex =
-    LexicalIndexStream.loadIndex(spark, indexDir)
-
-  def start(docs: DataFrame, idCol: String, textCol: String, storeDir: String,
-      corpusDir: String, indexDir: String, checkpointDir: String,
-      threshold: Double = 0.7, numPerm: Int = 64, bands: Int = 16,
-      shingleK: Int = 3, seed: Long = 42L, maxBucketSize: Int = 0): StreamingQuery = {
-    val runTag = StoreLayout.runTagFor(docs.sparkSession, checkpointDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(batchFunction(idCol, textCol, storeDir, corpusDir, indexDir,
-        threshold, numPerm, bands, shingleK, seed, maxBucketSize, runTag))
-      .start()
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.llm.Lexical
@@ -31,12 +30,13 @@ import graft.llm.Lexical
   */
 object LexicalIndexStream {
 
-  /** The idempotent `foreachBatch` function (plain `(DataFrame, Long) =>
-    * Unit` — directly callable from batch jobs and tests).
+  /** The idempotent per-batch function (plain `(DataFrame, Long) =>
+    * Unit` — directly callable from batch jobs and tests; stream it with
+    * [[StoreLayout.start]]).
     */
   def batchFunction(idCol: String, textCol: String, indexDir: String,
       runTag: String = "run"): (DataFrame, Long) => Unit = (batchDf, batchId) => {
-    val self = s"batch=$runTag-$batchId"
+    val self = StoreLayout.partition(runTag, batchId)
     val spark = batchDf.sparkSession
     val postings = Lexical.postings(batchDf, idCol, textCol)
     // lease protocol: each half's write fails loudly while maintenance
@@ -64,20 +64,15 @@ object LexicalIndexStream {
     * to zero rows.
     */
   def loadIndex(spark: SparkSession, indexDir: String): Lexical.LexicalIndex = {
-    val postParts = StoreLayout.committed(spark, s"$indexDir/postings")
-    val statParts = StoreLayout.committed(spark, s"$indexDir/stats")
-    val postings =
-      if (postParts.nonEmpty) spark.read.parquet(postParts: _*)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
+    val postings = StoreLayout.load(spark, s"$indexDir/postings").getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
         StructField("term", StringType), StructField("doc_id", LongType),
-        StructField("dl", LongType), StructField("tf", LongType))))
-    val stats =
-      if (statParts.nonEmpty)
-        spark.read.parquet(statParts: _*)
-          .agg(sum("n_docs").as("n_docs"),
-            (sum(col("avgdl") * col("n_docs")) / sum(col("n_docs"))).as("avgdl"))
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
-        StructField("n_docs", LongType), StructField("avgdl", DoubleType))))
+        StructField("dl", LongType), StructField("tf", LongType)))))
+    val stats = StoreLayout.load(spark, s"$indexDir/stats")
+      .map(_.agg(sum("n_docs").as("n_docs"),
+        (sum(col("avgdl") * col("n_docs")) / sum(col("n_docs"))).as("avgdl")))
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
+        StructField("n_docs", LongType), StructField("avgdl", DoubleType)))))
     Lexical.LexicalIndex(postings, stats)
   }
 
@@ -98,18 +93,17 @@ object LexicalIndexStream {
     */
   def deleteDocs(spark: SparkSession, indexDir: String, ids: DataFrame): Long = {
     val removed = StoreLayout.deleteIds(spark, s"$indexDir/postings", "doc_id", ids)
-    val postParts = StoreLayout.committed(spark, s"$indexDir/postings")
     // a store that was never written must not be conjured into existence
     // by a no-op delete (deletion never removes partitions — it leaves
     // committed empty ones — so removed > 0 implies parts exist)
-    if (postParts.nonEmpty) {
+    for (postings <- StoreLayout.load(spark, s"$indexDir/postings")) {
       // replace ALL prior stats rows with the one recomputed row; the
       // reader's dl-weighted merge over a single row is the row itself.
       // If the delete removed EVERY document, statsOf's sum/0 yields
       // avgdl=null — pin the well-defined empty-index representation
       // (0, 0.0) instead, so direct stats consumers never see a null
       StoreLayout.replaceAll(spark, s"$indexDir/stats",
-        Lexical.statsOf(spark.read.parquet(postParts: _*))
+        Lexical.statsOf(postings)
           .select(coalesce(col("n_docs"), lit(0L)).as("n_docs"),
             coalesce(col("avgdl"), lit(0.0)).as("avgdl")))
     }
@@ -129,15 +123,5 @@ object LexicalIndexStream {
       targetFiles: Int = 1): Unit = {
     StoreLayout.compact(spark, s"$indexDir/postings", targetFiles)
     StoreLayout.compact(spark, s"$indexDir/stats", targetFiles)
-  }
-
-  /** Start the maintenance query over a streaming document frame. */
-  def start(docs: DataFrame, idCol: String, textCol: String, indexDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val runTag = StoreLayout.runTagFor(docs.sparkSession, checkpointDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(batchFunction(idCol, textCol, indexDir, runTag))
-      .start()
   }
 }

@@ -1,15 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.core.Cached
 import graft.llm.Dedup
 
 /** Streaming perceptual near-dup dedup — [[Dedup.incrementalHammingDedup]]
-  * lifted to Structured Streaming with `foreachBatch`: every micro-batch
+  * lifted to Structured Streaming ([[StoreLayout.start]]): every micro-batch
   * of media records is fingerprinted (image pHash/dHash/aHash, audio
   * fingerprint — any 64-bit Hamming signature the caller's `sigOf`
   * produces), deduped against the accumulated at-rest signature store AND
@@ -26,11 +25,12 @@ import graft.llm.Dedup
   * `batch=<runTag>-<batchId>` partitions (a replayed batch overwrites its
   * own output and never dedupes against its own previous attempt),
   * committed-only reads, the maintenance lease, crash-safe compaction,
-  * and partition-granular right-to-be-forgotten deletion.
+  * and the two-half right-to-be-forgotten pass
+  * ([[StoreLayout.deleteDocs]]).
   */
 object PerceptualDedupStream {
 
-  /** The idempotent `foreachBatch` function. `sigOf` maps a batch to its
+  /** The idempotent per-batch function. `sigOf` maps a batch to its
     * `(__id, __hsig)` signature frame — perceptual hashes come out of the
     * typed decode path ([[graft.llm.Multimodal.pHash]] etc.), not a
     * Column, so the producer is a frame transformation. Batch rows
@@ -62,14 +62,12 @@ object PerceptualDedupStream {
       normalize: DataFrame => DataFrame, sigOf: DataFrame => DataFrame,
       dedup: (DataFrame, DataFrame, DataFrame) => DataFrame)
       : (DataFrame, Long) => Long = (batchDf, batchId) => {
-    val self = s"batch=$runTag-$batchId"
+    val self = StoreLayout.partition(runTag, batchId)
     val spark = batchDf.sparkSession
-    val sigParts = StoreLayout.committed(spark, storeDir, Some(self))
-    val atRest =
-      if (sigParts.nonEmpty)
-        spark.read.parquet(sigParts: _*).select("__id", sigCol)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
-        batchDf.schema(idCol).copy(name = "__id"), sigField)))
+    val atRest = StoreLayout.load(spark, storeDir, Some(self))
+      .map(_.select("__id", sigCol))
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(
+        batchDf.schema(idCol).copy(name = "__id"), sigField))))
     // signatures computed ONCE per batch: the dedup reuses this frame for
     // both joins, and the store append below writes the kept subset of it.
     // The count() materializes the cache in one job before any consumer
@@ -125,85 +123,4 @@ object PerceptualDedupStream {
       sigOf = sigsOf,
       dedup = (batchDf, sigs, atRest) => Dedup.incrementalHammingDedupMulti(
         batchDf, idCol, sigs, atRest, nBits, maxHamming, maxBucketSize, pieces))
-
-  /** Offline compaction — the shared crash-safe [[StoreLayout.compact]]. */
-  def compactStore(spark: SparkSession, dir: String, targetFiles: Int = 1): Unit =
-    StoreLayout.compact(spark, dir, targetFiles)
-
-  /** Right-to-be-forgotten: remove `ids` from BOTH halves — kept-corpus
-    * rows first (the payload is the legal deliverable; a crash window
-    * leaves at worst a ghost signature that still BLOCKS near-dups of the
-    * forgotten object, never the reverse), then signatures. Run while no
-    * stream is writing. Returns (signature rows, corpus rows) removed.
-    */
-  def deleteObjects(spark: SparkSession, storeDir: String, corpusDir: String,
-      idCol: String, ids: DataFrame): (Long, Long) = {
-    val corpusRemoved = StoreLayout.deleteIds(spark, corpusDir, idCol, ids)
-    val sigRemoved = StoreLayout.deleteIds(spark, storeDir, "__id", ids)
-    (sigRemoved, corpusRemoved)
-  }
-
-  /** Start the streaming query: media records → per-batch perceptual
-    * dedup → kept rows under `corpusDir/batch=*`, their signatures under
-    * `storeDir/batch=*`.
-    */
-  def start(docs: DataFrame, idCol: String, sigOf: DataFrame => DataFrame,
-      storeDir: String, corpusDir: String, checkpointDir: String,
-      nBits: Int = 64, maxHamming: Int = 3, maxBucketSize: Int = 0,
-      pieces: Int = 1): StreamingQuery = {
-    val runTag = StoreLayout.runTagFor(docs.sparkSession, checkpointDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        batchFunction(idCol, sigOf, storeDir, corpusDir,
-          nBits, maxHamming, maxBucketSize, pieces, runTag)(df, id)
-        ()
-      }
-      .start()
-  }
-
-  /** [[start]] for the multi-signature tier (video keyframe vectors). */
-  def startMulti(docs: DataFrame, idCol: String,
-      sigsOf: DataFrame => DataFrame, storeDir: String, corpusDir: String,
-      checkpointDir: String, nBits: Int = 64, maxHamming: Int = 3,
-      maxBucketSize: Int = 0, pieces: Int = 1): StreamingQuery = {
-    val runTag = StoreLayout.runTagFor(docs.sparkSession, checkpointDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        batchFunctionMulti(idCol, sigsOf, storeDir, corpusDir,
-          nBits, maxHamming, maxBucketSize, pieces, runTag)(df, id)
-        ()
-      }
-      .start()
-  }
-}
-
-/** Pre-r13 name of [[PerceptualDedupStream]] — the store was always
-  * signature-generic (any 64-bit Hamming signature: image pHash/dHash/
-  * aHash, audio fingerprint, video folds), so the image-specific name
-  * undersold it. Kept as a thin alias for existing callers.
-  */
-@deprecated("use PerceptualDedupStream", "r13")
-object ImageDedupStream {
-  def batchFunction(idCol: String, sigOf: DataFrame => DataFrame,
-      storeDir: String, corpusDir: String, nBits: Int = 64, maxHamming: Int = 3,
-      maxBucketSize: Int = 0, pieces: Int = 1, runTag: String = "run")
-      : (DataFrame, Long) => Long =
-    PerceptualDedupStream.batchFunction(idCol, sigOf, storeDir, corpusDir,
-      nBits, maxHamming, maxBucketSize, pieces, runTag)
-
-  def compactStore(spark: SparkSession, dir: String, targetFiles: Int = 1): Unit =
-    PerceptualDedupStream.compactStore(spark, dir, targetFiles)
-
-  def deleteObjects(spark: SparkSession, storeDir: String, corpusDir: String,
-      idCol: String, ids: DataFrame): (Long, Long) =
-    PerceptualDedupStream.deleteObjects(spark, storeDir, corpusDir, idCol, ids)
-
-  def start(docs: DataFrame, idCol: String, sigOf: DataFrame => DataFrame,
-      storeDir: String, corpusDir: String, checkpointDir: String,
-      nBits: Int = 64, maxHamming: Int = 3, maxBucketSize: Int = 0,
-      pieces: Int = 1): StreamingQuery =
-    PerceptualDedupStream.start(docs, idCol, sigOf, storeDir, corpusDir,
-      checkpointDir, nBits, maxHamming, maxBucketSize, pieces)
 }

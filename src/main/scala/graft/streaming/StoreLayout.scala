@@ -1,16 +1,24 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Shared layout contract of the streaming at-rest stores
-  * ([[IncrementalDedupStream]], [[LexicalIndexStream]],
-  * [[DenseIndexStream]], [[PqIndexStream]]): a store directory holds
-  * `batch=<runTag>-<batchId>/` parquet partitions, each written with
-  * overwrite by exactly one micro-batch (idempotent replay), and a reader
-  * trusts only COMMITTED partitions — the `_SUCCESS` marker parquet
-  * writes at job commit — so a crashed attempt's footerless part files
-  * never poison a later read.
+/** The layout contract, and the public maintenance API, of every at-rest
+  * store: the text, perceptual and exact-substring dedup stores
+  * ([[IncrementalDedupStream]], [[PerceptualDedupStream]],
+  * [[ExactSubstrStream]]), the BM25 index ([[LexicalIndexStream]]), the
+  * attribute sidecar ([[AttributeStream]]) and the ANN code tables that
+  * [[append]] feeds. A store directory holds
+  * `batch=<runTag>-<batchId>/` parquet partitions ([[partition]]), each
+  * written with overwrite by exactly one micro-batch (idempotent replay),
+  * and a reader trusts only COMMITTED partitions ([[committed]],
+  * [[load]]) — the `_SUCCESS` marker parquet writes at job commit — so a
+  * crashed attempt's footerless part files never poison a later read.
+  * Stores are maintained here and nowhere else: [[compact]],
+  * [[deleteIds]]/[[deleteDocs]] (right-to-be-forgotten),
+  * [[publishServing]]/[[servingSnapshot]], and [[start]] for a streaming
+  * query over any store's batch function.
   *
   * Compaction ([[compact]]) rewrites many partitions as one
   * `batch=compact-<tag>/` partition under a staged rename that is
@@ -38,7 +46,7 @@ import org.apache.spark.sql.SparkSession
   * so a re-run after any crash recomputes the same staging target and
   * overwrites its own partial output.
   */
-private[graft] object StoreLayout {
+object StoreLayout {
 
   private val AbsorbedFile = "_ABSORBED"
   private val LeaseFile = "_MAINT_LEASE"
@@ -217,6 +225,36 @@ private[graft] object StoreLayout {
     } finally stamp("idle")
   }
 
+  /** The idempotent `foreachBatch` function of a store fed by a MAP-ONLY
+    * encoder (the ANN code tables: [[graft.llm.Ivf.assign]],
+    * [[graft.llm.Pq.encode]], [[graft.llm.Opq.encode]],
+    * [[graft.llm.IvfPq.encode]], [[graft.llm.Quantize.int8Encode]],
+    * [[graft.llm.Quantize.binaryEncode]]; the attribute tagger
+    * [[graft.llm.Attributes.tag]]): each micro-batch's `encode(batch)`
+    * lands as its own [[partition]] with overwrite, inside the [[writing]]
+    * bracket. The encode runs the same codegen'd expressions as the batch
+    * path, so a stream-appended store holds EXACTLY the rows a one-shot
+    * batch encode would — search parity is structural.
+    *
+    * Whatever model the encoder closes over must stay PINNED for the
+    * store's lifetime: codes are only comparable under one codebook (PQ,
+    * OPQ rotation, IVF-PQ coarse quantizer and residual model), an IVF
+    * cell assignment only under one coarse quantizer (old cells would go
+    * stale), int8 codes only under one per-dimension [min, max]
+    * calibration from a bootstrap [[graft.llm.Quantize.int8Stats]] (new
+    * out-of-range values clamp). Train once on a bootstrap sample;
+    * re-training means re-encoding the store as a batch job. The binary
+    * sign code is model-free. A plain `(DataFrame, Long) => Unit`,
+    * directly callable from batch jobs and tests.
+    */
+  def append(dir: String, runTag: String = "run")(
+      encode: DataFrame => DataFrame): (DataFrame, Long) => Unit =
+    (batchDf, batchId) =>
+      writing(batchDf.sparkSession, dir, runTag) {
+        encode(batchDf).write.mode("overwrite")
+          .parquet(s"$dir/${partition(runTag, batchId)}")
+      }
+
   /** Operator escape hatch: remove a (crashed) maintenance lease without
     * waiting out `staleMs`. Returns whether a lease existed.
     */
@@ -265,6 +303,24 @@ private[graft] object StoreLayout {
       .map(_.getPath.toString)
   }
 
+  /** Every committed row under `dir` (minus `exclude`, as [[committed]]),
+    * or None until a first batch commits — the schema lives in the data,
+    * so an empty store has no frame to offer.
+    */
+  def load(spark: SparkSession, dir: String,
+      exclude: Option[String] = None): Option[DataFrame] = {
+    val parts = committed(spark, dir, exclude)
+    if (parts.isEmpty) None else Some(spark.read.parquet(parts: _*))
+  }
+
+  /** The one spelling of a micro-batch's partition name,
+    * `batch=<runTag>-<batchId>`. `runTag` must be stable across restarts
+    * of the same query (a replayed batch overwrites its own partition)
+    * and unique across queries sharing the store (a fresh checkpoint's
+    * batchIds restart at 0) — [[runTagFor]] has exactly that lifecycle.
+    */
+  def partition(runTag: String, batchId: Long): String = s"batch=$runTag-$batchId"
+
   /** Sweeps 1+2 of the staged-rewrite protocol, shared by [[compact]] and
     * [[delete]]: remove staging orphans (runs that died before their
     * rename-commit — never reader-visible) and finish any earlier run's
@@ -292,7 +348,7 @@ private[graft] object StoreLayout {
     * for [[commitStaged]]. Nothing is reader-visible until the rename.
     */
   private def stage(fs: FileSystem, root: Path, tag: String,
-      df: org.apache.spark.sql.DataFrame, absorbs: Seq[String],
+      df: DataFrame, absorbs: Seq[String],
       targetFiles: Int): (Path, Path) = {
     val staging = new Path(root, s"_compacting-$tag")
     val target = new Path(root, s"batch=compact-$tag")
@@ -309,7 +365,7 @@ private[graft] object StoreLayout {
 
   /** Steps 1-2 together; the caller deletes the absorbed dirs (step 3). */
   private def stageAndCommit(fs: FileSystem, root: Path, tag: String,
-      df: org.apache.spark.sql.DataFrame, absorbs: Seq[String],
+      df: DataFrame, absorbs: Seq[String],
       targetFiles: Int): Unit = {
     val (staging, target) = stage(fs, root, tag, df, absorbs, targetFiles)
     commitStaged(fs, staging, target)
@@ -369,7 +425,7 @@ private[graft] object StoreLayout {
     * one being rewritten.
     */
   def delete(spark: SparkSession, dir: String,
-      keep: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      keep: DataFrame => DataFrame,
       targetFiles: Int = 1,
       onlyParts: Option[Set[String]] = None,
       staleMs: Long = DefaultStaleMs): Long = {
@@ -385,7 +441,7 @@ private[graft] object StoreLayout {
     * [[deleteIds]] — which must not re-acquire on the same dir).
     */
   private def deleteCore(spark: SparkSession, fs: FileSystem, root: Path,
-      keep: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      keep: DataFrame => DataFrame,
       targetFiles: Int,
       onlyParts: Option[Set[String]]): Long = {
     require(targetFiles > 0, s"targetFiles must be positive: $targetFiles")
@@ -453,7 +509,7 @@ private[graft] object StoreLayout {
     * Guarded by the maintenance lease ([[acquireLease]]).
     */
   def replaceAll(spark: SparkSession, dir: String,
-      df: org.apache.spark.sql.DataFrame, targetFiles: Int = 1,
+      df: DataFrame, targetFiles: Int = 1,
       staleMs: Long = DefaultStaleMs): Unit = {
     require(targetFiles > 0, s"targetFiles must be positive: $targetFiles")
     val root = new Path(dir)
@@ -572,7 +628,7 @@ private[graft] object StoreLayout {
     * prunable. None until a first promotion commits.
     */
   def servingSnapshot(spark: SparkSession,
-      servingDir: String): Option[org.apache.spark.sql.DataFrame] = {
+      servingDir: String): Option[DataFrame] = {
     val root = new Path(servingDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     listServing(fs, root).lastOption
@@ -600,7 +656,7 @@ private[graft] object StoreLayout {
     * maintenance lease ([[acquireLease]]).
     */
   def deleteIds(spark: SparkSession, dir: String, keyCol: String,
-      ids: org.apache.spark.sql.DataFrame, targetFiles: Int = 1,
+      ids: DataFrame, targetFiles: Int = 1,
       staleMs: Long = DefaultStaleMs, maxIds: Int = 1000000): Long = {
     import org.apache.spark.sql.functions.{broadcast, col, input_file_name}
     val distinctIds = ids.select(col(ids.columns.head).as("__doomed_id")).distinct()
@@ -631,6 +687,31 @@ private[graft] object StoreLayout {
           targetFiles, onlyParts = Some(affected))
       }
     }
+  }
+
+  /** Right-to-be-forgotten over both halves of a dedup store: `ids`' kept
+    * corpus rows (keyed `idCol`) and their signatures (keyed `__id`), each
+    * through [[deleteIds]]. Afterwards a near-duplicate of a deleted
+    * document is ADMITTED (nothing remains to collide with) — the store
+    * behaves as if the document had never been ingested.
+    *
+    * The order is privacy-first: the corpus payload (the legal
+    * deliverable) goes before the signatures, so a crash or a refused
+    * lease between the two halves leaves at worst a ghost signature,
+    * never the reverse window where the payload lingers while its
+    * near-dups are already admitted. In the perceptual stores the
+    * signature is the whole decision statistic, so a ghost still BLOCKS
+    * near-dups of the forgotten object until a re-run finishes the job;
+    * the text store verifies each candidate against the kept text, so
+    * there a ghost blocks nothing. Re-running converges either way. Run
+    * while no stream is writing. Returns (signature rows, corpus rows)
+    * removed.
+    */
+  def deleteDocs(spark: SparkSession, storeDir: String, corpusDir: String,
+      idCol: String, ids: DataFrame): (Long, Long) = {
+    val corpusRemoved = deleteIds(spark, corpusDir, idCol, ids)
+    val sigRemoved = deleteIds(spark, storeDir, "__id", ids)
+    (sigRemoved, corpusRemoved)
   }
 
   /** Stable-per-checkpoint-INSTANCE, distinct-across-queries run tag: a
@@ -670,5 +751,21 @@ private[graft] object StoreLayout {
       try out.write(fresh.getBytes("UTF-8")) finally out.close()
       fresh
     }
+  }
+
+  /** Start a streaming query over `docs` that runs `batchFn(runTag)` on
+    * every micro-batch, with `runTag` from [[runTagFor]] (stable across
+    * restarts of this checkpoint, so replays overwrite their own
+    * partitions; distinct across queries). `batchFn` is any store's batch
+    * function with its run tag left open, e.g.
+    * `tag => IncrementalDedupStream.batchFunction(..., runTag = tag)`.
+    */
+  def start(docs: DataFrame, checkpointDir: String)(
+      batchFn: String => (DataFrame, Long) => Any): StreamingQuery = {
+    val fn = batchFn(runTagFor(docs.sparkSession, checkpointDir))
+    docs.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) => fn(batch, batchId); () }
+      .start()
   }
 }

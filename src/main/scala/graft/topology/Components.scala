@@ -1849,6 +1849,33 @@ object BuiltinComponents {
       OutputResult(Seq(path), obs.get("rows").asInstanceOf[Long])
     })
 
+  /** The `RunTag`/`Rotation` keys of every store output: the two halves
+    * of its idempotent batch partition
+    * ([[graft.streaming.StoreLayout.partition]]).
+    */
+  private val storeBatchKeys: Seq[ConfigKey] = Seq(
+    ConfigKey("RunTag", "store partition namespace; daemons MUST pass " +
+      "\"{{.RunTag}}\" (the per-checkpoint-instance tag — a static tag " +
+      "collides with absorbed partition names after a checkpoint wipe)",
+      default = Some("run")),
+    ConfigKey("Rotation", "batch id for idempotent partitions; daemons " +
+      "pass \"{{.Rotation}}\"", default = Some("0")))
+
+  /** Runs a store output's batch function on this batch's partition and
+    * names the landed corpus partition. The row count comes back from the
+    * batch function's persisted frame — re-reading the landed partition
+    * would scan it a second time per batch and throw on a part-file-less
+    * empty partition.
+    */
+  private def storeBatch(cfg: ComponentConfig, df: DataFrame, corpusDir: String)(
+      fn: String => (DataFrame, Long) => Long): OutputResult = {
+    val runTag = cfg.str("RunTag", "run")
+    val rotation = cfg.str("Rotation", "0").toLong
+    val rows = fn(runTag)(df, rotation)
+    OutputResult(
+      Seq(s"$corpusDir/${graft.streaming.StoreLayout.partition(runTag, rotation)}"), rows)
+  }
+
   /** PerceptualDedupStore — the perceptual incremental dedup stores
     * ([[graft.streaming.PerceptualDedupStream]]) as a TOML OUTPUT, so the
     * multimodal tier is config-reachable like the text one: each batch
@@ -1874,13 +1901,7 @@ object BuiltinComponents {
       ConfigKey("CorpusDir", "kept-corpus directory", required = true),
       ConfigKey("MaxHamming", "near-dup radius in signature bits", default = Some(3L)),
       ConfigKey("MaxBucketSize", "skew fuse: drop hotter band buckets (0 = off)",
-        default = Some(0L)),
-      ConfigKey("RunTag", "store partition namespace; daemons MUST pass " +
-        "\"{{.RunTag}}\" (the per-checkpoint-instance tag — a static tag " +
-        "collides with absorbed partition names after a checkpoint wipe)",
-        default = Some("run")),
-      ConfigKey("Rotation", "batch id for idempotent partitions; daemons " +
-        "pass \"{{.Rotation}}\"", default = Some("0"))),
+        default = Some(0L))) ++ storeBatchKeys,
     raw = false,
     (ctx, cfg, df) => {
       val id = cfg.str("IdField")
@@ -1888,8 +1909,6 @@ object BuiltinComponents {
       val method = cfg.str("Hash", "phash").toLowerCase
       val storeDir = cfg.str("StoreDir")
       val corpusDir = cfg.str("CorpusDir")
-      val runTag = cfg.str("RunTag", "run")
-      val rotation = cfg.str("Rotation", "0").toLong
       def sigOf(batch: DataFrame): DataFrame = {
         // the typed decode path keys on doc_id (DecodedImage/DecodedAudio)
         val media = batch.select(col(id), unbase64(col(pf)).as("__bytes"))
@@ -1911,14 +1930,10 @@ object BuiltinComponents {
         val sigName = hashed.columns.filterNot(_ == "doc_id").head
         hashed.select(col("doc_id").as("__id"), col(sigName).as("__hsig"))
       }
-      val fn = graft.streaming.PerceptualDedupStream.batchFunction(id, sigOf,
-        storeDir, corpusDir, maxHamming = cfg.int("MaxHamming", 3L).toInt,
-        maxBucketSize = cfg.int("MaxBucketSize", 0L).toInt, runTag = runTag)
-      // survivor count comes back from the batch function's persisted
-      // frame — re-reading the landed partition would scan it a second
-      // time per batch and throw on a part-file-less empty partition
-      val rows = fn(df, rotation)
-      OutputResult(Seq(s"$corpusDir/batch=$runTag-$rotation"), rows)
+      storeBatch(cfg, df, corpusDir)(tag => graft.streaming.PerceptualDedupStream
+        .batchFunction(id, sigOf, storeDir, corpusDir,
+          maxHamming = cfg.int("MaxHamming", 3L).toInt,
+          maxBucketSize = cfg.int("MaxBucketSize", 0L).toInt, runTag = tag))
     })
 
   /** SubstrDedupStore — [[graft.streaming.ExactSubstrStream]] as a TOML
@@ -1939,25 +1954,15 @@ object BuiltinComponents {
       ConfigKey("Field", "text field to dedup", required = true),
       ConfigKey("K", "window width in tokens", default = Some(8L)),
       ConfigKey("StoreDir", "at-rest window-hash store directory", required = true),
-      ConfigKey("CorpusDir", "cleaned-corpus directory", required = true),
-      ConfigKey("RunTag", "store partition namespace; daemons MUST pass " +
-        "\"{{.RunTag}}\" (the per-checkpoint-instance tag — a static tag " +
-        "collides with absorbed partition names after a checkpoint wipe)",
-        default = Some("run")),
-      ConfigKey("Rotation", "batch id for idempotent partitions; daemons " +
-        "pass \"{{.Rotation}}\"", default = Some("0"))),
+      ConfigKey("CorpusDir", "cleaned-corpus directory", required = true)) ++
+      storeBatchKeys,
     raw = false,
     (ctx, cfg, df) => {
       val corpusDir = cfg.str("CorpusDir")
-      val runTag = cfg.str("RunTag", "run")
-      val rotation = cfg.str("Rotation", "0").toLong
-      val fn = graft.streaming.ExactSubstrStream.batchFunction(
-        cfg.str("IdField"), cfg.str("Field"), cfg.str("StoreDir"), corpusDir,
-        k = cfg.int("K", 8L).toInt, runTag = runTag)
-      // landed count from the batch function's persisted frame, not a
-      // partition read-back (second scan + throws on an empty partition)
-      val rows = fn(df, rotation)
-      OutputResult(Seq(s"$corpusDir/batch=$runTag-$rotation"), rows)
+      storeBatch(cfg, df, corpusDir)(tag =>
+        graft.streaming.ExactSubstrStream.batchFunction(cfg.str("IdField"),
+          cfg.str("Field"), cfg.str("StoreDir"), corpusDir,
+          k = cfg.int("K", 8L).toInt, runTag = tag))
     })
 
   /** Stats — dataset distribution report to CSV.

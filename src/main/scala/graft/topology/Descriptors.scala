@@ -93,14 +93,6 @@ final case class ComponentConfig(raw: Map[String, Any], componentName: String = 
     case Some(other) => throw new IllegalArgumentException(
       s"$componentName: '$key' is not a table: $other")
   }
-  /** Duration string ("60s", "5m", "-1") → seconds. */
-  def durationSec(key: String, default: => Long): Long = any(key) match {
-    case None            => default
-    case Some(l: Long)   => l
-    case Some(s: String) => ComponentConfig.parseDuration(s)
-    case Some(other) => throw new IllegalArgumentException(
-      s"$componentName: '$key' is not a duration: $other")
-  }
 
   /** Reject unknown keys (reference: config.go:403-406) and missing
     * required ones (config.go:555-567).

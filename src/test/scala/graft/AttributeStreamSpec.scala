@@ -6,9 +6,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.llm.Attributes
-import graft.streaming.AttributeStream
+import graft.streaming.{AttributeStream, StoreLayout}
 
-/** [[AttributeStream]]: per-batch map-only tagging into an at-rest
+/** [[AttributeStream]] and [[StoreLayout]]: per-batch map-only tagging into an at-rest
   * sidecar, committed-only mixes, idempotent replay, compaction, RTBF
   * deletion.
   */
@@ -28,7 +28,7 @@ class AttributeStreamSpec extends SparkSpec {
   test("batches accumulate; the mixed result equals a one-shot tag; " +
       "replay overwrites; compaction and deletion compose") {
     val dir = tmp().toString
-    val fn = AttributeStream.batchFunction("doc_id", attrs, dir)
+    val fn = StoreLayout.append(dir)(Attributes.tag(_, "doc_id", attrs))
     assert(AttributeStream.loadSidecar(spark, dir).isEmpty)
     fn(corpusDf.filter(col("doc_id") <= 2), 0L)
     fn(corpusDf.filter(col("doc_id") > 2), 1L)
@@ -41,11 +41,11 @@ class AttributeStreamSpec extends SparkSpec {
     assert(mixIds(side) == Seq(1L, 3L))
     assert(mixIds(Attributes.tag(corpusDf, "doc_id", attrs)) == Seq(1L, 3L))
     // compaction: same rows, one partition
-    AttributeStream.compactStore(spark, dir)
+    StoreLayout.compact(spark, dir)
     assert(mixIds(AttributeStream.loadSidecar(spark, dir).get) == Seq(1L, 3L))
     // RTBF: forgotten doc's attributes leave the sidecar
     import spark.implicits._
-    assert(AttributeStream.deleteDocs(spark, dir, "doc_id",
+    assert(StoreLayout.deleteIds(spark, dir, "doc_id",
       Seq(3L).toDF("doc_id")) == 1L)
     assert(mixIds(AttributeStream.loadSidecar(spark, dir).get) == Seq(1L))
   }
@@ -55,8 +55,8 @@ class AttributeStreamSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = tmp().toString
     val mem = MemoryStream[(Long, String)]
-    val q = AttributeStream.start(mem.toDF().toDF("doc_id", "text"),
-      "doc_id", attrs, s"$dir/sidecar", s"$dir/chk")
+    val q = StoreLayout.start(mem.toDF().toDF("doc_id", "text"), s"$dir/chk")(
+      StoreLayout.append(s"$dir/sidecar", _)(Attributes.tag(_, "doc_id", attrs)))
     try {
       mem.addData((1L, "one two three four"), (2L, "just one"))
       q.processAllAvailable()
@@ -79,7 +79,7 @@ class AttributeStreamSpec extends SparkSpec {
     // writes), incrementally, one micro-batch per doc
     val spanAttrs = Seq("pii_spans" -> to_json(transform(
       TF.piiSpans(col("text")), sp => array(sp.getField("s"), sp.getField("e")))))
-    val fn = AttributeStream.batchFunction("doc_id", spanAttrs, dir)
+    val fn = StoreLayout.append(dir)(Attributes.tag(_, "doc_id", spanAttrs))
     fn(docs.filter(col("doc_id") === 1), 0L)
     fn(docs.filter(col("doc_id") === 2), 1L)
     val side = AttributeStream.loadSidecar(spark, dir).get

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.streaming.IncrementalDedupStream
+import graft.streaming.{IncrementalDedupStream, StoreLayout}
 
 /** [[IncrementalDedupStream]]: per-micro-batch near-dup dedup against the
   * accumulating parquet signature store — cross-batch kills, within-batch
@@ -69,7 +69,7 @@ class IncrementalDedupStreamSpec extends SparkSpec {
     // near-dup of doc 1 dies against the store
     fn(Seq((10L, base.replace("lazy", "sleepy"))).toDF("doc_id", "text"), 1L)
     assert(keptIds(corpus) == Set(1L, 2L))
-    val (sigRows, docRows) = IncrementalDedupStream.deleteDocs(
+    val (sigRows, docRows) = StoreLayout.deleteDocs(
       spark, store, corpus, "doc_id", Seq(1L).toDF("doc_id"))
     assert(sigRows == 1L && docRows == 1L)
     assert(keptIds(corpus) == Set(2L))
@@ -132,8 +132,8 @@ class IncrementalDedupStreamSpec extends SparkSpec {
     val dir = tmp()
     val (store, corpus) = (s"$dir/store", s"$dir/corpus")
     val in1 = MemoryStream[(Long, String)]
-    val q1 = IncrementalDedupStream.start(in1.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", store, corpus, s"$dir/ckpt1")
+    val q1 = StoreLayout.start(in1.toDF().toDF("doc_id", "text"), s"$dir/ckpt1")(tag =>
+      IncrementalDedupStream.batchFunction("doc_id", "text", store, corpus, runTag = tag))
     try {
       in1.addData((1L, base), (2L, other))
       q1.processAllAvailable()
@@ -143,8 +143,8 @@ class IncrementalDedupStreamSpec extends SparkSpec {
     } finally q1.stop()
     // a brand-new query (fresh checkpoint) still dedupes against the store
     val in2 = MemoryStream[(Long, String)]
-    val q2 = IncrementalDedupStream.start(in2.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", store, corpus, s"$dir/ckpt2")
+    val q2 = StoreLayout.start(in2.toDF().toDF("doc_id", "text"), s"$dir/ckpt2")(tag =>
+      IncrementalDedupStream.batchFunction("doc_id", "text", store, corpus, runTag = tag))
     try {
       in2.addData((30L, other), (31L, "entirely novel content never seen " +
         "before about deep ocean currents and bioluminescent creatures below"))

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.llm.Lexical
-import graft.streaming.IngestStream
+import graft.streaming.{IngestStream, LexicalIndexStream, StoreLayout}
 
 /** [[IngestStream]]: dedup-then-index in one micro-batch — killed docs
   * never reach the index, replay keeps all three stores consistent.
@@ -20,7 +20,7 @@ class IngestStreamSpec extends SparkSpec {
       "with nothing shared at all in any shingle of this string whatsoever"
 
   private def searchIds(indexDir: String, q: String): Set[Long] =
-    Lexical.bm25Search(IngestStream.loadIndex(spark, indexDir),
+    Lexical.bm25Search(LexicalIndexStream.loadIndex(spark, indexDir),
         { import spark.implicits._; Seq(1L -> q).toDF("query_id", "qtext") },
         "query_id", "qtext", k = 100)
       .collect().map(_.getAs[Long]("doc_id")).toSet
@@ -43,7 +43,7 @@ class IngestStreamSpec extends SparkSpec {
     // replay of batch 1 overwrites, never duplicates postings or stats
     fn(Seq((10L, other), (11L, "entirely novel words appear here"))
       .toDF("doc_id", "text"), 1L)
-    val idx = IngestStream.loadIndex(spark, index)
+    val idx = LexicalIndexStream.loadIndex(spark, index)
     assert(idx.stats.collect()(0).getAs[Long]("n_docs") == 3L) // docs 1, 3, 11
     assert(idx.postings.filter(org.apache.spark.sql.functions.col("doc_id") === 11L)
       .groupBy("term").count().collect().forall(_.getLong(1) == 1L))
@@ -54,8 +54,9 @@ class IngestStreamSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = Files.createTempDirectory("graft-ingest-e2e").toFile
     val mem = MemoryStream[(Long, String)]
-    val q = IngestStream.start(mem.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      s"$dir/store", s"$dir/corpus", s"$dir/index", s"$dir/chk")
+    val q = StoreLayout.start(mem.toDF().toDF("doc_id", "text"), s"$dir/chk")(tag =>
+      IngestStream.batchFunction("doc_id", "text", s"$dir/store", s"$dir/corpus",
+        s"$dir/index", runTag = tag))
     try {
       mem.addData(1L -> base, 2L -> other)
       q.processAllAvailable()

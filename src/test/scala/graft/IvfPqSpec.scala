@@ -107,19 +107,19 @@ class IvfPqSpec extends SparkSpec {
 
   test("promoteServing: versioned cell-partitioned snapshot; probes prune " +
       "statically to the probed cells and match the ingest-store search") {
-    import graft.streaming.PqIndexStream
+    import graft.streaming.StoreLayout
     val base = java.nio.file.Files.createTempDirectory("ivfpq-serving").toString
     val store = s"$base/store"
     val serving = s"$base/serve"
-    val fn = PqIndexStream.batchFunction(
-      PqIndexStream.ivfPq("vec_id", "embedding", coarse, model), store)
+    val fn = StoreLayout.append(store)(
+      IvfPq.encode(_, "vec_id", "embedding", coarse, model))
     fn(emb.filter(col("vec_id") % 2 === 0), 0L)
     fn(emb.filter(col("vec_id") % 2 =!= 0), 1L)
-    val v1 = PqIndexStream.promoteServing(spark, store, serving)
+    val v1 = StoreLayout.publishServing(spark, store, serving, Seq("cell"))
     assert(v1.exists(_.startsWith("serve=1-")), s"unexpected version: $v1")
     // idempotent: nothing landed, so re-promotion returns the live version
-    assert(PqIndexStream.promoteServing(spark, store, serving) == v1)
-    val served = PqIndexStream.loadServing(spark, serving).get
+    assert(StoreLayout.publishServing(spark, store, serving, Seq("cell")) == v1)
+    val served = StoreLayout.servingSnapshot(spark, serving).get
     val queries = emb.filter(col("vec_id") < 4)
     val result = IvfPq.adcTopKServing(served, queries, "vec_id", "vec_id",
       "embedding", coarse, model, nprobe = 2, k = 5)
@@ -143,7 +143,7 @@ class IvfPqSpec extends SparkSpec {
       s"scan opened files outside the probed cells $cells:\n${dirs.mkString("\n")}")
     assert(scan.selectedPartitions.partitionCount <= cells.size)
     // parity: the pruned serving search equals the full ingest-store search
-    val full = PqIndexStream.loadEncoded(spark, store).get
+    val full = StoreLayout.load(spark, store).get
     val direct = IvfPq.adcTopKEncoded(full, queries, "vec_id", "vec_id",
         "embedding", coarse, model, nprobe = 2, k = 5)
       .orderBy("query_id", "rank").collect().map(_.toSeq)
@@ -153,13 +153,13 @@ class IvfPqSpec extends SparkSpec {
     // sweeps the superseded one; the fresh rows are served
     fn(emb.filter(col("vec_id") < 10)
       .withColumn("vec_id", col("vec_id") + 100000L), 2L)
-    val v2 = PqIndexStream.promoteServing(spark, store, serving)
+    val v2 = StoreLayout.publishServing(spark, store, serving, Seq("cell"))
     assert(v2.exists(_.startsWith("serve=2-")) && v2 != v1, s"got $v2")
     val versionDirs = Option(new java.io.File(serving).listFiles()).toSeq.flatten
       .filter(_.isDirectory).map(_.getName)
     assert(versionDirs == Seq(v2.get), s"superseded versions not swept: $versionDirs")
-    assert(PqIndexStream.loadServing(spark, serving).get.count() ==
-      PqIndexStream.loadEncoded(spark, store).get.count())
+    assert(StoreLayout.servingSnapshot(spark, serving).get.count() ==
+      StoreLayout.load(spark, store).get.count())
   }
 
   test("trained index ranks planted exact duplicates at the top") {

@@ -64,17 +64,17 @@ class IvfSpec extends SparkSpec {
 
   test("promoteServing: cell-partitioned snapshot; probes prune the file " +
       "listing statically and match the ingest-store search") {
-    import graft.streaming.DenseIndexStream
+    import graft.streaming.StoreLayout
     val cents = Ivf.train(emb, "embedding", dim = 64, nlist = 8)
     val base = java.nio.file.Files.createTempDirectory("ivf-serving").toString
     val store = s"$base/store"
     val serving = s"$base/serve"
-    val fn = DenseIndexStream.batchFunction("vec_id", "embedding", store, cents)
+    val fn = StoreLayout.append(store)(Ivf.assign(_, "vec_id", "embedding", cents))
     fn(emb.filter(col("vec_id") % 2 === 0), 0L)
     fn(emb.filter(col("vec_id") % 2 =!= 0), 1L)
-    val v1 = DenseIndexStream.promoteServing(spark, store, serving)
+    val v1 = StoreLayout.publishServing(spark, store, serving, Seq("cell"))
     assert(v1.exists(_.startsWith("serve=1-")), s"unexpected version: $v1")
-    val served = DenseIndexStream.loadServing(spark, serving).get
+    val served = StoreLayout.servingSnapshot(spark, serving).get
     val queries = emb.filter(col("vec_id") < 4)
     val result = Ivf.ivfTopKServing(served, queries, "vec_id", "vec_id",
       "embedding", cents, k = 5, nprobe = 2)
@@ -93,7 +93,7 @@ class IvfSpec extends SparkSpec {
       s"scan opened files outside the probed cells $cells:\n${dirs.mkString("\n")}")
     assert(scan.selectedPartitions.partitionCount <= cells.size)
     // parity: the pruned serving search equals the plain assigned search
-    val full = DenseIndexStream.loadAssigned(spark, store).get
+    val full = StoreLayout.load(spark, store).get
     val direct = Ivf.ivfTopKAssigned(full, queries, "vec_id", "vec_id",
         "embedding", cents, k = 5, nprobe = 2)
       .orderBy("query_id", "rank").collect().map(_.toSeq)

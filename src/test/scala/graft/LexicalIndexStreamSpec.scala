@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.llm.Lexical
-import graft.streaming.LexicalIndexStream
+import graft.streaming.{LexicalIndexStream, StoreLayout}
 
 /** [[LexicalIndexStream]]: per-micro-batch postings/stats partitions,
   * committed-only recombined reads, idempotent replay, and search parity
@@ -158,8 +158,8 @@ class LexicalIndexStreamSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = tmp().toString
     val mem = MemoryStream[(Long, String)]
-    val q = LexicalIndexStream.start(mem.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", s"$dir/index", s"$dir/chk")
+    val q = StoreLayout.start(mem.toDF().toDF("doc_id", "text"), s"$dir/chk")(
+      LexicalIndexStream.batchFunction("doc_id", "text", s"$dir/index", _))
     try {
       mem.addData(1L -> "spark shuffles data", 2L -> "window functions")
       q.processAllAvailable()

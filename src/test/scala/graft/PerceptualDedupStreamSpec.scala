@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.streaming.PerceptualDedupStream
+import graft.streaming.{PerceptualDedupStream, StoreLayout}
 
 /** [[PerceptualDedupStream]] — the perceptual incremental-dedup store:
   * store-kill and batch-kill semantics, idempotent batch replay,
@@ -64,11 +64,44 @@ class PerceptualDedupStreamSpec extends SparkSpec {
       (103L, img(4L)._2), (104L, img(4L)._2)), 1L)
     assert(keptIds(corpus) == Seq(0L, 1L, 2L, 3L, 103L))
     // RTBF: forget image 1 -> a later near-dup of it is ADMITTED
-    val (sigGone, corpGone) = PerceptualDedupStream.deleteObjects(spark, store,
+    val (sigGone, corpGone) = StoreLayout.deleteDocs(spark, store,
       corpus, "doc_id", Seq(1L).toDF("doc_id"))
     assert(sigGone == 1L && corpGone == 1L)
     fn(frame((201L, img(1L, tweakCell = 7)._2)), 2L)
     assert(keptIds(corpus) == Seq(0L, 2L, 3L, 103L, 201L))
+  }
+
+  private def committedIds(dir: String, idCol: String): Seq[Long] =
+    StoreLayout.load(spark, dir).toSeq
+      .flatMap(_.select(idCol).as[Long].collect()).sorted
+
+  test("two-half RTBF delete: corpus rows go first; a refused signature " +
+      "half leaves a ghost that still blocks near-dups; a re-run converges") {
+    val base = java.nio.file.Files.createTempDirectory("imgstream-rtbf").toString
+    val (store, corpus) = (s"$base/store", s"$base/corpus")
+    val fn = PerceptualDedupStream.batchFunction("doc_id", sigOf, store, corpus,
+      maxHamming = 10)
+    fn(frame(img(0L), img(1L)), 0L)
+    // another maintenance run holds the signature store: that half of the
+    // delete must fail loudly
+    java.nio.file.Files.write(new java.io.File(store, "_MAINT_LEASE").toPath,
+      s"compact-other\n${System.currentTimeMillis()}".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](StoreLayout.deleteDocs(spark,
+      store, corpus, "doc_id", Seq(1L).toDF("doc_id")))
+    assert(e.getMessage.contains("compact-other"), e.getMessage)
+    // privacy first: the payload is already gone, only the signature is left
+    assert(committedIds(corpus, "doc_id") == Seq(0L))
+    assert(committedIds(store, "__id") == Seq(0L, 1L))
+    assert(StoreLayout.breakLease(spark, store))
+    // the ghost signature still kills a near-dup of the forgotten image
+    fn(frame((101L, img(1L, tweakCell = 7)._2)), 1L)
+    assert(committedIds(corpus, "doc_id") == Seq(0L))
+    // the re-run finishes the signature half; the corpus half is a no-op
+    assert(StoreLayout.deleteDocs(spark, store, corpus, "doc_id",
+      Seq(1L).toDF("doc_id")) == ((1L, 0L)))
+    assert(committedIds(store, "__id") == Seq(0L))
+    fn(frame((201L, img(1L, tweakCell = 7)._2)), 2L)
+    assert(committedIds(corpus, "doc_id") == Seq(0L, 201L))
   }
 
   test("undecodable payloads are kept and never enter the store") {
@@ -116,10 +149,11 @@ class PerceptualDedupStreamSpec extends SparkSpec {
          (9L, img(0L)._2, img(1L)._2))
       .write.parquet(s"$in/b0")
     def runOnce(): Unit = {
-      val q = PerceptualDedupStream.startMulti(
+      val q = StoreLayout.start(
         spark.readStream.schema("doc_id long, p0 binary, p1 binary")
-          .parquet(s"$in/*"),
-        "doc_id", sigsOf, store, corpus, ckpt, maxHamming = 8)
+          .parquet(s"$in/*"), ckpt)(tag =>
+        PerceptualDedupStream.batchFunctionMulti("doc_id", sigsOf, store, corpus,
+          maxHamming = 8, runTag = tag))
       q.processAllAvailable(); q.stop()
     }
     runOnce()

@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Graft
 import graft.llm.{IvfPq, Opq, Pq}
-import graft.streaming.PqIndexStream
+import graft.streaming.StoreLayout
 
-/** [[PqIndexStream]]: per-batch encode under a pinned model, committed-only
+/** The PQ-compressed ANN stores, [[StoreLayout.append]] over each tier's
+  * encoder: per-batch encode under a pinned model, committed-only
   * recombined search with batch-encode parity for all three tiers (PQ,
   * OPQ, IVF-PQ), idempotent replay, crash-safe compaction.
   */
@@ -25,6 +26,8 @@ class PqIndexStreamSpec extends SparkSpec {
 
   private def queries = emb.filter(col("vec_id") < 5)
 
+  private def pq(df: DataFrame) = Pq.encode(df, "vec_id", "embedding", model)
+
   private def pqRows(enc: DataFrame) =
     Pq.adcTopKEncoded(enc, queries, "vec_id", "vec_id", "embedding", model, k = 5)
       .orderBy("query_id", "rank").collect()
@@ -33,11 +36,10 @@ class PqIndexStreamSpec extends SparkSpec {
 
   test("PQ: stream-appended store searches identically to a one-shot batch encode") {
     val dir = tmp().toString
-    val fn = PqIndexStream.batchFunction(
-      PqIndexStream.pq("vec_id", "embedding", model), dir)
+    val fn = StoreLayout.append(dir)(pq)
     fn(emb.filter(col("vec_id") % 2 === 0), 0L)
     fn(emb.filter(col("vec_id") % 2 =!= 0), 1L)
-    val store = PqIndexStream.loadEncoded(spark, dir)
+    val store = StoreLayout.load(spark, dir)
       .getOrElse(fail("store should be non-empty"))
     val direct = pqRows(Pq.encode(emb, "vec_id", "embedding", model))
     assert(direct.nonEmpty && pqRows(store) == direct)
@@ -45,13 +47,12 @@ class PqIndexStreamSpec extends SparkSpec {
 
   test("OPQ tier parity; compaction preserves search results bit-for-bit") {
     val dir = tmp().toString
-    val fn = PqIndexStream.batchFunction(
-      PqIndexStream.opq("vec_id", "embedding", rot, model), dir)
+    val fn = StoreLayout.append(dir)(Opq.encode(_, "vec_id", "embedding", rot, model))
     fn(emb.filter(col("vec_id") % 3 === 0), 0L)
     fn(emb.filter(col("vec_id") % 3 === 1), 1L)
     fn(emb.filter(col("vec_id") % 3 === 2), 2L)
     def rows() = {
-      val store = PqIndexStream.loadEncoded(spark, dir).get
+      val store = StoreLayout.load(spark, dir).get
       Opq.adcTopKEncoded(store, queries, "vec_id", "vec_id", "embedding",
           rot, model, k = 5)
         .orderBy("query_id", "rank").collect()
@@ -59,7 +60,7 @@ class PqIndexStreamSpec extends SparkSpec {
           r.getAs[Long]("neighbor_id"), r.getAs[Double]("adc"))).toSeq
     }
     val before = rows()
-    PqIndexStream.compactStore(spark, dir)
+    StoreLayout.compact(spark, dir)
     assert(rows() == before && before.nonEmpty)
     // compaction really folded the partitions
     val parts = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName)
@@ -68,11 +69,11 @@ class PqIndexStreamSpec extends SparkSpec {
 
   test("IVF-PQ tier: (id, cell, codes) appends search like a batch encode") {
     val dir = tmp().toString
-    val fn = PqIndexStream.batchFunction(
-      PqIndexStream.ivfPq("vec_id", "embedding", coarse, model), dir)
+    val fn = StoreLayout.append(dir)(
+      IvfPq.encode(_, "vec_id", "embedding", coarse, model))
     fn(emb.filter(col("vec_id") % 2 === 0), 0L)
     fn(emb.filter(col("vec_id") % 2 =!= 0), 1L)
-    val store = PqIndexStream.loadEncoded(spark, dir).get
+    val store = StoreLayout.load(spark, dir).get
     def rows(enc: DataFrame) =
       IvfPq.adcTopKEncoded(enc, queries, "vec_id", "vec_id", "embedding",
           coarse, model, nprobe = 2, k = 5)
@@ -88,8 +89,8 @@ class PqIndexStreamSpec extends SparkSpec {
     import graft.llm.Quantize
     val (mins, maxs) = Quantize.int8Stats(emb, "embedding", dim = 64)
     val i8dir = tmp().toString
-    val i8fn = PqIndexStream.batchFunction(
-      PqIndexStream.int8("vec_id", "embedding", mins, maxs), i8dir)
+    val i8fn = StoreLayout.append(i8dir)(
+      Quantize.int8Encode(_, "vec_id", "embedding", mins, maxs))
     i8fn(emb.filter(col("vec_id") % 2 === 0), 0L)
     i8fn(emb.filter(col("vec_id") % 2 =!= 0), 1L)
     def i8Rows(enc: DataFrame) =
@@ -100,10 +101,10 @@ class PqIndexStreamSpec extends SparkSpec {
           r.getAs[Long]("neighbor_id"))).toSeq
     val i8direct = i8Rows(Quantize.int8Encode(emb, "vec_id", "embedding", mins, maxs))
     assert(i8direct.nonEmpty &&
-      i8Rows(PqIndexStream.loadEncoded(spark, i8dir).get) == i8direct)
+      i8Rows(StoreLayout.load(spark, i8dir).get) == i8direct)
     val bdir = tmp().toString
-    val bfn = PqIndexStream.batchFunction(
-      PqIndexStream.binary("vec_id", "embedding", dim = 64), bdir)
+    val bfn = StoreLayout.append(bdir)(
+      Quantize.binaryEncode(_, "vec_id", "embedding", dim = 64))
     bfn(emb.filter(col("vec_id") % 2 === 0), 0L)
     bfn(emb.filter(col("vec_id") % 2 =!= 0), 1L)
     def bRows(enc: DataFrame) =
@@ -114,23 +115,22 @@ class PqIndexStreamSpec extends SparkSpec {
           r.getAs[Long]("neighbor_id"))).toSeq
     val bdirect = bRows(Quantize.binaryEncode(emb, "vec_id", "embedding", dim = 64))
     assert(bdirect.nonEmpty &&
-      bRows(PqIndexStream.loadEncoded(spark, bdir).get) == bdirect)
+      bRows(StoreLayout.load(spark, bdir).get) == bdirect)
   }
 
   test("deleteVectors: forgotten ids vanish from ANN results; the rest " +
       "search as if encoded without them") {
     import spark.implicits._
     val dir = tmp().toString
-    val fn = PqIndexStream.batchFunction(
-      PqIndexStream.pq("vec_id", "embedding", model), dir)
+    val fn = StoreLayout.append(dir)(pq)
     fn(emb.filter(col("vec_id") % 2 === 0), 0L)
     fn(emb.filter(col("vec_id") % 2 =!= 0), 1L)
-    val before = pqRows(PqIndexStream.loadEncoded(spark, dir).get)
+    val before = pqRows(StoreLayout.load(spark, dir).get)
     val victim = before.head._3 // a top-ranked neighbor — visibly present
-    val removed = PqIndexStream.deleteVectors(spark, dir, "vec_id",
+    val removed = StoreLayout.deleteIds(spark, dir, "vec_id",
       Seq(victim).toDF("vec_id"))
     assert(removed == 1L)
-    val after = pqRows(PqIndexStream.loadEncoded(spark, dir).get)
+    val after = pqRows(StoreLayout.load(spark, dir).get)
     assert(!after.exists(_._3 == victim), "a deleted vector must never rank")
     // identical to a one-shot encode of the surviving vectors (codes are
     // row-independent under the pinned model — no re-encode needed)
@@ -141,13 +141,12 @@ class PqIndexStreamSpec extends SparkSpec {
 
   test("empty store is None; replay overwrites its own partition") {
     val dir = tmp().toString
-    assert(PqIndexStream.loadEncoded(spark, dir).isEmpty)
-    val fn = PqIndexStream.batchFunction(
-      PqIndexStream.pq("vec_id", "embedding", model), dir)
+    assert(StoreLayout.load(spark, dir).isEmpty)
+    val fn = StoreLayout.append(dir)(pq)
     val b = emb.filter(col("vec_id") < 10)
     fn(b, 0L)
     fn(b, 0L) // failure-recovery replay must not duplicate codes
-    assert(PqIndexStream.loadEncoded(spark, dir).get.count() == b.count())
+    assert(StoreLayout.load(spark, dir).get.count() == b.count())
   }
 
   test("end to end through Structured Streaming") {
@@ -158,14 +157,14 @@ class PqIndexStreamSpec extends SparkSpec {
         col("embedding").cast("array<float>").as("embedding"))
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
     val mem = MemoryStream[(Long, Seq[Float])]
-    val q = PqIndexStream.start(mem.toDF().toDF("vec_id", "embedding"),
-      PqIndexStream.pq("vec_id", "embedding", model), s"$dir/index", s"$dir/chk")
+    val q = StoreLayout.start(mem.toDF().toDF("vec_id", "embedding"), s"$dir/chk")(
+      StoreLayout.append(s"$dir/index", _)(pq))
     try {
       mem.addData(rows.take(20).toIndexedSeq: _*)
       q.processAllAvailable()
       mem.addData(rows.drop(20).take(20).toIndexedSeq: _*)
       q.processAllAvailable()
-      val store = PqIndexStream.loadEncoded(spark, s"$dir/index").get
+      val store = StoreLayout.load(spark, s"$dir/index").get
       assert(store.count() == 40 && store.columns.toSeq == Seq("vec_id", "pq_codes"))
     } finally q.stop()
   }

@@ -162,9 +162,11 @@ class TarStreamSpec extends SparkSpec {
     val docs = spark.readStream.format("tar").option("exts", "txt")
       .load(dir.getAbsolutePath)
       .select(col("key"), col("payload").cast("string").as("text"))
-    val q = graft.streaming.AttributeStream.start(docs, "key",
-      Seq("n_tokens" -> graft.functions.TextFunctions.tokenCount(col("text"))),
-      sidecar.getAbsolutePath, ckpt.getAbsolutePath)
+    val attrs =
+      Seq("n_tokens" -> graft.functions.TextFunctions.tokenCount(col("text")))
+    val q = graft.streaming.StoreLayout.start(docs, ckpt.getAbsolutePath)(
+      graft.streaming.StoreLayout.append(sidecar.getAbsolutePath, _)(
+        graft.llm.Attributes.tag(_, "key", attrs)))
     try {
       q.processAllAvailable()
       // a later shard arrives; only IT is tagged (tag once, never re-run)
