@@ -68,7 +68,7 @@ object Main {
           println(s"### ${d.name}\n\n${d.help}\n")
           d.keys.foreach(k => println(
             s"- ${k.name}${if (k.required) " (required)" else ""}: ${k.help}" +
-              k.default.map(v => s" [default: $v]").getOrElse("")))
+              k.defaultToml.map(v => s" [default: $v]").getOrElse("")))
         }
     }
     case Right(f) if f.toml.isEmpty =>

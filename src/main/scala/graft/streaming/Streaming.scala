@@ -3,9 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.sources.ZstdCodec
 import graft.topology._
 
 /** Daemon-mode topologies (reference: api.go:58-66 — an input whose Run
@@ -26,9 +24,6 @@ import graft.topology._
   */
 object Streaming {
 
-  private def allStringSchema(fields: Seq[String]): StructType =
-    StructType(fields.map(StructField(_, StringType, nullable = true)))
-
   /** SQS — file-notification input: watches a path for new CSV files.
     * reference: input/sqs.go:25-89 (S3 paths arriving via SQS messages).
     */
@@ -42,16 +37,10 @@ object Streaming {
         default = Some("plain")),
       ConfigKey("MaxFilesPerTrigger", "files per micro-batch", default = Some(16L)),
       ConfigKey("FilePattern", "glob for files in QueuePath", default = Some("*"))),
-    (ctx, cfg) => {
-      ZstdCodec.register(ctx.spark)
-      ctx.spark.readStream
-        .schema(allStringSchema(ctx.fields))
-        .option("sep", ctx.separator)
-        .option("quote", "\u0000")
-        .option("maxFilesPerTrigger", cfg.int("MaxFilesPerTrigger", 16L))
-        .option("pathGlobFilter", cfg.str("FilePattern", "*"))
-        .csv(cfg.str("QueuePath"))
-    },
+    (ctx, cfg) => LogLineCsv.readStream(ctx)
+      .option("maxFilesPerTrigger", cfg.int("MaxFilesPerTrigger"))
+      .option("pathGlobFilter", cfg.str("FilePattern"))
+      .csv(cfg.str("QueuePath")),
   )
 
   /** KCL/Kinesis — stream doubles: same file-watch source; Spark
@@ -68,14 +57,9 @@ object Streaming {
       ConfigKey("InitialPosition", "LATEST or TRIM_HORIZON (parity; file source reads all)",
         default = Some("LATEST")),
       ConfigKey("MaxShardsPerTrigger", "files per micro-batch", default = Some(16L))),
-    (ctx, cfg) => {
-      ctx.spark.readStream
-        .schema(allStringSchema(ctx.fields))
-        .option("sep", ctx.separator)
-        .option("quote", "\u0000")
-        .option("maxFilesPerTrigger", cfg.int("MaxShardsPerTrigger", 16L))
-        .csv(cfg.str("StreamPath"))
-    },
+    (ctx, cfg) => LogLineCsv.readStream(ctx)
+      .option("maxFilesPerTrigger", cfg.int("MaxShardsPerTrigger"))
+      .csv(cfg.str("StreamPath")),
   )
 
   val kinesisInput: InputDesc = kclInput.copy(
@@ -174,10 +158,10 @@ object Streaming {
         default = Some(true))),
     (ctx, cfg) => {
       val (host, port) =
-        if (cfg.bool("Gzip", default = true))
+        if (cfg.bool("Gzip"))
           ("127.0.0.1",
-            startGunzipRelay(cfg.str("Host", "localhost"), cfg.int("Port", 6000L).toInt))
-        else (cfg.str("Host", "localhost"), cfg.int("Port", 6000L).toInt)
+            startGunzipRelay(cfg.str("Host"), cfg.int("Port").toInt))
+        else (cfg.str("Host"), cfg.int("Port").toInt)
       val lines = ctx.spark.readStream
         .format("socket")
         .option("host", host)
@@ -206,18 +190,19 @@ object Streaming {
       "base64-encoded), plus the meta-fields 'key' and 'shard'.",
     Seq(
       ConfigKey("Path", "tar shard directory or glob", required = true),
-      ConfigKey("BinaryFields", "fields whose member bytes are base64-encoded"),
+      ConfigKey("BinaryFields", "fields whose member bytes are base64-encoded",
+        default = Some(Seq.empty[String])),
       ConfigKey("MaxFilesPerTrigger", "shards per micro-batch", default = Some(16L))),
     (ctx, cfg) => {
       val meta = Set("key", "shard")
       val extFields = ctx.fields.filterNot(meta)
-      val binary = cfg.strList("BinaryFields", Nil).toSet
+      val binary = cfg.strList("BinaryFields").toSet
       val unknownBin = binary -- extFields.toSet
       require(unknownBin.isEmpty,
         s"WebDataset: BinaryFields not in [fields]: ${unknownBin.mkString(", ")}")
       val reader = ctx.spark.readStream.format("tar")
         .option("group", "true")
-        .option("maxFilesPerTrigger", cfg.int("MaxFilesPerTrigger", 16L).toString)
+        .option("maxFilesPerTrigger", cfg.int("MaxFilesPerTrigger").toString)
       val df = (if (extFields.nonEmpty) reader.option("exts", extFields.mkString(","))
                 else reader).load(cfg.str("Path"))
       df.select(ctx.fields.map {
@@ -273,7 +258,6 @@ object Streaming {
     require(compiled.projected.isStreaming,
       s"runDaemon: input '${cfg.input._1}' is not a streaming source")
     val outDesc = components.output(cfg.outputName)
-    cfg.outputConfig.validate(outDesc.keys)
     val counter = new java.util.concurrent.atomic.AtomicLong(0)
     // {{.RunTag}} expands to the per-checkpoint-INSTANCE tag
     // (StoreLayout.runTagFor): store outputs (PerceptualDedupStore,
@@ -296,10 +280,7 @@ object Streaming {
     if (outDesc.keys.exists(_.name == "Rotation") &&
         outDesc.keys.exists(_.name == "RunTag")) {
       def wired(key: String, ph: String): Boolean =
-        cfg.outputConfig.raw.get(key) match {
-          case Some(v: String) => v.contains(ph)
-          case _ => false
-        }
+        cfg.outputConfig.has(key) && cfg.outputConfig.str(key).contains(ph)
       require(wired("RunTag", "{{.RunTag}}") && wired("Rotation", "{{.Rotation}}"),
         s"daemon output '${cfg.outputName}' is a store output and must set " +
           "RunTag = \"{{.RunTag}}\" and Rotation = \"{{.Rotation}}\" under a " +
@@ -327,14 +308,13 @@ object Streaming {
     // default.
     val carryDefaults: Map[String, Any] =
       if (outDesc.keys.exists(_.name == "CarryDir") &&
-          cfg.outputConfig.int("PackBudget", 0L) > 0) {
-        cfg.outputConfig.strOpt("CarryRotation").foreach { v =>
-          require(v.contains("{{.Rotation}}"),
+          cfg.outputConfig.int("PackBudget") > 0) {
+        if (cfg.outputConfig.has("CarryRotation"))
+          require(cfg.outputConfig.str("CarryRotation").contains("{{.Rotation}}"),
             s"daemon output '${cfg.outputName}': CarryRotation must carry " +
               "the {{.Rotation}} placeholder under a streaming query - a " +
               "static rotation re-reads and overwrites ONE carry partition " +
               "every micro-batch, corrupting the tail chain")
-        }
         val dirDefault: Map[String, Any] =
           if (cfg.outputConfig.has("CarryDir")) Map.empty
           else {
@@ -359,22 +339,19 @@ object Streaming {
         // {{.Rotation}} expands to the batch id (monotonic across restarts,
         // like the reference's per-file rotation counter) in EVERY string
         // config value — FileWriter's PathString and any output that needs
-        // the batch id for idempotent partitions (PerceptualDedupStore)
-        val batchCfg = ComponentConfig(
+        // the batch id for idempotent partitions (PerceptualDedupStore);
+        // the rebuilt config keeps the compile-time binding
+        val batchCfg = cfg.outputConfig.copy(raw =
           (cfg.outputConfig.raw ++ carryDefaults).map {
             case (k, v: String) =>
               k -> v.replace("{{.Rotation}}", batchId.toString)
                 .replace("{{.RunTag}}", runTag)
             case kv => kv
-          },
-          cfg.outputConfig.componentName)
+          })
         val result = outDesc.build(compiled.ctx, batchCfg, batch)
         counter.addAndGet(result.rows)
-        for ((name, upCfg) <- cfg.upload) {
-          val upDesc = components.upload(name)
-          upCfg.validate(upDesc.keys)
-          upDesc.build(compiled.ctx, upCfg, result.paths)
-        }
+        for ((name, upCfg) <- cfg.upload)
+          components.upload(name).build(compiled.ctx, upCfg, result.paths)
         ()
       }
       .start()

@@ -3,13 +3,42 @@ package graft.topology
 import java.time.{Instant, ZoneOffset}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.functions.Fernet
 import graft.operators.Filters
 import graft.sources.ZstdCodec
+
+/** The LogLine CSV read every line-oriented input shares (List, the
+  * network inputs' spooled files, the daemon file-watch inputs): every
+  * field a string, the topology's separator, no quoting — LogLine has no
+  * quoting/escaping, so separators cannot appear in values
+  * (logline.go:23-31) and \u0000 disables quote handling — and zstd
+  * files decompressed transparently.
+  */
+private[graft] object LogLineCsv {
+  def schema(fields: Seq[String]): StructType =
+    StructType(fields.map(StructField(_, StringType, nullable = true)))
+
+  private def options(ctx: TopologyCtx): Map[String, String] = {
+    ZstdCodec.register(ctx.spark)
+    Map("sep" -> ctx.separator, "quote" -> "\u0000", "mode" -> "PERMISSIVE")
+  }
+
+  def read(ctx: TopologyCtx): DataFrameReader =
+    ctx.spark.read.schema(schema(ctx.fields)).options(options(ctx))
+
+  def readStream(ctx: TopologyCtx): org.apache.spark.sql.streaming.DataStreamReader =
+    ctx.spark.readStream.schema(schema(ctx.fields)).options(options(ctx))
+
+  /** The unparsed lines, one `value` row each (the raw fast path). */
+  def lines(ctx: TopologyCtx, paths: Seq[String]): DataFrame = {
+    ZstdCodec.register(ctx.spark)
+    ctx.spark.read.text(paths: _*)
+  }
+}
 
 /** The builtin component registry: every input/filter/output/upload the
   * reference ships (registries input/all.go:9-15, filter/all.go:9-34,
@@ -56,17 +85,14 @@ object BuiltinComponents {
       ConfigKey("Host", "address (host:port) of the statsd host",
         default = Some("127.0.0.1:8125")),
       ConfigKey("Prefix", "prefix for all metric names", default = Some("baker.")),
-      ConfigKey("Tags", "tags attached to all metrics"),
+      ConfigKey("Tags", "tags attached to all metrics", default = Some(Seq.empty[String])),
       ConfigKey("SendLogs", "send logs as statsd events (accepted, unused)",
         default = Some(false))),
     (_, cfg) => new graft.metrics.DatadogMetrics(
-      cfg.str("Host", "127.0.0.1:8125"),
-      cfg.str("Prefix", "baker."),
-      cfg.strList("Tags", Nil)),
+      cfg.str("Host"),
+      cfg.str("Prefix"),
+      cfg.strList("Tags")),
   )
-
-  private def allStringSchema(fields: Seq[String]): StructType =
-    StructType(fields.map(StructField(_, StringType, nullable = true)))
 
   // ===================== inputs =====================
 
@@ -87,21 +113,8 @@ object BuiltinComponents {
         default = Some(".*\\.log\\.gz")),
       ConfigKey("Region", "AWS region for s3:// paths (cluster builds)", default = Some("us-west-2")),
     ),
-    (ctx, cfg) => {
-      ZstdCodec.register(ctx.spark)
-      ctx.spark.read
-        .schema(allStringSchema(ctx.fields))
-        .option("sep", ctx.separator)
-        // LogLine has no quoting/escaping: separators cannot appear in
-        // values (logline.go:23-31); \u0000 disables quote handling
-        .option("quote", "\u0000")
-        .option("mode", "PERMISSIVE")
-        .csv(resolveListPaths(cfg): _*)
-    },
-    buildRaw = Some((ctx, cfg) => {
-      ZstdCodec.register(ctx.spark)
-      ctx.spark.read.text(resolveListPaths(cfg): _*)
-    }),
+    (ctx, cfg) => LogLineCsv.read(ctx).csv(resolveListPaths(cfg): _*),
+    buildRaw = Some((ctx, cfg) => LogLineCsv.lines(ctx, resolveListPaths(cfg))),
   )
 
   /** JsonLines — JSONL (one JSON object per line) input, the LLM-dataset
@@ -117,9 +130,6 @@ object BuiltinComponents {
     * [[jsonLinesOutput]] emits, so a defaults-only write→read round-trip
     * works.
     */
-  private val jsonLinesDefaultMatch =
-    ".*\\.(jsonl|json|txt)(\\.(gz|zst|bz2|lz4|deflate))?$"
-
   val jsonLinesInput: InputDesc = InputDesc(
     "JsonLines",
     "Reads JSONL (one JSON object per line) files; the declared [fields] " +
@@ -128,7 +138,7 @@ object BuiltinComponents {
       ConfigKey("Files", "List of files, directories and/or list-files to process",
         default = Some(Seq("-"))),
       ConfigKey("MatchPath", "regexp to filter files in specified directories",
-        default = Some(jsonLinesDefaultMatch)),
+        default = Some(".*\\.(jsonl|json|txt)(\\.(gz|zst|bz2|lz4|deflate))?$")),
       ConfigKey("Region", "AWS region for s3:// paths (cluster builds)",
         default = Some("us-west-2")),
     ),
@@ -136,7 +146,7 @@ object BuiltinComponents {
       ZstdCodec.register(ctx.spark)
       val m = from_json(col("value"),
         org.apache.spark.sql.types.MapType(StringType, StringType))
-      ctx.spark.read.text(resolveListPaths(cfg, jsonLinesDefaultMatch): _*)
+      ctx.spark.read.text(resolveListPaths(cfg): _*)
         .select(ctx.fields.map(f => element_at(m, f).as(f)): _*)
     },
   )
@@ -159,11 +169,12 @@ object BuiltinComponents {
     Seq(
       ConfigKey("Path", "tar shard file, directory, or glob", required = true),
       ConfigKey("BinaryFields", "fields whose member bytes are base64-encoded " +
-        "(media/PDF payloads — a UTF-8 text decode would mangle them)")),
+        "(media/PDF payloads — a UTF-8 text decode would mangle them)",
+        default = Some(Seq.empty[String]))),
     (ctx, cfg) => {
       val meta = Set("key", "shard")
       val extFields = ctx.fields.filterNot(meta)
-      val binary = cfg.strList("BinaryFields", Nil).toSet
+      val binary = cfg.strList("BinaryFields").toSet
       val unknownBin = binary -- extFields.toSet
       require(unknownBin.isEmpty,
         s"WebDataset: BinaryFields not in [fields]: ${unknownBin.mkString(", ")}")
@@ -290,7 +301,7 @@ object BuiltinComponents {
         "every record type", default = Some("response"))),
     (ctx, cfg) => {
       val reader = ctx.spark.read.format("warc")
-      val types = cfg.str("Types", "response").trim
+      val types = cfg.str("Types").trim
       val df = (if (types.nonEmpty) reader.option("types", types) else reader)
         .load(cfg.str("Path"))
       val missing = ctx.fields.filterNot(df.columns.contains)
@@ -314,10 +325,9 @@ object BuiltinComponents {
     * Note: `_metadata.file_path` (MetadataUrl) then reports the spool path,
     * not the original URL.
     */
-  private def resolveListPaths(cfg: ComponentConfig,
-      defaultMatch: String = ".*\\.log\\.gz"): Seq[String] = {
-    val matchPath = cfg.str("MatchPath", defaultMatch).r
-    val entries = cfg.strList("Files", Seq("-"))
+  private def resolveListPaths(cfg: ComponentConfig): Seq[String] = {
+    val matchPath = cfg.str("MatchPath").r
+    val entries = cfg.strList("Files")
     def spool(in: java.io.InputStream, suffix: String): String = {
       val tmp = java.nio.file.Files.createTempFile("graft-list", suffix)
       try java.nio.file.Files.copy(in, tmp,
@@ -368,7 +378,7 @@ object BuiltinComponents {
           .map(v => if (v == null || v.isEmpty) null else v)
         org.apache.spark.sql.Row(padded: _*)
       }
-      ctx.spark.createDataFrame(rows.asJava, allStringSchema(ctx.fields))
+      ctx.spark.createDataFrame(rows.asJava, LogLineCsv.schema(ctx.fields))
     },
   )
 
@@ -381,8 +391,8 @@ object BuiltinComponents {
       ConfigKey("Seed", "PRNG seed", default = Some(42L)),
     ),
     (ctx, cfg) => {
-      val n = cfg.int("NumRecords", 1000L)
-      val seed = cfg.int("Seed", 42L)
+      val n = cfg.int("NumRecords")
+      val seed = cfg.int("Seed")
       val base = ctx.spark.range(n)
       val cols = ctx.fields.zipWithIndex.map { case (f, i) =>
         abs(xxhash64(col("id") + lit(seed * 1000003L + i))).cast("string").as(f)
@@ -393,56 +403,46 @@ object BuiltinComponents {
 
   // ===================== filters =====================
 
-  private def mkFilter(name: String, help: String, keys: Seq[ConfigKey])(
-      build: (TopologyCtx, ComponentConfig) => DataFrame => DataFrame): FilterDesc =
-    FilterDesc(name, help, keys, (ctx, cfg) => { cfg.validate(keys); build(ctx, cfg) })
-
-  /** A filter that only reads fields (drop/keep, no writes): stays on the
-    * raw fast path (see FilterDesc.mutating).
-    */
-  private def mkPureFilter(name: String, help: String, keys: Seq[ConfigKey])(
-      build: (TopologyCtx, ComponentConfig) => DataFrame => DataFrame): FilterDesc =
-    FilterDesc(name, help, keys, (ctx, cfg) => { cfg.validate(keys); build(ctx, cfg) },
-      mutating = false)
-
-  val clauseFilter: FilterDesc = mkPureFilter("ClauseFilter",
+  val clauseFilter: FilterDesc = FilterDesc("ClauseFilter",
     "Keeps records matching a boolean s-expression over (field value) atoms.",
     Seq(ConfigKey("Clause", "Boolean formula describing which events to let through. " +
-      "If empty, let everything through.")))(
-    (_, cfg) => Filters.Clause(cfg.str("Clause", "")))
+      "If empty, let everything through.", default = Some(""))),
+    (_, cfg) => Filters.Clause(cfg.str("Clause")),
+    mutating = false)
 
-  val clearFields: FilterDesc = mkFilter("ClearFields",
+  val clearFields: FilterDesc = FilterDesc("ClearFields",
     "Resets (clears) the value of the specified fields.",
-    Seq(ConfigKey("Fields", "set of fields to clear", required = true)))(
+    Seq(ConfigKey("Fields", "set of fields to clear", required = true)),
     (_, cfg) => Filters.ClearFields(cfg.strList("Fields")))
 
-  val concatenate: FilterDesc = mkFilter("Concatenate",
+  val concatenate: FilterDesc = FilterDesc("Concatenate",
     "Concatenates up to 10 field values into a target field.",
     Seq(
       ConfigKey("Fields", "The field names to concatenate, in order", required = true),
       ConfigKey("Target", "The field name to save the concatenated value to", required = true),
       ConfigKey("Separator", "Separator between values (empty or 1 ASCII char)",
-        default = Some(""))))(
+        default = Some(""))),
     (_, cfg) => Filters.Concatenate(cfg.strList("Fields"), cfg.str("Target"),
-      cfg.str("Separator", "")))
+      cfg.str("Separator")))
 
-  val countAndTag: FilterDesc = mkPureFilter("CountAndTag",
+  val countAndTag: FilterDesc = FilterDesc("CountAndTag",
     "Publishes a counter metric of records passing through, tagged by a field's value.",
     Seq(
       ConfigKey("Metric", "Name of the counter metric", required = true),
       ConfigKey("Field", "Field whose value breaks down the metric by tag", required = true),
-      ConfigKey("DefaultValue", "Tag value used when the field is empty", required = true)))(
+      ConfigKey("DefaultValue", "Tag value used when the field is empty", required = true)),
     (_, cfg) => Filters.CountAndTag(cfg.str("Field"), cfg.str("Metric"),
-      cfg.str("DefaultValue")))
+      cfg.str("DefaultValue")),
+    mutating = false)
 
-  val crypt: FilterDesc = mkFilter("Crypt",
+  val crypt: FilterDesc = FilterDesc("Crypt",
     "Encrypts or decrypts a field (fernet); records failing decryption are discarded.",
     Seq(
       ConfigKey("Algorithm", "Crypto algorithm (fernet)", required = true),
       ConfigKey("Decrypt", "True to decrypt, false to encrypt", default = Some(false)),
       ConfigKey("SrcField", "Field to crypt/decrypt", required = true),
       ConfigKey("DstField", "Field to write the result to", required = true),
-      ConfigKey("AlgorithmConfig", "algorithm options: key (base64url, 32 bytes), ttl (sec)")))(
+      ConfigKey("AlgorithmConfig", "algorithm options: key (base64url, 32 bytes), ttl (sec)")),
     (_, cfg) => {
       require(cfg.str("Algorithm").equalsIgnoreCase("fernet"),
         s"Crypt: unsupported algorithm '${cfg.str("Algorithm")}' (only fernet)")
@@ -461,15 +461,15 @@ object BuiltinComponents {
       }
     })
 
-  val dedup: FilterDesc = mkPureFilter("Dedup",
+  val dedup: FilterDesc = FilterDesc("Dedup",
     "Discards records whose joined key of chosen fields was already seen.",
     Seq(
       ConfigKey("Fields", "fields to consider when comparing records", required = true),
       ConfigKey("KeySeparator",
         "character separator used to build a key from the fields",
-        default = Some("\\x1e"))))(
+        default = Some("\\x1e"))),
     (_, cfg) => {
-      val raw = cfg.str("KeySeparator", "\u001e")
+      val raw = cfg.str("KeySeparator")
       // accept both a literal 1-byte separator and the \xNN escape the
       // reference uses as its default help text (dedup.go:32, :66-69)
       val sep =
@@ -479,9 +479,10 @@ object BuiltinComponents {
       require(sep.length == 1 && sep.head <= 0x7f,
         "Dedup: separator must be a 1-byte string or hex char")
       Filters.Dedup(cfg.strList("Fields"), sep)
-    })
+    },
+    mutating = false)
 
-  val expandJson: FilterDesc = mkFilter("ExpandJSON",
+  val expandJson: FilterDesc = FilterDesc("ExpandJSON",
     "Extracts JSON values into fields via <JMESPath -> field> mappings.",
     Seq(
       ConfigKey("Source", "record field that contains the json", required = true),
@@ -489,25 +490,25 @@ object BuiltinComponents {
       ConfigKey("TrueFalseValues", "strings bound to json true/false",
         default = Some(Seq("true", "false"))),
       ConfigKey("VerbatimNumbers", "preserve number text exactly (UseNumber parity)",
-        default = Some(false))))(
+        default = Some(false))),
     (_, cfg) => {
-      val tf = cfg.strList("TrueFalseValues", Seq("true", "false"))
+      val tf = cfg.strList("TrueFalseValues")
       Filters.ExpandJSON(cfg.str("Source"), cfg.strMap("Fields"),
         (tf.headOption.getOrElse("true"), tf.lift(1).getOrElse("false")),
         cfg.bool("VerbatimNumbers"))
     })
 
-  val expandList: FilterDesc = mkFilter("ExpandList",
+  val expandList: FilterDesc = FilterDesc("ExpandList",
     "Splits a list-valued field and maps list indexes to fields.",
     Seq(
       ConfigKey("Source", "record field that contains the list", required = true),
       ConfigKey("Fields", "<list index -> record field> map", required = true),
-      ConfigKey("Separator", "character separator of the list", default = Some(";"))))(
+      ConfigKey("Separator", "character separator of the list", default = Some(";"))),
     (_, cfg) => Filters.ExpandList(cfg.str("Source"),
       cfg.strMap("Fields").map { case (i, f) => i.toInt -> f },
-      cfg.str("Separator", ";")))
+      cfg.str("Separator")))
 
-  val externalMatch: FilterDesc = mkPureFilter("ExternalMatch",
+  val externalMatch: FilterDesc = FilterDesc("ExternalMatch",
     "Keeps or discards records whose field value appears in external CSV value sets.",
     Seq(
       ConfigKey("Files", "CSV file URL(s) with the strings to match", required = true),
@@ -518,28 +519,29 @@ object BuiltinComponents {
       ConfigKey("Region", "AWS region for s3:// files", default = Some("us-west-2")),
       ConfigKey("DateTimeLayout", "date layout substituted into Files"),
       ConfigKey("TimeSubtract", "duration subtracted from now for DateTimeLayout"),
-      ConfigKey("RefreshEvery", "refresh period (streaming: re-read per batch)")))(
+      ConfigKey("RefreshEvery", "refresh period (streaming: re-read per batch)")),
     (ctx, cfg) => {
       ZstdCodec.register(ctx.spark)
-      val colIx = cfg.int("CSVColumn", 0L).toInt
+      val colIx = cfg.int("CSVColumn").toInt
       val files = cfg.strList("Files").map(_.stripPrefix("file://"))
       val values = ctx.spark.read.option("quote", "\u0000").csv(files: _*)
       val vcol = values.columns(colIx)
       Filters.ExternalMatch(cfg.str("FieldName"), values.select(col(vcol)),
         cfg.bool("KeepOnMatch"))
-    })
+    },
+    mutating = false)
 
-  val formatTime: FilterDesc = mkFilter("FormatTime",
+  val formatTime: FilterDesc = FilterDesc("FormatTime",
     "Re-formats a time field between layouts (Go named layouts, unix/unixms/unixns).",
     Seq(
       ConfigKey("SrcField", "Field name of the input time", required = true),
       ConfigKey("DstField", "Field name of the output time", required = true),
       ConfigKey("SrcFormat", "Format of the input time", default = Some("UnixDate")),
-      ConfigKey("DstFormat", "Format of the output time", default = Some("unixms"))))(
+      ConfigKey("DstFormat", "Format of the output time", default = Some("unixms"))),
     (_, cfg) => Filters.FormatTime(cfg.str("SrcField"), cfg.str("DstField"),
-      cfg.str("SrcFormat", "UnixDate"), cfg.str("DstFormat", "unixms")))
+      cfg.str("SrcFormat"), cfg.str("DstFormat")))
 
-  val hash: FilterDesc = mkFilter("Hash",
+  val hash: FilterDesc = FilterDesc("Hash",
     "Hashes a field (md5/sha256, hex-encoded) into another field.",
     Seq(
       ConfigKey("SrcField", "Name of the field to hash", required = true),
@@ -548,7 +550,7 @@ object BuiltinComponents {
       ConfigKey("Encoding", "Encoding of the digest; must be \"hex\" — the " +
         "reference's default (no Encoding) writes RAW digest bytes " +
         "(hash.go:82-91), which a string-typed record cannot carry, so " +
-        "leaving it unset fails loudly instead of silently hex-encoding")))(
+        "leaving it unset fails loudly instead of silently hex-encoding")),
     (_, cfg) => {
       cfg.strOpt("Encoding") match {
         case Some("hex") => ()
@@ -562,95 +564,101 @@ object BuiltinComponents {
       Filters.Hash(cfg.str("SrcField"), cfg.str("DstField"), cfg.str("Function"))
     })
 
-  val metadataLastModified: FilterDesc = mkFilter("MetadataLastModified",
+  val metadataLastModified: FilterDesc = FilterDesc("MetadataLastModified",
     "Copies the source file's last-modified time (unix seconds) into a field.",
-    Seq(ConfigKey("DstField", "Field to write the timestamp to", required = true)))(
+    Seq(ConfigKey("DstField", "Field to write the timestamp to", required = true)),
     (_, cfg) => Filters.MetadataLastModified(cfg.str("DstField")))
 
-  val metadataUrl: FilterDesc = mkFilter("MetadataUrl",
+  val metadataUrl: FilterDesc = FilterDesc("MetadataUrl",
     "Copies the source file URL into a field.",
-    Seq(ConfigKey("DstField", "Field to write the url to", required = true)))(
+    Seq(ConfigKey("DstField", "Field to write the url to", required = true)),
     (_, cfg) => Filters.MetadataUrl(cfg.str("DstField")))
 
-  val notNull: FilterDesc = mkPureFilter("NotNull",
+  val notNull: FilterDesc = FilterDesc("NotNull",
     "Discards records with null/empty values in any of the given fields.",
-    Seq(ConfigKey("Fields", "fields to check for null/empty values", required = true)))(
-    (_, cfg) => Filters.NotNull(cfg.strList("Fields")))
+    Seq(ConfigKey("Fields", "fields to check for null/empty values", required = true)),
+    (_, cfg) => Filters.NotNull(cfg.strList("Fields")),
+    mutating = false)
 
-  val partialClone: FilterDesc = mkFilter("PartialClone",
+  val partialClone: FilterDesc = FilterDesc("PartialClone",
     "Emits a new record containing only the listed fields.",
-    Seq(ConfigKey("Fields", "Fields that must be copied to the new record", required = true)))(
+    Seq(ConfigKey("Fields", "Fields that must be copied to the new record", required = true)),
     (_, cfg) => Filters.PartialClone(cfg.strList("Fields")))
 
-  val regexMatch: FilterDesc = mkPureFilter("RegexMatch",
+  val regexMatch: FilterDesc = FilterDesc("RegexMatch",
     "Keeps records where every field matches its corresponding regex.",
     Seq(
       ConfigKey("Fields", "fields to match", default = Some(Seq.empty[String])),
       ConfigKey("Regexs", "regular expressions, positionally paired with Fields",
         default = Some(Seq.empty[String])),
       ConfigKey("InvertMatch", "discard records if any field matches",
-        default = Some(false))))(
+        default = Some(false))),
     (_, cfg) => {
-      val fields = cfg.strList("Fields", Nil)
-      val regexs = cfg.strList("Regexs", Nil)
+      val fields = cfg.strList("Fields")
+      val regexs = cfg.strList("Regexs")
       require(fields.size == regexs.size, "RegexMatch: Fields and Regexs sizes differ")
       Filters.RegexMatch(fields.zip(regexs), cfg.bool("InvertMatch"))
-    })
+    },
+    mutating = false)
 
-  val replaceFields: FilterDesc = mkFilter("ReplaceFields",
+  val replaceFields: FilterDesc = FilterDesc("ReplaceFields",
     "Copies fields onto other fields and/or sets fields to fixed values.",
     Seq(
-      ConfigKey("CopyFields", "flat [src1, dst1, src2, dst2, ...] pairs"),
-      ConfigKey("ReplaceFields", "flat [value1, dst1, value2, dst2, ...] pairs")))(
+      ConfigKey("CopyFields", "flat [src1, dst1, src2, dst2, ...] pairs",
+        default = Some(Seq.empty[String])),
+      ConfigKey("ReplaceFields", "flat [value1, dst1, value2, dst2, ...] pairs",
+        default = Some(Seq.empty[String]))),
     (_, cfg) => {
       def pairs(key: String): Seq[(String, String)] = {
-        val l = cfg.strList(key, Nil)
+        val l = cfg.strList(key)
         require(l.size % 2 == 0, s"ReplaceFields: $key must have an even number of entries")
         l.grouped(2).map(p => (p(0), p(1))).toSeq
       }
       Filters.ReplaceFields(copies = pairs("CopyFields"), literals = pairs("ReplaceFields"))
     })
 
-  val setStringFromUrl: FilterDesc = mkFilter("SetStringFromURL",
+  val setStringFromUrl: FilterDesc = FilterDesc("SetStringFromURL",
     "Sets a field to the first configured string found in the source URL; " +
       "discards records containing none.",
     Seq(
       ConfigKey("Field", "Name of the field to set", required = true),
-      ConfigKey("Strings", "Strings to look for in the URL", required = true)))(
+      ConfigKey("Strings", "Strings to look for in the URL", required = true)),
     (_, cfg) => Filters.SetStringFromURL(cfg.str("Field"), cfg.strList("Strings")))
 
-  val slice: FilterDesc = mkFilter("Slice",
+  val slice: FilterDesc = FilterDesc("Slice",
     "Copies src[StartIdx:EndIdx] into dst, clamped to the value length.",
     Seq(
       ConfigKey("Src", "The source field to slice", required = true),
       ConfigKey("Dst", "The destination field", required = true),
       ConfigKey("StartIdx", "slice start", default = Some(0L)),
-      ConfigKey("EndIdx", "slice end (default: end of value)")))(
+      ConfigKey("EndIdx", "slice end (default: end of value)",
+        default = Some(Int.MaxValue.toLong))),
     (_, cfg) => Filters.Slice(cfg.str("Src"), cfg.str("Dst"),
-      cfg.int("StartIdx", 0L).toInt, cfg.int("EndIdx", Int.MaxValue.toLong).toInt))
+      cfg.int("StartIdx").toInt, cfg.int("EndIdx").toInt))
 
-  val stringMatch: FilterDesc = mkPureFilter("StringMatch",
+  val stringMatch: FilterDesc = FilterDesc("StringMatch",
     "Discards records whose field equals any of the strings (InvertMatch keeps them).",
     Seq(
       ConfigKey("Field", "field compared against the strings", required = true),
       ConfigKey("Strings", "list of strings to match", required = true),
-      ConfigKey("InvertMatch", "keep only matching records", default = Some(false))))(
+      ConfigKey("InvertMatch", "keep only matching records", default = Some(false))),
     (_, cfg) => Filters.StringMatch(cfg.str("Field"), cfg.strList("Strings"),
-      cfg.bool("InvertMatch")))
+      cfg.bool("InvertMatch")),
+    mutating = false)
 
-  val timestampF: FilterDesc = mkFilter("Timestamp",
+  val timestampF: FilterDesc = FilterDesc("Timestamp",
     "Sets a field to the processing-time unix timestamp.",
-    Seq(ConfigKey("Field", "field to set to the unix Epoch timestamp", required = true)))(
+    Seq(ConfigKey("Field", "field to set to the unix Epoch timestamp", required = true)),
     (_, cfg) => Filters.Timestamp(cfg.str("Field")))
 
-  val timestampRange: FilterDesc = mkPureFilter("TimestampRange",
+  val timestampRange: FilterDesc = FilterDesc("TimestampRange",
     "Keeps records whose epoch field is within [StartDatetime, EndDatetime).",
     Seq(
       ConfigKey("StartDatetime", "inclusive lower bound 'YYYY-MM-DD HH:MM:SS' or 'now'",
         required = true),
       ConfigKey("EndDatetime", "exclusive upper bound 'YYYY-MM-DD HH:MM:SS' or 'now'",
         required = true),
-      ConfigKey("Field", "field containing the Unix EPOCH timestamp", required = true)))(
+      ConfigKey("Field", "field containing the Unix EPOCH timestamp", required = true)),
     (_, cfg) => {
       def bound(s: String): Long = s.trim match {
         case "now" => System.currentTimeMillis() / 1000
@@ -660,61 +668,63 @@ object BuiltinComponents {
       }
       Filters.TimestampRange(cfg.str("Field"),
         bound(cfg.str("StartDatetime")), bound(cfg.str("EndDatetime")))
-    })
+    },
+    mutating = false)
 
-  val urlEscape: FilterDesc = mkFilter("URLEscape",
+  val urlEscape: FilterDesc = FilterDesc("URLEscape",
     "Percent-encodes (or decodes) a field into another field.",
     Seq(
       ConfigKey("SrcField", "field with the URL to escape/unescape", required = true),
       ConfigKey("DstField", "field to write the result to", required = true),
-      ConfigKey("Unescape", "unescape instead of escaping", default = Some(false))))(
+      ConfigKey("Unescape", "unescape instead of escaping", default = Some(false))),
     (_, cfg) => Filters.URLEscape(cfg.str("SrcField"), cfg.str("DstField"),
       cfg.bool("Unescape")))
 
-  val urlParam: FilterDesc = mkFilter("URLParam",
+  val urlParam: FilterDesc = FilterDesc("URLParam",
     "Extracts a query parameter from a URL field.",
     Seq(
       ConfigKey("SrcField", "field containing the url", required = true),
       ConfigKey("DstField", "field to save the extracted param", required = true),
-      ConfigKey("Param", "name of the url parameter to extract", required = true)))(
+      ConfigKey("Param", "name of the url parameter to extract", required = true)),
     (_, cfg) => Filters.URLParam(cfg.str("SrcField"), cfg.str("DstField"), cfg.str("Param")))
 
   // --- extension filters (beyond the reference registry): the LLM-pipeline
   // text ops exposed as ordinary TOML components ---
 
-  val gopherQuality: FilterDesc = mkPureFilter("GopherQuality",
+  val gopherQuality: FilterDesc = FilterDesc("GopherQuality",
     "Drops records whose text field fails the Gopher-style repetition/shape " +
       "quality gate (word count, mean word length, duplicate-bigram fraction).",
     Seq(
       ConfigKey("Field", "field holding the document text", required = true),
       ConfigKey("MinWords", "minimum word count", default = Some(10L)),
       ConfigKey("MaxWords", "maximum word count", default = Some(100000L)),
-      ConfigKey("MaxDupBigram", "maximum duplicate-bigram fraction", default = Some("0.9"))))(
+      ConfigKey("MaxDupBigram", "maximum duplicate-bigram fraction", default = Some("0.9"))),
     (_, cfg) => df => df.filter(graft.functions.TextFunctions.gopherPasses(
-      col(cfg.str("Field")), cfg.int("MinWords", 10L), cfg.int("MaxWords", 100000L),
-      cfg.str("MaxDupBigram", "0.9").toDouble)))
+      col(cfg.str("Field")), cfg.int("MinWords"), cfg.int("MaxWords"),
+      cfg.str("MaxDupBigram").toDouble)),
+    mutating = false)
 
-  val redactPii: FilterDesc = mkFilter("RedactPii",
+  val redactPii: FilterDesc = FilterDesc("RedactPii",
     "Replaces emails, IPv4 addresses and phone-like digit runs in a field " +
       "with typed placeholder tokens.",
     Seq(
       ConfigKey("SrcField", "field to scrub", required = true),
       ConfigKey("DstField", "field to store the scrubbed text (may equal SrcField)",
-        required = true)))(
+        required = true)),
     (_, cfg) => df => df.withColumn(cfg.str("DstField"),
       graft.functions.TextFunctions.redactPii(col(cfg.str("SrcField")))))
 
-  val normalizeText: FilterDesc = mkFilter("NormalizeText",
+  val normalizeText: FilterDesc = FilterDesc("NormalizeText",
     "Lowercases a text field and collapses every non-alphanumeric run to a " +
       "single space (canonical training-corpus normalization).",
     Seq(
       ConfigKey("SrcField", "field to normalize", required = true),
       ConfigKey("DstField", "field to store the normalized text (may equal SrcField)",
-        required = true)))(
+        required = true)),
     (_, cfg) => df => df.withColumn(cfg.str("DstField"),
       graft.functions.TextFunctions.normalizeText(col(cfg.str("SrcField")))))
 
-  val fimTransform: FilterDesc = mkFilter("FimTransform",
+  val fimTransform: FilterDesc = FilterDesc("FimTransform",
     "Rewrites a hash-selected fraction of records' text field into the " +
       "fill-in-the-middle PSM layout (PRE+prefix+SUF+suffix+MID+middle, " +
       "Bavarian et al. 2022); selection and split points derive from " +
@@ -727,31 +737,32 @@ object BuiltinComponents {
       ConfigKey("Rate", "fraction of records transformed", default = Some("0.5")),
       ConfigKey("PreToken", "prefix sentinel", default = Some("<PRE>")),
       ConfigKey("SufToken", "suffix sentinel", default = Some("<SUF>")),
-      ConfigKey("MidToken", "middle sentinel", default = Some("<MID>"))))(
+      ConfigKey("MidToken", "middle sentinel", default = Some("<MID>"))),
     (_, cfg) => df => df.withColumn(cfg.str("Field"),
       graft.functions.TextFunctions.fimTransform(
         col(cfg.str("Field")), col(cfg.str("KeyField")), cfg.str("Seed"),
-        cfg.str("Rate", "0.5").toDouble, cfg.str("PreToken", "<PRE>"),
-        cfg.str("SufToken", "<SUF>"), cfg.str("MidToken", "<MID>"))))
+        cfg.str("Rate").toDouble, cfg.str("PreToken"),
+        cfg.str("SufToken"), cfg.str("MidToken"))))
 
-  val decontaminate: FilterDesc = mkPureFilter("Decontaminate",
+  val decontaminate: FilterDesc = FilterDesc("Decontaminate",
     "Drops records whose text field contains any configured benchmark phrase " +
       "as a contiguous normalized-token run (n-gram eval-set decontamination). " +
       "Per-row containment scan — right for a TOML phrase list; for large " +
       "benchmark sets use graft.llm.Decontaminate's broadcast n-gram join.",
     Seq(
       ConfigKey("Field", "field holding the document text", required = true),
-      ConfigKey("Phrases", "benchmark phrases to ban", required = true)))(
+      ConfigKey("Phrases", "benchmark phrases to ban", required = true)),
     (_, cfg) => df => {
-      val phrases = cfg.strList("Phrases", Nil)
+      val phrases = cfg.strList("Phrases")
         .map(graft.llm.Decontaminate.normalizePhrase).filter(_.nonEmpty).distinct
       require(phrases.nonEmpty, "Decontaminate: Phrases must be non-empty")
       val padded = concat(lit(" "),
         graft.functions.TextFunctions.normalizeText(col(cfg.str("Field"))), lit(" "))
       df.filter(!phrases.map(p => padded.contains(lit(s" $p "))).reduce(_ || _))
-    })
+    },
+    mutating = false)
 
-  val c4Clean: FilterDesc = mkFilter("C4Clean",
+  val c4Clean: FilterDesc = FilterDesc("C4Clean",
     "C4-style page cleaning: keeps only lines ending in terminal punctuation " +
       "with at least MinWords words and no javascript/brace markers, writing " +
       "the surviving lines to DstField. With Gate=true also drops records " +
@@ -764,22 +775,22 @@ object BuiltinComponents {
         required = true),
       ConfigKey("MinWords", "minimum words per kept line", default = Some("5")),
       ConfigKey("MinKept", "page gate: minimum surviving lines", default = Some("3")),
-      ConfigKey("Gate", "drop records failing the page gate", default = Some("false"))))(
+      ConfigKey("Gate", "drop records failing the page gate", default = Some("false"))),
     (_, cfg) => df => {
-      val minWords = cfg.int("MinWords", 5L).toInt
+      val minWords = cfg.int("MinWords").toInt
       val src = col(cfg.str("SrcField"))
       // gate FIRST, on the original page: when DstField == SrcField the
       // withColumn overwrite would otherwise hide dropped lines (e.g. a
       // "lorem ipsum" line without terminal punctuation) from the gate
-      val gated = if (cfg.bool("Gate", false))
+      val gated = if (cfg.bool("Gate"))
         df.filter(graft.functions.TextFunctions.c4Passes(src,
-          cfg.int("MinKept", 3L).toInt, minWords))
+          cfg.int("MinKept").toInt, minWords))
       else df
       gated.withColumn(cfg.str("DstField"),
         array_join(graft.functions.TextFunctions.c4KeptLines(src, minWords), "\n"))
     })
 
-  val htmlExtract: FilterDesc = mkFilter("HtmlExtract",
+  val htmlExtract: FilterDesc = FilterDesc("HtmlExtract",
     "WET-style HTML extraction: strips script/style/comments and tags, " +
       "decodes named entities, collapses whitespace into DstField; " +
       "optionally also extracts the <title> (TitleField) and the " +
@@ -789,7 +800,7 @@ object BuiltinComponents {
       ConfigKey("DstField", "field to store the visible text (may equal SrcField)",
         required = true),
       ConfigKey("TitleField", "optional field for the <title> text"),
-      ConfigKey("LinksField", "optional field for the href count (as a string)")))(
+      ConfigKey("LinksField", "optional field for the href count (as a string)")),
     (_, cfg) => df => {
       val src = col(cfg.str("SrcField"))
       // derive title/links BEFORE DstField overwrites a shared column
@@ -802,7 +813,7 @@ object BuiltinComponents {
         graft.functions.TextFunctions.htmlToText(src))
     })
 
-  val pdfExtract: FilterDesc = mkFilter("PdfExtract",
+  val pdfExtract: FilterDesc = FilterDesc("PdfExtract",
     "Extracts visible text from a base64-encoded PDF payload field (e.g. " +
       "a WebDataset BinaryFields member): content streams walked " +
       "pure-JVM, FlateDecode inflated, show-text collected between " +
@@ -813,11 +824,11 @@ object BuiltinComponents {
       ConfigKey("DstField", "field for the extracted text (may equal SrcField)",
         required = true),
       ConfigKey("KeepUndecodable", "keep non-PDF records with empty DstField",
-        default = Some(false))))(
+        default = Some(false))),
     (_, cfg) => df => graft.llm.Pdf.withPdfText(df, cfg.str("SrcField"),
-      cfg.str("DstField"), cfg.bool("KeepUndecodable", false)))
+      cfg.str("DstField"), cfg.bool("KeepUndecodable")))
 
-  val mainContent: FilterDesc = mkFilter("MainContent",
+  val mainContent: FilterDesc = FilterDesc("MainContent",
     "Readability-style main-content extraction: segments HTML into blocks " +
       "at block-level tags and keeps only prose-like blocks (at least " +
       "MinLength visible characters AND link density at most " +
@@ -832,10 +843,10 @@ object BuiltinComponents {
         default = Some("30")),
       ConfigKey("MaxLinkDensity",
         "maximum anchor-text chars / visible chars for a block to survive",
-        default = Some("0.33"))))(
+        default = Some("0.33"))),
     (_, cfg) => df => {
-      val minLen = cfg.int("MinLength", 30L).toInt
-      val maxLd = cfg.dbl("MaxLinkDensity", 0.33)
+      val minLen = cfg.int("MinLength").toInt
+      val maxLd = cfg.dbl("MaxLinkDensity")
       require(minLen >= 0, s"MainContent: MinLength must be >= 0: $minLen")
       require(maxLd >= 0.0 && maxLd <= 1.0,
         s"MainContent: MaxLinkDensity must be in [0,1]: $maxLd")
@@ -844,7 +855,7 @@ object BuiltinComponents {
           col(cfg.str("SrcField")), minLen, maxLd))
     })
 
-  val bpeEncode: FilterDesc = mkFilter("BpeEncode",
+  val bpeEncode: FilterDesc = FilterDesc("BpeEncode",
     "Byte-pair encodes a text field under a fixed merge table (rules as " +
       "\"a b\" strings in learned order, e.g. from graft.llm.Bpe.train). " +
       "DstField receives the paren-form tokenization; CountField (optional) " +
@@ -854,9 +865,9 @@ object BuiltinComponents {
       ConfigKey("DstField", "field for the encoded form (may equal SrcField)",
         required = true),
       ConfigKey("Merges", "merge rules, each \"left right\"", required = true),
-      ConfigKey("CountField", "optional field for the symbol count")))(
+      ConfigKey("CountField", "optional field for the symbol count")),
     (_, cfg) => df => {
-      val merges = cfg.strList("Merges", Nil).map { m =>
+      val merges = cfg.strList("Merges").map { m =>
         val parts = m.split(" ", 2)
         require(parts.length == 2 && parts.forall(_.nonEmpty),
           s"BpeEncode: bad merge rule '$m' (want \"left right\")")
@@ -881,30 +892,31 @@ object BuiltinComponents {
     * Parse/resolution errors surface at topology compile time, not
     * per-record.
     */
-  val sqlExpr: FilterDesc = mkFilter("SqlExpr",
+  val sqlExpr: FilterDesc = FilterDesc("SqlExpr",
     "Sets DstField to the value of a SQL expression over the record's " +
       "fields (full Spark SQL function library + graft_* functions).",
     Seq(
       ConfigKey("Expr", "SQL expression, e.g. \"concat(upper(a), '-', b)\"",
         required = true),
-      ConfigKey("DstField", "field receiving the expression value", required = true)))(
+      ConfigKey("DstField", "field receiving the expression value", required = true)),
     (ctx, cfg) => df => {
       graft.GraftFunctions.register(ctx.spark)
       df.withColumn(cfg.str("DstField"),
         expr(cfg.str("Expr")).cast("string"))
     })
 
-  val sqlWhere: FilterDesc = mkPureFilter("SqlWhere",
+  val sqlWhere: FilterDesc = FilterDesc("SqlWhere",
     "Keeps records where a SQL boolean expression over the record's " +
       "fields is true (full Spark SQL function library + graft_* functions).",
     Seq(ConfigKey("Where", "SQL predicate, e.g. \"cast(stars as double) >= 4\"",
-      required = true)))(
+      required = true)),
     (ctx, cfg) => df => {
       graft.GraftFunctions.register(ctx.spark)
       df.filter(expr(cfg.str("Where")))
-    })
+    },
+    mutating = false)
 
-  val canonicalUrl: FilterDesc = mkFilter("CanonicalUrl",
+  val canonicalUrl: FilterDesc = FilterDesc("CanonicalUrl",
     "Rewrites a URL field to its canonical form (lowercase scheme/host, no " +
       "fragment, no default port, tracking params dropped, query params " +
       "sorted, trailing path slash normalized) — the URL-level dedup key " +
@@ -912,11 +924,11 @@ object BuiltinComponents {
     Seq(
       ConfigKey("SrcField", "field holding the URL", required = true),
       ConfigKey("DstField", "field for the canonical URL (may equal SrcField)",
-        required = true)))(
+        required = true)),
     (_, cfg) => df => df.withColumn(cfg.str("DstField"),
       graft.functions.TextFunctions.canonicalUrl(col(cfg.str("SrcField")))))
 
-  val blockDomains: FilterDesc = mkPureFilter("BlockDomains",
+  val blockDomains: FilterDesc = FilterDesc("BlockDomains",
     "Discards records whose URL field's host equals or is a subdomain of " +
       "any blocklist domain (whole-label matching: tracker.com blocks " +
       "ads.tracker.com, never nottracker.com) — the C4/RefinedWeb " +
@@ -925,13 +937,13 @@ object BuiltinComponents {
       ConfigKey("Field", "field holding the URL", required = true),
       ConfigKey("Domains", "comma list of blocked domains"),
       ConfigKey("DomainsFile", "file URL(s), one domain per line, # comments " +
-        "(set Domains and/or DomainsFile)"),
+        "(set Domains and/or DomainsFile)", default = Some(Seq.empty[String])),
       ConfigKey("KeepOnMatch", "true: keep ONLY blocked records (audit mode)",
-        default = Some(false))))(
+        default = Some(false))),
     (ctx, cfg) => {
       val inline = cfg.strOpt("Domains").toSeq
         .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-      val fromFiles = cfg.strList("DomainsFile", Nil)
+      val fromFiles = cfg.strList("DomainsFile")
         .map(_.stripPrefix("file://")) match {
         case Nil => Nil
         case files =>
@@ -948,9 +960,10 @@ object BuiltinComponents {
         val hit = graft.functions.TextFunctions.domainBlocked(col(cfg.str("Field")), domains)
         df.filter(if (keepOnMatch) hit else !hit)
       }
-    })
+    },
+    mutating = false)
 
-  val assignSplit: FilterDesc = mkFilter("AssignSplit",
+  val assignSplit: FilterDesc = FilterDesc("AssignSplit",
     "Labels each record with a deterministic train/valid/test (or any) " +
       "split, chosen by hashing a key field — stable across runs, " +
       "partitionings, and retries.",
@@ -960,9 +973,9 @@ object BuiltinComponents {
       ConfigKey("Splits", "comma list of name:weight (weights sum to 1)",
         default = Some("train:0.8,valid:0.1,test:0.1")),
       ConfigKey("DstField", "field receiving the split name",
-        default = Some("split"))))(
+        default = Some("split"))),
     (_, cfg) => {
-      val splits = cfg.str("Splits", "train:0.8,valid:0.1,test:0.1")
+      val splits = cfg.str("Splits")
         .split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { part =>
           part.split(":") match {
             case Array(n, w) => n.trim -> w.trim.toDouble
@@ -971,10 +984,10 @@ object BuiltinComponents {
           }
         }
       df => graft.llm.Mix.assignSplits(df, col(cfg.str("KeyField")),
-        cfg.str("Seed", "split"), splits, cfg.str("DstField", "split"))
+        cfg.str("Seed"), splits, cfg.str("DstField"))
     })
 
-  val chunkText: FilterDesc = mkFilter("ChunkText",
+  val chunkText: FilterDesc = FilterDesc("ChunkText",
     "Explodes each record into overlapping token-window chunks of a text " +
       "field (RAG ingestion): the chunk replaces the field, the 0-based " +
       "window index lands in IndexField. Map-only.",
@@ -985,15 +998,15 @@ object BuiltinComponents {
       ConfigKey("Overlap", "tokens shared with the previous chunk",
         default = Some(0L)),
       ConfigKey("IndexField", "field receiving the chunk index",
-        default = Some("chunk_ix"))))(
+        default = Some("chunk_ix"))),
     (_, cfg) => { df =>
-      val ix = cfg.str("IndexField", "chunk_ix")
+      val ix = cfg.str("IndexField")
       graft.llm.Chunk.chunkField(df, cfg.str("Field"),
-          cfg.int("Width", 256L).toInt, cfg.int("Overlap", 0L).toInt, ix)
+          cfg.int("Width").toInt, cfg.int("Overlap").toInt, ix)
         .withColumn(ix, col(ix).cast("string")) // schema-lite string fields
     })
 
-  val sentenceChunk: FilterDesc = mkFilter("SentenceChunk",
+  val sentenceChunk: FilterDesc = FilterDesc("SentenceChunk",
     "Explodes each record into its sentences (deterministic list-free " +
       "terminal-punctuation boundary rule): the sentence replaces the " +
       "field, the 0-based sentence index lands in IndexField. Map-only.",
@@ -1001,10 +1014,10 @@ object BuiltinComponents {
       ConfigKey("Field", "text field to segment (replaced by the sentence)",
         required = true),
       ConfigKey("IndexField", "field receiving the sentence index",
-        default = Some("sentence_ix"))))(
+        default = Some("sentence_ix"))),
     (_, cfg) => { df =>
       val f = cfg.str("Field")
-      val ix = cfg.str("IndexField", "sentence_ix")
+      val ix = cfg.str("IndexField")
       val out = df.columns
       df.select(out.filterNot(c => c == f || c == ix).map(col) :+
           posexplode(graft.functions.TextFunctions.sentences(col(f)))
@@ -1013,7 +1026,7 @@ object BuiltinComponents {
         .select((out.filterNot(_ == ix) :+ ix).map(col): _*)
     })
 
-  val domainCap: FilterDesc = mkPureFilter("DomainCap",
+  val domainCap: FilterDesc = FilterDesc("DomainCap",
     "Keeps at most N records per group (e.g. per domain/source), best " +
       "first by a rank field (string order ascending, ties by IdField) — " +
       "a bounded top-k per key, never a global window.",
@@ -1023,16 +1036,17 @@ object BuiltinComponents {
       ConfigKey("IdField", "unique id field (tie-break + row recovery)",
         required = true),
       ConfigKey("N", "max records kept per group", default = Some(1000L)),
-      ConfigKey("RankField", "field ranked ascending (defaults to IdField)")))(
+      ConfigKey("RankField", "field ranked ascending (defaults to IdField)")),
     (_, cfg) => {
       val id = cfg.str("IdField")
-      val rank = cfg.str("RankField", id)
-      val n = cfg.int("N", 1000L).toInt
+      val rank = cfg.strOpt("RankField").getOrElse(id)
+      val n = cfg.int("N").toInt
       df => graft.llm.Mix.capPerKey(df, col(cfg.str("GroupField")),
         struct(col(rank).as("r"), col(id).as("i")), id, n)
-    })
+    },
+    mutating = false)
 
-  val quantileGate: FilterDesc = mkPureFilter("QuantileFilter",
+  val quantileGate: FilterDesc = FilterDesc("QuantileFilter",
     "Drops the bottom Drop fraction of records per group, ranked by a " +
       "numeric score field with the cut derived from the data (per-group " +
       "discrete quantile over micro-unit-scaled scores; ties at the cut " +
@@ -1045,7 +1059,7 @@ object BuiltinComponents {
       ConfigKey("Drop", "fraction of each group to drop, in (0,1)",
         default = Some(0.5)),
       ConfigKey("Scale", "micro-unit scale applied before the integer quantile",
-        default = Some(10000L))))(
+        default = Some(10000L))),
     (_, cfg) => { df =>
       // loud cast (the NearDupDedup KeepBest treatment): a non-numeric
       // score STRING casts to null, and a null score fails the `>`
@@ -1060,10 +1074,11 @@ object BuiltinComponents {
         raise_error(concat(lit(s"QuantileFilter: ScoreField '$scoreField' " +
           "holds a non-numeric value: "), col(scoreField).cast("string"))))
         .otherwise(col(scoreField).cast("double"))
-      val scoreInt = round(dbl * cfg.int("Scale", 10000L)).cast("long")
+      val scoreInt = round(dbl * cfg.int("Scale")).cast("long")
       graft.llm.Mix.quantileFilter(df, col(cfg.str("GroupField")), scoreInt,
-        cfg.dbl("Drop", 0.5))
-    })
+        cfg.dbl("Drop"))
+    },
+    mutating = false)
 
   /** NearDupDedup — corpus-wide near-duplicate removal as a TOML filter,
     * so a topology user gets the verified MinHash-LSH dedup without
@@ -1077,7 +1092,7 @@ object BuiltinComponents {
     */
   private val nearDupInput = new graft.core.Cached.Slot
 
-  val nearDupDedup: FilterDesc = mkPureFilter("NearDupDedup",
+  val nearDupDedup: FilterDesc = FilterDesc("NearDupDedup",
     "Drops near-duplicate records: banded MinHash-LSH candidates verified " +
       "by exact shingle-Jaccard; a record dies when a record with a " +
       "smaller IdField (string order) — or any record in the optional " +
@@ -1096,15 +1111,15 @@ object BuiltinComponents {
         "transitively and each keeps its HIGHEST-value record (ties: smaller " +
         "id) instead of the pairwise smaller-id rule; batch mode only"),
       ConfigKey("StoreSigs", "optional parquet dir of at-rest (__id, __sig) signatures"),
-      ConfigKey("StoreCorpus", "optional parquet dir of the at-rest kept (id, text) docs")))(
+      ConfigKey("StoreCorpus", "optional parquet dir of the at-rest kept (id, text) docs")),
     (ctx, cfg) => df => {
       val id = cfg.str("IdField")
       val tf = cfg.str("Field")
-      val thr = cfg.str("Threshold", "0.7").toDouble
-      val p = cfg.int("NumPerm", 64L).toInt
-      val b = cfg.int("Bands", 16L).toInt
-      val k = cfg.int("ShingleK", 3L).toInt
-      val cap = cfg.int("MaxBucketSize", 0L).toInt
+      val thr = cfg.str("Threshold").toDouble
+      val p = cfg.int("NumPerm").toInt
+      val b = cfg.int("Bands").toInt
+      val k = cfg.int("ShingleK").toInt
+      val cap = cfg.int("MaxBucketSize").toInt
       // On this config surface the input frame is mid-funnel (parse +
       // however many filters came before), and the dedup decision consumes
       // it several times (candidate pairs, verify build, verify probe, the
@@ -1158,14 +1173,15 @@ object BuiltinComponents {
           "NearDupDedup: StoreSigs and StoreCorpus must be set together")
         }
       }
-    })
+    },
+    mutating = false)
 
   /** SpanDedup / ExactSubstrDedup — the cleaned-corpus dedup stages as
     * TOML filters: where NearDupDedup drops whole records, these REWRITE
     * the text field with the duplicated material removed (Dolma paragraph
     * dedup; Lee et al. exact-substring dedup), keeping the record.
     */
-  val spanDedup: FilterDesc = mkFilter("SpanDedup",
+  val spanDedup: FilterDesc = FilterDesc("SpanDedup",
     "Cuts the text field into spans (fixed token windows or " +
       "content-defined chunks), drops every span whose content already " +
       "occurred earlier in the corpus ((id, position) order), and " +
@@ -1179,17 +1195,17 @@ object BuiltinComponents {
       ConfigKey("Mode", "span cut: fixed | cdc (insertion-robust)",
         default = Some("fixed")),
       ConfigKey("Width", "tokens per span (fixed mode)", default = Some(8L)),
-      ConfigKey("MeanLen", "mean span tokens (cdc mode)", default = Some(16L))))(
+      ConfigKey("MeanLen", "mean span tokens (cdc mode)", default = Some(16L))),
     (_, cfg) => { df =>
       val id = cfg.str("IdField")
       val tf = cfg.str("Field")
       require(!df.columns.contains("__cleaned"),
         "SpanDedup reserves helper column '__cleaned'")
-      val spans = cfg.str("Mode", "fixed") match {
+      val spans = cfg.str("Mode") match {
         case "fixed" =>
-          graft.llm.Dedup.tokenChunks(df, id, tf, cfg.int("Width", 8L).toInt)
+          graft.llm.Dedup.tokenChunks(df, id, tf, cfg.int("Width").toInt)
         case "cdc" =>
-          graft.llm.Dedup.cdcChunks(df, id, tf, cfg.int("MeanLen", 16L).toInt)
+          graft.llm.Dedup.cdcChunks(df, id, tf, cfg.int("MeanLen").toInt)
         case m => throw new IllegalArgumentException(s"SpanDedup: unknown Mode '$m'")
       }
       val cleaned = graft.llm.Dedup.dedupSpans(spans, id)
@@ -1200,7 +1216,7 @@ object BuiltinComponents {
         .select(out.map(col): _*)
     })
 
-  val exactSubstrDedup: FilterDesc = mkFilter("ExactSubstrDedup",
+  val exactSubstrDedup: FilterDesc = FilterDesc("ExactSubstrDedup",
     "Cuts every exactly-duplicated K-token substring (at ANY alignment) " +
       "out of the text field, keeping the corpus-wide first occurrence " +
       "verbatim; untouched text passes through token-normalized.",
@@ -1209,14 +1225,14 @@ object BuiltinComponents {
         required = true),
       ConfigKey("Field", "text field to dedup (replaced by the cleaned text)",
         required = true),
-      ConfigKey("K", "window width in tokens", default = Some(8L))))(
+      ConfigKey("K", "window width in tokens", default = Some(8L))),
     (_, cfg) => { df =>
       val id = cfg.str("IdField")
       val tf = cfg.str("Field")
       require(!df.columns.contains("__cleaned"),
         "ExactSubstrDedup reserves helper column '__cleaned'")
       val cleaned = graft.llm.ExactSubstr.removeDuplicateWindows(
-          df.select(col(id), col(tf)), id, tf, cfg.int("K", 8L).toInt)
+          df.select(col(id), col(tf)), id, tf, cfg.int("K").toInt)
         .withColumnRenamed("text", "__cleaned")
       val out = df.columns
       df.join(cleaned, Seq(id))
@@ -1224,7 +1240,7 @@ object BuiltinComponents {
         .select(out.map(col): _*)
     })
 
-  val sidecarJoin: FilterDesc = mkFilter("SidecarJoin",
+  val sidecarJoin: FilterDesc = FilterDesc("SidecarJoin",
     "Left-joins an id-keyed parquet sidecar table (e.g. attribute " +
       "sidecars written by a tagger job) onto the record stream, filling " +
       "the selected DECLARED fields from sidecar columns of the same " +
@@ -1244,10 +1260,10 @@ object BuiltinComponents {
       ConfigKey("TrustKeys", "skip the duplicate-key aggregation for " +
         "sidecars already deduped (e.g. StoreLayout-compacted stores); " +
         "a duplicate then silently multiplies records",
-        default = Some(false))))(
+        default = Some(false))),
     (ctx, cfg) => { df =>
       val id = cfg.str("IdField")
-      val key = cfg.str("SidecarKey", id)
+      val key = cfg.strOpt("SidecarKey").getOrElse(id)
       val wanted = cfg.strList("Fields")
       require(wanted.nonEmpty, "SidecarJoin: Fields must name at least one column")
       require(wanted.distinct == wanted,
@@ -1302,7 +1318,7 @@ object BuiltinComponents {
         .drop("__sj_key" +: wanted.map(f => s"__sj_f_$f"): _*)
     })
 
-  val detectSpans: FilterDesc = mkFilter("DetectSpans",
+  val detectSpans: FilterDesc = FilterDesc("DetectSpans",
     "Extracts regex match spans of a field into a sibling field as a " +
       "JSON array of [start, end) char-offset pairs — the TAGGER half of " +
       "the span-attribute model (RedactSpans is the rewrite half, and a " +
@@ -1318,13 +1334,13 @@ object BuiltinComponents {
       ConfigKey("Units", "offset unit written: 'chars' (code points, the " +
         "native unit), 'bytes' (UTF-8, for external byte-indexing " +
         "consumers), or 'utf16' (JS/JVM-regex consumers)",
-        default = Some("chars"))))(
+        default = Some("chars"))),
     (_, cfg) => { df =>
-      val pat = cfg.str("Pattern", "") match {
+      val pat = cfg.str("Pattern") match {
         case "" => graft.functions.TextFunctions.PiiPattern
         case p => p
       }
-      val u = spanUnitOf("DetectSpans", cfg.str("Units", "chars"))
+      val u = spanUnitOf("DetectSpans", cfg.str("Units"))
       val text = col(cfg.str("Field"))
       val spans = graft.functions.TextFunctions.convertSpans(text,
         graft.functions.TextFunctions.matchSpans(text, pat), "chars", u)
@@ -1340,7 +1356,7 @@ object BuiltinComponents {
     else throw new IllegalArgumentException(
       s"$component: Units must be one of 'chars', 'bytes', 'utf16', got '$u'")
 
-  val redactSpans: FilterDesc = mkFilter("RedactSpans",
+  val redactSpans: FilterDesc = FilterDesc("RedactSpans",
     "Replaces character spans of a text field with a token ('' = cut): " +
       "spans arrive as DATA in a sibling field holding a JSON array of " +
       "[start, end) char-offset pairs — the span-attribute model, where " +
@@ -1355,12 +1371,12 @@ object BuiltinComponents {
         "(code points, the native unit), 'bytes' (UTF-8 offsets from an " +
         "external byte-indexing tagger), or 'utf16' (a JS/JVM-regex " +
         "tagger) — foreign units are converted in-plan before the " +
-        "rewrite", default = Some("chars"))))(
+        "rewrite", default = Some("chars"))),
     (_, cfg) => { df =>
       val parsed = from_json(col(cfg.str("SpansField")),
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.IntegerType)))
-      val u = spanUnitOf("RedactSpans", cfg.str("Units", "chars"))
+      val u = spanUnitOf("RedactSpans", cfg.str("Units"))
       val text = col(cfg.str("Field"))
       val raw = coalesce(
         transform(parsed, p =>
@@ -1369,10 +1385,10 @@ object BuiltinComponents {
       val spans = graft.functions.TextFunctions.convertSpans(text, raw, u, "chars")
       df.withColumn(cfg.str("Field"),
         graft.functions.TextFunctions.redactSpans(text, spans,
-          cfg.str("Token", "")))
+          cfg.str("Token")))
     })
 
-  val convertSpansFilter: FilterDesc = mkFilter("ConvertSpans",
+  val convertSpansFilter: FilterDesc = FilterDesc("ConvertSpans",
     "Rewrites a JSON spans field between offset units ('chars' code " +
       "points / 'bytes' UTF-8 / 'utf16') against a text field — the " +
       "sidecar-interop shim: convert a foreign tagger's offsets once at " +
@@ -1383,7 +1399,7 @@ object BuiltinComponents {
       ConfigKey("SpansField", "field holding JSON [[s,e],...] offsets, " +
         "rewritten in place", required = true),
       ConfigKey("From", "unit the offsets are in", required = true),
-      ConfigKey("To", "unit to convert to", required = true)))(
+      ConfigKey("To", "unit to convert to", required = true)),
     (_, cfg) => { df =>
       val from = spanUnitOf("ConvertSpans", cfg.str("From"))
       val to = spanUnitOf("ConvertSpans", cfg.str("To"))
@@ -1439,11 +1455,11 @@ object BuiltinComponents {
     raw = true,
     (ctx, cfg, df) => {
       val pathString = cfg.str("PathString")
-      val level = cfg.int("ZstdCompressionLevel", 3L).toInt
+      val level = cfg.int("ZstdCompressionLevel").toInt
       ZstdCodec.register(ctx.spark)
       ctx.spark.sparkContext.hadoopConfiguration.setInt("graft.zstd.level", level)
       ctx.spark.sparkContext.hadoopConfiguration.setInt("graft.zstd.windowLog",
-        cfg.int("ZstdWindowLog", 0L).toInt)
+        cfg.int("ZstdWindowLog").toInt)
       val codec: Option[String] =
         if (pathString.endsWith(".gz")) Some("gzip")
         else if (pathString.endsWith(".zst")) Some(classOf[ZstdCodec].getName)
@@ -1486,7 +1502,7 @@ object BuiltinComponents {
         (if (hasField0) Seq(col("__part")) else Nil) :+ col("_record").as("value"): _*)
         .observe(obs, count(lit(1)).as("rows"))
       var dfw = base.write.mode("overwrite")
-      val rs = cfg.sizeBytes("RotateSize", 0L)
+      val rs = cfg.sizeBytes("RotateSize")
       if (rs > 0) {
         // size rotation ≈ maxRecordsPerFile from a sampled record size;
         // avg() is null on an empty/fully-filtered input — fall back to 1
@@ -1585,13 +1601,13 @@ object BuiltinComponents {
     raw = false,
     (ctx, cfg, df) => {
       val path = cfg.str("Path")
-      val mode = cfg.str("Mode", "overwrite").toLowerCase
+      val mode = cfg.str("Mode").toLowerCase
       require(mode == "overwrite" || mode == "append", s"Parquet: bad Mode '$mode'")
       val obs = new org.apache.spark.sql.Observation()
       var w = df.observe(obs, count(lit(1)).as("rows"))
         .write.mode(mode)
-        .option("compression", cfg.str("Compression", "snappy"))
-      val mrpf = cfg.int("MaxRecordsPerFile", 0L)
+        .option("compression", cfg.str("Compression"))
+      val mrpf = cfg.int("MaxRecordsPerFile")
       if (mrpf > 0) w = w.option("maxRecordsPerFile", mrpf)
       cfg.strOpt("PartitionBy").foreach { f =>
         require(df.columns.contains(f), s"Parquet: unknown PartitionBy field '$f'")
@@ -1638,7 +1654,7 @@ object BuiltinComponents {
       ConfigKey("OrderFields", "numeric fields giving the deterministic " +
         "sequence order across shard files (ignored when PackBudget > 0: " +
         "packed rows order by their shard, seq_id)",
-        default = Some("""["shard", "seq_id"]""")),
+        default = Some(Seq("shard", "seq_id"))),
       ConfigKey("NumTasks", "shard-file count (0 = session shuffle width)",
         default = Some(0L)),
       ConfigKey("Dtype", "token width: int32 | uint16 (uint16 halves " +
@@ -1692,12 +1708,12 @@ object BuiltinComponents {
         "\"{{.Rotation}}\"", default = Some("0"))),
     raw = false,
     (ctx, cfg, df) => {
-      val idsF = cfg.str("IdsField", "input_ids")
+      val idsF = cfg.str("IdsField")
       require(df.columns.contains(idsF),
         s"PackedShards: unknown IdsField '$idsF'")
       val obs = new org.apache.spark.sql.Observation()
       val observed = df.observe(obs, count(lit(1)).as("rows"))
-      val budget = cfg.int("PackBudget", 0L).toInt
+      val budget = cfg.int("PackBudget").toInt
       val path = cfg.str("Path")
       // channel fields default to the PackRows emission names when the
       // projected record carries them — the SFT layout the packer built
@@ -1731,12 +1747,12 @@ object BuiltinComponents {
         val ord = col(ordF).cast("long")
         def shardOf(o: Column) =
           pmod(pmod(o, lit(2147483647L)) * lit(2654435761L),
-            lit(cfg.int("PackShards", 4L)))
+            lit(cfg.int("PackShards")))
         def export(packed: DataFrame): Unit =
           graft.sources.PackedCorpus.write(packed, path,
             idsCol = "input_ids", orderCols = Seq("shard", "seq_id"),
-            numTasks = cfg.int("NumTasks", 0L).toInt,
-            dtype = cfg.str("Dtype", "int32"),
+            numTasks = cfg.int("NumTasks").toInt,
+            dtype = cfg.str("Dtype"),
             maskCol = Some("loss_mask"), segCol = Some("segment_ids"),
             docStartCol = Some("doc_start"))
         // an explicit EMPTY CarryDir is the per-batch opt-out (daemons
@@ -1745,14 +1761,14 @@ object BuiltinComponents {
           case None =>
             export(graft.llm.Pack.packTokensGreedy(observed, ord, toks,
               inMask, budget, shardOf(ord),
-              cfg.int("PadId", -2L).toInt, sepId = idOpt("SepId"),
+              cfg.int("PadId").toInt, sepId = idOpt("SepId"),
               eosId = idOpt("EosId"), bosId = idOpt("BosId")))
           case Some(carryDir) =>
             // cross-batch tail carry: union the previous batch's stashed
             // tail documents (raw tokens — never double-extended), pack
             // with an explicit tail, ship ONLY closed sequences, stash
             // the new tail idempotently under this batch's rotation
-            val rotation = cfg.str("CarryRotation", "0").toLong
+            val rotation = cfg.str("CarryRotation").toLong
             val rec = observed.select(ord.as("__ord"),
               toks.as("__tok"), inMask.as("__msk"))
             val withCarry = graft.llm.Pack.Carry
@@ -1760,7 +1776,7 @@ object BuiltinComponents {
               .map(prev => rec.unionByName(prev)).getOrElse(rec)
             val packed = graft.llm.Pack.packTokensGreedyCarry(withCarry,
               col("__ord"), col("__tok"), col("__msk"), budget,
-              shardOf(col("__ord")), cfg.int("PadId", -2L).toInt,
+              shardOf(col("__ord")), cfg.int("PadId").toInt,
               sepId = idOpt("SepId"), eosId = idOpt("EosId"),
               bosId = idOpt("BosId"))
             graft.core.Cached.scoped(packed) { packedAll =>
@@ -1783,7 +1799,7 @@ object BuiltinComponents {
             }
         }
       } else {
-        val ordFields = cfg.strList("OrderFields", Seq("shard", "seq_id"))
+        val ordFields = cfg.strList("OrderFields")
         ordFields.foreach(f => require(df.columns.contains(f),
           s"PackedShards: unknown OrderFields entry '$f'"))
         val maskF = fieldOpt("MaskField", "loss_mask")
@@ -1804,8 +1820,8 @@ object BuiltinComponents {
             filter(split(col(idsF), ","), x => x =!= ""), _.cast("int")))
           .select(cols: _*)
         graft.sources.PackedCorpus.write(typed, path, idsCol = idsF,
-          orderCols = ordFields, numTasks = cfg.int("NumTasks", 0L).toInt,
-          dtype = cfg.str("Dtype", "int32"),
+          orderCols = ordFields, numTasks = cfg.int("NumTasks").toInt,
+          dtype = cfg.str("Dtype"),
           maskCol = maskF, segCol = segF,
           docStartCol =
             if (df.columns.contains("doc_start")) Some("doc_start") else None)
@@ -1830,7 +1846,7 @@ object BuiltinComponents {
     raw = false,
     (ctx, cfg, df) => {
       val path = cfg.str("Path")
-      val mode = cfg.str("Mode", "overwrite").toLowerCase
+      val mode = cfg.str("Mode").toLowerCase
       require(mode == "overwrite" || mode == "append", s"JsonLines: bad Mode '$mode'")
       val obs = new org.apache.spark.sql.Observation()
       val part = cfg.strOpt("PartitionBy")
@@ -1843,7 +1859,7 @@ object BuiltinComponents {
       val base = df.observe(obs, count(lit(1)).as("rows"))
         .select((to_json(struct(jsonCols: _*)).as("value") +: part.toSeq.map(col)): _*)
       var w = base.write.mode(mode)
-        .option("compression", cfg.str("Compression", "gzip"))
+        .option("compression", cfg.str("Compression"))
       part.foreach(f => w = w.partitionBy(f))
       w.text(path)
       OutputResult(Seq(path), obs.get("rows").asInstanceOf[Long])
@@ -1869,8 +1885,8 @@ object BuiltinComponents {
     */
   private def storeBatch(cfg: ComponentConfig, df: DataFrame, corpusDir: String)(
       fn: String => (DataFrame, Long) => Long): OutputResult = {
-    val runTag = cfg.str("RunTag", "run")
-    val rotation = cfg.str("Rotation", "0").toLong
+    val runTag = cfg.str("RunTag")
+    val rotation = cfg.str("Rotation").toLong
     val rows = fn(runTag)(df, rotation)
     OutputResult(
       Seq(s"$corpusDir/${graft.streaming.StoreLayout.partition(runTag, rotation)}"), rows)
@@ -1906,7 +1922,7 @@ object BuiltinComponents {
     (ctx, cfg, df) => {
       val id = cfg.str("IdField")
       val pf = cfg.str("PayloadField")
-      val method = cfg.str("Hash", "phash").toLowerCase
+      val method = cfg.str("Hash").toLowerCase
       val storeDir = cfg.str("StoreDir")
       val corpusDir = cfg.str("CorpusDir")
       def sigOf(batch: DataFrame): DataFrame = {
@@ -1932,8 +1948,8 @@ object BuiltinComponents {
       }
       storeBatch(cfg, df, corpusDir)(tag => graft.streaming.PerceptualDedupStream
         .batchFunction(id, sigOf, storeDir, corpusDir,
-          maxHamming = cfg.int("MaxHamming", 3L).toInt,
-          maxBucketSize = cfg.int("MaxBucketSize", 0L).toInt, runTag = tag))
+          maxHamming = cfg.int("MaxHamming").toInt,
+          maxBucketSize = cfg.int("MaxBucketSize").toInt, runTag = tag))
     })
 
   /** SubstrDedupStore — [[graft.streaming.ExactSubstrStream]] as a TOML
@@ -1962,7 +1978,7 @@ object BuiltinComponents {
       storeBatch(cfg, df, corpusDir)(tag =>
         graft.streaming.ExactSubstrStream.batchFunction(cfg.str("IdField"),
           cfg.str("Field"), cfg.str("StoreDir"), corpusDir,
-          k = cfg.int("K", 8L).toInt, runTag = tag))
+          k = cfg.int("K").toInt, runTag = tag))
     })
 
   /** Stats — dataset distribution report to CSV.
@@ -1980,7 +1996,7 @@ object BuiltinComponents {
     raw = true,
     (ctx, cfg, df) => {
       val tsField = cfg.str("TimestampField")
-      val countEmpties = cfg.bool("CountEmptyFields", default = false)
+      val countEmpties = cfg.bool("CountEmptyFields")
       val qs = Seq(0.01, 0.05, 0.10, 0.25, 0.50, 0.75, 0.90, 0.95, 0.99)
       val sizeCol = length(col("_record"))
       val tsRaw = col(tsField).cast("string")
@@ -2025,7 +2041,7 @@ object BuiltinComponents {
         (n, i) <- r.schema.fields.map(_.name).zipWithIndex.toSeq if n != "field"
       } yield s"${n}_$f,${r.get(i)}"
       val csv = ("stat,value" +: (head ++ fieldCsv)).mkString("", "\n", "\n")
-      val out = new java.io.File(cfg.str("CSVPath", "stats.csv"))
+      val out = new java.io.File(cfg.str("CSVPath"))
       Option(out.getParentFile).foreach(_.mkdirs())
       java.nio.file.Files.writeString(out.toPath, csv)
       OutputResult(Seq(out.getAbsolutePath), row.getLong(0))
@@ -2043,7 +2059,7 @@ object BuiltinComponents {
     "OpLog", "Logs each record (development).",
     Seq(ConfigKey("Limit", "max records to log", default = Some(100L))), raw = false,
     (_, cfg, df) => {
-      val limit = cfg.int("Limit", 100L).toInt
+      val limit = cfg.int("Limit").toInt
       val rows = df.limit(limit).collect()
       rows.foreach(r => org.apache.log4j.Logger.getLogger("graft.oplog").info(r.toString))
       OutputResult(Nil, rows.length.toLong)
@@ -2083,18 +2099,18 @@ object BuiltinComponents {
       ConfigKey("Retries", "upload retries", default = Some(3L)),
       ConfigKey("ExitOnError", "fail the job on upload error", default = Some(false))),
     (ctx, cfg, paths) => {
-      val base = java.nio.file.Paths.get(cfg.str("SourceBasePath", "_out"))
+      val base = java.nio.file.Paths.get(cfg.str("SourceBasePath"))
         .toAbsolutePath.normalize
       val bucket = cfg.str("Bucket")
-      val prefix = cfg.str("Prefix", "")
+      val prefix = cfg.str("Prefix")
       val destRoot =
         if (bucket.startsWith("/") || bucket.startsWith("file:"))
           bucket.stripPrefix("file://")
         else s"s3a://$bucket"
       val conf = ctx.spark.sparkContext.hadoopConfiguration
       val exitOnError = cfg.bool("ExitOnError")
-      val retries = cfg.int("Retries", 3L).toInt.max(0)
-      val concurrency = cfg.int("Concurrency", 5L).toInt.max(1)
+      val retries = cfg.int("Retries").toInt.max(0)
+      val concurrency = cfg.int("Concurrency").toInt.max(1)
       // the reference uploads through a worker pool with per-file retries
       // (upload/s3.go:22-53); same shape here — a fixed pool fed by the
       // finished-file list, exponential backoff per attempt

@@ -6,6 +6,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reference builds from Go struct tags (reference: desc.go:67-111 for the
   * descriptor structs, config.go:300-351 for case-insensitive lookup,
   * help_markdown.go:14 for doc generation).
+  *
+  * A [[ConfigKey]] is the single declaration of a config key: its name,
+  * help, requiredness and default live there and nowhere else. The
+  * `-help` text renders from it, and [[Topology.compile]] binds every
+  * TOML section to its descriptor's keys ([[ComponentConfig.bind]]), so
+  * unknown and missing required keys fail at compile — before any output
+  * writes — and a build function reads declared defaults, never its own.
   */
 
 /** One config key of a component: name, docs, requiredness, default.
@@ -16,101 +23,107 @@ final case class ConfigKey(
     help: String,
     required: Boolean = false,
     default: Option[Any] = None,
-)
+) {
+  /** The default as it would be written in a TOML file (lists as arrays). */
+  def defaultToml: Option[String] = default.map {
+    case xs: Seq[_] => xs.map(x => "\"" + x + "\"").mkString("[", ", ", "]")
+    case v => v.toString
+  }
+}
 
 /** Typed, case-insensitive view over a component's decoded TOML table.
   * Key case-insensitivity mirrors the reference's TOML decoding
   * (BurntSushi/toml matches struct fields case-insensitively).
+  *
+  * Bound to its descriptor's keys ([[bind]]), a read of an absent key
+  * returns the key's declared default through the same typed coercion as
+  * a TOML value, an absent key without one fails as missing, and a read
+  * of a key the descriptor does not declare fails loudly. Unbound
+  * (`keys = None`, e.g. a `[[user]]` section declaring no keys) the
+  * table is free-form: reads see only the TOML values.
   */
-final case class ComponentConfig(raw: Map[String, Any], componentName: String = "") {
+final case class ComponentConfig(raw: Map[String, Any], componentName: String = "",
+    keys: Option[Seq[ConfigKey]] = None) {
   private val lower: Map[String, Any] = raw.map { case (k, v) => k.toLowerCase -> v }
+  private val declared: Option[Map[String, ConfigKey]] =
+    keys.map(_.map(k => k.name.toLowerCase -> k).toMap)
 
-  def has(key: String): Boolean = lower.contains(key.toLowerCase)
-  def any(key: String): Option[Any] = lower.get(key.toLowerCase)
-
-  def str(key: String, default: => String = null): String =
-    any(key).map(_.toString).getOrElse {
-      require(default != null, s"$componentName: missing required key '$key'")
-      default
-    }
-  def strOpt(key: String): Option[String] = any(key).map(_.toString)
-  def int(key: String, default: => Long = Long.MinValue): Long = any(key) match {
-    case Some(l: Long)   => l
-    case Some(d: Double) => d.toLong
-    case Some(s: String) => s.toLong
-    case Some(other) => throw new IllegalArgumentException(
-      s"$componentName: '$key' is not an integer: $other")
-    case None =>
-      require(default != Long.MinValue, s"$componentName: missing required key '$key'")
-      default
-  }
-  def dbl(key: String, default: => Double = Double.NaN): Double = any(key) match {
-    case Some(d: Double) => d
-    case Some(l: Long)   => l.toDouble
-    case Some(s: String) => s.toDouble
-    case Some(other) => throw new IllegalArgumentException(
-      s"$componentName: '$key' is not a number: $other")
-    case None =>
-      require(!default.isNaN, s"$componentName: missing required key '$key'")
-      default
-  }
-  /** Byte size: a plain integer, or a humanized string like "32MB",
-    * "1.5 GiB", "64kib" — decimal suffixes are 1000-based and binary
-    * (…iB) suffixes 1024-based, matching the reference's TOML size type
-    * (size_bytes.go UnmarshalTOML via go-humanize).
+  /** Bind to a descriptor's keys, rejecting unknown keys (reference:
+    * config.go:403-406) and missing required ones (config.go:555-567).
     */
-  def sizeBytes(key: String, default: => Long = Long.MinValue): Long = any(key) match {
-    case Some(l: Long)   => require(l >= 0, s"$componentName: '$key' must be >= 0"); l
-    case Some(d: Double) => require(d >= 0, s"$componentName: '$key' must be >= 0"); d.toLong
-    case Some(s: String) if s.nonEmpty => ComponentConfig.parseSize(componentName, key, s)
-    case Some(other) => throw new IllegalArgumentException(
-      s"$componentName: '$key' is not a byte size: $other")
-    case None =>
-      require(default != Long.MinValue, s"$componentName: missing required key '$key'")
-      default
-  }
-
-  def bool(key: String, default: => Boolean = false): Boolean = any(key) match {
-    case Some(b: Boolean) => b
-    case Some(s: String)  => s.toBoolean
-    case Some(other) => throw new IllegalArgumentException(
-      s"$componentName: '$key' is not a boolean: $other")
-    case None => default
-  }
-  def strList(key: String, default: => Seq[String] = null): Seq[String] = any(key) match {
-    case Some(l: List[Any @unchecked]) => l.map(_.toString)
-    case Some(s: String)               => Seq(s)
-    case None =>
-      require(default != null, s"$componentName: missing required key '$key'")
-      default
-    case Some(other) => throw new IllegalArgumentException(
-      s"$componentName: '$key' is not a list: $other")
-  }
-  def strMap(key: String): Map[String, String] = any(key) match {
-    case Some(m: Map[String @unchecked, Any @unchecked]) =>
-      m.map { case (k, v) => k -> v.toString }
-    case None => Map.empty
-    case Some(other) => throw new IllegalArgumentException(
-      s"$componentName: '$key' is not a table: $other")
-  }
-
-  /** Reject unknown keys (reference: config.go:403-406) and missing
-    * required ones (config.go:555-567).
-    */
-  def validate(keys: Seq[ConfigKey]): Unit = {
+  def bind(keys: Seq[ConfigKey]): ComponentConfig = {
     val known = keys.map(_.name.toLowerCase).toSet
     val unknown = raw.keySet.filterNot(k => known.contains(k.toLowerCase))
     require(unknown.isEmpty,
       s"$componentName: unknown config key(s): ${unknown.mkString(", ")}; " +
         s"known: ${keys.map(_.name).mkString(", ")}")
     for (k <- keys if k.required)
-      require(has(k.name), s"$componentName: missing required key '${k.name}'")
+      require(lower.contains(k.name.toLowerCase),
+        s"$componentName: missing required key '${k.name}'")
+    copy(keys = Some(keys))
+  }
+
+  private def declaration(key: String): Option[ConfigKey] = declared.map(_.getOrElse(
+    key.toLowerCase, throw new IllegalArgumentException(
+      s"$componentName: read of undeclared config key '$key'")))
+
+  /** Whether the TOML sets the key (a declared default does not count). */
+  def has(key: String): Boolean = { declaration(key); lower.contains(key.toLowerCase) }
+
+  /** The TOML value, else the declared default. */
+  private def value(key: String): Option[Any] = {
+    val decl = declaration(key)
+    lower.get(key.toLowerCase).orElse(decl.flatMap(_.default))
+  }
+
+  private def typed[T](key: String, what: String)(coerce: PartialFunction[Any, T]): T =
+    value(key) match {
+      case Some(v) => coerce.applyOrElse(v, (other: Any) => throw new IllegalArgumentException(
+        s"$componentName: '$key' is not $what: $other"))
+      case None => throw new IllegalArgumentException(
+        s"$componentName: missing required key '$key'")
+    }
+
+  def str(key: String): String = typed(key, "a string") { case v => v.toString }
+  def strOpt(key: String): Option[String] = value(key).map(_.toString)
+  def int(key: String): Long = typed(key, "an integer") {
+    case l: Long => l
+    case d: Double if d.isWhole => d.toLong
+    case s: String => s.toLong
+  }
+  def dbl(key: String): Double = typed(key, "a number") {
+    case d: Double => d
+    case l: Long   => l.toDouble
+    case s: String => s.toDouble
+  }
+  /** Byte size: a plain integer, or a humanized string like "32MB",
+    * "1.5 GiB", "64kib" — decimal suffixes are 1000-based and binary
+    * (…iB) suffixes 1024-based, matching the reference's TOML size type
+    * (size_bytes.go UnmarshalTOML via go-humanize).
+    */
+  def sizeBytes(key: String): Long = typed(key, "a byte size") {
+    case l: Long   => require(l >= 0, s"$componentName: '$key' must be >= 0"); l
+    case d: Double => require(d >= 0, s"$componentName: '$key' must be >= 0"); d.toLong
+    case s: String if s.nonEmpty => ComponentConfig.parseSize(componentName, key, s)
+  }
+  def bool(key: String): Boolean = typed(key, "a boolean") {
+    case b: Boolean => b
+    case s: String  => s.toBoolean
+  }
+  def strList(key: String): Seq[String] = typed(key, "a list") {
+    case l: Seq[Any @unchecked] => l.map(_.toString)
+    case s: String              => Seq(s)
+  }
+  def strMap(key: String): Map[String, String] = value(key) match {
+    case Some(m: Map[String @unchecked, Any @unchecked]) =>
+      m.map { case (k, v) => k -> v.toString }
+    case None => Map.empty
+    case Some(other) => throw new IllegalArgumentException(
+      s"$componentName: '$key' is not a table: $other")
   }
 }
 
 object ComponentConfig {
-  val empty: ComponentConfig = ComponentConfig(Map.empty)
-
   /** "32MB" / "1.5 GiB" / "700" → bytes; decimal suffixes 1000-based,
     * binary (…iB) 1024-based, case-insensitive, optional space — the
     * accepted grammar of the reference's size type (size_bytes.go).
@@ -144,13 +157,16 @@ object ComponentConfig {
     bytes.toLong
   }
 
+  /** "500ms" / "5s" / "1m" / "2h" → milliseconds; a bare number is
+    * seconds, and "-1" (no bound) stays -1.
+    */
   def parseDuration(s: String): Long = s.trim match {
     case "-1" => -1L
-    case d if d.endsWith("ms") => d.dropRight(2).trim.toLong / 1000
-    case d if d.endsWith("s")  => d.dropRight(1).trim.toLong
-    case d if d.endsWith("m")  => d.dropRight(1).trim.toLong * 60
-    case d if d.endsWith("h")  => d.dropRight(1).trim.toLong * 3600
-    case d => d.toLong
+    case d if d.endsWith("ms") => d.dropRight(2).trim.toLong
+    case d if d.endsWith("s")  => d.dropRight(1).trim.toLong * 1000
+    case d if d.endsWith("m")  => d.dropRight(1).trim.toLong * 60000
+    case d if d.endsWith("h")  => d.dropRight(1).trim.toLong * 3600000
+    case d => d.toLong * 1000
   }
 }
 
@@ -273,8 +289,9 @@ final case class MetricsDesc(
   * case-insensitive; a `[[user]]` block whose name has no registered desc
   * fails the config load loudly (user_config_test.go:104-131); a registered
   * desc absent from the TOML is simply not called (zero value,
-  * user_config_test.go:133-168). `keys`, when non-empty, gets the same
-  * unknown/required enforcement as any component's config table.
+  * user_config_test.go:133-168). `keys`, when non-empty, bind the block
+  * like any component's config table; a desc declaring none leaves the
+  * block free-form, as in the reference.
   */
 final case class UserDesc(
     name: String,
@@ -325,7 +342,7 @@ final case class Components(
       else s"## $title\n\n" + xs.map { d =>
         val keyRows = d.keys.map { k =>
           val req = if (k.required) "yes" else "no"
-          val dv = k.default.map(_.toString).getOrElse("")
+          val dv = k.defaultToml.getOrElse("")
           s"| ${k.name} | $req | $dv | ${k.help} |"
         }.mkString("\n")
         s"### ${d.name}\n\n${d.help}\n\n" +

@@ -114,7 +114,8 @@ object DynamoOutput {
       ConfigKey("Regions", "regions to fan out to", default = Some(Seq("us-west-2"))),
       ConfigKey("Client", "\"local\" (JSONL double) or \"aws\" (real SDK)",
         default = Some("local")),
-      ConfigKey("LocalDir", "root dir of the local double (Client=\"local\")"),
+      ConfigKey("LocalDir", "root dir of the local double (Client=\"local\")",
+        default = Some("")),
       ConfigKey("MaxWritesPerSec", "per-partition write rate limit (0 = unlimited)",
         default = Some(0L)),
       ConfigKey("FlushInterval", "accepted for parity (batch flush is size-driven)"),
@@ -127,14 +128,14 @@ object DynamoOutput {
         require(t == "n" || t == "s", s"DynamoDB: bad column spec '$spec'")
         (t, name)
       }
-      val regions = cfg.strList("Regions", Seq("us-west-2"))
-      val clientKind = cfg.str("Client", "local").toLowerCase
+      val regions = cfg.strList("Regions")
+      val clientKind = cfg.str("Client").toLowerCase
       require(clientKind == "local" || clientKind == "aws",
         s"DynamoDB: Client must be \"local\" or \"aws\", got '$clientKind'")
-      val localDir = cfg.str("LocalDir", "")
+      val localDir = cfg.str("LocalDir")
       require(clientKind != "local" || localDir.nonEmpty,
         "DynamoDB: LocalDir is required for Client=\"local\"")
-      val maxRate = cfg.int("MaxWritesPerSec", 0L)
+      val maxRate = cfg.int("MaxWritesPerSec")
       val fieldNames = columns.map(_._2)
       val data = df.select(fieldNames.map(org.apache.spark.sql.functions.col): _*)
       val counter = ctx.spark.sparkContext.longAccumulator("dynamodb_written")

@@ -1,6 +1,5 @@
 package graft.topology
 
-
 import java.net.{ServerSocket, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
@@ -9,9 +8,6 @@ import java.util.zip.GZIPInputStream
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.DataFrame
-
-import graft.sources.ZstdCodec
 
 /** The reference's four network inputs (registry input/all.go:9-15: KCL,
   * Kinesis, SQS, TCP), re-expressed per SURVEY §7.3's zero-egress stance:
@@ -63,23 +59,6 @@ object NetworkInputs {
     p
   }
 
-  private def readCsv(ctx: TopologyCtx, paths: Seq[String]): DataFrame = {
-    ZstdCodec.register(ctx.spark)
-    ctx.spark.read
-      .schema(org.apache.spark.sql.types.StructType(ctx.fields.map(
-        org.apache.spark.sql.types.StructField(_,
-          org.apache.spark.sql.types.StringType, nullable = true))))
-      .option("sep", ctx.separator)
-      .option("quote", "\u0000")
-      .option("mode", "PERMISSIVE")
-      .csv(paths: _*)
-  }
-
-  private def readRaw(ctx: TopologyCtx, paths: Seq[String]): DataFrame = {
-    ZstdCodec.register(ctx.spark)
-    ctx.spark.read.text(paths: _*)
-  }
-
   // ===================== TCP =====================
 
   /** TCP — listens on Listener; every connection streams gzip'd CSV
@@ -91,10 +70,9 @@ object NetworkInputs {
     */
   val tcpInput: InputDesc = {
     def collect(cfg: ComponentConfig): Seq[String] = {
-      val listener = cfg.str("Listener", ":6000")
+      val listener = cfg.str("Listener")
       val port = listener.substring(listener.lastIndexOf(':') + 1).toInt
-      val acceptTimeoutMs = ComponentConfig.parseDuration(
-        cfg.str("AcceptTimeout", "5s")) * 1000
+      val acceptTimeoutMs = ComponentConfig.parseDuration(cfg.str("AcceptTimeout"))
       val server = new ServerSocket(port)
       try {
         server.setSoTimeout(acceptTimeoutMs.toInt.max(1))
@@ -126,8 +104,8 @@ object NetworkInputs {
           "stop accepting when this long passes without a new connection " +
             "(local batch bound; the reference daemon never exits)",
           default = Some("5s"))),
-      (ctx, cfg) => readCsv(ctx, collect(cfg)),
-      buildRaw = Some((ctx, cfg) => readRaw(ctx, collect(cfg))),
+      (ctx, cfg) => LogLineCsv.read(ctx).csv(collect(cfg): _*),
+      buildRaw = Some((ctx, cfg) => LogLineCsv.lines(ctx, collect(cfg))),
     )
   }
 
@@ -152,7 +130,7 @@ object NetworkInputs {
       import scala.jdk.CollectionConverters._
       val stream = cfg.str("Stream")
       val kin = AwsReflect.client(
-        "software.amazon.awssdk.services.kinesis.KinesisClient", cfg.str("AwsRegion", "us-west-2"))
+        "software.amazon.awssdk.services.kinesis.KinesisClient", cfg.str("AwsRegion"))
       try {
         val shards = AwsReflect.call(
           AwsReflect.call(kin, "listShards", AwsReflect.build(
@@ -196,7 +174,7 @@ object NetworkInputs {
       } finally AwsReflect.close(kin)
     }
     def shardFiles(cfg: ComponentConfig): Seq[String] = {
-      val clientKind = cfg.str("Client", "local").toLowerCase
+      val clientKind = cfg.str("Client").toLowerCase
       require(clientKind == "local" || clientKind == "aws",
         s"Kinesis: Client must be \"local\" or \"aws\", got '$clientKind'")
       if (clientKind == "aws") awsShardFiles(cfg)
@@ -219,8 +197,8 @@ object NetworkInputs {
         ConfigKey("Client", "\"local\" (file:// shard-dir double) or \"aws\" (real SDK)",
           default = Some("local")),
         ConfigKey("IdleTime", "Time between polls of each shard", default = Some("100ms"))),
-      (ctx, cfg) => readCsv(ctx, shardFiles(cfg)),
-      buildRaw = Some((ctx, cfg) => readRaw(ctx, shardFiles(cfg))),
+      (ctx, cfg) => LogLineCsv.read(ctx).csv(shardFiles(cfg): _*),
+      buildRaw = Some((ctx, cfg) => LogLineCsv.lines(ctx, shardFiles(cfg))),
     )
   }
 
@@ -255,8 +233,8 @@ object NetworkInputs {
       import scala.jdk.CollectionConverters._
       val stream = cfg.str("Stream")
       val app = cfg.str("AppName")
-      val region = cfg.str("AwsRegion", "us-west-2")
-      val latest = cfg.str("InitialPosition", "LATEST").equalsIgnoreCase("LATEST")
+      val region = cfg.str("AwsRegion")
+      val latest = cfg.str("InitialPosition").equalsIgnoreCase("LATEST")
       val kin = AwsReflect.client(
         "software.amazon.awssdk.services.kinesis.KinesisClient", region)
       val ddb = AwsReflect.client(
@@ -353,17 +331,17 @@ object NetworkInputs {
       } finally { AwsReflect.close(kin); AwsReflect.close(ddb) }
     }
     def collect(ctx: TopologyCtx, cfg: ComponentConfig): Seq[String] = {
-      val clientKind = cfg.str("Client", "local").toLowerCase
+      val clientKind = cfg.str("Client").toLowerCase
       require(clientKind == "local" || clientKind == "aws",
         s"KCL: Client must be \"local\" or \"aws\", got '$clientKind'")
       if (clientKind == "aws") return awsCollect(ctx, cfg)
       val dir = localDir(cfg.str("Stream"), "KCL.Stream")
       val app = cfg.str("AppName")
-      val ckDir = Paths.get(cfg.str("CheckpointDir",
-        sys.props("java.io.tmpdir") + "/graft-kcl"))
+      val ckDir = Paths.get(cfg.strOpt("CheckpointDir")
+        .getOrElse(sys.props("java.io.tmpdir") + "/graft-kcl"))
       Files.createDirectories(ckDir)
       val ckFile = ckDir.resolve(s"$app.json")
-      val latest = cfg.str("InitialPosition", "LATEST").equalsIgnoreCase("LATEST")
+      val latest = cfg.str("InitialPosition").equalsIgnoreCase("LATEST")
       val offsets: Map[String, Long] =
         if (Files.exists(ckFile)) {
           val node = mapper.readTree(Files.readString(ckFile))
@@ -426,10 +404,8 @@ object NetworkInputs {
         val spools = collect(ctx, cfg)
         if (spools.isEmpty) ctx.spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(ctx.fields.map(
-            org.apache.spark.sql.types.StructField(_,
-              org.apache.spark.sql.types.StringType, nullable = true))))
-        else readCsv(ctx, spools)
+          LogLineCsv.schema(ctx.fields))
+        else LogLineCsv.read(ctx).csv(spools: _*)
       },
     )
   }
@@ -466,18 +442,18 @@ object NetworkInputs {
     // after the run commits (parse-then-delete, input/sqs.go:216-222).
     def awsMessages(cfg: ComponentConfig): Seq[(String, String, String)] = {
       import scala.jdk.CollectionConverters._
-      val region = cfg.str("AwsRegion", "us-west-2")
+      val region = cfg.str("AwsRegion")
       val sqs = AwsReflect.client(
         "software.amazon.awssdk.services.sqs.SqsClient", region)
       try {
-        val named = cfg.strList("QueueNames", Nil).map { n =>
+        val named = cfg.strList("QueueNames").map { n =>
           AwsReflect.call(
             AwsReflect.call(sqs, "getQueueUrl", AwsReflect.build(
               "software.amazon.awssdk.services.sqs.model.GetQueueUrlRequest",
               "queueName" -> n)),
             "queueUrl").asInstanceOf[String]
         }
-        val byPrefix = cfg.strList("QueuePrefixes", Nil).flatMap { pfx =>
+        val byPrefix = cfg.strList("QueuePrefixes").flatMap { pfx =>
           AwsReflect.call(
             AwsReflect.call(sqs, "listQueues", AwsReflect.build(
               "software.amazon.awssdk.services.sqs.model.ListQueuesRequest",
@@ -508,18 +484,18 @@ object NetworkInputs {
       } finally AwsReflect.close(sqs)
     }
     def dataFiles(ctx: TopologyCtx, cfg: ComponentConfig): Seq[String] = {
-      val format = cfg.str("MessageFormat", "sns").toLowerCase
+      val format = cfg.str("MessageFormat").toLowerCase
       val expr = format match {
         case "plain"             => null
         case "sns" | ""          => "Message"
         case "s3::objectcreated" => null // assembled below
         case "json" =>
-          val e = cfg.str("MessageExpression", "")
+          val e = cfg.str("MessageExpression")
           require(e.nonEmpty, "SQS: MessageExpression is required with json MessageFormat")
           e
         case other => throw new IllegalArgumentException(s"SQS: unknown MessageFormat '$other'")
       }
-      val clientKind = cfg.str("Client", "local").toLowerCase
+      val clientKind = cfg.str("Client").toLowerCase
       require(clientKind == "local" || clientKind == "aws",
         s"SQS: Client must be \"local\" or \"aws\", got '$clientKind'")
       // (body, Some(queueUrl -> receiptHandle)) for real SQS; the local
@@ -529,8 +505,8 @@ object NetworkInputs {
           awsMessages(cfg).map { case (b, url, rh) => (b, Some(url -> rh)) }
         else {
           val queues: Seq[Path] = {
-            val named = cfg.strList("QueueNames", Nil).map(localDir(_, "SQS.QueueNames"))
-            val byPrefix = cfg.strList("QueuePrefixes", Nil).flatMap { pfx =>
+            val named = cfg.strList("QueueNames").map(localDir(_, "SQS.QueueNames"))
+            val byPrefix = cfg.strList("QueuePrefixes").flatMap { pfx =>
               val root = Paths.get(pfx.stripPrefix("file://"))
               val (parent, stem) = (root.getParent, root.getFileName.toString)
               require(parent != null && Files.isDirectory(parent),
@@ -548,7 +524,7 @@ object NetworkInputs {
           } yield (Files.readString(msg, StandardCharsets.UTF_8),
             Option.empty[(String, String)])
         }
-      val bucket = cfg.str("Bucket", "")
+      val bucket = cfg.str("Bucket")
       val pathFilter = cfg.strOpt("FilePathFilter").map(_.r)
       def pathsOf(body: String): Seq[String] = format match {
         case "plain" => Seq(body.trim)
@@ -581,7 +557,7 @@ object NetworkInputs {
       // failed build leaves the queue intact (at-least-once)
       val dels = deletable.result()
       if (dels.nonEmpty) {
-        val region = cfg.str("AwsRegion", "us-west-2")
+        val region = cfg.str("AwsRegion")
         ctx.onCommit { () =>
           val sqs = AwsReflect.client(
             "software.amazon.awssdk.services.sqs.SqsClient", region)
@@ -604,15 +580,18 @@ object NetworkInputs {
         ConfigKey("Client", "\"local\" (file:// queue-dir double) or \"aws\" (real SQS " +
           "via the AWS SDK v2, loaded reflectively)", default = Some("local")),
         ConfigKey("Bucket", "S3 Bucket to use if paths do not have one", default = Some("")),
-        ConfigKey("QueuePrefixes", "Prefixes of the names of the SQS queues to monitor"),
-        ConfigKey("QueueNames", "Names of the SQS queues to monitor"),
+        ConfigKey("QueuePrefixes", "Prefixes of the names of the SQS queues to monitor",
+          default = Some(Seq.empty[String])),
+        ConfigKey("QueueNames", "Names of the SQS queues to monitor",
+          default = Some(Seq.empty[String])),
         ConfigKey("MessageFormat", "SQS message format. See help string for supported formats",
           default = Some("sns")),
         ConfigKey("MessageExpression",
-          "The expression to extract an S3 path from arbitrary message formats"),
+          "The expression to extract an S3 path from arbitrary message formats",
+          default = Some("")),
         ConfigKey("FilePathFilter", "If provided, will only use S3 files with the given path.")),
-      (ctx, cfg) => readCsv(ctx, dataFiles(ctx, cfg)),
-      buildRaw = Some((ctx, cfg) => readRaw(ctx, dataFiles(ctx, cfg))),
+      (ctx, cfg) => LogLineCsv.read(ctx).csv(dataFiles(ctx, cfg): _*),
+      buildRaw = Some((ctx, cfg) => LogLineCsv.lines(ctx, dataFiles(ctx, cfg))),
     )
   }
 }

@@ -40,11 +40,10 @@ object Reshuffle {
     * the job; a reshuffle topology's output is usually Nop).
     */
   def run(ctx: TopologyCtx, cfg: ComponentConfig): Unit = {
-    cfg.validate(keys)
     graft.sources.PackedCorpus.reshuffle(ctx.spark,
       cfg.str("InDir"), cfg.str("OutDir"),
       numShards = cfg.int("Shards").toInt,
-      seed = cfg.str("Seed", "epoch"),
-      dtype = cfg.str("Dtype", ""))
+      seed = cfg.str("Seed"),
+      dtype = cfg.str("Dtype"))
   }
 }

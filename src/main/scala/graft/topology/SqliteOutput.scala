@@ -30,8 +30,10 @@ object SqliteOutput {
       "4-digit partition id, {{.Field}} to the first output field value is NOT " +
       "supported (sharding by field uses FileWriter)", required = true),
     ConfigKey("TableName", "Table to write the records to", required = true),
-    ConfigKey("PreRun", "SQL statements run at startup, before table creation"),
-    ConfigKey("PostRun", "SQL statements run at exit (e.g. index creation)"),
+    ConfigKey("PreRun", "SQL statements run at startup, before table creation",
+      default = Some(Seq.empty[String])),
+    ConfigKey("PostRun", "SQL statements run at exit (e.g. index creation)",
+      default = Some(Seq.empty[String])),
     ConfigKey("Clear", "DELETE from TableName before starting (append otherwise)",
       default = Some(false)),
     ConfigKey("Vacuum", "run VACUUM at the end (sqlite URLs only)", default = Some(false)),
@@ -77,14 +79,14 @@ object SqliteOutput {
   private def run(ctx: TopologyCtx, cfg: ComponentConfig, df: DataFrame,
       rawBlob: Option[String]): OutputResult = {
     val pathString = cfg.str("PathString")
-    val urlTemplate = cfg.str("JdbcUrlTemplate", "jdbc:sqlite:{{.Path}}")
+    val urlTemplate = cfg.str("JdbcUrlTemplate")
     val table = sanitize(cfg.str("TableName"), "table")
-    val preRun = cfg.strList("PreRun", Nil)
-    val postRun = cfg.strList("PostRun", Nil)
+    val preRun = cfg.strList("PreRun")
+    val postRun = cfg.strList("PostRun")
     val clear = cfg.bool("Clear")
     val vacuum = cfg.bool("Vacuum")
     val wal = cfg.bool("Wal")
-    val pageSize = cfg.int("PageSize", 0L)
+    val pageSize = cfg.int("PageSize")
     val fields = ctx.outputFields
     require(fields.nonEmpty, "SQLite: [output] fields required")
     fields.foreach(sanitize(_, "column"))

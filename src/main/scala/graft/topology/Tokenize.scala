@@ -47,7 +47,6 @@ object Tokenize {
     * the vocabulary sidecar to VocabPath.
     */
   def train(ctx: TopologyCtx, cfg: ComponentConfig, frame: DataFrame): Unit = {
-    cfg.validate(trainKeys)
     val src = cfg.str("SrcField")
     require(ctx.fields.contains(src), s"[tokenizer]: unknown SrcField '$src'")
     val spark = ctx.spark
@@ -55,17 +54,17 @@ object Tokenize {
     val rows: Seq[(Long, String, Long)] = cfg.str("Method").toLowerCase match {
       case "unigram" =>
         graft.llm.UnigramTrain.train(frame, src,
-            rounds = cfg.int("Rounds", 2L).toInt,
-            maxWordLen = cfg.int("MaxWordLen", 10L).toInt)
+            rounds = cfg.int("Rounds").toInt,
+            maxWordLen = cfg.int("MaxWordLen").toInt)
           .collect().toSeq.zipWithIndex
           .map { case (r, i) => (i.toLong, r.getString(0), r.getLong(2)) }
       case "bpe" =>
         val (_, hist) = graft.llm.Bpe.train(frame, col(src),
-          steps = cfg.int("Steps", 8L).toInt)
+          steps = cfg.int("Steps").toInt)
         hist.map { case (step, pair, cnt) => ((step - 1).toLong, pair, cnt) }
       case "wordpiece" =>
         val (_, hist) = graft.llm.Bpe.trainWordpiece(frame, col(src),
-          steps = cfg.int("Steps", 8L).toInt)
+          steps = cfg.int("Steps").toInt)
         hist.map { case (step, pair, cnt) => ((step - 1).toLong, pair, cnt) }
       case other => throw new IllegalArgumentException(
         s"[tokenizer] Method must be unigram, bpe or wordpiece: '$other'")
@@ -178,31 +177,28 @@ object Tokenize {
     "Tokenizes a text field into comma-joined token ids under a vocabulary " +
       "sidecar persisted by a [tokenizer] train job.",
     tokenizeKeys,
-    (ctx, cfg) => {
-      cfg.validate(tokenizeKeys)
-      df => {
-        val src = col(cfg.str("SrcField"))
-        val ids: Column =
-          if (cfg.str("VocabPath").toLowerCase.endsWith(".json"))
-            hfIds(ctx, cfg, src)
-          else sidecarIds(ctx, cfg, src, resolveUnkId(cfg, None))
-        cfg.strOpt("CountField") match {
-          case Some(cf) =>
-            // one evaluation site for the (expensive) tokenizer: bind the
-            // id array once, explode the 1-element struct, extract both
-            val packed = TextFunctions.bindOnce(ids) { v =>
-              struct(
-                array_join(transform(v, _.cast("string")), ",").as("ids"),
-                size(v).cast("string").as("n"))
-            }
-            df.withColumn("__tk", explode(array(packed)))
-              .withColumn(cfg.str("DstField"), col("__tk.ids"))
-              .withColumn(cf, col("__tk.n"))
-              .drop("__tk")
-          case None =>
-            df.withColumn(cfg.str("DstField"),
-              array_join(transform(ids, _.cast("string")), ","))
-        }
+    (ctx, cfg) => df => {
+      val src = col(cfg.str("SrcField"))
+      val ids: Column =
+        if (cfg.str("VocabPath").toLowerCase.endsWith(".json"))
+          hfIds(ctx, cfg, src)
+        else sidecarIds(ctx, cfg, src, resolveUnkId(cfg, None))
+      cfg.strOpt("CountField") match {
+        case Some(cf) =>
+          // one evaluation site for the (expensive) tokenizer: bind the
+          // id array once, explode the 1-element struct, extract both
+          val packed = TextFunctions.bindOnce(ids) { v =>
+            struct(
+              array_join(transform(v, _.cast("string")), ",").as("ids"),
+              size(v).cast("string").as("n"))
+          }
+          df.withColumn("__tk", explode(array(packed)))
+            .withColumn(cfg.str("DstField"), col("__tk.ids"))
+            .withColumn(cf, col("__tk.n"))
+            .drop("__tk")
+        case None =>
+          df.withColumn(cfg.str("DstField"),
+            array_join(transform(ids, _.cast("string")), ","))
       }
     })
 
@@ -303,12 +299,12 @@ object Tokenize {
   private def sidecarIds(ctx: TopologyCtx, cfg: ComponentConfig,
       src: Column, unk: Int): Column = {
     val vocab = loadVocab(ctx, cfg.str("VocabPath"))
-    cfg.str("Method", "unigram").toLowerCase match {
+    cfg.str("Method").toLowerCase match {
           case "unigram" =>
             val trained = vocab.map { case (p, c) => (p, c.toInt) }
             val pcs = GraftShims.toColumn(graft.functions.UnigramViterbiPieces(
               GraftShims.toExpression(TextFunctions.tokens(src)), trained,
-              cfg.int("MaxWordLen", 10L).toInt))
+              cfg.int("MaxWordLen").toInt))
             GraftShims.toColumn(graft.functions.VocabIds(
               GraftShims.toExpression(pcs), trained.map(_._1), unk))
           case "bpe" =>
@@ -334,7 +330,7 @@ object Tokenize {
             val pieceList = surfaces.flatMap(s => Seq(s, "##" + s))
             val words = graft.llm.Wordpiece.encodeWordsCol(
               TextFunctions.tokens(src), pieceList,
-              maxWordLen = cfg.int("MaxWordLen", 10L).toInt)
+              maxWordLen = cfg.int("MaxWordLen").toInt)
             val pieces = flatten(transform(words, w => split(w, " ")))
             val pos = GraftShims.toColumn(graft.functions.VocabIds(
               GraftShims.toExpression(pieces), pieceList, -1))
@@ -375,34 +371,31 @@ object Tokenize {
       "no-split); emits shard, seq_id, input_ids, segment_ids, loss_mask, " +
       "n_real, doc_start.",
     packKeys,
-    (ctx, cfg) => {
-      cfg.validate(packKeys)
-      df => {
-        val toks = transform(
-          filter(split(col(cfg.str("IdsField")), ","), x => x =!= ""),
-          _.cast("int"))
-        val ord = col(cfg.str("OrderField")).cast("long")
-        val shard = pmod(pmod(ord, lit(2147483647L)) * lit(2654435761L),
-          lit(cfg.int("Shards", 4L)))
-        def idOpt(key: String): Option[Int] =
-          if (cfg.has(key)) Some(cfg.int(key).toInt) else None
-        graft.llm.Pack.packTokensGreedy(df, ord, toks,
-            transform(toks, _ => lit(true)),
-            cfg.int("Budget", 1024L).toInt, shard,
-            cfg.int("PadId", -2L).toInt,
-            sepId = idOpt("SepId"), eosId = idOpt("EosId"),
-            bosId = idOpt("BosId"))
-          .select(col("shard"), col("seq_id"),
-            array_join(transform(col("input_ids"), _.cast("string")), ",")
-              .as("input_ids"),
-            array_join(transform(col("segment_ids"), _.cast("string")), ",")
-              .as("segment_ids"),
-            array_join(transform(col("loss_mask"),
-              m => m.cast("int").cast("string")), ",").as("loss_mask"),
-            col("n_real"),
-            // no-split packing: every sequence starts a document — the
-            // doc-index bit PackedShards forwards to the .idx sidecar
-            lit("1").as("doc_start"))
-      }
+    (_, cfg) => df => {
+      val toks = transform(
+        filter(split(col(cfg.str("IdsField")), ","), x => x =!= ""),
+        _.cast("int"))
+      val ord = col(cfg.str("OrderField")).cast("long")
+      val shard = pmod(pmod(ord, lit(2147483647L)) * lit(2654435761L),
+        lit(cfg.int("Shards")))
+      def idOpt(key: String): Option[Int] =
+        if (cfg.has(key)) Some(cfg.int(key).toInt) else None
+      graft.llm.Pack.packTokensGreedy(df, ord, toks,
+          transform(toks, _ => lit(true)),
+          cfg.int("Budget").toInt, shard,
+          cfg.int("PadId").toInt,
+          sepId = idOpt("SepId"), eosId = idOpt("EosId"),
+          bosId = idOpt("BosId"))
+        .select(col("shard"), col("seq_id"),
+          array_join(transform(col("input_ids"), _.cast("string")), ",")
+            .as("input_ids"),
+          array_join(transform(col("segment_ids"), _.cast("string")), ",")
+            .as("segment_ids"),
+          array_join(transform(col("loss_mask"),
+            m => m.cast("int").cast("string")), ",").as("loss_mask"),
+          col("n_real"),
+          // no-split packing: every sequence starts a document — the
+          // doc-index bit PackedShards forwards to the .idx sidecar
+          lit("1").as("doc_start"))
     })
 }

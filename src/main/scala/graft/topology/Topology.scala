@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
   *
   * Compilation mirrors NewConfigFromToml + NewTopologyFromConfig
   * (config.go:281-422, topology.go:55-225): resolve component names in the
-  * registry (case-insensitively), validate config keys, bind the field-name
-  * schema, compose the filter chain as `DataFrame => DataFrame`, project the
-  * declared output fields, and hand the result to the output descriptor.
+  * registry (case-insensitively), bind each section's config to its
+  * descriptor's keys, bind the field-name schema, compose the filter chain
+  * as `DataFrame => DataFrame`, project the declared output fields, and
+  * hand the result to the output descriptor.
   * Execution is Catalyst's problem — the filter chain collapses into a
   * single fused WholeStageCodegen scan stage, and sharding becomes the only
   * intentional shuffle (repartition on the shard field), exactly the plan
@@ -193,10 +194,7 @@ object Topology {
   ) {
     /** The configured MetricsClient (Nop when no [metrics] section). */
     def metricsClient(): graft.metrics.MetricsClient = cfg.metrics match {
-      case Some((name, mCfg)) =>
-        val desc = components.metricsBackend(name)
-        mCfg.validate(desc.keys)
-        desc.build(ctx, mCfg)
+      case Some((name, mCfg)) => components.metricsBackend(name).build(ctx, mCfg)
       case None => graft.metrics.NopMetrics
     }
 
@@ -207,14 +205,9 @@ object Topology {
     private def runInner(): (OutputResult, Map[String, Any]) = {
       val mc = metricsClient()
       val t0 = System.nanoTime()
-      val outDesc = components.output(cfg.outputName)
-      cfg.outputConfig.validate(outDesc.keys)
-      val result = outDesc.build(ctx, cfg.outputConfig, projected)
-      for ((name, upCfg) <- cfg.upload) {
-        val upDesc = components.upload(name)
-        upCfg.validate(upDesc.keys)
-        upDesc.build(ctx, upCfg, result.paths)
-      }
+      val result = components.output(cfg.outputName).build(ctx, cfg.outputConfig, projected)
+      for ((name, upCfg) <- cfg.upload)
+        components.upload(name).build(ctx, upCfg, result.paths)
       // checkpoint-after-process: only now that output+upload succeeded may
       // inputs advance durable offsets / delete consumed queue messages
       ctx.runCommitHooks()
@@ -281,12 +274,38 @@ object Topology {
   def compile(spark: SparkSession, cfg: Config,
       components: Components = BuiltinComponents.all): Compiled = {
     require(cfg.fields.nonEmpty, "topology: [fields] names is required")
+    val bound = bind(cfg, components)
     val ctx = TopologyCtx(spark, cfg.fields, cfg.separator, cfg.outputFields)
     // a compile failure AFTER a component registered a cleanup hook (e.g.
     // NearDupDedup's persisted input cache) must release it — the caller
     // never gets a Compiled to run(), so nothing else ever would
-    try compileWith(ctx, cfg, components)
+    try compileWith(ctx, bound, components)
     catch { case t: Throwable => ctx.runCleanupHooks(); throw t }
+  }
+
+  /** Resolve every section's descriptor and bind the section's config to
+    * its keys (the reference validates every section while decoding the
+    * TOML, config.go:353-422): a misspelt key or a missing required one
+    * fails here, before any component builds or any output writes, and
+    * every build function reads through the bound config.
+    */
+  private def bind(cfg: Config, components: Components): Config = {
+    def named[D <: ComponentDesc](sec: (String, ComponentConfig), desc: String => D) =
+      (sec._1, sec._2.bind(desc(sec._1).keys))
+    cfg.copy(
+      input = named(cfg.input, components.input),
+      filters = cfg.filters.map(named(_, components.filter)),
+      outputConfig = cfg.outputConfig.bind(components.output(cfg.outputName).keys),
+      upload = cfg.upload.map(named(_, components.upload)),
+      metrics = cfg.metrics.map(named(_, components.metricsBackend)),
+      // a [[user]] desc declaring no keys leaves its block free-form
+      user = cfg.user.map { case (n, c) =>
+        val keys = components.userSection(n).keys
+        (n, if (keys.isEmpty) c else c.bind(keys))
+      },
+      tokenizer = cfg.tokenizer.map(_.bind(Tokenize.trainKeys)),
+      reshuffle = cfg.reshuffle.map(_.bind(Reshuffle.keys)),
+    )
   }
 
   private def compileWith(ctx: TopologyCtx, cfg: Config,
@@ -295,16 +314,11 @@ object Topology {
     // --- [[user]] sections (config.go:386-400): every block in the TOML
     // must have a registered UserDesc (unknown name is loud); registered
     // descs absent from the TOML stay untouched (Go zero value)
-    for ((name, uCfg) <- cfg.user) {
-      val desc = components.userSection(name)
-      if (desc.keys.nonEmpty) uCfg.validate(desc.keys)
-      desc.decode(uCfg)
-    }
+    for ((name, uCfg) <- cfg.user) components.userSection(name).decode(uCfg)
 
     // --- input ---
     val inDesc = components.input(cfg.input._1)
-    val outDescEarly = components.output(cfg.outputName)
-    cfg.input._2.validate(inDesc.keys)
+    val outDesc = components.output(cfg.outputName)
 
     // Raw fast path (the reference's zero-copy lazy parse + ToText fast
     // path, logline.go:23-31/:152-220): when the output writes raw lines
@@ -313,7 +327,7 @@ object Topology {
     // pruning then materializes ONLY the fields filters actually
     // reference — a 2-field filter over 3000-field records never parses
     // the other 2998 — and the sink writes the original line bytes.
-    val rawFast = outDescEarly.raw && inDesc.buildRaw.isDefined &&
+    val rawFast = outDesc.raw && inDesc.buildRaw.isDefined &&
       cfg.tokenizer.isEmpty &&
       cfg.filters.forall { case (n, _) => !components.filter(n).mutating }
 
@@ -402,7 +416,6 @@ object Topology {
     }
 
     // --- projection to output fields (+ raw record, topology.go:330-348) ---
-    val outDesc = components.output(cfg.outputName)
     val outFields = if (cfg.outputFields.nonEmpty) cfg.outputFields else cfg.fields
     // a declared field, or a column a record-RESHAPING filter produced
     // (PackRows replaces the record stream with packed training rows)

@@ -113,11 +113,11 @@ object WebSocketOutput {
       ConfigKey("Separator", "separator between field values", default = Some(","))),
     raw = false,
     (ctx, cfg, df) => {
-      val sep = cfg.str("Separator", ",")
-      val server = new Server(cfg.int("Port", 8080L).toInt)
+      val sep = cfg.str("Separator")
+      val server = new Server(cfg.int("Port").toInt)
       lastBoundPort = server.boundPort
       try {
-        val waitSec = cfg.int("WaitForClientSec", 0L)
+        val waitSec = cfg.int("WaitForClientSec")
         val deadline = System.nanoTime() + waitSec * 1000000000L
         while (server.clientCount == 0 && System.nanoTime() < deadline) Thread.sleep(20)
         val fields = ctx.outputFields

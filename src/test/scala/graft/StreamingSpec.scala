@@ -204,6 +204,41 @@ class StreamingSpec extends SparkSpec {
     } finally daemon.stop()
   }
 
+  test("KCL daemon reads zstd-compressed stream files") {
+    val dir = tmpDir()
+    val stream = new File(dir, "stream"); stream.mkdirs()
+    val z = new com.github.luben.zstd.ZstdOutputStreamNoFinalizer(
+      new java.io.FileOutputStream(new File(stream, "s1.csv.zst")), 3)
+    z.write("a,1\nb,2\n".getBytes("UTF-8")); z.close()
+    val toml =
+      s"""[fields]
+         |names = ["k", "v"]
+         |[input]
+         |name = "KCL"
+         |  [input.config]
+         |  StreamPath = "$stream"
+         |[output]
+         |name = "Recorder"
+         |""".stripMargin
+    // the input itself must make .zst readable: drop the codec an earlier
+    // read in this shared session may have registered (a FileWriter sink
+    // would register it again per batch, so the sink is the Recorder)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val key = "io.compression.codecs"
+    val saved = Option(hconf.get(key))
+    saved.foreach(v => hconf.set(key, v.split(",")
+      .filterNot(_ == classOf[graft.sources.ZstdCodec].getName).mkString(",")))
+    try {
+      val d = Streaming.runDaemon(spark, toml, s"$dir/ckpt", triggerMs = 100, env = Map.empty)
+      try d.processAllAvailable() finally d.stop()
+      assert(graft.topology.BuiltinComponents.Recorder.last
+        .map(r => s"${r.getString(0)},${r.getString(1)}").toSet == Set("a,1", "b,2"))
+    } finally saved match {
+      case Some(v) => hconf.set(key, v)
+      case None => hconf.unset(key)
+    }
+  }
+
   test("daemon restart resumes from checkpoint (no reprocessing)") {
     val dir = tmpDir()
     val queue = new File(dir, "queue"); queue.mkdirs()

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.topology.{ComponentConfig, Toml}
+import graft.topology.{ComponentConfig, ConfigKey, Toml}
 
 class TomlSpec extends AnyFunSuite {
 
@@ -112,6 +112,54 @@ class TomlSpec extends AnyFunSuite {
     // silently saturating to Long.MaxValue
     assertThrows[IllegalArgumentException](sz("9999 PiB"))
     assertThrows[IllegalArgumentException](sz("99999999999999999999"))
+  }
+
+  test("a bound config reads declared defaults and overrides; missing and " +
+      "undeclared keys fail loudly") {
+    val keys = Seq(
+      ConfigKey("Width", "declared as a string", default = Some("5")),
+      ConfigKey("NumPerm", "declared as a long", default = Some(64L)),
+      ConfigKey("Files", "declared as a list", default = Some(Seq("-"))),
+      ConfigKey("Path", "required", required = true),
+      ConfigKey("Opt", "optional, no default"))
+    val cfg = ComponentConfig(Map("path" -> "/x", "numperm" -> 128L), "filter T").bind(keys)
+    assert(cfg.int("Width") == 5L) // a default goes through the typed coercion
+    assert(cfg.int("NumPerm") == 128L) // explicit override, case-insensitive
+    assert(cfg.strList("Files") == Seq("-"))
+    assert(cfg.str("path") == "/x")
+    assert(!cfg.has("Width") && cfg.has("NumPerm"))
+    assert(cfg.strOpt("Opt").isEmpty)
+    assert(intercept[IllegalArgumentException](cfg.str("Opt")).getMessage ==
+      "filter T: missing required key 'Opt'")
+    val undeclared = intercept[IllegalArgumentException](cfg.int("Nope")).getMessage
+    assert(undeclared.contains("filter T") && undeclared.contains("'Nope'"))
+    // binding rejects unknown keys and missing required ones
+    assert(intercept[IllegalArgumentException](ComponentConfig(
+      Map("Path" -> "/x", "Bogus" -> 1L), "c").bind(keys)).getMessage.contains("Bogus"))
+    assert(intercept[IllegalArgumentException](ComponentConfig(Map.empty, "c")
+      .bind(keys)).getMessage.contains("missing required key 'Path'"))
+    // a rebuilt table (a daemon's per-batch output config) keeps its binding
+    val rebuilt = cfg.copy(raw = cfg.raw + ("Width" -> 7L))
+    assert(rebuilt.int("Width") == 7L)
+    assertThrows[IllegalArgumentException](rebuilt.str("Nope"))
+    assert(keys(2).defaultToml.contains("[\"-\"]"))
+  }
+
+  test("an integer key holding a fraction fails loudly; an integral float passes") {
+    val keys = Seq(ConfigKey("Shards", "s"), ConfigKey("Budget", "b"))
+    def cfg(toml: String) = ComponentConfig(Toml.parse(toml, env = Map.empty),
+      "filter PackRows").bind(keys)
+    val e = intercept[IllegalArgumentException](cfg("Shards = 0.5").int("Shards"))
+    assert(e.getMessage.contains("filter PackRows") && e.getMessage.contains("'Shards'"))
+    assertThrows[IllegalArgumentException](cfg("Budget = 1024.9").int("Budget"))
+    assert(cfg("Shards = 64.0").int("Shards") == 64L)
+  }
+
+  test("durations parse to milliseconds, keeping sub-second values") {
+    assert(ComponentConfig.parseDuration("500ms") == 500L)
+    assert(ComponentConfig.parseDuration("5s") == 5000L)
+    assert(ComponentConfig.parseDuration("1m") == 60000L)
+    assert(ComponentConfig.parseDuration("-1") == -1L)
   }
 
   test("a nested [output.fields] table fails loudly instead of writing all fields") {

@@ -369,6 +369,44 @@ class TopologySpec extends SparkSpec {
     for (d <- c.inputs ++ c.filters ++ c.outputs ++ c.uploads ++ c.metrics)
       assert(help.contains(s"### ${d.name}"), s"missing help for ${d.name}")
     assert(help.contains("| Key | Required | Default | Help |"))
+    // list defaults render as TOML arrays, pasteable into a topology file
+    assert(help.contains("| Files | no | [\"-\"] |"))
+  }
+
+  test("the non-mutating filter set (the raw fast path's precondition) is pinned") {
+    val pure = BuiltinComponents.all.filters.filterNot(_.mutating).map(_.name).toSet
+    assert(pure == Set("ClauseFilter", "CountAndTag", "Dedup", "ExternalMatch",
+      "NotNull", "RegexMatch", "StringMatch", "TimestampRange", "GopherQuality",
+      "Decontaminate", "SqlWhere", "BlockDomains", "DomainCap", "QuantileFilter",
+      "NearDupDedup"))
+  }
+
+  test("[upload.config] errors fail inside compile(), before any output file exists") {
+    val dir = tmpDir()
+    Files.writeString(new File(dir, "in.csv").toPath, "a,1\n")
+    def toml(uploadKeys: String) =
+      s"""[fields]
+         |names = ["k", "v"]
+         |[input]
+         |name = "List"
+         |  [input.config]
+         |  Files = ["$dir/in.csv"]
+         |[output]
+         |name = "FileWriter"
+         |  [output.config]
+         |  PathString = "$dir/out/data.csv"
+         |[upload]
+         |name = "S3"
+         |  [upload.config]
+         |$uploadKeys
+         |""".stripMargin
+    val misspelt = intercept[IllegalArgumentException](Topology.compileToml(spark,
+      toml(s"""  Bucket = "$dir/bucket"\n  Prefx = "p/""""), env = Map.empty))
+    assert(misspelt.getMessage.contains("upload S3") && misspelt.getMessage.contains("Prefx"))
+    val missing = intercept[IllegalArgumentException](Topology.compileToml(spark,
+      toml("""  Prefix = "p/""""), env = Map.empty))
+    assert(missing.getMessage.contains("missing required key 'Bucket'"))
+    assert(!new File(dir, "out").exists())
   }
 
   test("List input reads http:// sources (gzip preserved via extension)") {
