@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.topology.{BuiltinComponents, Topology}
+import graft.topology.{BuiltinComponents, Toml, Topology}
 
 /** CLI entry point — the reference's MainCLI (baker_cli.go:29-103):
   *
@@ -47,6 +47,23 @@ object Main {
       case extra :: _ => Left(s"unexpected argument: $extra")
     }
 
+  /** The `-help` text: every component, or the components called `name`
+    * (any kind) rendered the same way; Left for a name nothing is called.
+    */
+  private[graft] def help(name: Option[String]): Either[String, String] = name match {
+    case None | Some("*") => Right(BuiltinComponents.all.renderHelp)
+    case Some(n) =>
+      val text = BuiltinComponents.all.named(n).renderHelp
+      if (text.isEmpty) Left(s"unknown component: $n") else Right(text)
+  }
+
+  /** Compile a topology file as the CLI runs it: an input with a daemon
+    * form compiles to it, and the run is a daemon; any other input
+    * compiles to its batch frame.
+    */
+  private[graft] def compile(spark: SparkSession, tomlPath: String): Topology.Compiled =
+    Topology.compileDaemon(spark, Topology.configFromToml(Toml.parseFile(tomlPath)))
+
   def main(args: Array[String]): Unit = parse(args.toList) match {
     case Left(err) =>
       System.err.println(err)
@@ -56,20 +73,9 @@ object Main {
     case Right(f) if f.verbose && f.quiet =>
       System.err.println("logging can't both be verbose and quiet") // baker_cli.go:74
       sys.exit(1)
-    case Right(f) if f.help.isDefined => f.help.get match {
-      case None | Some("*") =>
-        println(BuiltinComponents.all.renderHelp)
-      case Some(name) =>
-        val c = BuiltinComponents.all
-        val one = (c.inputs ++ c.filters ++ c.outputs ++ c.uploads)
-          .filter(_.name.equalsIgnoreCase(name))
-        if (one.isEmpty) { System.err.println(s"unknown component: $name"); sys.exit(1) }
-        one.foreach { d =>
-          println(s"### ${d.name}\n\n${d.help}\n")
-          d.keys.foreach(k => println(
-            s"- ${k.name}${if (k.required) " (required)" else ""}: ${k.help}" +
-              k.defaultToml.map(v => s" [default: $v]").getOrElse("")))
-        }
+    case Right(f) if f.help.isDefined => help(f.help.get) match {
+      case Right(text) => println(text)
+      case Left(err) => System.err.println(err); sys.exit(1)
     }
     case Right(f) if f.toml.isEmpty =>
       System.err.println(
@@ -87,8 +93,7 @@ object Main {
       new graft.metrics.StatsDumper().attach(spark)
       try {
         val t0 = System.nanoTime()
-        val components = graft.streaming.Streaming.componentsWithStreaming
-        val compiled = Topology.compileFile(spark, tomlPath, components)
+        val compiled = compile(spark, tomlPath)
         if (compiled.projected.isStreaming) {
           // daemon topology (reference: api.go:58-66): run until signalled
           val ckpt = sys.env.getOrElse("GRAFT_CHECKPOINT_DIR",
@@ -149,17 +154,20 @@ object Diagnostics {
 
     // /debug/jfr?seconds=N — record N seconds of JFR and return the file
     server.createContext("/debug/jfr", ex => {
-      val secs = Option(ex.getRequestURI.getQuery).flatMap(q =>
+      val param = Option(ex.getRequestURI.getQuery).flatMap(q =>
         q.split("&").collectFirst { case s if s.startsWith("seconds=") =>
-          s.stripPrefix("seconds=").toInt
-        }).getOrElse(10).min(300).max(1)
-      try {
+          s.stripPrefix("seconds=")
+        })
+      val secs = param.fold(Option(10))(_.toIntOption).map(_.min(300).max(1))
+      if (secs.isEmpty)
+        respond(ex, 400, s"seconds must be an integer, got '${param.get}'".getBytes("UTF-8"))
+      else try {
         val rec = new jdk.jfr.Recording()
         rec.enable("jdk.ExecutionSample")
           .withPeriod(java.time.Duration.ofMillis(10))
         rec.enable("jdk.GarbageCollection")
         rec.start()
-        Thread.sleep(secs * 1000L)
+        Thread.sleep(secs.get * 1000L)
         rec.stop()
         val tmp = java.nio.file.Files.createTempFile("graft-jfr", ".jfr")
         rec.dump(tmp)

@@ -1,230 +1,21 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.topology._
 
 /** Daemon-mode topologies (reference: api.go:58-66 — an input whose Run
-  * never returns makes the whole topology a daemon). Spark mapping:
-  * Structured Streaming sources, the SAME filter-chain compilation (the
-  * operators are plan transforms, batch/stream agnostic), and
-  * `foreachBatch` reusing the batch output descriptors — so each
-  * micro-batch behaves like one reference "rotation": files written, then
-  * uploaded (topology.go:186-202), with the trigger interval playing
-  * RotateInterval's role.
-  *
-  * Zero-egress doubles (SURVEY §7.3): the queue/stream services are bound
-  * to their OSS-reproducible semantics — SQS S3-notifications ≙ file-watch
-  * source (new files appear, each processed exactly once per checkpoint,
-  * at-least-once overall), Kinesis/KCL ≙ the same with Spark checkpoints
-  * standing in for DynamoDB lease checkpoints (input/kcl.go:278-302), TCP ≙
-  * the socket source.
+  * never returns makes the whole topology a daemon). Spark mapping: the
+  * input's daemon form ([[graft.topology.InputDesc.buildStream]]: TCP,
+  * Kinesis, KCL and WebDataset have one) is a Structured Streaming
+  * source; the filter chain compiles the SAME way (the operators are plan
+  * transforms, batch/stream agnostic); and `foreachBatch` reuses the batch
+  * output descriptors — so each micro-batch behaves like one reference
+  * "rotation": files written, then uploaded (topology.go:186-202), with
+  * the trigger interval playing RotateInterval's role.
   */
 object Streaming {
-
-  /** SQS — file-notification input: watches a path for new CSV files.
-    * reference: input/sqs.go:25-89 (S3 paths arriving via SQS messages).
-    */
-  val sqsInput: InputDesc = InputDesc(
-    "SQS",
-    "Daemon input: watches a directory for newly arriving CSV files " +
-      "(file-notification semantics; SQS+S3-events double).",
-    Seq(
-      ConfigKey("QueuePath", "directory watched for new files", required = true),
-      ConfigKey("MessageFormat", "accepted for parity (plain/sns/s3::ObjectCreated)",
-        default = Some("plain")),
-      ConfigKey("MaxFilesPerTrigger", "files per micro-batch", default = Some(16L)),
-      ConfigKey("FilePattern", "glob for files in QueuePath", default = Some("*"))),
-    (ctx, cfg) => LogLineCsv.readStream(ctx)
-      .option("maxFilesPerTrigger", cfg.int("MaxFilesPerTrigger"))
-      .option("pathGlobFilter", cfg.str("FilePattern"))
-      .csv(cfg.str("QueuePath")),
-  )
-
-  /** KCL/Kinesis — stream doubles: same file-watch source; Spark
-    * checkpointing supplies the lease/checkpoint semantics
-    * (reference: input/kcl.go:26-49, input/kinesis.go:20-44).
-    */
-  val kclInput: InputDesc = InputDesc(
-    "KCL",
-    "Daemon input: Kinesis-via-KCL semantics (checkpointed resumable " +
-      "consumption); bound to a file-watch double in this build.",
-    Seq(
-      ConfigKey("StreamPath", "directory standing in for the Kinesis stream", required = true),
-      ConfigKey("AppName", "checkpoint namespace", default = Some("graft")),
-      ConfigKey("InitialPosition", "LATEST or TRIM_HORIZON (parity; file source reads all)",
-        default = Some("LATEST")),
-      ConfigKey("MaxShardsPerTrigger", "files per micro-batch", default = Some(16L))),
-    (ctx, cfg) => LogLineCsv.readStream(ctx)
-      .option("maxFilesPerTrigger", cfg.int("MaxShardsPerTrigger"))
-      .csv(cfg.str("StreamPath")),
-  )
-
-  val kinesisInput: InputDesc = kclInput.copy(
-    name = "Kinesis",
-    help = "Daemon input: raw Kinesis semantics; file-watch double in this build.")
-
-  /** Gunzipping relay for the daemon TCP input: BINDS `bindHost:port`
-    * like the reference listener (input/tcp.go:20-47), gunzips every
-    * accepted producer connection line by line (tcp.go:147
-    * `gzip.NewReader(conn)`), and serves the decompressed lines to
-    * whichever connection Spark's socket source opens on the returned
-    * ephemeral loopback port. Lines arriving while no Spark connection is
-    * up buffer in the queue; a line whose write fails (source reconnect)
-    * is re-queued, preserving at-least-once within the process. All
-    * threads are daemons — the relay lives for the JVM, matching the
-    * "daemon input" contract (api.go:58-66: the input never returns).
-    */
-  private[graft] def startGunzipRelay(bindHost: String, port: Int): Int = {
-    import java.io.PrintWriter
-    import java.net.{InetAddress, InetSocketAddress, ServerSocket}
-    import java.util.zip.GZIPInputStream
-    val ingress = new ServerSocket()
-    ingress.bind(new InetSocketAddress(bindHost, port))
-    val egress = new ServerSocket(0, 1, InetAddress.getByName("127.0.0.1"))
-    val queue = new java.util.concurrent.LinkedBlockingQueue[String]()
-    def spawn(name: String)(body: => Unit): Unit = {
-      val t = new Thread(() => try body catch { case _: Exception => }, name)
-      t.setDaemon(true); t.start()
-    }
-    spawn(s"graft-tcp-ingress:$port") {
-      while (true) {
-        val conn = ingress.accept()
-        spawn(s"graft-tcp-conn:${conn.getPort}") {
-          // byte-level line split, NOT BufferedReader/InputStreamReader:
-          // GZIPInputStream.available() is always 1 until EOF, so
-          // StreamDecoder's "more input ready" probe re-reads after a
-          // successful decode and BLOCKS mid-stream on a live connection —
-          // sync-flushed lines would never surface until the producer
-          // closes. Plain read() returns per inflated chunk.
-          val in = new GZIPInputStream(conn.getInputStream)
-          try {
-            val buf = new Array[Byte](8192)
-            val line = new java.io.ByteArrayOutputStream()
-            def put(): Unit = {
-              val s = line.toString("UTF-8")
-              line.reset()
-              queue.put(if (s.endsWith("\r")) s.dropRight(1) else s)
-            }
-            var n = in.read(buf)
-            while (n >= 0) {
-              var i = 0
-              while (i < n) {
-                if (buf(i) == '\n') put() else line.write(buf(i).toInt)
-                i += 1
-              }
-              n = in.read(buf)
-            }
-            if (line.size > 0) put() // unterminated trailing line
-          } finally { in.close(); conn.close() }
-        }
-      }
-    }
-    spawn(s"graft-tcp-egress:${egress.getLocalPort}") {
-      while (true) {
-        val sock = egress.accept()
-        val w = new PrintWriter(sock.getOutputStream, true)
-        var ok = true
-        while (ok) {
-          val l = queue.take()
-          w.println(l)
-          if (w.checkError()) { queue.put(l); ok = false; sock.close() }
-        }
-      }
-    }
-    egress.getLocalPort
-  }
-
-  /** TCP — socket listener input (reference: input/tcp.go:20-47). With
-    * `Gzip = true` (the default — the reference ALWAYS gunzips, tcp.go:147)
-    * the input binds Host:Port and producers connect and push gzip'd CSV
-    * streams, wire-compatible with a real baker TCP client; a
-    * [[startGunzipRelay]] feeds the decompressed lines to the socket
-    * source. `Gzip = false` keeps the plain-text client mode (the source
-    * CONNECTS to Host:Port) for loopback tests and non-gzip feeds.
-    */
-  val tcpInput: InputDesc = InputDesc(
-    "TCP",
-    "Daemon input: TCP listener; each connection streams gzip'd CSV " +
-      "records (Gzip=false: plain-text connect-out mode).",
-    Seq(
-      ConfigKey("Host", "bind host (gzip mode) / server host (plain mode)",
-        default = Some("localhost")),
-      ConfigKey("Port", "listen port (gzip mode) / server port (plain mode)",
-        default = Some(6000L)),
-      ConfigKey("Gzip", "per-connection gzip framing, reference parity",
-        default = Some(true))),
-    (ctx, cfg) => {
-      val (host, port) =
-        if (cfg.bool("Gzip"))
-          ("127.0.0.1",
-            startGunzipRelay(cfg.str("Host"), cfg.int("Port").toInt))
-        else (cfg.str("Host"), cfg.int("Port").toInt)
-      val lines = ctx.spark.readStream
-        .format("socket")
-        .option("host", host)
-        .option("port", port)
-        .load()
-      val parts = split(col("value"), java.util.regex.Pattern.quote(ctx.separator), -1)
-      lines.select(ctx.fields.zipWithIndex.map { case (f, i) =>
-        when(try_element_at(parts, lit(i + 1)) === "", null)
-          .otherwise(try_element_at(parts, lit(i + 1))).as(f)
-      }: _*)
-    },
-  )
-
-  /** WebDataset — the daemon double of the batch WebDataset input: watches
-    * a directory for newly arriving tar shards ([[graft.sources.TarSource]]
-    * micro-batch source; grouping and ext-selection push into the scan).
-    * Fields named in `BinaryFields` carry their member bytes BASE64-encoded
-    * — the topology record model is strings, and a UTF-8 cast would mangle
-    * media payloads; perceptual consumers (PerceptualDedupStore) decode
-    * with unbase64.
-    */
-  val webDatasetStreamInput: InputDesc = InputDesc(
-    "WebDataset",
-    "Daemon input: watches a directory for newly arriving WebDataset tar " +
-      "shards; declared [fields] are member extensions (BinaryFields " +
-      "base64-encoded), plus the meta-fields 'key' and 'shard'.",
-    Seq(
-      ConfigKey("Path", "tar shard directory or glob", required = true),
-      ConfigKey("BinaryFields", "fields whose member bytes are base64-encoded",
-        default = Some(Seq.empty[String])),
-      ConfigKey("MaxFilesPerTrigger", "shards per micro-batch", default = Some(16L))),
-    (ctx, cfg) => {
-      val meta = Set("key", "shard")
-      val extFields = ctx.fields.filterNot(meta)
-      val binary = cfg.strList("BinaryFields").toSet
-      val unknownBin = binary -- extFields.toSet
-      require(unknownBin.isEmpty,
-        s"WebDataset: BinaryFields not in [fields]: ${unknownBin.mkString(", ")}")
-      val reader = ctx.spark.readStream.format("tar")
-        .option("group", "true")
-        .option("maxFilesPerTrigger", cfg.int("MaxFilesPerTrigger").toString)
-      val df = (if (extFields.nonEmpty) reader.option("exts", extFields.mkString(","))
-                else reader).load(cfg.str("Path"))
-      df.select(ctx.fields.map {
-        case f @ ("key" | "shard") => col(f)
-        case f if binary(f) =>
-          coalesce(base64(element_at(col("files"), f)), lit("")).as(f)
-        case f =>
-          coalesce(element_at(col("files"), f).cast("string"), lit("")).as(f)
-      }: _*)
-    })
-
-  def streamingInputs: Seq[InputDesc] =
-    Seq(sqsInput, kclInput, kinesisInput, tcpInput, webDatasetStreamInput)
-
-  /** Builtin registry + daemon inputs. The streaming variants come FIRST:
-    * registry lookup is find-first, so in daemon mode SQS/KCL/Kinesis/TCP
-    * resolve to the readStream doubles, while batch topologies (compiled
-    * against BuiltinComponents.all directly) get the batch doubles of the
-    * same names.
-    */
-  def componentsWithStreaming: Components =
-    Components(inputs = streamingInputs) ++ BuiltinComponents.all
 
   /** A started daemon topology. */
   final case class Daemon(query: StreamingQuery, recordCount: () => Long) {
@@ -245,9 +36,7 @@ object Streaming {
       checkpointDir: String, triggerMs: Long = 1000,
       env: Map[String, String] = sys.env): Daemon = {
     val cfg = Topology.configFromToml(Toml.parse(toml, env))
-    val components = componentsWithStreaming
-    val compiled = Topology.compile(spark, cfg, components)
-    start(compiled, checkpointDir, triggerMs)
+    start(Topology.compileDaemon(spark, cfg), checkpointDir, triggerMs)
   }
 
   /** Start an already-compiled daemon topology. */

@@ -12,7 +12,7 @@ import graft.operators.Filters
 import graft.sources.ZstdCodec
 
 /** The LogLine CSV read every line-oriented input shares (List, the
-  * network inputs' spooled files, the daemon file-watch inputs): every
+  * network inputs' spooled files, the Kinesis/KCL daemon forms): every
   * field a string, the topology's separator, no quoting — LogLine has no
   * quoting/escaping, so separators cannot appear in values
   * (logline.go:23-31) and \u0000 disables quote handling — and zstd
@@ -158,36 +158,52 @@ object BuiltinComponents {
     * ext list pushes into the scan as the `exts` option, so undeclared
     * members' payload bytes are never read — the config surface inherits
     * the reader's byte-level pruning. Missing members yield '' (the
-    * record model's empty), binary members belong in the Dataset API
-    * ([[graft.sources.TarShards]]), not a string topology.
+    * record model's empty). Fields named in `BinaryFields` carry their
+    * member bytes BASE64-encoded — a UTF-8 decode would mangle media
+    * payloads; perceptual consumers (PerceptualDedupStore) decode with
+    * unbase64. The daemon form reads the same samples through the tar
+    * micro-batch source ([[graft.sources.TarSource]]), watching `Path`
+    * for newly arriving shards.
     */
-  val webDatasetInput: InputDesc = InputDesc(
-    "WebDataset",
-    "Reads WebDataset tar shards (one record per sample); declared " +
-      "[fields] are member extensions decoded as text (BinaryFields " +
-      "base64-encoded), plus the meta-fields 'key' and 'shard'.",
-    Seq(
-      ConfigKey("Path", "tar shard file, directory, or glob", required = true),
-      ConfigKey("BinaryFields", "fields whose member bytes are base64-encoded " +
-        "(media/PDF payloads — a UTF-8 text decode would mangle them)",
-        default = Some(Seq.empty[String]))),
-    (ctx, cfg) => {
+  val webDatasetInput: InputDesc = {
+    def samples(ctx: TopologyCtx, cfg: ComponentConfig)(
+        load: Map[String, String] => DataFrame): DataFrame = {
       val meta = Set("key", "shard")
       val extFields = ctx.fields.filterNot(meta)
       val binary = cfg.strList("BinaryFields").toSet
       val unknownBin = binary -- extFields.toSet
       require(unknownBin.isEmpty,
         s"WebDataset: BinaryFields not in [fields]: ${unknownBin.mkString(", ")}")
-      val reader = ctx.spark.read.format("tar").option("group", "true")
-      val df = (if (extFields.nonEmpty) reader.option("exts", extFields.mkString(","))
-                else reader).load(cfg.str("Path"))
-      df.select(ctx.fields.map {
+      val exts =
+        if (extFields.nonEmpty) Map("exts" -> extFields.mkString(",")) else Map.empty
+      load(Map("group" -> "true") ++ exts).select(ctx.fields.map {
         case f @ ("key" | "shard") => col(f)
         case f if binary(f) =>
           coalesce(base64(element_at(col("files"), f)), lit("")).as(f)
         case f => coalesce(element_at(col("files"), f).cast("string"), lit("")).as(f)
       }: _*)
-    })
+    }
+    InputDesc(
+      "WebDataset",
+      "Reads WebDataset tar shards (one record per sample); declared " +
+        "[fields] are member extensions decoded as text (BinaryFields " +
+        "base64-encoded), plus the meta-fields 'key' and 'shard'. Runs as " +
+        "a daemon under graft.Main: watches Path for newly arriving shards.",
+      Seq(
+        ConfigKey("Path", "tar shard file, directory, or glob", required = true),
+        ConfigKey("BinaryFields", "fields whose member bytes are base64-encoded " +
+          "(media/PDF payloads — a UTF-8 text decode would mangle them)",
+          default = Some(Seq.empty[String])),
+        ConfigKey("MaxFilesPerTrigger", "daemon runs only: shards per micro-batch",
+          default = Some(16L))),
+      (ctx, cfg) => samples(ctx, cfg)(o =>
+        ctx.spark.read.format("tar").options(o).load(cfg.str("Path"))),
+      buildStream = Some((ctx, cfg) => samples(ctx, cfg)(o =>
+        ctx.spark.readStream.format("tar").options(o)
+          .option("maxFilesPerTrigger", cfg.int("MaxFilesPerTrigger"))
+          .load(cfg.str("Path")))),
+    )
+  }
 
   /** Parquet — columnar input, the [[parquetOutput]] symmetric (beyond the
     * reference): the declared `[fields]` select from the parquet schema by

@@ -236,11 +236,19 @@ sealed trait ComponentDesc {
   * (only-filtering topologies writing raw records skip field
   * materialization entirely, mirroring the reference's zero-copy lazy
   * parse, logline.go:23-31).
+  *
+  * `buildStream`, when provided, is the input's daemon form: the same
+  * records as an unbounded Structured Streaming frame, read from the same
+  * bound config. In the reference the input alone decides whether a
+  * topology is a daemon (api.go:58-66); here [[Topology.compileDaemon]]
+  * (used by `graft.Main` and [[graft.streaming.Streaming.runDaemon]])
+  * picks this form, and [[Topology.compile]] always builds the batch one.
   */
 final case class InputDesc(
     name: String, help: String, keys: Seq[ConfigKey],
     build: (TopologyCtx, ComponentConfig) => DataFrame,
     buildRaw: Option[(TopologyCtx, ComponentConfig) => DataFrame] = None,
+    buildStream: Option[(TopologyCtx, ComponentConfig) => DataFrame] = None,
 ) extends ComponentDesc
 
 /** Filter: per-record transform, `DataFrame => DataFrame`.
@@ -327,6 +335,14 @@ final case class Components(
       throw new IllegalArgumentException(
         s"user configuration does not exist: '$name'; " +
           s"registered: ${user.map(_.name).mkString(", ")}"))
+
+  /** The registry narrowed to the components called `name`, of any kind
+    * (`-help NAME`).
+    */
+  def named(name: String): Components = {
+    def only[T <: ComponentDesc](xs: Seq[T]) = xs.filter(_.name.equalsIgnoreCase(name))
+    Components(only(inputs), only(filters), only(outputs), only(uploads), only(metrics))
+  }
 
   def ++(other: Components): Components = Components(
     inputs ++ other.inputs, filters ++ other.filters,

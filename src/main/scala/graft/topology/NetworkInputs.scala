@@ -1,6 +1,6 @@
 package graft.topology
 
-import java.net.{ServerSocket, Socket, SocketTimeoutException}
+import java.net.{InetAddress, InetSocketAddress, ServerSocket, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import java.util.zip.GZIPInputStream
@@ -8,6 +8,7 @@ import java.util.zip.GZIPInputStream
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.functions.{col, lit, split, try_element_at, when}
 
 /** The reference's four network inputs (registry input/all.go:9-15: KCL,
   * Kinesis, SQS, TCP), re-expressed per SURVEY §7.3's zero-egress stance:
@@ -19,9 +20,15 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   * topology, filters, and outputs are unchanged either way, which is the
   * point of the registry indirection.
   *
-  * All four produce CSV record lines, exactly like List: the DataFrame is
+  * All four produce CSV record lines, exactly like List: a batch build is
   * `spark.read.csv` over driver-spooled line files, so the parse path,
   * validation, and raw fast path are shared with every other input.
+  * TCP, Kinesis and KCL also have a daemon form ([[InputDesc.buildStream]],
+  * one key set with the batch form): TCP's gunzipping listener feeds
+  * Spark's socket source, and Kinesis/KCL watch the local `Stream`
+  * directory with the file stream source, Spark checkpoints standing in
+  * for the lease table (input/kcl.go:278-302). SQS is batch only: a run
+  * drains the queues once.
   */
 object NetworkInputs {
 
@@ -59,22 +66,117 @@ object NetworkInputs {
     p
   }
 
+  /** The Kinesis/KCL daemon form: a file-watch source over the local
+    * `Stream` directory, 16 shard files per micro-batch.
+    */
+  private def watchStream(ctx: TopologyCtx, cfg: ComponentConfig, name: String) = {
+    val client = cfg.str("Client")
+    require(client.equalsIgnoreCase("local"),
+      s"$name: Client = \"$client\" has no daemon form; a daemon watches a " +
+        "local Stream directory (Client = \"local\")")
+    LogLineCsv.readStream(ctx).option("maxFilesPerTrigger", 16L)
+      .csv(localDir(cfg.str("Stream"), s"$name.Stream").toString)
+  }
+
   // ===================== TCP =====================
 
+  /** The address `Listener` names: `host:port`, or `:port` for every
+    * interface (the reference's default `:6000`).
+    */
+  private def listenAddress(cfg: ComponentConfig): InetSocketAddress = {
+    val listener = cfg.str("Listener")
+    val i = listener.lastIndexOf(':')
+    val port = if (i < 0) None else listener.substring(i + 1).toIntOption
+    require(port.exists(p => p >= 0 && p <= 65535),
+      s"TCP: Listener = \"$listener\" needs a numeric port (host:port or :port)")
+    val host = listener.substring(0, i)
+    if (host.isEmpty) new InetSocketAddress(port.get)
+    else new InetSocketAddress(host, port.get)
+  }
+
+  /** Gunzipping relay for the daemon TCP input: BINDS `addr` like the
+    * reference listener (input/tcp.go:20-47), gunzips every accepted
+    * producer connection line by line (tcp.go:147 `gzip.NewReader(conn)`),
+    * and serves the decompressed lines to whichever connection Spark's
+    * socket source opens on the returned ephemeral loopback port. Lines
+    * arriving while no Spark connection is up buffer in the queue; a line
+    * whose write fails (source reconnect) is re-queued, preserving
+    * at-least-once within the process. All threads are daemons — the
+    * relay lives for the JVM, matching the "daemon input" contract
+    * (api.go:58-66: the input never returns).
+    */
+  private def startGunzipRelay(addr: InetSocketAddress): Int = {
+    val ingress = new ServerSocket()
+    ingress.bind(addr)
+    val egress = new ServerSocket(0, 1, InetAddress.getByName("127.0.0.1"))
+    val queue = new java.util.concurrent.LinkedBlockingQueue[String]()
+    def spawn(name: String)(body: => Unit): Unit = {
+      val t = new Thread(() => try body catch { case _: Exception => }, name)
+      t.setDaemon(true); t.start()
+    }
+    spawn(s"graft-tcp-ingress:${ingress.getLocalPort}") {
+      while (true) {
+        val conn = ingress.accept()
+        spawn(s"graft-tcp-conn:${conn.getPort}") {
+          // byte-level line split, NOT BufferedReader/InputStreamReader:
+          // GZIPInputStream.available() is always 1 until EOF, so
+          // StreamDecoder's "more input ready" probe re-reads after a
+          // successful decode and BLOCKS mid-stream on a live connection —
+          // sync-flushed lines would never surface until the producer
+          // closes. Plain read() returns per inflated chunk.
+          val in = new GZIPInputStream(conn.getInputStream)
+          try {
+            val buf = new Array[Byte](8192)
+            val line = new java.io.ByteArrayOutputStream()
+            def put(): Unit = {
+              val s = line.toString("UTF-8")
+              line.reset()
+              queue.put(if (s.endsWith("\r")) s.dropRight(1) else s)
+            }
+            var n = in.read(buf)
+            while (n >= 0) {
+              var i = 0
+              while (i < n) {
+                if (buf(i) == '\n') put() else line.write(buf(i).toInt)
+                i += 1
+              }
+              n = in.read(buf)
+            }
+            if (line.size > 0) put() // unterminated trailing line
+          } finally { in.close(); conn.close() }
+        }
+      }
+    }
+    spawn(s"graft-tcp-egress:${egress.getLocalPort}") {
+      while (true) {
+        val sock = egress.accept()
+        val w = new java.io.PrintWriter(sock.getOutputStream, true)
+        var ok = true
+        while (ok) {
+          val l = queue.take()
+          w.println(l)
+          if (w.checkError()) { queue.put(l); ok = false; sock.close() }
+        }
+      }
+    }
+    egress.getLocalPort
+  }
+
   /** TCP — listens on Listener; every connection streams gzip'd CSV
-    * records (reference: input/tcp.go:20-47, gzip at :147). The reference
-    * runs as a daemon; the batch build accepts connections until
+    * records (reference: input/tcp.go:20-47, gzip at :147). The daemon
+    * form relays the gunzipped lines ([[startGunzipRelay]]) to Spark's
+    * socket source. The batch build accepts connections until
     * `AcceptTimeout` passes with none pending (an explicit local-mode
-    * bound — `-1` would need the streaming runner), spooling each
-    * connection's decompressed stream to a driver-local file.
+    * bound), spooling each connection's decompressed stream to a
+    * driver-local file.
     */
   val tcpInput: InputDesc = {
     def collect(cfg: ComponentConfig): Seq[String] = {
-      val listener = cfg.str("Listener")
-      val port = listener.substring(listener.lastIndexOf(':') + 1).toInt
+      val addr = listenAddress(cfg)
       val acceptTimeoutMs = ComponentConfig.parseDuration(cfg.str("AcceptTimeout"))
-      val server = new ServerSocket(port)
+      val server = new ServerSocket()
       try {
+        server.bind(addr)
         server.setSoTimeout(acceptTimeoutMs.toInt.max(1))
         val spools = Seq.newBuilder[String]
         var open = true
@@ -97,15 +199,28 @@ object NetworkInputs {
     InputDesc(
       "TCP",
       "Listens on a TCP port; every connection streams gzip'd CSV records. " +
-        "Batch builds accept until AcceptTimeout passes with no connection.",
+        "Runs as a daemon under graft.Main; batch builds accept until " +
+        "AcceptTimeout passes with no connection.",
       Seq(
-        ConfigKey("Listener", "Host:Port to bind to", default = Some(":6000")),
+        ConfigKey("Listener", "Host:Port to bind to (empty host: every interface)",
+          default = Some(":6000")),
         ConfigKey("AcceptTimeout",
-          "stop accepting when this long passes without a new connection " +
-            "(local batch bound; the reference daemon never exits)",
+          "batch runs only: stop accepting when this long passes without a " +
+            "new connection (the reference daemon never exits)",
           default = Some("5s"))),
       (ctx, cfg) => LogLineCsv.read(ctx).csv(collect(cfg): _*),
       buildRaw = Some((ctx, cfg) => LogLineCsv.lines(ctx, collect(cfg))),
+      buildStream = Some { (ctx, cfg) =>
+        val lines = ctx.spark.readStream.format("socket")
+          .option("host", "127.0.0.1")
+          .option("port", startGunzipRelay(listenAddress(cfg)).toLong)
+          .load()
+        val parts = split(col("value"), java.util.regex.Pattern.quote(ctx.separator), -1)
+        lines.select(ctx.fields.zipWithIndex.map { case (f, i) =>
+          val v = try_element_at(parts, lit(i + 1))
+          when(v === "", null).otherwise(v).as(f)
+        }: _*)
+      },
     )
   }
 
@@ -120,7 +235,8 @@ object NetworkInputs {
     * meaningful for a daemon attached to a live stream). `Client = "aws"`:
     * real ListShards + GetShardIterator(TRIM_HORIZON) + GetRecords drain
     * through the reflectively-loaded SDK v2 ([[AwsReflect]]), each shard
-    * spooled to a local file and read identically.
+    * spooled to a local file and read identically. The daemon form
+    * ([[watchStream]]) watches the local stream directory instead.
     */
   val kinesisInput: InputDesc = {
     // drain one real shard to a spool file: records are raw line bytes,
@@ -190,7 +306,9 @@ object NetworkInputs {
       "Kinesis",
       "Reads all shards of a Kinesis stream. Client=\"local\": Stream is a " +
         "file:// directory of shard files; Client=\"aws\": real GetRecords " +
-        "drain via the AWS SDK v2 (loaded reflectively).",
+        "drain via the AWS SDK v2 (loaded reflectively). Runs as a daemon " +
+        "under graft.Main: watches the local Stream directory for new shard " +
+        "files (16 per micro-batch; reads only Stream and Client).",
       Seq(
         ConfigKey("AwsRegion", "AWS region to connect to", default = Some("us-west-2")),
         ConfigKey("Stream", "Stream name on Kinesis", required = true),
@@ -199,6 +317,7 @@ object NetworkInputs {
         ConfigKey("IdleTime", "Time between polls of each shard", default = Some("100ms"))),
       (ctx, cfg) => LogLineCsv.read(ctx).csv(shardFiles(cfg): _*),
       buildRaw = Some((ctx, cfg) => LogLineCsv.lines(ctx, shardFiles(cfg))),
+      buildStream = Some((ctx, cfg) => watchStream(ctx, cfg, "Kinesis")),
     )
   }
 
@@ -227,6 +346,10 @@ object NetworkInputs {
     * one worker drains every shard — the reference KCL's lease BALANCING
     * across workers (input/kcl.go:26-49) needs the coordination service
     * and is out of scope; the lease table must already exist.
+    *
+    * The daemon form ([[watchStream]]) is Kinesis's: the file stream
+    * source's checkpoint is the resume point, so AppName, InitialPosition
+    * and CheckpointDir apply to batch runs only.
     */
   val kclInput: InputDesc = {
     def awsCollect(ctx: TopologyCtx, cfg: ComponentConfig): Seq[String] = {
@@ -378,7 +501,10 @@ object NetworkInputs {
     InputDesc(
       "KCL",
       "Kinesis consumer with durable per-shard checkpoints (resume on " +
-        "restart). Local double: file:// shard dir + JSON offset file.",
+        "restart). Local double: file:// shard dir + JSON offset file. Runs " +
+        "as a daemon under graft.Main: watches the local Stream directory " +
+        "for new shard files (16 per micro-batch; reads only Stream and " +
+        "Client), Spark checkpoints standing in for the lease table.",
       Seq(
         ConfigKey("AwsRegion", "AWS region to connect to", default = Some("us-west-2")),
         ConfigKey("Stream", "Name of Kinesis stream", required = true),
@@ -407,6 +533,7 @@ object NetworkInputs {
           LogLineCsv.schema(ctx.fields))
         else LogLineCsv.read(ctx).csv(spools: _*)
       },
+      buildStream = Some((ctx, cfg) => watchStream(ctx, cfg, "KCL")),
     )
   }
 
@@ -574,7 +701,8 @@ object NetworkInputs {
       "SQS",
       "Listens on SQS queues for S3 paths to ingest (plain/sns/" +
         "s3::ObjectCreated/json message formats). Local double: queues are " +
-        "file:// directories of message-body files.",
+        "file:// directories of message-body files. Batch only: a run " +
+        "drains the queues once.",
       Seq(
         ConfigKey("AwsRegion", "AWS region to connect to", default = Some("us-west-2")),
         ConfigKey("Client", "\"local\" (file:// queue-dir double) or \"aws\" (real SQS " +

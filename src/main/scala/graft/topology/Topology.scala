@@ -272,14 +272,26 @@ object Topology {
     }.toMap
 
   def compile(spark: SparkSession, cfg: Config,
-      components: Components = BuiltinComponents.all): Compiled = {
+      components: Components = BuiltinComponents.all): Compiled =
+    compileAs(spark, cfg, components, daemon = false)
+
+  /** Compile with the input's daemon form ([[InputDesc.buildStream]]) where
+    * it has one: the input alone decides whether a topology is a daemon
+    * (reference: api.go:58-66). An input without one compiles to its batch
+    * frame; callers branch on `projected.isStreaming`.
+    */
+  private[graft] def compileDaemon(spark: SparkSession, cfg: Config): Compiled =
+    compileAs(spark, cfg, BuiltinComponents.all, daemon = true)
+
+  private def compileAs(spark: SparkSession, cfg: Config,
+      components: Components, daemon: Boolean): Compiled = {
     require(cfg.fields.nonEmpty, "topology: [fields] names is required")
     val bound = bind(cfg, components)
     val ctx = TopologyCtx(spark, cfg.fields, cfg.separator, cfg.outputFields)
     // a compile failure AFTER a component registered a cleanup hook (e.g.
     // NearDupDedup's persisted input cache) must release it — the caller
     // never gets a Compiled to run(), so nothing else ever would
-    try compileWith(ctx, bound, components)
+    try compileWith(ctx, bound, components, daemon)
     catch { case t: Throwable => ctx.runCleanupHooks(); throw t }
   }
 
@@ -309,7 +321,7 @@ object Topology {
   }
 
   private def compileWith(ctx: TopologyCtx, cfg: Config,
-      components: Components): Compiled = {
+      components: Components, daemon: Boolean): Compiled = {
 
     // --- [[user]] sections (config.go:386-400): every block in the TOML
     // must have a registered UserDesc (unknown name is loud); registered
@@ -319,6 +331,7 @@ object Topology {
     // --- input ---
     val inDesc = components.input(cfg.input._1)
     val outDesc = components.output(cfg.outputName)
+    val stream = if (daemon) inDesc.buildStream else None
 
     // Raw fast path (the reference's zero-copy lazy parse + ToText fast
     // path, logline.go:23-31/:152-220): when the output writes raw lines
@@ -327,7 +340,7 @@ object Topology {
     // pruning then materializes ONLY the fields filters actually
     // reference — a 2-field filter over 3000-field records never parses
     // the other 2998 — and the sink writes the original line bytes.
-    val rawFast = outDesc.raw && inDesc.buildRaw.isDefined &&
+    val rawFast = stream.isEmpty && outDesc.raw && inDesc.buildRaw.isDefined &&
       cfg.tokenizer.isEmpty &&
       cfg.filters.forall { case (n, _) => !components.filter(n).mutating }
 
@@ -336,7 +349,7 @@ object Topology {
         val raw = inDesc.buildRaw.get(ctx, cfg.input._2)
         raw.withColumns(Topology.lazyFieldColumns(col("value"), cfg.fields, cfg.separator))
       } else {
-        val built = inDesc.build(ctx, cfg.input._2)
+        val built = stream.getOrElse(inDesc.build)(ctx, cfg.input._2)
         require(built.columns.toSeq == cfg.fields,
           s"input produced columns ${built.columns.toSeq}, expected ${cfg.fields}")
         built
@@ -446,8 +459,4 @@ object Topology {
       components: Components = BuiltinComponents.all,
       env: Map[String, String] = sys.env): Compiled =
     compile(spark, configFromToml(Toml.parse(toml, env)), components)
-
-  def compileFile(spark: SparkSession, path: String,
-      components: Components = BuiltinComponents.all): Compiled =
-    compile(spark, configFromToml(Toml.parseFile(path)), components)
 }

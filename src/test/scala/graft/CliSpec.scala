@@ -31,4 +31,26 @@ class CliSpec extends AnyFunSuite {
     assert(body.contains("state="))
     assert(body.contains("    at "))
   }
+
+  test("-pprof server: /debug/jfr answers a non-integer seconds with 400") {
+    val addr = Diagnostics.serve("localhost:")
+    val conn = new java.net.URI(
+      s"http://localhost:${addr.getPort}/debug/jfr?seconds=abc").toURL
+      .openConnection().asInstanceOf[java.net.HttpURLConnection]
+    try {
+      assert(conn.getResponseCode == 400)
+      val body = new String(conn.getErrorStream.readAllBytes(), "UTF-8")
+      assert(body.contains("seconds") && body.contains("abc"))
+    } finally conn.disconnect()
+  }
+
+  test("-help NAME renders like -help and searches every kind") {
+    val all = Main.help(None).toOption.get
+    val datadog = Main.help(Some("datadog")).toOption.get
+    assert(datadog.contains("### Datadog"))
+    assert(datadog.contains("| Host | no | 127.0.0.1:8125 |"))
+    assert(all.contains(datadog.linesIterator.drop(2).mkString("\n")))
+    assert(Main.help(Some("*")) == Right(all))
+    assert(Main.help(Some("NoSuchComponent")) == Left("unknown component: NoSuchComponent"))
+  }
 }

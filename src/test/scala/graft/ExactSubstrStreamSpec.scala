@@ -84,9 +84,9 @@ class ExactSubstrStreamSpec extends SparkSpec {
       s"""[fields]
          |names = ["doc_id", "text"]
          |[input]
-         |name = "SQS"
+         |name = "Kinesis"
          |  [input.config]
-         |  QueuePath = "${in.getAbsolutePath}"
+         |  Stream = "${in.getAbsolutePath}"
          |[output]
          |name = "SubstrDedupStore"
          |  [output.config]
@@ -172,9 +172,9 @@ class ExactSubstrStreamSpec extends SparkSpec {
       s"""[fields]
          |names = ["doc_id", "text"]
          |[input]
-         |name = "SQS"
+         |name = "Kinesis"
          |  [input.config]
-         |  QueuePath = "${in.getAbsolutePath}"
+         |  Stream = "${in.getAbsolutePath}"
          |[output]
          |name = "SubstrDedupStore"
          |  [output.config]

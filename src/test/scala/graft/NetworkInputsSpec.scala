@@ -66,6 +66,24 @@ class NetworkInputsSpec extends SparkSpec {
     assert(lines == Seq("a,1", "b,2"))
   }
 
+  test("TCP: Listener's host is bound, and a Listener without a numeric " +
+      "port fails at compile naming the key") {
+    val dir = tmpDir()
+    def toml(listener: String) =
+      s"""[input]
+         |name = "TCP"
+         |  [input.config]
+         |  Listener = "$listener"
+         |  AcceptTimeout = "100ms"
+         |""".stripMargin + fieldsAndOut(dir)
+    for (bad <- Seq("localhost", "localhost:http", ":"))
+      assert(intercept[IllegalArgumentException](runToml(toml(bad)))
+        .getMessage.contains(s"Listener = \"$bad\""))
+    // 192.0.2.1 (TEST-NET-1) is no local interface: honouring the host
+    // makes the bind fail, where binding every interface would not
+    intercept[java.net.BindException](runToml(toml("192.0.2.1:0")))
+  }
+
   test("Kinesis: file:// stream dir, every shard file read") {
     val dir = tmpDir()
     val stream = new File(dir, "stream"); stream.mkdirs()

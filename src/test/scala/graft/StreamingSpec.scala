@@ -9,16 +9,16 @@ class StreamingSpec extends SparkSpec {
 
   private def tmpDir(): File = Files.createTempDirectory("graft-stream").toFile
 
-  test("SQS file-watch daemon: incremental batches, filter chain, rotation paths") {
+  test("Kinesis file-watch daemon: incremental batches, filter chain, rotation paths") {
     val dir = tmpDir()
     val queue = new File(dir, "queue"); queue.mkdirs()
     val toml =
       s"""[fields]
          |names = ["k", "v"]
          |[input]
-         |name = "SQS"
+         |name = "Kinesis"
          |  [input.config]
-         |  QueuePath = "$queue"
+         |  Stream = "$queue"
          |[[filter]]
          |name = "NotNull"
          |  [filter.config]
@@ -60,9 +60,9 @@ class StreamingSpec extends SparkSpec {
          |[csv]
          |field_separator = "|"
          |[input]
-         |name = "SQS"
+         |name = "Kinesis"
          |  [input.config]
-         |  QueuePath = "$queue"
+         |  Stream = "$queue"
          |[[filter]]
          |name = "C4Clean"
          |  [filter.config]
@@ -104,53 +104,6 @@ class StreamingSpec extends SparkSpec {
     } finally daemon.stop()
   }
 
-  test("TCP daemon: socket-source lines parse through the filter chain") {
-    val dir = tmpDir()
-    // Spark's socket source CONNECTS to a server: listen first, then feed
-    // lines to whichever connection the source opens
-    val server = new java.net.ServerSocket(0)
-    val feeder = new Thread(() => {
-      try {
-        val conn = server.accept()
-        val out = new java.io.PrintWriter(conn.getOutputStream, true)
-        out.println("a,1"); out.println("b,"); out.println("c,3")
-        // keep the connection open until the daemon is done reading
-        Thread.sleep(60000)
-      } catch { case _: Exception => }
-    })
-    feeder.setDaemon(true); feeder.start()
-    val toml =
-      s"""[fields]
-         |names = ["k", "v"]
-         |[input]
-         |name = "TCP"
-         |  [input.config]
-         |  Host = "127.0.0.1"
-         |  Port = ${server.getLocalPort}
-         |  Gzip = false
-         |[[filter]]
-         |name = "NotNull"
-         |  [filter.config]
-         |  Fields = ["v"]
-         |[output]
-         |name = "FileWriter"
-         |  [output.config]
-         |  PathString = "$dir/out/rot-{{.Rotation}}-{{.Index}}.csv"
-         |""".stripMargin
-    val daemon = Streaming.runDaemon(spark, toml, s"$dir/ckpt", triggerMs = 100,
-      env = Map.empty)
-    try {
-      val deadline = System.nanoTime() + 30e9.toLong
-      var lines = Set.empty[String]
-      while (lines != Set("a,1", "c,3") && System.nanoTime() < deadline) {
-        daemon.processAllAvailable()
-        lines = Option(new File(dir, "out").listFiles()).toSeq.flatten
-          .flatMap(f => scala.io.Source.fromFile(f).getLines().toList).toSet
-      }
-      assert(lines == Set("a,1", "c,3"))
-    } finally { daemon.stop(); server.close() }
-  }
-
   test("TCP daemon gzip framing: producers push gzip'd connections " +
       "(reference wire parity, input/tcp.go:147)") {
     val dir = tmpDir()
@@ -163,8 +116,7 @@ class StreamingSpec extends SparkSpec {
          |[input]
          |name = "TCP"
          |  [input.config]
-         |  Host = "127.0.0.1"
-         |  Port = $port
+         |  Listener = "127.0.0.1:$port"
          |[[filter]]
          |name = "NotNull"
          |  [filter.config]
@@ -216,7 +168,8 @@ class StreamingSpec extends SparkSpec {
          |[input]
          |name = "KCL"
          |  [input.config]
-         |  StreamPath = "$stream"
+         |  Stream = "$stream"
+         |  AppName = "zstd"
          |[output]
          |name = "Recorder"
          |""".stripMargin
@@ -249,7 +202,8 @@ class StreamingSpec extends SparkSpec {
          |[input]
          |name = "KCL"
          |  [input.config]
-         |  StreamPath = "$queue"
+         |  Stream = "$queue"
+         |  AppName = "restart"
          |[output]
          |name = "FileWriter"
          |  [output.config]

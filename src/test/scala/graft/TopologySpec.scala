@@ -371,6 +371,14 @@ class TopologySpec extends SparkSpec {
     assert(help.contains("| Key | Required | Default | Help |"))
     // list defaults render as TOML arrays, pasteable into a topology file
     assert(help.contains("| Files | no | [\"-\"] |"))
+    // lookup is find-first and case-insensitive: a second descriptor of a
+    // name would be shadowed, so each kind declares each name once
+    for ((kind, names) <- Seq("inputs" -> c.inputs.map(_.name),
+        "filters" -> c.filters.map(_.name), "outputs" -> c.outputs.map(_.name),
+        "uploads" -> c.uploads.map(_.name), "metrics" -> c.metrics.map(_.name))) {
+      val dups = names.groupBy(_.toLowerCase).collect { case (_, ns) if ns.size > 1 => ns.head }
+      assert(dups.isEmpty, s"$kind declared more than once: ${dups.mkString(", ")}")
+    }
   }
 
   test("the non-mutating filter set (the raw fast path's precondition) is pinned") {
