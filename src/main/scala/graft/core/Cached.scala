@@ -44,12 +44,15 @@ import org.apache.spark.storage.StorageLevel
   *
   * When NOT to persist: a frame that feeds several exchange-reuse points
   * of one plan. Under Spark 4.1 AQE the exchanges above a cached scan
-  * lose their reuse. Measured on the benchmark's `corpus_turns`
-  * workload: a prototype that persisted the curation-funnel output
-  * inside `IncrementalDedupStream.batchFunction` made each turn about 2×
-  * slower, because the batch-signature exchange then ran 18 times per
-  * turn instead of being reused. A `scoped` persist is the wrong tool for
-  * that dedup batch.
+  * lose their reuse. Measured on the benchmark's `corpus_turns` workload:
+  * a prototype that persisted the curation-funnel output inside
+  * `IncrementalDedupStream.batchFunction` made each turn about 2× slower,
+  * because the batch-signature exchange then ran 18 times per turn
+  * instead of being reused. So that turn persists only its result (the
+  * kept rows and their signatures, one frame read by its two writes);
+  * the batch reaches its consumers through two exchanges, rows and
+  * signatures, that the plan computes once and reuses
+  * (`Dedup.incrementalKeptAndSigs`).
   */
 object Cached {
 

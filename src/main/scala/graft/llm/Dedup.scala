@@ -219,11 +219,13 @@ object Dedup {
     * order, decides) or to a smaller-id batch document (the
     * [[minhashDedupVerified]] rule within the batch).
     *
-    * Exact verification needs the text of the handful of at-rest
-    * documents that actually collided, so `atRestDocs` (the old corpus
-    * table) is also taken — but it is semi-joined down to collision ids
-    * before its text is touched: the plan reads O(collisions) old rows,
-    * never the old corpus. Decisions are exact-jaccard (not the signature
+    * Exact verification needs the text of the at-rest documents that
+    * actually collided, so `atRestDocs` (the old corpus table) is also
+    * taken. Its rows are filtered to the collision ids at the scan, by a
+    * broadcast semi-join (the ids are bounded by the batch, not the
+    * corpus): no old text crosses an exchange and only collided texts
+    * are shingled, though the scan still reads the table once per call.
+    * Decisions are exact-jaccard (not the signature
     * estimate), so with full banding recall at the threshold the result
     * equals ground-truth all-pairs dedup and a SQL oracle can restate it.
     *
@@ -231,32 +233,40 @@ object Dedup {
     * document ids — the invariant any multi-crawl pipeline already
     * keeps): verification unions both texts under one id column.
     *
-    * Plan shape (the 100 TB contract): batch signatures are computed
-    * map-only and exchanged once (both the store join and the
-    * within-batch self-join reuse the same exchange); the store join is a
-    * shuffle join on the 64-bit band hash (uniform up to true-duplicate
-    * clusters — `maxBucketSize` caps degenerate bands on BOTH sides);
-    * nothing corpus-sized is broadcast, collected, or windowed.
+    * Plan shape (the 100 TB contract): the batch crosses two exchanges,
+    * both hash-partitioned by id, and each is computed once and reused:
+    * its signatures (map-only; read by the store join, the within-batch
+    * self-join and, for a store writer, the kept signatures, so each
+    * document is signed once) and its rows (read by the collision filter
+    * and the final kill). The
+    * candidate pairs are computed once and feed both the collision ids
+    * and the verify join. The store join is keyed on the 64-bit band hash
+    * (uniform up to true-duplicate clusters — `maxBucketSize` caps
+    * degenerate bands on BOTH sides); nothing corpus-sized is broadcast,
+    * collected, or windowed.
     */
   def incrementalDedupVerified(batch: DataFrame, idCol: String, textCol: String,
       atRestSigs: DataFrame, atRestDocs: DataFrame, threshold: Double = 0.7,
       numPerm: Int = 64, bands: Int = 16, shingleK: Int = 3, seed: Long = 42L,
       maxBucketSize: Int = 0): DataFrame =
-    batch.join(incrementalDoomedIds(batch, idCol, textCol, atRestSigs,
-        atRestDocs, threshold, numPerm, bands, shingleK, seed, maxBucketSize),
-      col(idCol) === col("__doomed"), "left_anti")
+    incrementalKeptAndSigs(batch, idCol, textCol, atRestSigs, atRestDocs, threshold,
+      numPerm, bands, shingleK, seed, maxBucketSize)._1
 
-  /** The doomed-id half of [[incrementalDedupVerified]] — the
-    * [[minhashDoomedIds]] extraction seam for the store path (same
-    * status: no narrow-projection caller exists today; expensive-lineage
-    * callers persist their input instead).
+  /** [[incrementalDedupVerified]] for a store writer: the kept batch rows,
+    * and the `(__id, __sig)` rows of those of them with at least
+    * `shingleK` tokens, taken from the signatures the candidate search
+    * computed, so no kept row is signed twice. One signature row per
+    * signed batch row, as signing the kept rows afresh would give, even
+    * for a repeated id.
     */
-  private[graft] def incrementalDoomedIds(batch: DataFrame, idCol: String,
+  private[graft] def incrementalKeptAndSigs(batch: DataFrame, idCol: String,
       textCol: String, atRestSigs: DataFrame, atRestDocs: DataFrame,
       threshold: Double, numPerm: Int, bands: Int, shingleK: Int, seed: Long,
-      maxBucketSize: Int): DataFrame = {
+      maxBucketSize: Int): (DataFrame, DataFrame) = {
     require(numPerm % bands == 0, "numPerm must be divisible by bands")
     val r = numPerm / bands
+    // the batch's two exchanges (see Plan shape): its signatures here,
+    // its rows below, planned by the two shuffle joins on the id
     val bs = minhashSignatures(batch, idCol, textCol, numPerm, shingleK, seed)
       .repartition(col("__id"))
     val bb = pruneHotBuckets(bandKeys(bs, bands, r), "bk", maxBucketSize)
@@ -273,20 +283,34 @@ object Dedup {
         lit(false).as("__st"))
       .unionByName(ob.select(col("bk").as("bk2"), col("__id").as("idA"),
         lit(true).as("__st")))
+    // the explicit not-null filter pins the inferred filters, so both
+    // consumers below (collision ids, verify pairs) plan the same subtree
+    // and share its exchange
     val cand = bb.select(col("bk"), col("__id").as("idB"))
       .join(killers, col("bk") === col("bk2") &&
         (col("__st") || col("idA") < col("idB")))
+      .filter(col("idA").isNotNull && col("idB").isNotNull)
       .select("idA", "idB").distinct()
-    // one exact-shingle pass over ONLY the documents that collided
-    val candIds = cand.select(col("idA").as("__cid"))
-      .unionByName(cand.select(col("idB").as("__cid"))).distinct()
-    val docs = atRestDocs.select(col(idCol).as("__uid"), col(textCol).as("__utext"))
-      .unionByName(batch.select(col(idCol).as("__uid"), col(textCol).as("__utext")))
-      .join(candIds, col("__uid") === col("__cid"), "left_semi")
-    verifyJaccard(cand, docs, "__uid", "__utext", shingleK,
-        minJaccard = threshold)
+    // collision ids are bounded by the batch, not the corpus. Broadcast to
+    // the store side, they filter the store's text at its scan, before any
+    // exchange; the batch side keeps the shuffle join on the id, whose
+    // exchange the kill below reuses. One exact-shingle pass then covers
+    // only the collided documents.
+    val candIds = cand.select(explode(array(col("idA"), col("idB"))).as("__cid")).distinct()
+    def collided(df: DataFrame, ids: DataFrame): DataFrame =
+      df.select(col(idCol).as("__uid"), col(textCol).as("__utext"))
+        .join(ids, col("__uid") === col("__cid"), "left_semi")
+    val doomed = verifyJaccard(cand,
+        collided(atRestDocs, broadcast(candIds)).unionByName(collided(batch, candIds)),
+        "__uid", "__utext", shingleK, minJaccard = threshold)
       .filter(col("jaccard") >= threshold)
       .select(col("idB").as("__doomed")).distinct()
+    // the signature half is an outer join plus a null filter, not a
+    // left_anti join: the optimizer pushes an anti join below `bs`'s
+    // repartition, which would sign the batch a second time
+    (batch.join(doomed, col(idCol) === col("__doomed"), "left_anti"),
+      bs.join(doomed, col("__id") === col("__doomed"), "left_outer")
+        .filter(col("__doomed").isNull).select("__id", "__sig"))
   }
 
   /** Per-row hyperplane-LSH signatures — the embedding analogue of

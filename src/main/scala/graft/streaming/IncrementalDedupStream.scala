@@ -34,9 +34,11 @@ import graft.llm.Dedup
   *
   * 100 TB posture: per-batch appends keep the store's file count
   * proportional to batch count — compact it periodically with a plain
-  * batch job (read store, coalesce, rewrite); the read side only ever
-  * touches signatures (~8·numPerm B/doc) plus collision-id point reads of
-  * the kept text, exactly the incremental batch contract. Compaction and
+  * batch job (read store, coalesce, rewrite); the read side shuffles only
+  * signatures (~8·numPerm B/doc) plus the kept text of collided ids,
+  * filtered at the scan, exactly the incremental batch contract. Each
+  * turn signs its batch once: the store rows it appends are the
+  * signatures its own candidate search computed. Compaction and
   * the two-half right-to-be-forgotten pass ([[StoreLayout.deleteDocs]])
   * are [[StoreLayout]]'s.
   */
@@ -74,18 +76,30 @@ object IncrementalDedupStream {
         StructField("__sig", ArrayType(LongType, containsNull = false))))))
     val old = StoreLayout.load(spark, corpusDir, Some(self))
       .map(_.select(idCol, textCol)).getOrElse(batch.limit(0))
-    Cached.scoped(Dedup.incrementalDedupVerified(batch, idCol, textCol,
-        atRestSigs = sigs, atRestDocs = old, threshold = threshold,
-        numPerm = numPerm, bands = bands, shingleK = shingleK, seed = seed,
-        maxBucketSize = maxBucketSize)) { kept =>
+    val (kept, keptSigs) = Dedup.incrementalKeptAndSigs(batch, idCol, textCol,
+      atRestSigs = sigs, atRestDocs = old, threshold = threshold,
+      numPerm = numPerm, bands = bands, shingleK = shingleK, seed = seed,
+      maxBucketSize = maxBucketSize)
+    // one cached frame holds both halves, so the dedup plan runs once for
+    // both writes: kept rows (null `__sig`) and kept signatures (null
+    // text). Both halves are hash-partitioned by the id in the first
+    // column, so the union keeps that partitioning: each partition feeds
+    // both writes, instead of one write reading only the other half's
+    // partitions and landing an empty file for the first of them
+    val turn = kept.select(col(idCol), col(textCol),
+        lit(null).cast(keptSigs.schema("__sig").dataType).as("__sig"))
+      .union(keptSigs.select(col("__id"), lit(null).cast(kept.schema(textCol).dataType),
+        col("__sig")))
+    Cached.scoped(turn) { cached =>
       // lease protocol: each write fails loudly while maintenance holds
       // its store, and is invisible to maintenance the moment it finishes
       StoreLayout.writing(spark, storeDir, runTag) {
-        Dedup.minhashSignatures(kept, idCol, textCol, numPerm, shingleK, seed)
+        cached.filter(col("__sig").isNotNull).select(col(idCol).as("__id"), col("__sig"))
           .write.mode("overwrite").parquet(s"$storeDir/$self")
       }
       StoreLayout.writing(spark, corpusDir, runTag) {
-        kept.write.mode("overwrite").parquet(s"$corpusDir/$self")
+        cached.filter(col("__sig").isNull).select(idCol, textCol)
+          .write.mode("overwrite").parquet(s"$corpusDir/$self")
       }
     }
   }

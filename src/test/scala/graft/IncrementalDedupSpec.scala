@@ -40,6 +40,11 @@ class IncrementalDedupSpec extends SparkSpec {
     ).toDF("doc_id", "text")
   }
 
+  private def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
+    f.delete()
+  }
+
   private def exactJaccard(a: String, b: String, k: Int = 3): Double = {
     def sh(t: String) = t.trim.split("\\s+").filter(_.nonEmpty).sliding(k)
       .filter(_.length == k).map(_.mkString(" ")).toSet
@@ -126,13 +131,7 @@ class IncrementalDedupSpec extends SparkSpec {
           atRestSigs = atRest, atRestDocs = store, threshold = 0.7)
         .select("doc_id").as[Long].collect().toSet
       assert(kept == Set(7L, 11L))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete()
-      }
-      rm(dir)
-    }
+    } finally rmTree(dir)
   }
 
   test("embedding sibling: store kills exact copies, negations and strangers survive") {
@@ -159,13 +158,7 @@ class IncrementalDedupSpec extends SparkSpec {
           nBits = 4, seeds = Seq(42L, 1042L, 7L, 99L))
         .select("vec_id").as[Long].collect().toSet
       assert(kept == Set(2L, 3L))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete()
-      }
-      rm(dir)
-    }
+    } finally rmTree(dir)
   }
 
   test("embedding sibling: a planted mega-cluster bucket is capped by default") {
@@ -193,10 +186,37 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("plan: no cartesian product; store text only read behind the semi-join") {
-    val plan = Dedup.incrementalDedupVerified(batch, "doc_id", "text",
-        atRestSigs = Dedup.minhashSignatures(store, "doc_id", "text"),
-        atRestDocs = store, threshold = 0.7)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"))
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val dir = java.nio.file.Files.createTempDirectory("graft-storetext").toFile
+    val path = new java.io.File(dir, "corpus").getAbsolutePath
+    def storeText(s: FileSourceScanExec) =
+      s.relation.location.rootPaths.exists(_.toString.endsWith("/corpus")) &&
+        s.output.exists(_.name == "text")
+    // the store's text is reachable from `p` without passing a semi-join
+    def unfiltered(p: SparkPlan): Boolean = p match {
+      case j: BaseJoinExec if j.joinType == LeftSemi => false
+      case s: FileSourceScanExec => storeText(s)
+      case o => planChildren(o).exists(unfiltered)
+    }
+    try {
+      store.write.parquet(path)
+      // at scale nothing broadcasts on size, so plan as a shuffle join would
+      val nodes = withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val kept = Dedup.incrementalDedupVerified(batch, "doc_id", "text",
+          atRestSigs = Dedup.minhashSignatures(store, "doc_id", "text"),
+          atRestDocs = spark.read.parquet(path), threshold = 0.7)
+        assert(col1[Long](kept.select("doc_id")).toSet == Set(7L, 11L))
+        planNodes(kept.queryExecution.executedPlan)
+      }
+      val plan = nodes.map(_.nodeName).mkString(", ")
+      assert(!nodes.exists(_.nodeName.contains("CartesianProduct")), plan)
+      assert(nodes.exists { case s: FileSourceScanExec => storeText(s); case _ => false },
+        s"the store's text is never scanned: $plan")
+      val leaks = nodes.collect { case e: ShuffleExchangeExec if unfiltered(e.child) => e }
+      assert(leaks.isEmpty, s"store text shuffled before the semi-join:\n${leaks.mkString("\n")}")
+    } finally rmTree(dir)
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
+import graft.llm.Dedup
 import graft.streaming.{IncrementalDedupStream, StoreLayout}
 
 /** [[IncrementalDedupStream]]: per-micro-batch near-dup dedup against the
@@ -44,6 +45,48 @@ class IncrementalDedupStreamSpec extends SparkSpec {
     // batch 2: near-dup of the batch-1 survivor also dies
     fn(Seq((20L, third.replace("ancient", "frozen"))).toDF("doc_id", "text"), 2L)
     assert(keptIds(corpus) == Set(1L, 3L, 11L))
+  }
+
+  /** The (id, signature) rows of a frame, sorted: a multiset compare. */
+  private def sigRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Seq[Long])] = {
+    import spark.implicits._
+    df.select("__id", "__sig").as[(Long, Seq[Long])].collect().toSeq
+      .sortBy { case (id, sig) => (id, sig.mkString(",")) }
+  }
+
+  test("the store holds exactly the corpus rows' signatures; a short doc is kept unsigned") {
+    import spark.implicits._
+    val dir = tmp()
+    val (store, corpus) = (s"$dir/store", s"$dir/corpus")
+    val fn = IncrementalDedupStream.batchFunction("doc_id", "text", store, corpus)
+    fn(Seq((1L, base), (2L, base.replace("lazy", "sleepy")), (3L, other), (4L, "too short"))
+      .toDF("doc_id", "text"), 0L)
+    fn(Seq((10L, other), (11L, third), (12L, "tiny")).toDF("doc_id", "text"), 1L)
+    assert(keptIds(corpus) == Set(1L, 3L, 4L, 11L, 12L))
+    // the signatures the turns computed for their candidate search are
+    // exactly what signing the kept corpus afresh gives
+    assert(sigRows(spark.read.parquet(store)) ==
+      sigRows(Dedup.minhashSignatures(spark.read.parquet(corpus), "doc_id", "text")))
+    // fewer than shingleK tokens: kept, but never a store row
+    assert(spark.read.parquet(store).select("__id").as[Long].collect().toSet ==
+      Set(1L, 3L, 11L))
+  }
+
+  test("a repeated batch id keeps every row once, and each row's own signature") {
+    import spark.implicits._
+    val dir = tmp()
+    val (store, corpus) = (s"$dir/store", s"$dir/corpus")
+    val fn = IncrementalDedupStream.batchFunction("doc_id", "text", store, corpus)
+    // id 1 arrives twice with one text, id 2 twice with two texts; 7 is a
+    // near-dup of 1 and dies
+    val batch = Seq((1L, base), (1L, base), (2L, other), (2L, third), (5L, "ab cd"),
+      (7L, base.replace("lazy", "sleepy")))
+    fn(batch.toDF("doc_id", "text"), 0L)
+    val kept = spark.read.parquet(corpus).select("doc_id", "text").as[(Long, String)]
+      .collect().toSeq.sorted
+    assert(kept == batch.filter(_._1 != 7L).sorted)
+    assert(sigRows(spark.read.parquet(store)) ==
+      sigRows(Dedup.minhashSignatures(kept.toDF("doc_id", "text"), "doc_id", "text")))
   }
 
   test("batch replay is idempotent: same batchId overwrites, no duplicates") {

@@ -486,6 +486,56 @@ class PlanShapeSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("incremental dedup turn: one candidate join, the batch signed once, " +
+      "the store written from those signatures") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val docs = graft.core.Graft.table(spark, sf, "documents").select("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft-turnshape").toFile
+    val fn = graft.streaming.IncrementalDedupStream.batchFunction("doc_id", "text",
+      s"$dir/store", s"$dir/corpus")
+    fn(docs.filter(col("doc_id") % 3 === 0), 0L)
+    // capture the second turn's store write, made against a non-empty store
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.toString.contains("/store/batch=run-1")) writes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      fn(docs.filter(col("doc_id") % 3 =!= 0), 1L)
+      // QueryExecutionListener events post asynchronously
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val storeWrite = writes.asScala.headOption.getOrElse(fail("no store write captured"))
+    def signs(p: SparkPlan) =
+      p.expressions.exists(_.find(_.isInstanceOf[graft.functions.MinHashSig]).isDefined)
+    val outer = planNodes(storeWrite.executedPlan)
+    assert(!outer.exists(signs), s"the store write signs again:\n${storeWrite.executedPlan}")
+    val turn = outer.collectFirst { case s: InMemoryTableScanExec => s.relation.cachedPlan }
+      .map(planNodes).getOrElse(fail(s"the store write does not read the cached turn:\n" +
+        storeWrite.executedPlan))
+    val plan = turn.head.toString
+    // the band join proposing candidates runs once, not once per consumer
+    // (collision ids, verify pairs)
+    assert(turn.count {
+      case j: BaseJoinExec => j.condition.exists(_.references.exists(_.name == "__st"))
+      case _ => false
+    } == 1, s"candidate join not computed once:\n$plan")
+    // one signing operator, whose exchange the other consumers reuse
+    assert(turn.count(signs) == 1, s"the batch is signed more than once:\n$plan")
+    assert(turn.exists {
+      case r: ReusedExchangeExec => planNodes(r.child).exists(signs)
+      case _ => false
+    }, s"batch signatures not reused:\n$plan")
+  }
+
   test("incremental embedding dedup: no cartesian, no window, vectors behind the semi-join") {
     val emb = graft.core.Graft.table(spark, sf, "embeddings")
     val batch = emb.filter(col("vec_id") < 50)

@@ -38,4 +38,26 @@ abstract class SparkSpec extends AnyFunSuite {
       case (k, None)    => spark.conf.unset(k)
     }
   }
+
+  /** Every operator a physical plan runs, adaptive stages included. A
+    * reused exchange is listed but not entered (its subtree runs once,
+    * where it first appears), and a cached scan is a leaf (its plan ran
+    * when the cache filled).
+    */
+  protected def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    p +: planChildren(p).flatMap(planNodes)
+
+  /** The inputs [[planNodes]] descends into. */
+  protected def planChildren(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case _: ReusedExchangeExec => Nil
+      case o => o.children
+    }
+  }
 }
