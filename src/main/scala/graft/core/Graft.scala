@@ -14,9 +14,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Graft {
 
+  /** Generated classes the JVM-wide codegen cache keeps. Spark's default
+    * of 100 sits just under the 103 distinct classes one corpus_turns run
+    * compiles (benchmark/, 4 cores): once full, its LRU can evict classes
+    * a later turn needs, and that turn compiles them again. 1000 leaves
+    * room for a session that also runs the topology and query suites. A
+    * static conf: the cache reads it once, at the JVM's first codegen, so
+    * [[tune]] cannot set it on an adopted session.
+    */
+  private val CodegenCacheEntries = 1000
+
   /** Standard conf applied to any session graft builds or adopts. */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

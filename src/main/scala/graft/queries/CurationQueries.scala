@@ -3,7 +3,7 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{TextFunctions => TF}
+import graft.functions.{IdField, TextFunctions => TF}
 import graft.llm.Dedup
 
 import QueryFixtures._
@@ -1131,14 +1131,12 @@ object CurationQueries {
            |  NumTasks = 1
            |""".stripMargin
       graft.topology.Topology.compileToml(s, toml).run()
-      def joined(c: org.apache.spark.sql.Column) =
-        array_join(transform(c, x => x.cast("string")), ",")
       s.read.format("packedcorpus").load(s"$dir/shards")
         .select(col("seq_ix"), col("ptr"), col("n_tokens"),
-          md5(joined(col("input_ids")).cast("binary")).as("ids_md5"),
-          md5(joined(transform(col("loss_mask"), m => m.cast("int")))
+          md5(IdField.join(col("input_ids")).cast("binary")).as("ids_md5"),
+          md5(IdField.joinMask(col("loss_mask"))
             .cast("binary")).as("msk_md5"),
-          md5(joined(col("segment_ids")).cast("binary")).as("seg_md5"))
+          md5(IdField.join(col("segment_ids")).cast("binary")).as("seg_md5"))
         .orderBy("seq_ix")
     }),
       {

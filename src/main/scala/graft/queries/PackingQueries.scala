@@ -3,7 +3,7 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{TextFunctions => TF}
+import graft.functions.{IdField, TextFunctions => TF}
 
 import QueryFixtures._
 
@@ -48,8 +48,6 @@ object PackingQueries {
     */
   private def packedEpochGroups(s: SparkSession, epoch: String)
       : org.apache.spark.sql.DataFrame = {
-    def joined(c: org.apache.spark.sql.Column) =
-      array_join(transform(c, x => x.cast("string")), ",")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("file").orderBy("seq_ix")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -57,10 +55,10 @@ object PackingQueries {
     s.read.format("packedcorpus").load(epoch)
       .select(col("file"), col("seq_ix"), col("doc_start"),
         concat_ws("|",
-          md5(joined(col("input_ids")).cast("binary")),
-          md5(joined(transform(col("loss_mask"), m => m.cast("int")))
+          md5(IdField.join(col("input_ids")).cast("binary")),
+          md5(IdField.joinMask(col("loss_mask"))
             .cast("binary")),
-          md5(joined(col("segment_ids")).cast("binary"))).as("sq"))
+          md5(IdField.join(col("segment_ids")).cast("binary"))).as("sq"))
       .withColumn("grp", sum(col("doc_start").cast("long")).over(w))
       .groupBy("file", "grp")
       .agg(md5(array_join(transform(
@@ -77,8 +75,7 @@ object PackingQueries {
     */
   private def idGrams8(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     when(size(c) >= 8, transform(sequence(lit(0), size(c) - 8),
-      i => array_join(transform(slice(c, i + lit(1), lit(8)),
-        x => x.cast("string")), ",")))
+      i => IdField.join(slice(c, i + lit(1), lit(8)))))
       .otherwise(array().cast("array<string>"))
 
   /** The held-out eval set's distinct id-8-grams (docs with
@@ -359,14 +356,12 @@ object PackingQueries {
       val msk = transform(TF.tokens(col("text")), w => length(w) > 3)
       val shard = pmod(pmod(col("doc_id"), lit(2147483647L)) * lit(2654435761L),
         lit(4))
-      def joined(c: org.apache.spark.sql.Column) =
-        array_join(transform(c, x => x.cast("string")), ",")
       graft.llm.Pack.packTokens(docs, col("doc_id"), toks, msk, 512, shard,
           padId = -1)
         .select(col("shard"), col("seq_id"),
-          md5(joined(col("input_ids")).cast("binary")).as("ids_md5"),
-          md5(joined(col("segment_ids")).cast("binary")).as("seg_md5"),
-          md5(joined(transform(col("loss_mask"), m => m.cast("int")))
+          md5(IdField.join(col("input_ids")).cast("binary")).as("ids_md5"),
+          md5(IdField.join(col("segment_ids")).cast("binary")).as("seg_md5"),
+          md5(IdField.joinMask(col("loss_mask"))
             .cast("binary")).as("msk_md5"),
           col("n_real"))
         .orderBy("shard", "seq_id")
@@ -444,14 +439,12 @@ object PackingQueries {
       val msk = transform(TF.tokens(col("text")), w => length(w) > 3)
       val shard = pmod(pmod(col("doc_id"), lit(2147483647L)) * lit(2654435761L),
         lit(4))
-      def joined(c: org.apache.spark.sql.Column) =
-        array_join(transform(c, x => x.cast("string")), ",")
       graft.llm.Pack.packTokens(docs, col("doc_id"), toks, msk, 512, shard,
           padId = -1, eosId = Some(0), bosId = Some(-3))
         .select(col("shard"), col("seq_id"),
-          md5(joined(col("input_ids")).cast("binary")).as("ids_md5"),
-          md5(joined(col("segment_ids")).cast("binary")).as("seg_md5"),
-          md5(joined(transform(col("loss_mask"), m => m.cast("int")))
+          md5(IdField.join(col("input_ids")).cast("binary")).as("ids_md5"),
+          md5(IdField.join(col("segment_ids")).cast("binary")).as("seg_md5"),
+          md5(IdField.joinMask(col("loss_mask"))
             .cast("binary")).as("msk_md5"),
           col("n_real"))
         .orderBy("shard", "seq_id")
@@ -533,14 +526,12 @@ object PackingQueries {
       val msk = transform(TF.tokens(col("text")), w => length(w) > 3)
       val shard = pmod(pmod(col("doc_id"), lit(2147483647L)) * lit(2654435761L),
         lit(4))
-      def joined(c: org.apache.spark.sql.Column) =
-        array_join(transform(c, x => x.cast("string")), ",")
       graft.llm.Pack.packTokensGreedy(docs, col("doc_id"), toks, msk, 512,
           shard, padId = -1)
         .select(col("shard"), col("seq_id"),
-          md5(joined(col("input_ids")).cast("binary")).as("ids_md5"),
-          md5(joined(col("segment_ids")).cast("binary")).as("seg_md5"),
-          md5(joined(transform(col("loss_mask"), m => m.cast("int")))
+          md5(IdField.join(col("input_ids")).cast("binary")).as("ids_md5"),
+          md5(IdField.join(col("segment_ids")).cast("binary")).as("seg_md5"),
+          md5(IdField.joinMask(col("loss_mask"))
             .cast("binary")).as("msk_md5"),
           col("n_real"))
         .orderBy("shard", "seq_id")
@@ -581,15 +572,13 @@ object PackingQueries {
       val msk = transform(TF.tokens(col("text")), w => length(w) > 3)
       val shard = pmod(pmod(col("doc_id"), lit(2147483647L)) * lit(2654435761L),
         lit(4))
-      def joined(c: org.apache.spark.sql.Column) =
-        array_join(transform(c, x => x.cast("string")), ",")
       graft.llm.Pack.packTokensGreedy(docs, col("doc_id"), toks, msk, 512,
           shard, padId = -1, sepId = Some(-9), eosId = Some(0),
           bosId = Some(-3))
         .select(col("shard"), col("seq_id"),
-          md5(joined(col("input_ids")).cast("binary")).as("ids_md5"),
-          md5(joined(col("segment_ids")).cast("binary")).as("seg_md5"),
-          md5(joined(transform(col("loss_mask"), m => m.cast("int")))
+          md5(IdField.join(col("input_ids")).cast("binary")).as("ids_md5"),
+          md5(IdField.join(col("segment_ids")).cast("binary")).as("seg_md5"),
+          md5(IdField.joinMask(col("loss_mask"))
             .cast("binary")).as("msk_md5"),
           col("n_real"))
         .orderBy("shard", "seq_id")
@@ -679,7 +668,7 @@ object PackingQueries {
       graft.sources.PackedCorpus.read(s, s"$dir/shards")
         .select(col("seq_ix"), col("ptr"),
           size(col("input_ids")).as("n_tokens"),
-          md5(array_join(transform(col("input_ids"), _.cast("string")), ",")
+          md5(IdField.join(col("input_ids"))
             .cast("binary")).as("ids_md5"))
         .orderBy("seq_ix")
     }),
@@ -729,7 +718,7 @@ object PackingQueries {
       graft.sources.PackedCorpus.read(s, s"$dir/shards")
         .select(col("seq_ix"), col("ptr"),
           size(col("input_ids")).as("n_tokens"),
-          md5(array_join(transform(col("input_ids"), _.cast("string")), ",")
+          md5(IdField.join(col("input_ids"))
             .cast("binary")).as("ids_md5"))
         .orderBy("seq_ix")
     }),
@@ -768,15 +757,13 @@ object PackingQueries {
       // this row the engine's own masked layouts (q_pack_greedy_sft)
       // would be destroyed at the trainer-export boundary.
       val shards = writeMaskedPackedShards(s, d, "packedmask-q")
-      def joined(c: org.apache.spark.sql.Column) =
-        array_join(transform(c, x => x.cast("string")), ",")
       s.read.format("packedcorpus").load(shards)
         .select(col("seq_ix"), col("ptr"),
           col("doc_start").cast("int").as("doc_start"),
-          md5(joined(col("input_ids")).cast("binary")).as("ids_md5"),
-          md5(joined(transform(col("loss_mask"), m => m.cast("int")))
+          md5(IdField.join(col("input_ids")).cast("binary")).as("ids_md5"),
+          md5(IdField.joinMask(col("loss_mask"))
             .cast("binary")).as("msk_md5"),
-          md5(joined(col("segment_ids")).cast("binary")).as("seg_md5"))
+          md5(IdField.join(col("segment_ids")).cast("binary")).as("seg_md5"))
         .orderBy("seq_ix")
     }),
       // the masked SFT export restated end to end over the SHARED
@@ -882,7 +869,7 @@ object PackingQueries {
         numShards = 1)
       s.read.format("packedcorpus").load(out)
         .select(col("seq_ix"), col("n_tokens"),
-          md5(array_join(transform(col("input_ids"), _.cast("string")), ",")
+          md5(IdField.join(col("input_ids"))
             .cast("binary")).as("ids_md5"))
         .orderBy("seq_ix")
     }),

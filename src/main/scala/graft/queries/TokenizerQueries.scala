@@ -2,7 +2,7 @@ package graft
 package queries
 
 import org.apache.spark.sql.functions._
-import graft.functions.{TextFunctions => TF}
+import graft.functions.{IdField, TextFunctions => TF}
 
 import QueryFixtures._
 
@@ -983,13 +983,11 @@ object TokenizerQueries {
       val msk = transform(col("__ids"), i => i =!= -1)
       val shard = pmod(pmod(col("doc_id"), lit(2147483647L)) * lit(2654435761L),
         lit(4))
-      def joined(c: org.apache.spark.sql.Column) =
-        array_join(transform(c, x => x.cast("string")), ",")
       graft.llm.Pack.packTokens(docs, col("doc_id"), col("__ids"), msk, 256,
           shard, padId = -2)
         .select(col("shard"), col("seq_id"),
-          md5(joined(col("input_ids")).cast("binary")).as("ids_md5"),
-          md5(joined(transform(col("loss_mask"), m => m.cast("int")))
+          md5(IdField.join(col("input_ids")).cast("binary")).as("ids_md5"),
+          md5(IdField.joinMask(col("loss_mask"))
             .cast("binary")).as("msk_md5"),
           col("n_real"))
         .orderBy("shard", "seq_id")
@@ -1081,14 +1079,12 @@ object TokenizerQueries {
       val msk = transform(col("__ids"), i => i =!= -1)
       val shard = pmod(pmod(col("doc_id"), lit(2147483647L)) * lit(2654435761L),
         lit(4))
-      def joined(c: org.apache.spark.sql.Column) =
-        array_join(transform(c, x => x.cast("string")), ",")
       graft.llm.Pack.packTokensGreedy(docs, col("doc_id"), col("__ids"), msk,
           1024, shard, padId = -2)
         .select(col("shard"), col("seq_id"),
-          md5(joined(col("input_ids")).cast("binary")).as("ids_md5"),
-          md5(joined(col("segment_ids")).cast("binary")).as("seg_md5"),
-          md5(joined(transform(col("loss_mask"), m => m.cast("int")))
+          md5(IdField.join(col("input_ids")).cast("binary")).as("ids_md5"),
+          md5(IdField.join(col("segment_ids")).cast("binary")).as("seg_md5"),
+          md5(IdField.joinMask(col("loss_mask"))
             .cast("binary")).as("msk_md5"),
           col("n_real"))
         .orderBy("shard", "seq_id")
@@ -1715,14 +1711,12 @@ object TokenizerQueries {
       val msk = transform(col("__ids"), _ => lit(true))
       val shard = pmod(pmod(col("doc_id"), lit(2147483647L)) * lit(2654435761L),
         lit(4))
-      def joined(c: org.apache.spark.sql.Column) =
-        array_join(transform(c, x => x.cast("string")), ",")
       graft.llm.Pack.packTokensGreedy(docs, col("doc_id"), col("__ids"), msk,
           1024, shard, padId = -2)
         .select(col("shard"), col("seq_id"),
-          md5(joined(col("input_ids")).cast("binary")).as("ids_md5"),
-          md5(joined(col("segment_ids")).cast("binary")).as("seg_md5"),
-          md5(joined(transform(col("loss_mask"), m => m.cast("int")))
+          md5(IdField.join(col("input_ids")).cast("binary")).as("ids_md5"),
+          md5(IdField.join(col("segment_ids")).cast("binary")).as("seg_md5"),
+          md5(IdField.joinMask(col("loss_mask"))
             .cast("binary")).as("msk_md5"),
           col("n_real"))
         .orderBy("shard", "seq_id")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, DataFrameReader}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.functions.Fernet
+import graft.functions.{Fernet, IdField}
 import graft.operators.Filters
 import graft.sources.ZstdCodec
 
@@ -273,11 +273,8 @@ object BuiltinComponents {
               "MaskField/SegField, or drop the field)")
       }
       def toStr(f: String) = f match {
-        case "input_ids" | "segment_ids" =>
-          array_join(transform(col(f), x => x.cast("string")), ",").as(f)
-        case "loss_mask" =>
-          array_join(transform(col(f), m => m.cast("int").cast("string")), ",")
-            .as(f)
+        case "input_ids" | "segment_ids" => IdField.join(col(f)).as(f)
+        case "loss_mask" => IdField.joinMask(col(f)).as(f)
         case "doc_start" => col(f).cast("int").cast("string").as(f)
         case other => col(other).cast("string").as(other)
       }
@@ -1665,7 +1662,8 @@ object BuiltinComponents {
       "fixed-budget rows first (the PackRows semantics, per batch).",
     Seq(
       ConfigKey("Path", "output directory", required = true),
-      ConfigKey("IdsField", "field holding comma-joined token ids",
+      ConfigKey("IdsField", "field holding comma-joined token ids; an " +
+        "entry that is not an int fails the job, naming the field",
         default = Some("input_ids")),
       ConfigKey("OrderFields", "numeric fields giving the deterministic " +
         "sequence order across shard files (ignored when PackBudget > 0: " +
@@ -1702,10 +1700,12 @@ object BuiltinComponents {
         "defaults to a 'loss_mask' field when the record carries one. " +
         "PackBudget > 0: feeds the packer instead of the all-true " +
         "default. PackBudget = 0: exported verbatim as the .mask channel " +
-        "(pre-packed rows — PackRows emits 'loss_mask')."),
+        "(pre-packed rows — PackRows emits 'loss_mask'). An entry the " +
+        "boolean cast rejects fails the job."),
       ConfigKey("SegField", "optional field holding comma-joined " +
         "segment ids, exported as the .seg channel when PackBudget = 0 " +
-        "(PackRows emits 'segment_ids')"),
+        "(PackRows emits 'segment_ids'); an entry that is not an int " +
+        "fails the job"),
       ConfigKey("CarryDir", "cross-batch packing-state dir " +
         "(PackBudget > 0): each batch ships only CLOSED sequences and " +
         "stashes its underfilled tail documents at CarryDir/batch=N; " +
@@ -1748,8 +1748,7 @@ object BuiltinComponents {
           s"PackedShards: unknown PackOrderField '$ordF'")
         def idOpt(key: String): Option[Int] =
           if (cfg.has(key)) Some(cfg.int(key).toInt) else None
-        val toks = transform(
-          filter(split(col(idsF), ","), x => x =!= ""), _.cast("int"))
+        val toks = IdField.split(col(idsF), idsF)
         // a real per-token mask rides MaskField (defaulting to a
         // 'loss_mask' field when the record carries one — a mask the
         // chain computed must never be silently re-synthesized as
@@ -1757,9 +1756,8 @@ object BuiltinComponents {
         // trains (the pretraining default) — the PACKER still produces
         // the true row-level mask (pad/BOS/separator positions false)
         val inMask = fieldOpt("MaskField", "loss_mask")
-          .map(f => transform(
-            filter(split(col(f), ","), x => x =!= ""), _.cast("boolean")))
-          .getOrElse(transform(toks, _ => lit(true)))
+          .map(f => IdField.splitMask(col(f), f))
+          .getOrElse(IdField.trueMask(toks))
         val ord = col(ordF).cast("long")
         def shardOf(o: Column) =
           pmod(pmod(o, lit(2147483647L)) * lit(2654435761L),
@@ -1822,19 +1820,14 @@ object BuiltinComponents {
         val segF = fieldOpt("SegField", "segment_ids")
         // the record model carries strings: ids/channels split to typed
         // arrays, order fields cast numeric so "10" sorts after "2"
-        def splitArr(f: String, t: String) = transform(
-          filter(split(col(f), ","), x => x =!= ""), _.cast(t)).as(f)
-        val cols = col(idsF) +:
-          (maskF.map(splitArr(_, "boolean")).toSeq ++
-            segF.map(splitArr(_, "int")).toSeq ++
+        val cols = IdField.split(col(idsF), idsF).as(idsF) +:
+          (maskF.map(f => IdField.splitMask(col(f), f).as(f)).toSeq ++
+            segF.map(f => IdField.split(col(f), f).as(f)).toSeq ++
             (if (df.columns.contains("doc_start"))
                Seq(col("doc_start").cast("boolean").as("doc_start"))
              else Seq.empty) ++
             ordFields.map(f => col(f).cast("long").as(f)))
-        val typed = observed
-          .withColumn(idsF, transform(
-            filter(split(col(idsF), ","), x => x =!= ""), _.cast("int")))
-          .select(cols: _*)
+        val typed = observed.select(cols: _*)
         graft.sources.PackedCorpus.write(typed, path, idsCol = idsF,
           orderCols = ordFields, numTasks = cfg.int("NumTasks").toInt,
           dtype = cfg.str("Dtype"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.GraftShims
 
-import graft.functions.TextFunctions
+import graft.functions.{IdField, TextFunctions}
 
 /** Tokenizer training and application on the TOML surface — the missing
   * config path from raw corpus to packed training rows. A config-driven
@@ -139,7 +139,8 @@ object Tokenize {
 
   private val tokenizeKeys = Seq(
     ConfigKey("SrcField", "field holding the text", required = true),
-    ConfigKey("DstField", "field for the comma-joined token ids", required = true),
+    ConfigKey("DstField", "field for the comma-joined token ids (PackRows " +
+      "and PackedShards fail on an entry that is not an int)", required = true),
     ConfigKey("VocabPath", "vocabulary sidecar written by a [tokenizer] " +
       "train job, OR a HuggingFace tokenizer.json (path ending .json: " +
       "BPE/Unigram/WordPiece import id-for-id — the algorithm and ids " +
@@ -185,20 +186,14 @@ object Tokenize {
         else sidecarIds(ctx, cfg, src, resolveUnkId(cfg, None))
       cfg.strOpt("CountField") match {
         case Some(cf) =>
-          // one evaluation site for the (expensive) tokenizer: bind the
-          // id array once, explode the 1-element struct, extract both
-          val packed = TextFunctions.bindOnce(ids) { v =>
-            struct(
-              array_join(transform(v, _.cast("string")), ",").as("ids"),
-              size(v).cast("string").as("n"))
-          }
-          df.withColumn("__tk", explode(array(packed)))
-            .withColumn(cfg.str("DstField"), col("__tk.ids"))
-            .withColumn(cf, col("__tk.n"))
+          // one evaluation site for the (expensive) tokenizer: the
+          // 1-element explode binds the id array once, both fields read it
+          df.withColumn("__tk", explode(array(ids)))
+            .withColumn(cfg.str("DstField"), IdField.join(col("__tk")))
+            .withColumn(cf, size(col("__tk")).cast("string"))
             .drop("__tk")
         case None =>
-          df.withColumn(cfg.str("DstField"),
-            array_join(transform(ids, _.cast("string")), ","))
+          df.withColumn(cfg.str("DstField"), IdField.join(ids))
       }
     })
 
@@ -342,7 +337,8 @@ object Tokenize {
   }
 
   private val packKeys = Seq(
-    ConfigKey("IdsField", "field holding comma-joined token ids", required = true),
+    ConfigKey("IdsField", "field holding comma-joined token ids; an entry " +
+      "that is not an int fails the job, naming the field", required = true),
     ConfigKey("OrderField", "numeric field giving the deterministic pack order",
       required = true),
     ConfigKey("Budget", "tokens per packed row", default = Some("1024")),
@@ -361,7 +357,9 @@ object Tokenize {
     * REPLACES the record stream: downstream stages (and [output] fields)
     * see `(shard, seq_id, input_ids, segment_ids, loss_mask, n_real)`,
     * the materialized rows of [[graft.llm.Pack.packTokensGreedy]] with
-    * arrays comma-joined into the string record model. The shard
+    * arrays comma-joined into the string record model
+    * ([[graft.functions.IdField]]); an IdsField entry that is not an int
+    * fails the job rather than packing as a 0. The shard
     * assignment is the standard multiplicative hash of OrderField, so
     * packing is deterministic and partition-independent; the one shuffle
     * is the shard exchange.
@@ -372,27 +370,21 @@ object Tokenize {
       "n_real, doc_start.",
     packKeys,
     (_, cfg) => df => {
-      val toks = transform(
-        filter(split(col(cfg.str("IdsField")), ","), x => x =!= ""),
-        _.cast("int"))
+      val toks = IdField.split(col(cfg.str("IdsField")), cfg.str("IdsField"))
       val ord = col(cfg.str("OrderField")).cast("long")
       val shard = pmod(pmod(ord, lit(2147483647L)) * lit(2654435761L),
         lit(cfg.int("Shards")))
       def idOpt(key: String): Option[Int] =
         if (cfg.has(key)) Some(cfg.int(key).toInt) else None
-      graft.llm.Pack.packTokensGreedy(df, ord, toks,
-          transform(toks, _ => lit(true)),
+      graft.llm.Pack.packTokensGreedy(df, ord, toks, IdField.trueMask(toks),
           cfg.int("Budget").toInt, shard,
           cfg.int("PadId").toInt,
           sepId = idOpt("SepId"), eosId = idOpt("EosId"),
           bosId = idOpt("BosId"))
         .select(col("shard"), col("seq_id"),
-          array_join(transform(col("input_ids"), _.cast("string")), ",")
-            .as("input_ids"),
-          array_join(transform(col("segment_ids"), _.cast("string")), ",")
-            .as("segment_ids"),
-          array_join(transform(col("loss_mask"),
-            m => m.cast("int").cast("string")), ",").as("loss_mask"),
+          IdField.join(col("input_ids")).as("input_ids"),
+          IdField.join(col("segment_ids")).as("segment_ids"),
+          IdField.joinMask(col("loss_mask")).as("loss_mask"),
           col("n_real"),
           // no-split packing: every sequence starts a document — the
           // doc-index bit PackedShards forwards to the .idx sidecar
