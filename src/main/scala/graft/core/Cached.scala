@@ -52,7 +52,8 @@ import org.apache.spark.storage.StorageLevel
   * kept rows and their signatures, one frame read by its two writes);
   * the batch reaches its consumers through two exchanges, rows and
   * signatures, that the plan computes once and reuses
-  * (`Dedup.incrementalKeptAndSigs`).
+  * (`Dedup.incrementalKeptAndSigs`, the MinHash decider, whose signature
+  * exchange feeds both sides of `Dedup.candidatePairs`).
   */
 object Cached {
 

@@ -144,7 +144,8 @@ object Decontaminate {
     * verification join (Dedup.verifyJaccard: pre-hashed sorted shingles,
     * merge-walk intersect), so the exact-similarity cost is proportional
     * to collisions, not |corpus|·|bench|. Banding recall at the threshold
-    * is the same 16×4 contract as minhashDedupVerified.
+    * is the same 16×4 contract as Dedup's own candidate join (the shared
+    * [[Dedup.bandKeys]]).
     *
     * Corpus and benchmark id spaces MUST be disjoint (the verification
     * stage unions both sides into one frame).
@@ -163,7 +164,7 @@ object Decontaminate {
           bands, r)
         .select(col("__id").as(outId), col("bk").as(outBk))
     // Cap only the CORPUS side's band population (same knob/semantics as
-    // Dedup.minhashPairs): a degenerate band shared by millions of
+    // Dedup.candidatePairs): a degenerate band shared by millions of
     // near-empty docs that one bench doc also hits would otherwise make
     // the candidate set O(corpus). The bench side is small by definition
     // and capping it would only cost recall.

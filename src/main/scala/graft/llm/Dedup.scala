@@ -66,6 +66,47 @@ object Dedup {
       banded.join(hot, col(keyCol) === col("__hot"), "left_anti")
     }
 
+  /** The one LSH candidate join. `batch` holds banded rows `(bk, __id,
+    * payload…)`; the optional `store` holds at-rest rows of the same
+    * shape. Each side passes the [[pruneHotBuckets]] fuse. Returns
+    * `(idA, idB, payloadA…, payloadB…)` (payload column `p` as `pA` and
+    * `pB`) for every pair sharing a bucket in which the killer `idA` is a
+    * store row, in either id order (the store is canonical: arrival, not
+    * id, decides), or a batch row with a smaller id. A null id kills
+    * nothing and is never killed. A pair sharing several buckets comes
+    * out once per bucket: callers verify first and dedup after.
+    *
+    * With a store, the killer side is the union of the batch rows and the
+    * store rows (marked `__st`), so the batch is probed by ONE join, not a
+    * store join plus a self-join, and its banded rows feed the probe and
+    * the union branch from one shared exchange. The explicit not-null
+    * filter pins the inferred filters, so every consumer of one decider's
+    * pairs plans the same subtree and shares its exchange. The reuse
+    * point is the caller's: an exchange of the batch's signatures on
+    * `__id` below the banding, which the store side never crosses.
+    */
+  private[llm] def candidatePairs(batch: DataFrame, store: Option[DataFrame],
+      maxBucketSize: Int): DataFrame = {
+    val payload = batch.columns.toSeq.filterNot(c => c == "bk" || c == "__id")
+    def named(df: DataFrame, key: String, id: String, sfx: String): DataFrame =
+      df.select(col("bk").as(key) +: col("__id").as(id) +:
+        payload.map(p => col(p).as(p + sfx)): _*)
+    val bb = pruneHotBuckets(batch, "bk", maxBucketSize)
+    val batchKillers = named(bb, "bk2", "idA", "A")
+    val smaller = col("idA") < col("idB")
+    val (killers, kills) = store.fold((batchKillers, smaller)) { st =>
+      (batchKillers.withColumn("__st", lit(false)).unionByName(
+          named(pruneHotBuckets(st, "bk", maxBucketSize), "bk2", "idA", "A")
+            .withColumn("__st", lit(true))),
+        col("__st") || smaller)
+    }
+    named(bb, "bk", "idB", "B")
+      .join(killers, col("bk") === col("bk2") && kills)
+      .filter(col("idA").isNotNull && col("idB").isNotNull)
+      .select(Seq("idA", "idB").map(col) ++ payload.map(p => col(p + "A")) ++
+        payload.map(p => col(p + "B")): _*)
+  }
+
   // --- MinHash ---
 
   /** MinHash signature of a text column as `array<long>` of length
@@ -80,7 +121,7 @@ object Dedup {
     * k-gram string and shuffling one row per document; at 100 TB that
     * exchange is the whole cost.
     */
-  def minhashSignature(text: Column, numPerm: Int = 64, shingleK: Int = 3,
+  private def minhashSignature(text: Column, numPerm: Int = 64, shingleK: Int = 3,
       seed: Long = 42L): Column =
     graft.functions.HashExpressions.minhash(
       TextFunctions.tokens(text), numPerm, shingleK, seed)
@@ -140,36 +181,15 @@ object Dedup {
     // above the exchange is recomputed per side, but that's cheap slices.)
     val sigd = minhashSignatures(df, idCol, textCol, numPerm, shingleK, seed)
       .repartition(col("__id"))
-    val banded = bandKeys(sigd, bands, r)
-    val pruned = pruneHotBuckets(banded, "bk", maxBucketSize)
-    // distinct join key name on the right: a("bk")===b("bk") on two frames
-    // cut from the same plan resolves to the ambiguous self-join attribute
-    val a = pruned.select(col("bk"), col("__id").as("idA"), col("__sig").as("sigA"))
-    val b = pruned.select(col("bk").as("bk2"), col("__id").as("idB"), col("__sig").as("sigB"))
     // score per band collision (codegen'd agreeFrac; ≤ `bands` repeats per
     // pair), THEN dedup — the aggregation carries one double instead of two
     // signatures, keeping it a streaming HashAggregate instead of a
     // SortAggregate over arrays
-    a.join(b, col("bk") === col("bk2") && col("idA") < col("idB"))
+    candidatePairs(bandKeys(sigd, bands, r), None, maxBucketSize)
       .select(col("idA"), col("idB"),
-        graft.functions.HashExpressions.agreeFrac(col("sigA"), col("sigB"))
+        graft.functions.HashExpressions.agreeFrac(col("__sigA"), col("__sigB"))
           .as("est_jaccard"))
       .groupBy("idA", "idB").agg(first("est_jaccard").as("est_jaccard"))
-  }
-
-  /** MinHash-LSH dedup: drop every doc that near-matches (est jaccard ≥
-    * threshold) a doc with a smaller id. Single-pass transitive
-    * approximation (standard for LSH dedup: each doc only needs ONE smaller
-    * neighbor to die; full connected components would need iteration).
-    */
-  def minhashDedup(df: DataFrame, idCol: String, textCol: String, threshold: Double = 0.7,
-      numPerm: Int = 64, bands: Int = 16, shingleK: Int = 3,
-      maxBucketSize: Int = 0): DataFrame = {
-    val doomed = minhashPairs(df, idCol, textCol, numPerm, bands, shingleK,
-      maxBucketSize = maxBucketSize)
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("idB").as("__doomed")).distinct()
-    df.join(doomed, col(idCol) === col("__doomed"), "left_anti")
   }
 
   /** MinHash-LSH dedup with exact verification — the two-stage shape
@@ -177,35 +197,17 @@ object Dedup {
     * the EXACT shingle-Jaccard of each candidate decides keep/drop (docs
     * with a verified jaccard ≥ threshold against a smaller id die). The
     * verification join touches only candidate pairs, so the exact-similarity
-    * cost is proportional to collisions, not corpus². Versus
-    * [[minhashDedup]] (which thresholds the signature ESTIMATE), the output
-    * is independent of signature noise: with enough bands for full recall
-    * at the threshold, it equals exact all-pairs Jaccard dedup — which is
-    * what makes it checkable by an exact SQL oracle.
+    * cost is proportional to collisions, not corpus². The output is
+    * independent of signature noise: with enough bands for full recall at
+    * the threshold, it equals exact all-pairs Jaccard dedup — which is
+    * what makes it checkable by an exact SQL oracle. It is
+    * [[incrementalDedupVerified]] against an empty store.
     */
   def minhashDedupVerified(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.7, numPerm: Int = 64, bands: Int = 16, shingleK: Int = 3,
       maxBucketSize: Int = 0): DataFrame =
-    df.join(minhashDoomedIds(df, idCol, textCol, threshold, numPerm, bands,
-      shingleK, maxBucketSize), col(idCol) === col("__doomed"), "left_anti")
-
-  /** The doomed-id half of [[minhashDedupVerified]]: the distinct ids that
-    * lose the verified keep/kill decision, as one `__doomed` column. A
-    * pure extraction seam — today every caller is the public wrapper
-    * passing its own frame (expensive-lineage callers like the TOML
-    * NearDupDedup surface protect themselves by persisting the input
-    * instead), but the split keeps a cached-narrow-projection caller
-    * possible without touching the decision logic.
-    */
-  private[graft] def minhashDoomedIds(docs: DataFrame, idCol: String,
-      textCol: String, threshold: Double, numPerm: Int, bands: Int,
-      shingleK: Int, maxBucketSize: Int): DataFrame = {
-    val cand = minhashPairs(docs, idCol, textCol, numPerm, bands, shingleK,
-      maxBucketSize = maxBucketSize).select("idA", "idB")
-    verifyJaccard(cand, docs, idCol, textCol, shingleK, minJaccard = threshold)
-      .filter(col("jaccard") >= threshold)
-      .select(col("idB").as("__doomed")).distinct()
-  }
+    incrementalKeptAndSigs(df, idCol, textCol, None, threshold, numPerm, bands,
+      shingleK, 42L, maxBucketSize)._1
 
   /** Incremental near-dup dedup of a NEW batch against an at-rest
     * signature store — the shape a 100 TB pipeline actually runs month
@@ -213,10 +215,10 @@ object Dedup {
     * persisted MinHash signatures (`atRestSigs`, the `(__id, __sig)`
     * output of [[minhashSignatures]] written once to parquet; ~8·numPerm
     * bytes per document, ~0.01% of the corpus bytes at 4 KB/doc), so
-    * deduplicating a new crawl never re-reads or re-shingles the old
-    * data. A batch document dies when exact verification ties it to ANY
-    * at-rest document (the store is canonical — arrival order, not id
-    * order, decides) or to a smaller-id batch document (the
+    * deduplicating a new crawl never re-shingles the old data. A batch
+    * document dies when exact verification ties it to ANY at-rest
+    * document (the store is canonical — arrival order, not id order,
+    * decides) or to a smaller-id batch document (the
     * [[minhashDedupVerified]] rule within the batch).
     *
     * Exact verification needs the text of the at-rest documents that
@@ -224,7 +226,8 @@ object Dedup {
     * taken. Its rows are filtered to the collision ids at the scan, by a
     * broadcast semi-join (the ids are bounded by the batch, not the
     * corpus): no old text crosses an exchange and only collided texts
-    * are shingled, though the scan still reads the table once per call.
+    * are shingled, though the scan still reads the table once per call,
+    * and every store signature is banded once per call.
     * Decisions are exact-jaccard (not the signature
     * estimate), so with full banding recall at the threshold the result
     * equals ground-truth all-pairs dedup and a SQL oracle can restate it.
@@ -235,32 +238,32 @@ object Dedup {
     *
     * Plan shape (the 100 TB contract): the batch crosses two exchanges,
     * both hash-partitioned by id, and each is computed once and reused:
-    * its signatures (map-only; read by the store join, the within-batch
-    * self-join and, for a store writer, the kept signatures, so each
-    * document is signed once) and its rows (read by the collision filter
-    * and the final kill). The
-    * candidate pairs are computed once and feed both the collision ids
-    * and the verify join. The store join is keyed on the 64-bit band hash
-    * (uniform up to true-duplicate clusters — `maxBucketSize` caps
-    * degenerate bands on BOTH sides); nothing corpus-sized is broadcast,
-    * collected, or windowed.
+    * its signatures (map-only; read by the [[candidatePairs]] join and,
+    * for a store writer, the kept signatures, so each document is signed
+    * once) and its rows (read by the collision filter and the final
+    * kill). The candidate pairs are computed once and feed both the
+    * collision ids and the verify join. The join is keyed on the 64-bit
+    * band hash (uniform up to true-duplicate clusters — `maxBucketSize`
+    * caps degenerate bands on BOTH sides); nothing corpus-sized is
+    * broadcast, collected, or windowed.
     */
   def incrementalDedupVerified(batch: DataFrame, idCol: String, textCol: String,
       atRestSigs: DataFrame, atRestDocs: DataFrame, threshold: Double = 0.7,
       numPerm: Int = 64, bands: Int = 16, shingleK: Int = 3, seed: Long = 42L,
       maxBucketSize: Int = 0): DataFrame =
-    incrementalKeptAndSigs(batch, idCol, textCol, atRestSigs, atRestDocs, threshold,
-      numPerm, bands, shingleK, seed, maxBucketSize)._1
+    incrementalKeptAndSigs(batch, idCol, textCol, Some((atRestSigs, atRestDocs)),
+      threshold, numPerm, bands, shingleK, seed, maxBucketSize)._1
 
-  /** [[incrementalDedupVerified]] for a store writer: the kept batch rows,
-    * and the `(__id, __sig)` rows of those of them with at least
-    * `shingleK` tokens, taken from the signatures the candidate search
-    * computed, so no kept row is signed twice. One signature row per
-    * signed batch row, as signing the kept rows afresh would give, even
-    * for a repeated id.
+  /** The MinHash decider behind [[incrementalDedupVerified]] (`store` =
+    * its `(atRestSigs, atRestDocs)`) and [[minhashDedupVerified]] (no
+    * store), for a store writer too: the kept batch rows, and the
+    * `(__id, __sig)` rows of those of them with at least `shingleK`
+    * tokens, taken from the signatures the candidate search computed, so
+    * no kept row is signed twice. One signature row per signed batch row,
+    * as signing the kept rows afresh would give, even for a repeated id.
     */
   private[graft] def incrementalKeptAndSigs(batch: DataFrame, idCol: String,
-      textCol: String, atRestSigs: DataFrame, atRestDocs: DataFrame,
+      textCol: String, store: Option[(DataFrame, DataFrame)],
       threshold: Double, numPerm: Int, bands: Int, shingleK: Int, seed: Long,
       maxBucketSize: Int): (DataFrame, DataFrame) = {
     require(numPerm % bands == 0, "numPerm must be divisible by bands")
@@ -269,40 +272,28 @@ object Dedup {
     // its rows below, planned by the two shuffle joins on the id
     val bs = minhashSignatures(batch, idCol, textCol, numPerm, shingleK, seed)
       .repartition(col("__id"))
-    val bb = pruneHotBuckets(bandKeys(bs, bands, r), "bk", maxBucketSize)
-    val ob = pruneHotBuckets(
-      bandKeys(atRestSigs.select(col("__id"), col("__sig")), bands, r),
-      "bk", maxBucketSize)
-    // batch vs store: the batch doc (idB) dies on a match in either id
-    // order; batch vs batch: smaller id wins, as in minhashDedupVerified.
-    // ONE killer join instead of two (see incrementalHammingDedup): the
-    // union of killer rows — store bands (kill in either order: __st) and
-    // batch bands (kill only a larger batch id) — probes the banded batch
-    // frame once; verification needs the killer's real id either way.
-    val killers = bb.select(col("bk").as("bk2"), col("__id").as("idA"),
-        lit(false).as("__st"))
-      .unionByName(ob.select(col("bk").as("bk2"), col("__id").as("idA"),
-        lit(true).as("__st")))
-    // the explicit not-null filter pins the inferred filters, so both
-    // consumers below (collision ids, verify pairs) plan the same subtree
-    // and share its exchange
-    val cand = bb.select(col("bk"), col("__id").as("idB"))
-      .join(killers, col("bk") === col("bk2") &&
-        (col("__st") || col("idA") < col("idB")))
-      .filter(col("idA").isNotNull && col("idB").isNotNull)
+    def banded(sigs: DataFrame): DataFrame =
+      bandKeys(sigs.select(col("__id"), col("__sig")), bands, r)
+    val cand = candidatePairs(banded(bs), store.map { case (sigs, _) => banded(sigs) },
+        maxBucketSize)
       .select("idA", "idB").distinct()
     // collision ids are bounded by the batch, not the corpus. Broadcast to
     // the store side, they filter the store's text at its scan, before any
     // exchange; the batch side keeps the shuffle join on the id, whose
     // exchange the kill below reuses. One exact-shingle pass then covers
-    // only the collided documents.
+    // only the collided documents. With no store the batch is verified
+    // whole: there the collision filter's extra aggregate and join cost
+    // more than they save (at sf0.01 the NearDupDedup funnels ran 8-10
+    // more stages, and they and q_dedup_minhash ran about 1.3x slower)
     val candIds = cand.select(explode(array(col("idA"), col("idB"))).as("__cid")).distinct()
-    def collided(df: DataFrame, ids: DataFrame): DataFrame =
+    def texts(df: DataFrame): DataFrame =
       df.select(col(idCol).as("__uid"), col(textCol).as("__utext"))
-        .join(ids, col("__uid") === col("__cid"), "left_semi")
-    val doomed = verifyJaccard(cand,
-        collided(atRestDocs, broadcast(candIds)).unionByName(collided(batch, candIds)),
-        "__uid", "__utext", shingleK, minJaccard = threshold)
+    def collided(df: DataFrame, ids: DataFrame): DataFrame =
+      texts(df).join(ids, col("__uid") === col("__cid"), "left_semi")
+    val verified = store.fold(texts(batch)) { case (_, docs) =>
+      collided(docs, broadcast(candIds)).unionByName(collided(batch, candIds)) }
+    val doomed = verifyJaccard(cand, verified, "__uid", "__utext", shingleK,
+        minJaccard = threshold)
       .filter(col("jaccard") >= threshold)
       .select(col("idB").as("__doomed")).distinct()
     // the signature half is an outer join plus a null filter, not a
@@ -331,9 +322,9 @@ object Dedup {
     * once); a batch vector dies on an exact-cosine-verified match
     * (≥ threshold) against ANY store vector (either id order — the store
     * is canonical) or a smaller-id batch vector. Store VECTORS are
-    * point-read behind a semi-join on collision ids only; batch
-    * signatures are exchanged once and reused by the store join and the
-    * within-batch self-join; id spaces must be disjoint, and the store
+    * read behind a semi-join on collision ids only; batch signatures are
+    * exchanged once and reused by both sides of the [[candidatePairs]]
+    * join; id spaces must be disjoint, and the store
     * must have been written with the SAME (dim, nBits, seeds) — different
     * hyperplanes produce incomparable signatures, silently costing all
     * recall against the store.
@@ -361,18 +352,8 @@ object Dedup {
       sigs.select(col("__id"), posexplode(col("__sigs")))
         .select(col("__id"),
           struct(col("pos").as("s"), col("col").as("sig")).as("bk"))
-    val bb = pruneHotBuckets(banded(bs), "bk", maxBucketSize)
-    val ob = pruneHotBuckets(
-      banded(atRestSigs.select(col("__id"), col("__sigs"))), "bk", maxBucketSize)
-    // one fused killer join — see [[incrementalHammingDedup]]; the killer's
-    // real id is kept either way (verification point-reads both vectors)
-    val killers = bb.select(col("bk").as("bk2"), col("__id").as("idA"),
-        lit(false).as("__st"))
-      .unionByName(ob.select(col("bk").as("bk2"), col("__id").as("idA"),
-        lit(true).as("__st")))
-    val cand = bb.select(col("bk"), col("__id").as("idB"))
-      .join(killers, col("bk") === col("bk2") &&
-        (col("__st") || col("idA") < col("idB")))
+    val cand = candidatePairs(banded(bs),
+        Some(banded(atRestSigs.select(col("__id"), col("__sigs")))), maxBucketSize)
       .select("idA", "idB").distinct()
     val candIds = cand.select(col("idA").as("__cid"))
       .unionByName(cand.select(col("idB").as("__cid"))).distinct()
@@ -427,17 +408,13 @@ object Dedup {
       minSizeRatio: Double = 0.0, sizeNgram: Int = 3): DataFrame = {
     val banded = simhashBanded(df, idCol, textCol, nBits, maxHamming, pieces,
       minSizeRatio, sizeNgram)
-    val sizeCols = if (minSizeRatio <= 0) Nil else Seq(col("__n"))
-    val pruned = pruneHotBuckets(banded, "bk", maxBucketSize)
-    val a = pruned.select(col("bk") +: col("__id").as("idA") +: col("simhash").as("shA") +:
-      sizeCols.map(_.as("nA")): _*)
-    val b = pruned.select(col("bk").as("bk2") +: col("__id").as("idB") +:
-      col("simhash").as("shB") +: sizeCols.map(_.as("nB")): _*)
     val sizeGate = if (minSizeRatio <= 0) lit(true)
-      else col("nA") >= col("nB") * minSizeRatio && col("nB") >= col("nA") * minSizeRatio
-    a.join(b, col("bk") === col("bk2") && col("idA") < col("idB") && sizeGate)
+      else col("__nA") >= col("__nB") * minSizeRatio &&
+        col("__nB") >= col("__nA") * minSizeRatio
+    candidatePairs(banded, None, maxBucketSize)
+      .filter(sizeGate)
       .select(col("idA"), col("idB"),
-        bit_count(col("shA").bitwiseXOR(col("shB"))).as("hamming"))
+        bit_count(col("simhashA").bitwiseXOR(col("simhashB"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .groupBy("idA", "idB").agg(first("hamming").as("hamming"))
   }
@@ -461,8 +438,11 @@ object Dedup {
         size(array_distinct(transform(TextFunctions.shingles(col(textCol), sizeNgram),
           g => xxhash64(g)))).cast("double").as("__n"))
     val sizeCols = if (minSizeRatio <= 0) Nil else Seq(col("__n"))
+    // the self-join's reuse point: one exchange of (id, long) rows
+    // materializes the signatures once for both join sides
     hammingBanded(
-      withSize.select(col(idCol).as("__id") +: col("simhash") +: sizeCols: _*),
+      withSize.select(col(idCol).as("__id") +: col("simhash") +: sizeCols: _*)
+        .repartition(col("__id")),
       "simhash", nBits, maxHamming, pieces)
   }
 
@@ -471,7 +451,9 @@ object Dedup {
     * into `maxHamming + pieces` chunks — a pair within the radius leaves
     * at least `pieces` chunks untouched, so every `pieces`-sized chunk
     * COMBINATION becomes a bucket key; extras ride through. Shared by
-    * the text simhash path and [[hammingPairs]]'s generic signatures.
+    * the text simhash path, [[hammingPairs]]'s generic signatures and the
+    * incremental Hamming deciders. Map-only: the reuse point (an exchange
+    * of the batch signatures on `__id`) is the caller's.
     */
   private[graft] def hammingBanded(sigFrame: DataFrame, sigName: String,
       nBits: Int, maxHamming: Int, pieces: Int): DataFrame = {
@@ -484,10 +466,7 @@ object Dedup {
     val base = nBits / chunks
     val widths = (0 until chunks).map(c => base + (if (c < nBits % chunks) 1 else 0))
     val offsets = widths.scanLeft(0)(_ + _)
-    // same reuse-point trick as minhashPairs: one exchange of (id, long)
-    // rows materializes the signatures once for both self-join sides.
     val passthrough = sigFrame.columns.filterNot(_ == "__id").map(col).toSeq
-    val sig = sigFrame.repartition(col("__id"))
     def chunkVal(c: Int): Column = {
       // width 64 (nBits=64, maxHamming=0): (1L<<64)-1 wraps to 0 under
       // Scala's mod-64 shift and would hash every doc to ONE bucket —
@@ -502,7 +481,7 @@ object Dedup {
     // falls off the codegen'd hash-join path. Equal real keys hash equal
     // (recall preserved); a 64-bit hash collision only ADDS a candidate
     // row, which the exact bit_count filter rejects — precision intact.
-    sig.select(col("__id") +:
+    sigFrame.select(col("__id") +:
       explode(array(combos.zipWithIndex.map { case (ix, cid) =>
         xxhash64(lit(cid) +: ix.map(chunkVal): _*)
       }: _*)).as("bk") +: passthrough: _*)
@@ -531,15 +510,12 @@ object Dedup {
     // rejects row by row
     val banded = hammingBanded(
       df.select(col(idCol).as("__id"), sigCol.cast("long").as("__hsig"))
-        .filter(col("__hsig").isNotNull),
+        .filter(col("__hsig").isNotNull)
+        .repartition(col("__id")),
       "__hsig", nBits, maxHamming, pieces)
-    val pruned = pruneHotBuckets(banded, "bk", maxBucketSize)
-    val a = pruned.select(col("bk"), col("__id").as("idA"), col("__hsig").as("shA"))
-    val b = pruned.select(col("bk").as("bk2"), col("__id").as("idB"),
-      col("__hsig").as("shB"))
-    a.join(b, col("bk") === col("bk2") && col("idA") < col("idB"))
+    candidatePairs(banded, None, maxBucketSize)
       .select(col("idA"), col("idB"),
-        bit_count(col("shA").bitwiseXOR(col("shB"))).as("hamming"))
+        bit_count(col("__hsigA").bitwiseXOR(col("__hsigB"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .groupBy("idA", "idB").agg(first("hamming").as("hamming"))
   }
@@ -553,56 +529,28 @@ object Dedup {
     * smaller-id batch signature. `batchSigs` is the batch's `(__id,
     * __hsig)` frame (computed by the caller — perceptual hashes come out
     * of the typed decode path, not a Column); `atRestSigs` the store's.
-    * Returns the surviving batch rows.
+    * Returns the surviving batch rows; null signatures kill nothing and
+    * never die (see [[hammingPairs]]).
     *
-    * Plan shape: the banded batch frame feeds BOTH the store join and
-    * the within-batch self-join, so its lineage (the banding map plus
-    * whatever computed `batchSigs`) evaluates once per join — the
-    * banding itself is a narrow map, but an expensive upstream
-    * signature computation (media decode, perceptual hash) re-runs
-    * unless the CALLER persists `batchSigs`, as
-    * [[graft.streaming.PerceptualDedupStream.batchFunction]] does.
-    * The store join keys on the 64-bit bucket hash; verification is the
-    * exact `bit_count` — nothing corpus-sized collects or broadcasts.
+    * Plan shape: the batch signatures cross one exchange on `__id`, read
+    * by both sides of the [[candidatePairs]] join; an expensive upstream
+    * signature computation (media decode, perceptual hash) still belongs
+    * in a frame the CALLER persists, as
+    * [[graft.streaming.PerceptualDedupStream.batchFunction]] does. The
+    * store's signatures are banded at their scan and cross only the
+    * bucket exchange. The join keys on the 64-bit bucket hash;
+    * verification is the exact `bit_count` — nothing corpus-sized
+    * collects or broadcasts.
     */
   def incrementalHammingDedup(batch: DataFrame, idCol: String,
       batchSigs: DataFrame, atRestSigs: DataFrame, nBits: Int = 64,
       maxHamming: Int = 3, maxBucketSize: Int = 0, pieces: Int = 1): DataFrame = {
-    // null signatures filtered on both sides (see hammingPairs); null
-    // BATCH ids are filtered too — the fused killer join below uses a
-    // null idA as its "store row, kill in either order" sentinel, so an
-    // unfiltered null batch id would act as a store killer, where the
-    // pre-fusion self-join's `idA < idB` made null ids kill nothing. A
-    // null-id row can't be killed either way (the final anti-join never
-    // matches null), so dropping it from the banded frame reproduces the
-    // two-join semantics exactly: kills nothing, dies never.
-    val bb = pruneHotBuckets(hammingBanded(
-      batchSigs.select(col("__id"), col("__hsig").cast("long").as("__hsig"))
-        .filter(col("__hsig").isNotNull && col("__id").isNotNull),
-      "__hsig", nBits, maxHamming, pieces), "bk", maxBucketSize)
-    val ob = pruneHotBuckets(hammingBanded(
-      atRestSigs.select(col("__id"), col("__hsig").cast("long").as("__hsig"))
-        .filter(col("__hsig").isNotNull && col("__id").isNotNull),
-      "__hsig", nBits, maxHamming, pieces), "bk", maxBucketSize)
-    // ONE killer join instead of two (store join + batch self-join): the
-    // union of killer rows — store signatures (kill in EITHER id order:
-    // null idA) and batch signatures (kill only a LARGER batch id) —
-    // probes the banded batch frame once; the two-join form paid an extra
-    // join stage and broadcast build per batch turn for the same pairs.
-    // bb's exchange is shared between the probe side and the union branch
-    // (ReusedExchange), exactly as it was between the two joins before.
-    val idType = bb.schema("__id").dataType
-    val killers = bb.select(col("bk").as("bk2"), col("__hsig").as("sA"),
-        col("__id").as("idA"))
-      .unionByName(ob.select(col("bk").as("bk2"), col("__hsig").as("sA"),
-        lit(null).cast(idType).as("idA")))
-    val doomed = bb.select(col("bk"), col("__id").as("idB"), col("__hsig").as("sB"))
-      .join(killers, col("bk") === col("bk2") &&
-        (col("idA").isNull || col("idA") < col("idB")))
-      .filter(bit_count(col("sA").bitwiseXOR(col("sB"))) <= maxHamming)
-      .select(col("idB").as("__doomed"))
-    batch.join(doomed.distinct(),
-      col(idCol) === col("__doomed"), "left_anti")
+    def signed(df: DataFrame): DataFrame =
+      df.select(col("__id"), col("__hsig").cast("long").as("__hsig"))
+        .filter(col("__hsig").isNotNull)
+    hammingKept(batch, idCol, signed(batchSigs), signed(atRestSigs), "__hsig",
+      bit_count(col("__hsigA").bitwiseXOR(col("__hsigB"))) <= maxHamming,
+      nBits, maxHamming, maxBucketSize, pieces)
   }
 
   /** Multi-position incremental Hamming dedup — the perceptual store
@@ -619,45 +567,39 @@ object Dedup {
     * `batchSigs`/`atRestSigs`: `(__id, __hsigs array<long>)`; position
     * order is the caller's contract (e.g. keyframe index). Scale shape
     * is [[incrementalHammingDedup]]'s — the store holds 8·K bytes per
-    * object, nothing corpus-sized moves, and the banded batch frame
-    * feeds both the store join and the self-join, so (as there) callers
-    * whose `batchSigs` lineage is expensive must persist it —
+    * object and nothing corpus-sized moves; callers whose `batchSigs`
+    * lineage is expensive persist it, as
     * [[graft.streaming.PerceptualDedupStream.batchFunctionMulti]] does.
     */
   def incrementalHammingDedupMulti(batch: DataFrame, idCol: String,
       batchSigs: DataFrame, atRestSigs: DataFrame, nBits: Int = 64,
       maxHamming: Int = 3, maxBucketSize: Int = 0, pieces: Int = 1): DataFrame = {
-    // null __id filtered for the same reason as incrementalHammingDedup:
-    // the fused killer join's null-idA store sentinel must stay
-    // unambiguous (a null-id row kills nothing and can never be killed)
-    def prep(df: DataFrame) = pruneHotBuckets(hammingBanded(
+    def signed(df: DataFrame): DataFrame =
       df.select(col("__id"), col("__hsigs").cast("array<long>").as("__hsigs"))
-        .filter(col("__id").isNotNull &&
-          col("__hsigs").isNotNull && size(col("__hsigs")) >= 1 &&
+        .filter(col("__hsigs").isNotNull && size(col("__hsigs")) >= 1 &&
           !exists(col("__hsigs"), x => x.isNull))
-        .withColumn("__hsig0", element_at(col("__hsigs"), 1)),
-      "__hsig0", nBits, maxHamming, pieces), "bk", maxBucketSize)
-    def allWithin(a: Column, b: Column): Column =
-      size(a) === size(b) &&
-        aggregate(zip_with(a, b, (x, y) =>
-            bit_count(x.bitwiseXOR(y)).cast("long")),
-          lit(0L), (acc, d) => greatest(acc, d)) <= maxHamming
-    val bb = prep(batchSigs)
-    val ob = prep(atRestSigs)
-    // one fused killer join — see [[incrementalHammingDedup]]
-    val idType = bb.schema("__id").dataType
-    val killers = bb.select(col("bk").as("bk2"), col("__hsigs").as("sA"),
-        col("__id").as("idA"))
-      .unionByName(ob.select(col("bk").as("bk2"), col("__hsigs").as("sA"),
-        lit(null).cast(idType).as("idA")))
-    val doomed = bb.select(col("bk"), col("__id").as("idB"),
-        col("__hsigs").as("sB"))
-      .join(killers, col("bk") === col("bk2") &&
-        (col("idA").isNull || col("idA") < col("idB")))
-      .filter(allWithin(col("sA"), col("sB")))
-      .select(col("idB").as("__doomed"))
-    batch.join(doomed.distinct(),
-      col(idCol) === col("__doomed"), "left_anti")
+        .withColumn("__hsig0", element_at(col("__hsigs"), 1))
+    val (a, b) = (col("__hsigsA"), col("__hsigsB"))
+    val allWithin = size(a) === size(b) &&
+      aggregate(zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
+        lit(0L), (acc, d) => greatest(acc, d)) <= maxHamming
+    hammingKept(batch, idCol, signed(batchSigs), signed(atRestSigs), "__hsig0",
+      allWithin, nBits, maxHamming, maxBucketSize, pieces)
+  }
+
+  /** The incremental Hamming decider: band both signature frames on
+    * `bandSig`, keep the [[candidatePairs]] that pass `within` (over the
+    * `…A`/`…B` payload columns), and drop every batch row whose id lost.
+    */
+  private def hammingKept(batch: DataFrame, idCol: String, batchSigs: DataFrame,
+      atRestSigs: DataFrame, bandSig: String, within: Column, nBits: Int,
+      maxHamming: Int, maxBucketSize: Int, pieces: Int): DataFrame = {
+    def banded(sigs: DataFrame) = hammingBanded(sigs, bandSig, nBits, maxHamming, pieces)
+    val doomed = candidatePairs(banded(batchSigs.repartition(col("__id"))),
+        Some(banded(atRestSigs)), maxBucketSize)
+      .filter(within)
+      .select(col("idB").as("__doomed")).distinct()
+    batch.join(doomed, col(idCol) === col("__doomed"), "left_anti")
   }
 
   /** SimHash near-dup pairs with exact verification: the pigeonhole-banded
@@ -687,7 +629,7 @@ object Dedup {
     * returns (id, component) for every vertex that appears in `pairs`,
     * where `component` is the smallest id in the vertex's component.
     *
-    * Why: keep-min-per-PAIR dedup ([[minhashDedup]]) is single-pass — a
+    * Why: keep-min-per-PAIR dedup ([[minhashDedupVerified]]) is single-pass — a
     * doc connected to the cluster minimum only THROUGH a middleman
     * survives (pairs (1,3),(2,3) kill only 3). Training-data pipelines
     * typically cluster candidates transitively and keep one doc per
@@ -812,14 +754,23 @@ object Dedup {
   def minhashDedupCCVerified(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.7, numPerm: Int = 64, bands: Int = 16, shingleK: Int = 3,
       maxBucketSize: Int = 0): DataFrame = {
-    val cand = minhashPairs(df, idCol, textCol, numPerm, bands, shingleK,
-      maxBucketSize = maxBucketSize).select("idA", "idB")
-    val edges = verifyJaccard(cand, df, idCol, textCol, shingleK, minJaccard = threshold)
-      .filter(col("jaccard") >= threshold)
-    val doomed = connectedComponents(edges)
+    val doomed = connectedComponents(verifiedEdges(df, idCol, textCol, threshold,
+        numPerm, bands, shingleK, maxBucketSize))
       .filter(col("id") =!= col("component")).select(col("id").as("__doomed"))
     df.join(doomed, col(idCol) === col("__doomed"), "left_anti")
   }
+
+  /** The exact-verified edge graph of [[minhashDedupCCVerified]] and
+    * [[minhashDedupCCBest]]: [[minhashPairs]] candidates whose exact
+    * shingle-Jaccard reaches `threshold`.
+    */
+  private def verifiedEdges(df: DataFrame, idCol: String, textCol: String,
+      threshold: Double, numPerm: Int, bands: Int, shingleK: Int,
+      maxBucketSize: Int): DataFrame =
+    verifyJaccard(minhashPairs(df, idCol, textCol, numPerm, bands, shingleK,
+        maxBucketSize = maxBucketSize).select("idA", "idB"),
+      df, idCol, textCol, shingleK, minJaccard = threshold)
+      .filter(col("jaccard") >= threshold)
 
   /** Canonical-document selection by QUALITY: cluster near-dup `pairs`
     * with [[connectedComponents]] and keep, per cluster, the row with the
@@ -844,26 +795,16 @@ object Dedup {
     * string fails loudly instead of casting to null).
     */
   def keepBestPerCluster(df: DataFrame, pairs: DataFrame, idCol: String,
-      score: Column): DataFrame =
-    df.join(keepBestDoomedIds(df, pairs, idCol, score),
-      col(idCol) === col("__doomed"), "left_anti")
-
-  /** The doomed-id half of [[keepBestPerCluster]] (see
-    * [[minhashDoomedIds]] for why it is split out): `scoredDocs` only
-    * needs the id and score columns, so an expensive-lineage caller can
-    * pass a cached narrow projection.
-    */
-  private[graft] def keepBestDoomedIds(scoredDocs: DataFrame, pairs: DataFrame,
-      idCol: String, score: Column): DataFrame = {
+      score: Column): DataFrame = {
     val comps = connectedComponents(pairs) // (id, component), roots included
-    val scored = scoredDocs.select(col(idCol).as("id"),
+    val scored = df.select(col(idCol).as("id"),
         coalesce(score.cast("double"), lit(Double.NegativeInfinity)).as("__s"))
       .join(comps, "id")
     val keep = Mix.capPerKey(scored, col("component"),
         struct((-col("__s")).as("negScore"), col("id").as("tieId")), "id", n = 1)
       .select("id")
-    comps.join(keep, Seq("id"), "left_anti")
-      .select(col("id").as("__doomed"))
+    val doomed = comps.join(keep, Seq("id"), "left_anti").select(col("id").as("__doomed"))
+    df.join(doomed, col(idCol) === col("__doomed"), "left_anti")
   }
 
   /** Transitive MinHash dedup over exact-verified pairs, keeping each
@@ -874,22 +815,8 @@ object Dedup {
   def minhashDedupCCBest(df: DataFrame, idCol: String, textCol: String, score: Column,
       threshold: Double = 0.7, numPerm: Int = 64, bands: Int = 16, shingleK: Int = 3,
       maxBucketSize: Int = 0): DataFrame =
-    df.join(minhashCCBestDoomedIds(df, idCol, textCol, score, threshold,
-        numPerm, bands, shingleK, maxBucketSize),
-      col(idCol) === col("__doomed"), "left_anti")
-
-  /** The doomed-id half of [[minhashDedupCCBest]] (see
-    * [[minhashDoomedIds]]): `docs` only needs (id, text, score columns).
-    */
-  private[graft] def minhashCCBestDoomedIds(docs: DataFrame, idCol: String,
-      textCol: String, score: Column, threshold: Double, numPerm: Int,
-      bands: Int, shingleK: Int, maxBucketSize: Int): DataFrame = {
-    val cand = minhashPairs(docs, idCol, textCol, numPerm, bands, shingleK,
-      maxBucketSize = maxBucketSize).select("idA", "idB")
-    val edges = verifyJaccard(cand, docs, idCol, textCol, shingleK, minJaccard = threshold)
-      .filter(col("jaccard") >= threshold)
-    keepBestDoomedIds(docs, edges, idCol, score)
-  }
+    keepBestPerCluster(df, verifiedEdges(df, idCol, textCol, threshold, numPerm, bands,
+      shingleK, maxBucketSize), idCol, score)
 
   /** Leakage-safe train/valid/test assignment: near-duplicate documents
     * MUST share a split — an eval paraphrase of a training document is
@@ -1090,15 +1017,12 @@ object Dedup {
     val bucketed = df.select(col(idCol).as("__id"), col(vecCol).as("__v"),
       posexplode(VectorFunctions.hyperplaneSignatures(col(vecCol), dim, nBits, seeds)))
       .select(col("__id"), col("__v"), struct(col("pos").as("s"), col("col").as("sig")).as("bk"))
-    val pruned = pruneHotBuckets(bucketed, "bk", maxBucketSize)
-    val a = pruned.select(col("bk"), col("__id").as("idA"), col("__v").as("vA"))
-    val b = pruned.select(col("bk").as("bk2"), col("__id").as("idB"), col("__v").as("vB"))
     // cosine per bucket collision (codegen'd ArrayDot; ≤ |seeds| repeats),
     // then a scalar-only HashAggregate dedup — vectors never cross the
     // pair-dedup shuffle
-    a.join(b, col("bk") === col("bk2") && col("idA") < col("idB"))
+    candidatePairs(bucketed, None, maxBucketSize)
       .select(col("idA"), col("idB"),
-        VectorFunctions.cosineFast(col("vA"), col("vB")).as("cosine"))
+        VectorFunctions.cosineFast(col("__vA"), col("__vB")).as("cosine"))
       .groupBy("idA", "idB").agg(first("cosine").as("cosine"))
       .filter(col("cosine") >= threshold)
       .select("idA", "idB", "cosine")

@@ -23,7 +23,7 @@ import graft.functions.{NearestCells, VectorFunctions}
   *  - cell assignment is the codegen'd map-only [[NearestCells]] scan —
   *    the centroid codebook rides in the generated code, no join;
   *  - the only corpus shuffle is the self-join keyed on the cell id;
-  *    `maxCellSize` (via [[Dedup.pruneHotBuckets]]) bounds a degenerate
+  *    `maxCellSize` (the [[Dedup.candidatePairs]] fuse) bounds a degenerate
   *    cell the way every LSH path here bounds a hot bucket;
   *  - pair rows carry only (idA, idB, cosine) scalars past the join —
   *    vectors never cross the pair shuffle;
@@ -54,13 +54,10 @@ object Semantic {
     val cents = codebook.getOrElse(Ivf.train(df, vecCol, dim, nlist, iters))
     val cells = withCell(
       df.select(col(idCol).as("__id"), col(vecCol).as("__v")), "__v", cents)
-    val pruned = Dedup.pruneHotBuckets(cells, "__cell", maxCellSize)
-    val a = pruned.select(col("__cell"), col("__id").as("idA"), col("__v").as("vA"))
-    val b = pruned.select(col("__cell").as("__cell2"), col("__id").as("idB"),
-      col("__v").as("vB"))
-    a.join(b, col("__cell") === col("__cell2") && col("idA") < col("idB"))
+      .select(col("__cell").as("bk"), col("__id"), col("__v"))
+    Dedup.candidatePairs(cells, None, maxCellSize)
       .select(col("idA"), col("idB"),
-        VectorFunctions.cosineFast(col("vA"), col("vB")).as("cosine"))
+        VectorFunctions.cosineFast(col("__vA"), col("__vB")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 

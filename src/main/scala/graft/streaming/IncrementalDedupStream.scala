@@ -77,7 +77,7 @@ object IncrementalDedupStream {
     val old = StoreLayout.load(spark, corpusDir, Some(self))
       .map(_.select(idCol, textCol)).getOrElse(batch.limit(0))
     val (kept, keptSigs) = Dedup.incrementalKeptAndSigs(batch, idCol, textCol,
-      atRestSigs = sigs, atRestDocs = old, threshold = threshold,
+      store = Some((sigs, old)), threshold = threshold,
       numPerm = numPerm, bands = bands, shingleK = shingleK, seed = seed,
       maxBucketSize = maxBucketSize)
     // one cached frame holds both halves, so the dedup plan runs once for

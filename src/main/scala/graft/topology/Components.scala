@@ -1096,8 +1096,9 @@ object BuiltinComponents {
   /** NearDupDedup — corpus-wide near-duplicate removal as a TOML filter,
     * so a topology user gets the verified MinHash-LSH dedup without
     * leaving the config surface. Row-dropping only (mutating = false —
-    * stays on the raw fast path). With StoreSigs/StoreCorpus set it also
-    * dedupes against an at-rest signature store (READ-ONLY here — the
+    * stays on the raw fast path). Both modes run one decider,
+    * [[graft.llm.Dedup.incrementalKeptAndSigs]]: with StoreSigs/StoreCorpus
+    * set it dedupes against an at-rest signature store (READ-ONLY here — the
     * store's maintaining writer is
     * [[graft.streaming.IncrementalDedupStream]] or a batch job around
     * [[graft.llm.Dedup.minhashSignatures]]); store ids are compared as
@@ -1170,21 +1171,20 @@ object BuiltinComponents {
         case (Some(_), _, _) => throw new IllegalArgumentException(
           "NearDupDedup: KeepBest applies to batch mode only (an at-rest " +
             "store's keep decisions are already committed)")
-        case (None, sigsOpt, corpusOpt) => (sigsOpt, corpusOpt) match {
-        case (Some(sigs), Some(corpus)) =>
-          val sp = ctx.spark
-          graft.llm.Dedup.incrementalDedupVerified(docs, id, tf,
-            atRestSigs = sp.read.parquet(sigs)
-              .select(col("__id").cast("string").as("__id"), col("__sig")),
-            atRestDocs = sp.read.parquet(corpus)
-              .select(col(id).cast("string").as(id), col(tf).cast("string").as(tf)),
-            threshold = thr, numPerm = p, bands = b, shingleK = k,
-            maxBucketSize = cap)
-        case (None, None) =>
-          graft.llm.Dedup.minhashDedupVerified(docs, id, tf, thr, p, b, k, cap)
-        case _ => throw new IllegalArgumentException(
-          "NearDupDedup: StoreSigs and StoreCorpus must be set together")
-        }
+        case (None, sigsOpt, corpusOpt) =>
+          val store = (sigsOpt, corpusOpt) match {
+            case (Some(sigs), Some(corpus)) =>
+              val sp = ctx.spark
+              Some((sp.read.parquet(sigs)
+                  .select(col("__id").cast("string").as("__id"), col("__sig")),
+                sp.read.parquet(corpus)
+                  .select(col(id).cast("string").as(id), col(tf).cast("string").as(tf))))
+            case (None, None) => None
+            case _ => throw new IllegalArgumentException(
+              "NearDupDedup: StoreSigs and StoreCorpus must be set together")
+          }
+          graft.llm.Dedup.incrementalKeptAndSigs(docs, id, tf, store, thr, p, b, k,
+            seed = 42L, maxBucketSize = cap)._1
       }
     },
     mutating = false)

@@ -155,13 +155,6 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(!pairs.keySet.exists { case (a, b) => a == 3L || b == 3L })
   }
 
-  test("minhash dedup drops near-dups with larger ids, keeps canonical") {
-    import spark.implicits._
-    val kept = Dedup.minhashDedup(docs, "doc_id", "text", threshold = 0.5)
-      .select("doc_id").as[Long].collect().toSet
-    assert(kept == Set(0L, 3L, 4L))
-  }
-
   test("verified minhash dedup decides by EXACT jaccard, not the estimate") {
     import spark.implicits._
     val kept = Dedup.minhashDedupVerified(docs, "doc_id", "text", threshold = 0.5)
@@ -311,7 +304,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val doomed = Dedup.connectedComponents(pairs)
       .filter(col("id") =!= col("component")).select("id").as[Long].collect().toSet
     val kept = docs.select("doc_id").as[Long].collect().toSet -- doomed
-    // same corpus as minhashDedup: {0,1,2} cluster transitively → keep 0
+    // same corpus as minhashDedupVerified: {0,1,2} cluster transitively → keep 0
     assert(kept == Set(0L, 3L, 4L))
   }
 

@@ -51,10 +51,10 @@ class MultiSigDedupSpec extends SparkSpec {
 
   test("a null-id batch signature kills nothing (it must not act as the " +
       "fused killer join's store sentinel)") {
-    // the fused killer join marks store rows with a NULL idA ("kill in
-    // either order"); a batch row whose __id is genuinely null must NOT
-    // be promoted to that role — under the pre-fusion self-join's
-    // idA < idB it killed nothing, and that is the pinned semantics.
+    // the fused killer join lets store rows kill in either id order; a
+    // batch row whose __id is genuinely null must NOT be promoted to that
+    // role — under a plain self-join's idA < idB it kills nothing, and
+    // that is the pinned semantics.
     // Identical signatures at both positions: were the null id treated
     // as a store killer, doc 1 would die.
     val bs = Seq(

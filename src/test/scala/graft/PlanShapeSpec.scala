@@ -547,6 +547,52 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("Window"), p)
   }
 
+  test("incremental Hamming dedup: the store crosses one exchange to the candidate join") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val dir = java.nio.file.Files.createTempDirectory("graft-hammingstore").toFile
+    val sigs = spark.range(0, 4000).select(col("id").as("__id"), xxhash64(col("id")).as("__hsig"))
+    def multi(df: DataFrame) = df.select(col("__id"), array(col("__hsig")).as("__hsigs"))
+    sigs.filter(col("__id") >= 400).write.parquet(s"$dir/single")
+    multi(sigs.filter(col("__id") >= 400)).write.parquet(s"$dir/multi")
+    // odd batch ids copy a store signature, so the candidate join has work
+    val batchSigs = sigs.filter(col("__id") < 400).select(col("__id"),
+      xxhash64(col("__id") + (col("__id") % 2) * 400).as("__hsig"))
+    val batch = batchSigs.select(col("__id").as("doc_id"))
+    // the operators from `p` down to the store's scan
+    def toStore(p: SparkPlan, name: String): Option[List[SparkPlan]] = p match {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.endsWith(s"/$name")) => Some(List(s))
+      case o => planChildren(o).iterator.map(toStore(_, name)).collectFirst {
+        case Some(t) => o :: t }
+    }
+    try {
+      withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        for ((name, kept) <- Seq(
+            "single" -> Dedup.incrementalHammingDedup(batch, "doc_id", batchSigs,
+              spark.read.parquet(s"$dir/single")),
+            "multi" -> Dedup.incrementalHammingDedupMulti(batch, "doc_id", multi(batchSigs),
+              spark.read.parquet(s"$dir/multi")))) {
+          kept.collect()
+          val plan = kept.queryExecution.executedPlan
+          val path = toStore(plan, name).getOrElse(fail(s"$name: no store scan:\n$plan"))
+          // below the nearest join above the store scan: the store side of
+          // the candidate join, which needs only its bucket exchange
+          val storeSide = path.drop(path.lastIndexWhere(_.isInstanceOf[BaseJoinExec]) + 1)
+          assert(storeSide.count(_.isInstanceOf[ShuffleExchangeExec]) == 1,
+            s"$name: the store crosses more than its bucket exchange:\n$plan")
+        }
+      }
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
+        f.delete()
+      }
+      rm(dir)
+    }
+  }
+
   test("int8/binary at-rest search: code-table scan, broadcast query side, bounded top-k") {
     val emb = graft.core.Graft.table(spark, sf, "embeddings")
     val (mins, maxs) = graft.llm.Quantize.int8Stats(emb, "embedding", 64)
